@@ -7,6 +7,14 @@ the per-module registries in ``etl_mapwarper_spark.operators``.
 semantics are SQL-expressible; ops without an entry get the driver's
 rows-only check (custom stateful streaming, fixture-backed mapwarper
 transforms).
+
+The external driver checks the FIRST 50 merged entries against their
+oracles, so ``_WINDOW`` pulls 50 entries to the front. The standing
+window rule: entries whose code changed first (a code change voids
+prior evidence), then the entries last checked longest ago, and at
+least 2 rows for every family (q/mw/dd/sim/tx/ds/mm/st/src/dq/pipe/pd).
+A module that fails to import raises out of ``queries()`` and
+``oracle_sql()`` rather than silently dropping its entries.
 """
 
 from __future__ import annotations
@@ -17,45 +25,35 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def _registries():
-    # Ordering matters: the driver's correctness harness checks the FIRST
-    # 50 entries of the merged dict. Round 1 verified q01-q51 (relational*)
-    # green; round 2 front-loads the families that have no driver rows yet
-    # (mapwarper, enrichment, dedup, similarity, textops, ingestion,
-    # sampling, pandas, multimodal). Rotate again next round for st_/q52+.
-    modules = []
-    for name in (
-        "mapwarper_queries",
-        "enrichment",
-        "dedup",
-        "similarity",
-        "textops",
-        "sampling",
-        "ingestion",
-        "pipeline_queries",
-        "pandas_ops",
-        "multimodal",
-        "changedata",
-        "analytics",
-        "quality",
-        "relational_subq",
-        "relational",
-        "relational_ext",
-        "relational_stats",
-    ):
-        try:
-            mod = __import__(
-                f"etl_mapwarper_spark.operators.{name}", fromlist=[name]
-            )
-            modules.append(mod)
-        except ImportError:
-            pass
-    try:
-        from etl_mapwarper_spark.streaming import queries as streaming_queries
+    # Imported, and merged, in this order: it fixes the order of the
+    # entries after the window.
+    from etl_mapwarper_spark.operators import (
+        mapwarper_queries,
+        enrichment,
+        dedup,
+        similarity,
+        textops,
+        sampling,
+        ingestion,
+        pipeline_queries,
+        pandas_ops,
+        multimodal,
+        changedata,
+        analytics,
+        quality,
+        relational_subq,
+        relational,
+        relational_ext,
+        relational_stats,
+    )
+    from etl_mapwarper_spark.streaming import queries as streaming_queries
 
-        modules.append(streaming_queries)
-    except ImportError:
-        pass
-    return modules
+    return (
+        mapwarper_queries, enrichment, dedup, similarity, textops, sampling,
+        ingestion, pipeline_queries, pandas_ops, multimodal, changedata,
+        analytics, quality, relational_subq, relational, relational_ext,
+        relational_stats, streaming_queries,
+    )
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -67,639 +65,32 @@ def entry(spark: SparkSession) -> DataFrame:
     return ds_llm_pipeline(spark, "/root/testdata/sf0.001")
 
 
-# Entries pulled to the FRONT of the merged registry. The external
-# driver checks the FIRST 50 merged entries against their oracles.
-#
-# WINDOW COMPOSITION RULE (standing, per r4 verdict item 8): every
-# window carries (a) entries whose code changed this round — a code
-# change voids prior evidence; (b) never-driver-checked entries,
-# weakest external evidence first; (c) canaries re-checking earlier
-# driver greens so that, counting (a)+(b)+(c), EVERY family (q/mw/dd/
-# sim/tx/ds/mm/st/src/dq/pipe) has >= 2 rows in the window.
-#
-# Round-5 window: 8 canaries (q01/q05 relational, mw_map_objects,
-# dd_minhash_lsh, st_dq_gate, pipe_map_objects, pipe_relations — the
-# pipe rows the rule requires — plus q22, code changed this round:
-# packing guard) + 2 re-checks whose CODE changed this round
-# (q35_price_percentiles — sorted-array percentiles; dd_ngram_jaccard
-# — PPJoin prefix filter) + 40 never-checked entries: all 27 round-4
-# additions (replica-certified at 2-3 scales but never
-# driver-windowed; includes st_incremental_dedup + mm_audio_autocorr
-# + q93 whose oracles/plans changed this round per ADVICE) + 13 of
-# the remaining 36 (q90 — code changed —, the graph ops
-# dd_pagerank/dd_triangle — skew-salted this round —, and
-# family-completing picks: st_*, mm_*, src_*, sim_*, tx_*, ds_*,
-# mw_tile_coords, q91).
-#
-# Round-6 window: the FINAL rotation — after this, every one of the
-# 260 registry entries has a driver-green row in some round and the
-# evidence ledger closes. Composition: all 28 never-driver-checked
-# entries (23 pre-r5 + the 5 late-r5 additions; the late-r5 media
-# entries also had code/oracle changes THIS round: the JPEG codec
-# grew general sampling factors + SOS/SOF cid matching, and the
-# binmedia fixture gained a 4:2:0 family + content-hashed dir) + 1
-# entry whose code changed this round (tx_tfidf_top_terms — the
-# n_docs count branch moved off the parallelized scan; r5 driver
-# evidence voided) + q89_approx_quantiles (code UNchanged — kept in
-# the window as the re-measured sketch-constant survivor) + the r6
-# skew-rehearsal fallout (dd_simhash_pairs_banded + dd_cc_banded NEW;
-# dd_pagerank_centrality + dd_triangle_count now consume the banded
-# generator — code+oracle changed, prior evidence voided) + 15
-# canaries re-checking earlier driver greens so every family
-# (q/mw/dd/sim/tx/ds/mm/st/src/dq/pipe) has >= 2 rows in the window
-# (q35/q91/tx_kneser_ney canaries dropped to make room — q keeps 13
-# window rows via the never-checked q6x-q9x block, tx keeps 3).
-# Late-r6 bench rebuilds (code changed, prior evidence voided, must
-# re-window): sim_embedding_covariance (einsum partials via
-# mapInPandas replace the per-row 4096-element explode) displacing
-# the sim_knn_graph canary (sim keeps 5 rows), and ds_global_row_ids
-# (monotonic-id local ranks replace the rank window's second
-# corpus shuffle) displacing the q22 canary (q keeps 13 rows via the
-# never-checked q6x-q9x block + q89 + q01).
-# Final r6 bench fix: sim_bruteforce_topk drops its forced small-input
-# repartition (light per-row work; the shuffle bought nothing and the
-# plan regressed to seconds under session pressure) — plan changed,
-# so it and its transitive consumer sim_lsh_recall re-window,
-# displacing the sim_ivfpq_topk and dd_minhash_lsh canaries (sim
-# keeps 6 rows, dd keeps 7).
-#
-# Round-7 window: see git history (45bcf2e) — 2 code-changed + 6 new
-# + 42 stalest-first canaries; drove the ledger to 266/266 with every
-# entry driver-green in some round.
-#
-# Round-8 window: (a) 5 entries whose CODE changed this round —
-# sim_knn_graph_banded + dd_semantic_clusters_banded +
-# sim_knn_banded_recall (the shared banded SRP generator is now a
-# MULTI-PROJECTION union at fixed band (4 orderings at the r8 cert;
-# widened to 8 late-r8 on the tuning report's curve — recall@3 at
-# sf0.1 0.30 -> 0.76 -> 0.9413 at linear candidate volume, with the
-# band join restructured onto bare id pairs + shuffle-hash cosine
-# joins; r7 verdict item 1),
-# dd_bloom_incremental_fp (fixture cache key now salted with the
-# fingerprint formula; r7 ADVICE), mm_phash_neardups (grouped plan:
-# identical hashes collapse BEFORE the banded Hamming join, so the
-# fuzzy join runs on distinct hashes — bounded by the 2^16 hash
-# space — with counts as weights; value-identical by pigeonhole,
-# same oracle), and src_binaryfile_media (the r8 shared
-# fixture-cache helper moved the binmedia dir — listed in the src
-# block below). sim_ivfpq_topk's oracle was re-assembled from the
-# shared _ivfpq_train_ctes helper but is BYTE-IDENTICAL and its
-# function body is untouched, so its evidence stands and it takes no
-# slot. (b) 5 NEW entries — sim_band_tuning_report (the (band, P) ->
-# (volume, recall) curve, one generator pass for 9 configs; r7 item
-# 7), sim_ivfpq_search_fp (search-only IVF-PQ over a materialized
-# trained index, 0.84x the oracle vs 5.3x for the in-bench-training
-# twin; r7 item 3), dd_incremental_dedup_fp (landed side reads the
-# materialized fingerprint table; r7 item 4), and
-# mm_phash_cluster_profile (hash-cluster occupancy — the
-# dd_shingle_df_profile of the image side, quantifying the pair
-# volume the grouped plan never materializes), and
-# dd_containment_capped (df-capped production twin of the LAST
-# uncapped shingle self-join — takes the dd_simhash_pairs canary
-# slot). (c) canaries picked
-# STALEST-EVIDENCE-FIRST from the r1-r7 ledger: the r1 q block,
-# the r2 dd/tx/sim/mw blocks, the r3 mm/pd/pipe/src/st blocks,
-# topped up with ds (r4) + dq (r5) + pipe_map_objects (r6) for the
-# every-family->=2 rule.
-#
-# Late-r8 continuation: the banded generators' group-sized rank
-# windows were replaced by ranked_in_groups (functions/dist_rank.py
-# — range exchange + split-local sort + broadcast prefix offsets, so
-# no task ever sorts a whole SRP/simhash bucket; value-identity
-# pinned by the python-model tests and tests/test_dist_rank.py).
-# That code-changes FOUR more dd entries — dd_simhash_pairs_banded,
-# dd_cc_banded, dd_pagerank_centrality, dd_triangle_count (the
-# simhash-banded consumers; the four SRP-banded consumers already
-# hold slots) — which take the q23/q24/tx_tokens_udtf/mw_kinks
-# canary slots. A second late-r8 change bounds the per-source window
-# tasks in ds_shard_manifest (two-phase byte prefix over order-aligned
-# doc_id cells) and ds_source_cap (kept-branch rank<=cap filter so
-# WindowGroupLimit prunes map-side + complement aggregates) — both
-# code-changed, taking the q18/tx_top_bigrams canary slots. Family
-# rows now: q=5, dd=10, tx=4, sim=5, mw=4, src=5, st=4, mm=3, pd=2,
-# pipe=2, ds=4, dq=2 — every family >= 2.
-#
-# Round-9 window (r8 verdict item 2: rotate stalest-first — 64
-# entries were last driver-checked in r1-r3, 28 of them in r1):
-# (a) 8 entries whose CODE changed this round — the three banded-SRP
-# consumers took explicit (band, projs) recall-knob parameters
-# (sim_knn_graph_banded, sim_knn_banded_recall,
-# dd_semantic_clusters_banded), and ranked_in_groups
-# (functions/dist_rank.py) gained an input-column collision guard +
-# tracked persist registry, which executes inside ALL EIGHT banded
-# consumers — the five not already holding knob slots re-window:
-# sim_band_tuning_report, dd_simhash_pairs_banded, dd_cc_banded,
-# dd_pagerank_centrality, dd_triangle_count.
-# (b) 1 NEW entry — tx_kneser_ney_fp (KN scoring against the
-# materialized model table; r8 verdict item 3).
-# (c) 41 canaries: family minimums (>= 2 rows per family counting
-# (a)+(b)+(c)) are filled with each family's STALEST entries first —
-# tx_top_bigrams + tx_tokens_udtf (r2), mw_kinks (r2) +
-# mw_tile_coords (r5), st_user_totals + st_stream_stream_join (r3),
-# mm_png_roundtrip + mm_resize_avgpool (r3), src_rest_errors +
-# src_rest_short_page (r3), ds_dedup_aware_split +
-# ds_length_histogram (r4), dq_observed_metrics + dq_skew_report
-# (r6), pipe_relations (r6) + pipe_layer_objects (r7),
-# pd_weighted_avg + pd_zscore (r8; the family's only two entries) —
-# then the remaining 23 slots go to the r1 q block (never re-checked
-# since round 1), keeping the bench members q48/q51 and dropping
-# q43/q44/q45/q46/q47 to r10 alongside the r2 q trio (q20/q21/q36)
-# and dd_simhash_pairs — the r10 rotation finishes the r1-r3 tail.
-#
-# Late-r9 window-audit fallout (two more code-changed entries): the
-# corpus-fingerprint WINDOW aggregates in ds_quality_ablation and
-# dd_soft_dedup_weights were rewritten — a byte-identical hub at
-# 100 TB fills ONE WindowExec task and window skew has no AQE remedy;
-# the ablation's duplicate flag now rides a groupBy + skew-splittable
-# fp join (and its corpus-derived contaminated set lost its forced
-# broadcast), the soft-dedup report collapses to pure count algebra
-# at the (fp, source)-distinct grain. Both re-gated at 3 scales +
-# rehearsed linear (1.82x for 10x rows). They take the
-# ds_length_histogram (r4) and tx_tokens_udtf (r2) canary slots —
-# family counts stay >= 2: ds = ablation + dedup_aware_split,
-# tx = kneser_ney_fp + top_bigrams.
-#
-# Late-r9 BROADCAST AUDIT fallout (every broadcast()/hint site in the
-# engine classified — the systematic pass after the ablation's forced
-# corpus-broadcast was found ad hoc; classification in BASELINE.md).
-# Three more registered entries code-changed: tx_js_divergence (the
-# source x vocab domain cross-join now broadcasts the SOURCE side —
-# bounded by catalog contract — and streams the vocabulary, which
-# grows with the corpus), st_stream_static_join (the customer side
-# now goes through the size-gated dim_broadcast instead of an
-# unconditional hint inside the streaming op), and
-# q64_small_qty_revenue (the part-cardinality avg-qty aggregate loses
-# its forced broadcast — unhinted, AQE broadcasts it at small SFs and
-# shuffles at scale). tx_kneser_ney_fp's model-table broadcast gained
-# the same size gate as its from-raw twin (it already holds the (b)
-# slot). All re-gated at 3 scales; js_divergence re-rehearsed 0.84x
-# for 10x rows. They take the st_user_totals (r3, same-staleness st
-# swap), q49_first_last_orders and q50_right_join_suppliers (r1)
-# canary slots — st stays 2 rows, q goes 23 -> 21 canaries + 1
-# code-changed.
-# Round-10 window (r9 verdict item 1: finish the evidence-currency
-# rotation — seat ALL 36 entries last driver-checked in r1-r3, the
-# explicit done-criterion "no registry entry last-checked before r4"):
-# (a) 3 entries whose CODE changed this round — dd_soft_dedup_weights
-# + ds_quality_ablation (the NULL-text fp fix: fingerprint coalesced
-# to a sentinel so the r9 groupBy+join rewrites keep NULL-text rows
-# exactly like the oracle's window form; plus the ablation's
-# NULL-guarded token count) and dd_containment_capped (hash-direct
-# shingles: the scan half of its floor — see the r10 BASELINE.md
-# ledger entry). All three re-gated oracle-green at 3 scales;
-# containment re-rehearsed 3-point sub-linear.
-# (b) the complete 36-entry r1-r3 staleness tail: the 7 r1 q's the r9
-# window could not seat (q43-q47/q49/q50), the r2 tail (q20/q21/q36,
-# dd_simhash_pairs, tx_tokens_udtf), st_user_totals (r3, displaced by
-# the r9 broadcast-audit swap), and the 24-entry r3 q52-q76 block.
-# (c) 11 family-minimum fills, stalest entry first per family.
-# DOCUMENTED DEVIATION from the standing >=2-per-family rule: 36 tail
-# + 3 code-changed + >=2 everywhere needs 55 slots; the tail closure
-# is the verdict's numbered done-criterion, so the seven families
-# whose rows are all >=r4-current (mw r6, mm r4, src r4, dq r7,
-# pipe r7, pd r9) hold ONE row each this round, and the freed slots
-# seat the tail completely. Family counts: q=33, dd=4, ds/tx/st=2,
-# mw/sim/mm/src/dq/pipe/pd=1.
-# Late-r10 fourth code change: dd_shingle_df_profile dropped its
-# corpus-sized distinct exchange (a semantic no-op — word_shingles
-# already array_distincts per doc, so (doc_id, h) rows are unique by
-# construction) and moved to hash-direct shingles; it takes the spare
-# sim fill slot (sim_l2_bruteforce_topk, r4 — sim keeps
-# sim_bucket_balance and stays ≥1 under the documented deviation).
-# Re-gated at 3 scales; 3-point rehearsal re-run on the new plan.
-# Round-11 window (r10 verdict items 1+2): (a) the SIX entries whose
-# code changed this round — the hash-direct shingle propagation
-# (dd_ngram_jaccard + dd_ngram_jaccard_capped's index paths,
-# ds_decontaminate, ds_llm_pipeline's decon stage, ds_quality_ablation's
-# contamination set, ds_contamination_report) — all re-gated
-# oracle-green at 3 scales. (b) the complete 31-entry r4 staleness
-# block (the verdict's named rotation outlook: dd_chunk_dedup …
-# tx_zipf_fit), restoring "no entry last-checked before r5".
-# (c) the full >=2-per-family rule RESTORED (the r10 deviation was a
-# documented one-round squeeze): mw/st/dq/pipe/pd get their two
-# stalest rows each. (d) three free canary slots to the stalest r5
-# entries: ds_dsir_importance (also this round's recompute-vs-persist
-# A/B subject — shape unchanged, evidence refreshed), q22 + q35.
-# Family counts: q=7, dd=8, ds=9, tx=7, sim=3, mm=3, src=3,
-# mw/st/dq/pipe/pd=2.
-# Late-r11 scan-count audit fallout (the new standing lens — FileScan
-# count per table per plan): ds_quality_ablation's per-ablation-row
-# agg+union re-derived the whole annotated pipeline per branch (14
-# documents scans in ONE plan — 14 corpus passes at 100 TB); it now
-# computes one conditional aggregate and unpivots (14 → 4 scans;
-# already seated in (a), no slot cost). q85_chi2_independence paid its
-# contingency aggregate 6x (one per marginal/total/domain consumer);
-# the cells-bounded obs relation is now persisted (6 → 1 scans,
-# classified in the BASELINE.md persist table). q85 takes the
-# q35_price_percentiles free-canary slot (q stays 7 rows).
-# Round-12 window (r11 verdict items 1+2, extended by the r12
-# optimization sessions): (a) the EIGHT entries whose code changed
-# this round — ds_mixture_weights + ds_corpus_curation (try_cast on
-# the regexp_extract source-id sites, both Spark and oracle sides: a
-# digit-less source NULLs its weight instead of aborting the job —
-# the r11 adversarial sweep's only engine-killing input; both
-# re-gated oracle-green at 3 scales AND on the hostile corpus) plus
-# the six optimization-touched entries (dd_embedding_neardup norm
-# precompute, tx_heavy_hitters_cms sketch-from-types, tx_top_bigrams
-# + tx_kneser_ney_fp pair-wise bigram hashing, sim_kmeans_2iter +
-# sim_l2_bruteforce_topk shared sq_dist kernel; tx_bigram_logprob
-# and tx_kneser_ney_logprob were already seated in block (b)).
-# (b) the complete 20-entry r5 staleness block (the verdict's named
-# rotation outlook; it projected 24, the recomputed ledger says 20),
-# restoring "no entry last-checked before r6".
-# (c) full >=2-per-family rule: mw/st/dq/pipe/pd/mm get their two
-# stalest rows each (pd has exactly two entries total, both r11 —
-# unavoidable minimum-staleness rows).
-# (d) 11 free canary slots to the stalest r6 entries (q77-q86 were
-# released back to the r13 rotation when block (a) grew to eight; 19
-# r6 rows now remain for r13).
-# Family counts: q=7, dd=6, ds=7, tx=8, sim=6, mm=4,
-# src/mw/st/dq/pipe/pd=2.
-# Round-13 window (optimization round 2): (a) every entry whose plan
-# or expression tree moved this round sits first, per the rotation
-# rule — the four incremental/Bloom admission rewrites (single-join
-# admission; ordered Bloom probe + union-aggregated report), the
-# LSH family whose construction now parses from SQL strings
-# (dd_ngram_jaccard / dd_minhash_lsh / dd_lsh_tuning_report plans
-# pinned identical; dd_bbit_minhash_lsh consumes the rewritten
-# _shingles), and the 14 multimodal consumers of synthetic_media's
-# substring-literal payload (byte-identity pinned). (b) the r6
-# staleness block — 16 of the 19 remaining r6 rows (q80/q83/q86
-# defer to r14; q keeps 5 window rows). (c) family minimums ≥2 for
-# ds/mw/st/dq/pipe/pd, stalest rows first (pd has exactly two
-# entries, both r12 — unavoidable minimum-staleness rows).
-# Family counts: mm=14, dd=8, sim=6, q=5, src=3, tx=2, ds=2, mw=2,
-# st=2, dq=2, pipe=2, pd=2 — exactly 50.
-_R13_PRIORITY = [
-    # --- (a) code changed r13 ---
-    "dd_incremental_dedup",
-    "dd_incremental_dedup_fp",
-    "dd_bloom_incremental",
-    "dd_bloom_incremental_fp",
-    "dd_ngram_jaccard",
-    "dd_minhash_lsh",
-    "dd_lsh_tuning_report",
-    "dd_bbit_minhash_lsh",
-    "mm_image_stats",
-    "mm_image_entropy",
-    "mm_shot_detect",
-    "mm_resize_avgpool",
-    "mm_frame_sample",
-    "mm_arrow_hist",
-    "mm_audio_rms",
-    "mm_audio_zcr",
-    "mm_audio_vad",
-    "mm_audio_autocorr",
-    "mm_av_sync_check",
-    "mm_png_roundtrip",
-    "mm_phash_neardups",
-    "mm_phash_cluster_profile",
-    # --- (b) the r6 staleness block (16 of 19) ---
-    "q77_notin_null_semantics",
-    "q78_map_type_aggs",
-    "q79_try_functions",
-    "q89_approx_quantiles",
-    "q92_modern_sql",
-    "sim_bruteforce_topk",
-    "sim_embedding_covariance",
-    "sim_lsh_recall",
-    "sim_norm_report",
-    "sim_pq_recall",
-    "sim_radius_search",
-    "src_compact_roundtrip",
-    "src_dpp_join",
-    "src_webdataset_roundtrip",
-    "tx_ndcg_eval",
+# The 50-entry driver window, in order. Rule: changed entries first,
+# then stalest, >=2 rows per family. Current seating: (a) 22 entries
+# whose code changed last (incremental/Bloom admission, the LSH family,
+# synthetic_media's consumers), (b) the 16 stalest rows, (c) the
+# stalest two rows of each family still short of its minimum.
+_WINDOW = [
+    # (a)
+    "dd_incremental_dedup", "dd_incremental_dedup_fp", "dd_bloom_incremental",
+    "dd_bloom_incremental_fp", "dd_ngram_jaccard", "dd_minhash_lsh",
+    "dd_lsh_tuning_report", "dd_bbit_minhash_lsh", "mm_image_stats",
+    "mm_image_entropy", "mm_shot_detect", "mm_resize_avgpool", "mm_frame_sample",
+    "mm_arrow_hist", "mm_audio_rms", "mm_audio_zcr", "mm_audio_vad",
+    "mm_audio_autocorr", "mm_av_sync_check", "mm_png_roundtrip",
+    "mm_phash_neardups", "mm_phash_cluster_profile",
+    # (b)
+    "q77_notin_null_semantics", "q78_map_type_aggs", "q79_try_functions",
+    "q89_approx_quantiles", "q92_modern_sql", "sim_bruteforce_topk",
+    "sim_embedding_covariance", "sim_lsh_recall", "sim_norm_report",
+    "sim_pq_recall", "sim_radius_search", "src_compact_roundtrip",
+    "src_dpp_join", "src_webdataset_roundtrip", "tx_ndcg_eval",
     "tx_tfidf_top_terms",
-    # --- (c) family minimums, stalest first per family ---
-    "ds_hash_sample",
-    "ds_stratified_sample",
-    "mw_geodesic_area",
-    "mw_layer_objects",
-    "st_foreach_batch_merge",
-    "st_session_windows",
-    "dq_skew_report",
-    "dq_expectations",
-    "pipe_rest_end_to_end",
-    "pipe_logs",
-    "pd_weighted_avg",
-    "pd_zscore",
-]
-# Round-12 window, kept for the ledger trail (superseded by
-# _R13_PRIORITY above, which _merge consumes).
-_R12_PRIORITY = [
-    # --- (a) code changed r12: try_cast source-id robustness, plus
-    # the r12 optimization sites (norm-precompute neardup, CMS
-    # sketch-from-types, pair-wise bigram hashing, shared sq_dist
-    # kernels) — every entry whose plan or expression tree moved this
-    # round sits in the window per the rotation rule; six of the (d)
-    # free canaries below were released to make room (q77-q86 stay r6
-    # for the r13 rotation) ---
-    "ds_mixture_weights",
-    "ds_corpus_curation",
-    "dd_embedding_neardup",
-    "tx_heavy_hitters_cms",
-    "tx_top_bigrams",
-    "tx_kneser_ney_fp",
-    "sim_kmeans_2iter",
-    "sim_l2_bruteforce_topk",
-    # --- (b) the 20-entry r5 block ---
-    "dd_bbit_minhash_lsh",
-    "dd_minhash_lsh",
-    "dd_substring_span_pairs",
-    "ds_split_manifest",
-    "mm_audio_zcr",
-    "q35_price_percentiles",
-    "q90_asof_forward",
-    "q91_sql_interface",
-    "q93_asof_nearest",
-    "sim_int8_quantize_report",
-    "sim_ivfpq_recall",
-    "sim_ivfpq_topk",
-    "sim_knn_graph",
-    "src_pyds_write_roundtrip",
-    "src_xml_roundtrip",
-    "tx_bigram_logprob",
-    "tx_bpe_fertility",
-    "tx_kneser_ney_logprob",
-    "tx_logreg_train_steps",
-    "tx_pii_redact",
-    # --- (c) family minimums, stalest first per family ---
-    "mw_gcp_errors",
-    "mw_gcp_transform",
-    "st_incremental_dedup",
-    "st_dedup_watermark",
-    "dq_freshness_report",
-    "dq_observed_metrics",
-    "pipe_layer_objects",
-    "pipe_relations",
-    "pd_weighted_avg",
-    "pd_zscore",
-    "mm_audio_autocorr",
-    # --- (d) free canary slots, stalest r6 entries ---
-    "dd_cdc_chunks",
-    "dd_incremental_dedup",
-    "ds_epoch_shuffle",
-    "ds_global_row_ids",
-    "ds_pack_sequences",
-    "ds_token_budget_planner",
-    "mm_av_sync_check",
-    "mm_jpeg_roundtrip",
-    "q01_pricing_summary",
-    "q87_mad_robust_stats",
-    "q88_argmax_aggregate",
-]
-# Round-11 window, kept for the ledger trail (superseded by
-# _R12_PRIORITY above, which _merge consumes).
-_R11_PRIORITY = [
-    # --- (a) code changed r11: hash-direct shingles ---
-    "dd_ngram_jaccard",
-    "dd_ngram_jaccard_capped",
-    "ds_decontaminate",
-    "ds_llm_pipeline",
-    "ds_quality_ablation",
-    "ds_contamination_report",
-    # --- (b) the 31-entry r4 block ---
-    "dd_chunk_dedup",
-    "dd_containment",
-    "dd_dedup_apply",
-    "dd_levenshtein_blocked",
-    "dd_lsh_tuning_report",
-    "dd_source_overlap_matrix",
-    "ds_pack_efficiency",
-    "ds_priority_sample",
-    "ds_rag_index_stats",
-    "ds_temperature_mixture",
-    "mm_image_entropy",
-    "mm_image_stats",
-    "mm_shot_detect",
-    "q05_region_revenue",
-    "q29_approx_distinct",
-    "q81_gap_fill_locf",
-    "q82_three_step_funnel",
-    "q84_interval_overlap_join",
-    "sim_l2_bruteforce_topk",
-    "sim_mips_topk",
-    "sim_pq_topk",
-    "src_ndjson_malformed",
-    "src_partitioned_pruning",
-    "src_union_by_name",
-    "tx_entropy",
-    "tx_hashed_linear_score",
-    "tx_heavy_hitters_cms",
-    "tx_pmi_collocations",
-    "tx_udtf_analyze",
-    "tx_unigram_logprob",
-    "tx_zipf_fit",
-    # --- (c) family minimums, stalest first per family ---
-    "mw_map_objects",
-    "mw_bbox_contains_join",
-    "st_rest_incremental",
-    "st_dq_gate",
-    "dq_key_integrity",
-    "dq_column_profile",
-    "pipe_logs",
-    "pipe_map_objects",
-    "pd_zscore",
-    "pd_weighted_avg",
-    # --- (d) free canary slots, stalest r5 entries ---
-    "ds_dsir_importance",
-    "q22_asof_last_order",
-    # late-r11 swap: code-changed scan-count fix displaces the q35
-    # free canary (see the comment block above)
-    "q85_chi2_independence",
-]
-# Round-10 window, kept for the ledger trail (superseded by
-# _R11_PRIORITY above, which _merge consumes).
-_R10_PRIORITY = [
-    # --- (a) code changed r10 ---
-    "dd_soft_dedup_weights",
-    "ds_quality_ablation",
-    "dd_containment_capped",
-    "dd_shingle_df_profile",
-    # --- (b) the r1 q block (checked r1, never since) ---
-    "q43_stats_moments",
-    "q44_nation_listagg",
-    "q45_price_histogram",
-    "q46_region_priority_matrix",
-    "q47_supplier_rank_dist",
-    "q49_first_last_orders",
-    "q50_right_join_suppliers",
-    # --- (b) the r2 tail ---
-    "q20_hourly_events",
-    "q21_user_sessions",
-    "q36_status_sets",
-    "dd_simhash_pairs",
-    "tx_tokens_udtf",
-    # --- (b) the r3 q52-q76 block + st_user_totals ---
-    "q52_decimal_exact",
-    "q53_click_purchase_funnel",
-    "q54_cohort_retention",
-    "q55_nullsafe_join",
-    "q56_union_distinct",
-    "q57_rollup_grouping_id",
-    "q58_regexp_extract_words",
-    "q59_quarter_hour_buckets",
-    "q60_revenue_share",
-    "q61_rolling_wau",
-    "q62_waiting_suppliers",
-    "q63_min_cost_supplier",
-    "q65_big_orders",
-    "q66_top_supplier",
-    "q67_scd2_intervals",
-    "q68_cdc_diff",
-    "q69_mode_median",
-    "q70_bool_bit_aggs",
-    "q72_zorder_layout",
-    "q73_lateral_topk",
-    "q74_variant_props",
-    "q75_recursive_chains",
-    "q76_percentiles_twophase",
-    "st_user_totals",
-    # --- (c) family fills, stalest first ---
-    "tx_bpe_train_merges",
-    "st_cms_topk",
-    "ds_length_histogram",
-    "mw_gcp_transform_tps",
-    "sim_bucket_balance",
-    "mm_audio_vad",
-    "src_bucketed_join",
-    "dq_expectations",
-    "pipe_rest_end_to_end",
-    "pd_weighted_avg",
-]
-# Round-9 window, kept for the ledger trail (superseded by
-# _R10_PRIORITY above, which _merge consumes).
-_R9_PRIORITY = [
-    # --- (a) code changed r9 ---
-    "sim_knn_graph_banded",
-    "sim_knn_banded_recall",
-    "dd_semantic_clusters_banded",
-    "sim_band_tuning_report",
-    "dd_simhash_pairs_banded",
-    "dd_cc_banded",
-    "dd_pagerank_centrality",
-    "dd_triangle_count",
-    # --- (a) code changed late-r9: window-audit rewrites ---
-    "ds_quality_ablation",
-    "dd_soft_dedup_weights",
-    # --- (a) code changed late-r9: broadcast-audit fixes ---
-    "tx_js_divergence",
-    "st_stream_static_join",
-    "q64_small_qty_revenue",
-    # --- (b) new r9, never driver-checked ---
-    "tx_kneser_ney_fp",
-    # --- (c) canaries: family minimums, stalest entry first ---
-    "tx_top_bigrams",
-    "mw_kinks",
-    "mw_tile_coords",
-    "st_stream_stream_join",
-    "mm_png_roundtrip",
-    "mm_resize_avgpool",
-    "src_rest_errors",
-    "src_rest_short_page",
-    "ds_dedup_aware_split",
-    "dq_observed_metrics",
-    "dq_skew_report",
-    "pipe_relations",
-    "pipe_layer_objects",
-    "pd_weighted_avg",
-    "pd_zscore",
-    # --- (c) the r1 q block, checked r1 and never since ---
-    "q18_orders_by_month",
-    "q23_value_band_pairs",
-    "q24_top_orders",
-    "q25_acctbal_bands",
-    "q26_nation_balance_full_outer",
-    "q27_grouping_sets",
-    "q28_price_ranks",
-    "q30_pivot_status",
-    "q31_unpivot_part_metrics",
-    "q32_salted_skew_join",
-    "q33_above_brand_avg",
-    "q34_exists_discounted",
-    "q37_conditional_agg",
-    "q38_moving_avg_7d",
-    "q39_ntile_deciles",
-    "q40_date_spine_gapfill",
-    "q41_priority_intersect_all",
-    "q42_priority_except_all",
-    "q71_posexplode_ordinality",
-    "q48_snapshot_merge",
-    "q51_multi_distinct",
-]
-# Round-8 window, kept for the ledger trail (superseded by
-# _R9_PRIORITY above, which _merge consumes).
-_R8_PRIORITY = [
-    # --- (a) code changed r8 ---
-    "sim_knn_graph_banded",
-    "dd_semantic_clusters_banded",
-    "sim_knn_banded_recall",
-    "dd_bloom_incremental_fp",
-    "mm_phash_neardups",
-    # --- (b) new r8, never driver-checked ---
-    "sim_band_tuning_report",
-    "sim_ivfpq_search_fp",
-    "dd_incremental_dedup_fp",
-    # --- (c) canaries, stalest evidence first ---
-    # q: the remaining r1 block (checked r1, never since)
-    "q03_top_revenue_orders",
-    "q15_nations_intersect",
-    "q16_nations_except",
-    "q17_part_strings",
-    "q19_events_json",
-    # dd: the late-r8 ranked_in_groups consumers (code-changed), the
-    # NEW r8 capped-containment twin, + r2 block
-    "dd_simhash_pairs_banded",
-    "dd_cc_banded",
-    "dd_pagerank_centrality",
-    "dd_triangle_count",
-    "dd_containment_capped",
-    "dd_rolling_hash",
-    "dd_simhash",
-    # tx: r2 block
-    "tx_quality_scores",
-    "tx_repetition_filter",
-    "tx_sentence_stats",
-    "tx_token_stats",
-    # sim: r2
-    "sim_srp_lsh_topk",
-    # mw: r2 block
-    "mw_layer_objects",
-    "mw_map_layers_join",
-    "mw_map_logs",
-    "mw_relations",
-    # mm: the NEW r8 cluster-profile entry takes the mm_png_roundtrip
-    # canary slot (never-checked outranks canary), + r3
-    "mm_phash_cluster_profile",
-    "mm_frame_sample",
-    # pd: r3 (both rows of the pandas-ops family)
-    "pd_weighted_avg",
-    "pd_zscore",
-    # pipe: r3 + the family-minimum top-up (r6)
-    "pipe_logs",
-    "pipe_map_objects",
-    # src: r3 block (src_binaryfile_media swaps in for the
-    # src_rest_errors canary: the r8 shared fixture-cache refactor
-    # moved the binmedia dir, voiding its evidence)
-    "src_csv_roundtrip",
-    "src_ndjson_roundtrip",
-    "src_orc_roundtrip",
-    "src_parquet_evolution",
-    "src_binaryfile_media",
-    # st: r3 block
-    "st_session_windows",
-    "st_sliding_counts",
-    "st_stream_static_join",
-    "st_tumbling_counts",
-    # ds: r4
-    "ds_anneal_schedule",
-    "ds_dataset_card",
-    "ds_shard_manifest",
-    "ds_source_cap",
-    # dq: r5
-    "dq_column_profile",
-    "dq_freshness_report",
+    # (c)
+    "ds_hash_sample", "ds_stratified_sample", "mw_geodesic_area",
+    "mw_layer_objects", "st_foreach_batch_merge", "st_session_windows",
+    "dq_skew_report", "dq_expectations", "pipe_rest_end_to_end", "pipe_logs",
+    "pd_weighted_avg", "pd_zscore",
 ]
 
 
@@ -707,7 +98,7 @@ def _merge(attr: str) -> dict:
     merged: dict = {}
     for mod in _registries():
         merged.update(getattr(mod, attr))
-    head = {k: merged[k] for k in _R13_PRIORITY if k in merged}
+    head = {k: merged[k] for k in _WINDOW if k in merged}
     head.update(merged)
     return head
 

@@ -493,7 +493,7 @@ def main() -> None:
         )
         tmp = f"{dest}.tmp{os.getpid()}"
         with open(tmp, "w") as fh:
-            fh.write(line)
+            fh.write(line + "\n")
         os.replace(tmp, dest)
     except OSError:
         pass  # a read-only checkout must not fail the bench

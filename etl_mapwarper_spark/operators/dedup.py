@@ -42,9 +42,9 @@ from ..functions.vectors import (
     to_double_array,
 )
 from ..sources.tables import load_table
+from . import registry
 
-QUERIES = {}
-ORACLE = {}
+QUERIES, ORACLE, _register = registry()
 
 N_SEEDS = 12  # minhash permutations
 N_BANDS = 3  # → 4 seeds per band
@@ -89,12 +89,6 @@ sh AS (
   FROM toks WHERE len(t) >= 3
 )
 """
-
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
 
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -39,14 +39,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import broadcast, pandas_udf
 
-QUERIES = {}
-ORACLE = {}
+from . import registry
 
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
+QUERIES, ORACLE, _register = registry()
 
 
 RESULT_SCHEMA = T.StructType(

@@ -36,15 +36,9 @@ from ..sources.paginated_rest import (
     scan_until_short_page,
 )
 from ..sources.tables import SCHEMAS, load_table
+from . import registry
 
-QUERIES = {}
-ORACLE = {}
-
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
+QUERIES, ORACLE, _register = registry()
 
 
 # ---------------------------------------------------------------------------

@@ -38,16 +38,6 @@ from ..functions.geo import coords_all_valid, geodesic_area, self_intersection_c
 from ..functions.scalar import bbox_to_array, coalesce_year
 from ..sources.tables import load_table
 
-QUERIES = {}
-ORACLE = {}
-
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
-
-
 # ---------------------------------------------------------------------------
 # Synthetic fixture sources (deterministic from part/nation keys).
 # ---------------------------------------------------------------------------

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import registry
 from .mapwarper import (
     map_logs,
     map_objects,
@@ -23,14 +24,7 @@ from .mapwarper import (
     with_validation,
 )
 
-QUERIES = {}
-ORACLE = {}
-
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
+QUERIES, ORACLE, _register = registry()
 
 
 # ---------------------------------------------------------------------------

@@ -38,15 +38,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.tables import load_table
+from . import registry
 
-QUERIES = {}
-ORACLE = {}
-
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
+QUERIES, ORACLE, _register = registry()
 
 
 META_TYPE = "struct<width:int,height:int,channels:int,frames:int>"

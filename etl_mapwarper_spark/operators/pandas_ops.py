@@ -32,15 +32,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..sources.tables import load_table
+from . import registry
 
-QUERIES = {}
-ORACLE = {}
-
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
+QUERIES, ORACLE, _register = registry()
 
 
 # ---------------------------------------------------------------------------

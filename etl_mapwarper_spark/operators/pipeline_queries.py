@@ -27,17 +27,11 @@ from pyspark.sql import functions as F
 from ..pipeline import PipelineConfig, PipelineDirs, run_pipeline
 from ..sources.paginated_rest import FetchResult, RestSourceConfig
 from ..sources.tables import load_table
+from . import registry
 from .mapwarper import _map_row
 from .mapwarper_queries import ORACLE as MW_ORACLE
 
-QUERIES = {}
-ORACLE = {}
-
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
+QUERIES, ORACLE, _register = registry()
 
 
 # ---------------------------------------------------------------------------

@@ -22,15 +22,9 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 from ..sources.tables import dim_broadcast, load_table
+from . import registry
 
-QUERIES = {}
-ORACLE = {}
-
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
+QUERIES, ORACLE, _register = registry()
 
 
 # ---------------------------------------------------------------------------

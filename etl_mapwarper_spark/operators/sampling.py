@@ -24,15 +24,10 @@ from pyspark.sql import functions as F
 
 from ..functions.text import doc_fingerprint, token_count
 from ..sources.tables import load_table
+from . import registry
+from .dedup import ORACLE as _DEDUP_ORACLE
 
-QUERIES = {}
-ORACLE = {}
-
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
+QUERIES, ORACLE, _register = registry()
 
 
 _KNUTH = 2654435761  # floor(2^32 / golden ratio); odd, full-period mod 2^32
@@ -905,9 +900,7 @@ _register(
            count(*) FILTER (WHERE k_doc > 1) AS straddle_doc_keyed,
            count(*) FILTER (WHERE k_grp > 1) AS straddle_group_keyed
     FROM per_group
-    """.format(cc_sql=__import__(
-        "etl_mapwarper_spark.operators.dedup", fromlist=["dedup"]
-    ).ORACLE["dd_connected_components"]),
+    """.format(cc_sql=_DEDUP_ORACLE["dd_connected_components"]),
 )
 
 

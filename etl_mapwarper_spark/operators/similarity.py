@@ -31,21 +31,15 @@ from ..functions.vectors import (
     to_double_array,
 )
 from ..sources.tables import load_table
+from . import registry
 
-QUERIES = {}
-ORACLE = {}
+QUERIES, ORACLE, _register = registry()
 
 PROBE_IDS = [0, 1, 2]
 TOP_K = 5
 # Axis-aligned "hyperplanes" for SRP-LSH: sign bits of these dims
 # (1-based positions into the 64-dim embedding).
 SRP_DIMS = [1, 9, 17, 25]
-
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
 
 
 def _probes(emb: DataFrame) -> DataFrame:

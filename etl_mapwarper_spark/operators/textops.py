@@ -27,9 +27,9 @@ from ..functions.text import (
     tokens,
 )
 from ..sources.tables import load_table
+from . import registry
 
-QUERIES = {}
-ORACLE = {}
+QUERIES, ORACLE, _register = registry()
 
 _STOP_SQL = "(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
 
@@ -44,12 +44,6 @@ LANG_MARKERS = {
     "es": ["el", "la", "y", "slow"],
     "zh": ["de", "shi", "he", "join"],
 }
-
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
 
 
 # ---------------------------------------------------------------------------

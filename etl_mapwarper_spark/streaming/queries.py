@@ -14,17 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import registry
 from . import ops
 from .runner import read_events_stream, run_foreach_batch, run_to_memory
 
-QUERIES = {}
-ORACLE = {}
-
-
-def _register(name, fn, sql=None):
-    QUERIES[name] = fn
-    if sql is not None:
-        ORACLE[name] = sql
+QUERIES, ORACLE, _register = registry()
 
 
 def st_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

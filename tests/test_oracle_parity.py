@@ -7,7 +7,10 @@ Runs at sf0.001 by default (fast); set SPARK_GRAFT_TEST_SF_DIR to
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import subprocess
 import sys
 
 import pytest
@@ -78,3 +81,34 @@ def test_every_entry_is_oracle_backed_except_known_rows_only():
     within-bound flag — so the set is now empty: every one of the
     registry's entries is hash-verifiable.)"""
     assert set(ROWS_ONLY) == set(), ROWS_ONLY
+
+
+def test_registry_import_failure_is_loud():
+    """A module that fails to import must fail queries(), not silently
+    drop its entries from the registry."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        'sys.modules["etl_mapwarper_spark.operators.pandas_ops"] = None\n'
+        "import __spark_entry__\n"
+        "try:\n"
+        "    print(len(__spark_entry__.queries()))\n"
+        "except ImportError as exc:\n"
+        '    sys.exit(f"ImportError: {exc}")\n'
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True
+    )
+    assert proc.returncode != 0, proc.stdout
+    assert "ImportError" in proc.stderr, proc.stderr
+
+
+def test_registry_names_order_and_oracle_text_pinned():
+    """Names, their order (the first 50 are the driver window) and every
+    oracle SQL text are pinned; a registry change updates the digests on
+    purpose."""
+    assert len(ALL_QUERIES) == len(ALL_ORACLE) == 272
+    names = hashlib.sha256("\n".join(ALL_QUERIES).encode()).hexdigest()
+    oracle = hashlib.sha256(json.dumps(list(ALL_ORACLE.items())).encode()).hexdigest()
+    assert names == "58de9ba228886ba2a8802948f654b28ec9fe0b4750d89bb4913ffebe9f5e6f9c"
+    assert oracle == "0bb9e5f11d80f4a3e7389e24d1e13aa6a4141732436e10e957cc02f24fab0d4e"

@@ -10,7 +10,8 @@ Usage:
 
 Invariance knobs (each an env var; unset = driver-faithful vanilla):
 ``GATE_SHUFFLE_PARTITIONS`` + ``GATE_MASTER`` (parallelism sweep,
-r10), ``GATE_AQE=false`` (adaptive-re-planning sweep, r11),
+r10; the master defaults to local[$SPARK_GRAFT_CPUS, else all cores]),
+``GATE_AQE=false`` (adaptive-re-planning sweep, r11),
 ``GATE_MAX_PARTITION_BYTES=65536`` (input-split sweep, r12 — values
 must not depend on how file scans split into read tasks).
 
@@ -33,10 +34,10 @@ import sys
 def _vanilla_session():
     from pyspark.sql import SparkSession
 
+    # Same default as etl_mapwarper_spark.session.get_spark.
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     b = (
-        SparkSession.builder.master(
-            os.environ.get("GATE_MASTER", "local[32]")
-        )
+        SparkSession.builder.master(os.environ.get("GATE_MASTER", f"local[{cpus}]"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
