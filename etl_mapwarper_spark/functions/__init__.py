@@ -1,9 +1,9 @@
 """Column-function library (all JVM-side unless noted).
 
 Everything here returns `pyspark.sql.Column` built from built-in
-functions so expressions stay inside whole-stage codegen. The few
-Python-side functions (geodesic area, kinks) live in `geo.py` as
-pandas_udfs and are clearly marked.
+functions so expressions stay inside whole-stage codegen. The
+geometry functions (geodesic area, coordinate bounds, kinks) live in
+`geo.py`, also as pure column expressions.
 """
 
 from .scalar import bbox_to_array, coalesce_year, round_decimals

@@ -12,10 +12,10 @@ Capabilities re-expressed (citations into /root/reference/mapwarper.js):
 - relation derivation (getLayerRelations, :333-346): one ``st:in``
   edge per layerId, ``layer-<id>`` surrogate key.
 
-Dataflow shape: all transforms are narrow column expressions (the
-only Python is the kinks pandas_udf, Arrow-batched and applied once
-per row) — on a cluster this pipeline is a single scan stage per
-input with zero shuffles, exactly the reference's per-record pipe but
+Dataflow shape: all transforms are narrow column expressions, the
+kinks count and geodesic area included, so nothing crosses to Python —
+on a cluster this pipeline is a single scan stage per input with zero
+shuffles, exactly the reference's per-record pipe but
 partition-parallel.
 
 Deviation from the reference, documented: node ids are STRING in all
@@ -299,7 +299,7 @@ def with_validation(maps: DataFrame) -> DataFrame:
     coords = geom["coordinates"]
     ring0_n = F.size(F.element_at(coords, 1))
     kinks = F.when(
-        geom.isNotNull(), self_intersection_count(coords)
+        geom.isNotNull(), self_intersection_count("maskGeometry.coordinates")
     ).otherwise(F.lit(0))
     df = maps.withColumn("_kinks", kinks)
     rules = F.array(

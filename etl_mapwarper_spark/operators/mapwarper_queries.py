@@ -329,7 +329,7 @@ def mw_kinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.geo import self_intersection_count
 
     return v.filter(geom.isNotNull()).select(
-        "id", self_intersection_count(geom["coordinates"]).alias("kinks")
+        "id", self_intersection_count("maskGeometry.coordinates").alias("kinks")
     )
 
 

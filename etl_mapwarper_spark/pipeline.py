@@ -8,8 +8,10 @@ output dir (``dirs.current``) and the previous step's output dir
 contract Spark-first:
 
 - a step is ``step(spark, config, dirs) -> dict[str, DataFrame]`` —
-  it writes its outputs under ``dirs.current`` and returns the
-  DataFrames it wrote (handy for tests and interactive use);
+  it writes its outputs under ``dirs.current`` and returns each as a
+  read of its written parquet checkpoint, so a consumer (the NDJSON
+  export, a later sink, a test) reads the checkpoint and never
+  re-runs the plan that produced it;
 - the inter-step handoff is **Parquet** (columnar, splittable,
   prunable), not the reference's NDJSON (:152-153 ↔ :424) — NDJSON
   remains available at the export boundary via ``export_ndjson``;
@@ -22,12 +24,19 @@ Step 1 — ``download`` (reference :151-219): paginated REST scans
 (count-first fan-out for maps :183-199, short-page loop for layers
 :112-149), error quarantine (:122-129), optional conditional
 mask→GeoJSON enrichment (:79-110) and optional map↔layer membership
-join (:57-77, replaced by a real aggregate+broadcast join).
+join (:57-77, replaced by a real aggregate+broadcast join). Each
+REST page and each mask is fetched once per run: the fetched pages
+and the mask-joined maps are persisted while the step writes from
+them, and released (with the short-page waves) once ``maps`` is
+written.
 
 Step 2 — ``transform`` (reference :417-437): route records by type
 (:418-421), validation split into clean objects vs quarantine logs
 (:358-361), relation edge derivation (:333-346), layer projection
-(:399-415); writes ``objects``, ``relations``, ``logs`` sinks.
+(:399-415); writes ``objects``, ``relations``, ``logs`` sinks. The
+unified ``objects`` sink is built from the written ``map_objects`` and
+``layer_objects`` checkpoints, and validation is a pure column
+expression, so the step has no Python boundary.
 
 Scale: every transform is a narrow column expression over the
 parquet checkpoint — one scan stage per input, no shuffle (only the
@@ -43,9 +52,10 @@ from dataclasses import dataclass, field
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .operators.enrichment import attach_map_layers, enrich_masks
+from .operators.enrichment import attach_map_layers, enrich_masks, fetch_masks
 from .operators.mapwarper import (
     map_logs,
     map_objects,
@@ -55,11 +65,11 @@ from .operators.mapwarper import (
 from .sources.ndjson import to_ndjson_lines
 from .sources.paginated_rest import (
     RestSourceConfig,
+    _scan_waves,
     fetch_count,
     page_errors,
     page_items,
     scan_pages,
-    scan_until_short_page,
 )
 
 # Item schemas for the two REST streams (the reference reads these
@@ -187,8 +197,11 @@ class PipelineConfig:
 
 
 def _write(df: DataFrame, dirs: PipelineDirs, name: str) -> DataFrame:
-    df.write.mode("overwrite").parquet(os.path.join(dirs.current, name))
-    return df
+    """Write ``df`` as parquet and return the read-back checkpoint. The
+    schema is passed so the read-back starts no schema-inference job."""
+    path = os.path.join(dirs.current, name)
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def download(
@@ -200,8 +213,9 @@ def download(
     config.precheck()  # abort before the first fetch (:168-171)
     out: dict[str, DataFrame] = {}
 
-    # Layers branch (:155-166): short-page loop.
-    layer_pages = scan_until_short_page(spark, config.layers_source)
+    # Layers branch (:155-166): short-page loop. ``cached`` collects
+    # every persisted frame; all are released once ``maps`` is written.
+    layer_pages, cached = _scan_waves(spark, config.layers_source)
     layers = page_items(layer_pages, config.layer_item_schema).drop("page")
     out["layers"] = _write(layers, dirs, "layers")
     out["layer_errors"] = _write(page_errors(layer_pages), dirs, "layer_errors")
@@ -209,28 +223,25 @@ def download(
     # Maps branch (:183-212): count precheck then fan-out.
     total = fetch_count(config.maps_source)
     num_pages = -(-total // config.maps_source.per_page)
-    map_pages = scan_pages(spark, config.maps_source, num_pages)
+    map_pages = scan_pages(spark, config.maps_source, num_pages).persist()
+    cached.append(map_pages)
     maps = page_items(map_pages, config.map_item_schema).drop("page")
     out["map_errors"] = _write(page_errors(map_pages), dirs, "map_errors")
 
     if config.mask_source is not None:
         # Reference getMask hop (:79-110): masks/GCPs come from the
-        # Warper API per map, not the items payload.
-        from pyspark.sql import functions as F
-
-        from .operators.enrichment import fetch_masks
-
+        # Warper API per map, not the items payload. Persisted: the
+        # enrichment's two branches and the write all read it.
         maps = fetch_masks(
             spark,
             maps.drop("gcps", "maskGeometry", "maskError"),
             config.mask_source,
-        )
+        ).persist()
+        cached.append(maps)
 
     if config.enrich:
         maps = enrich_masks(maps, order=config.transform_order)
         if config.mask_source is not None:
-            from pyspark.sql import functions as F
-
             # fetch-level errors win over transform-level ones, like
             # the reference's maskError attachment on fetch failure
             maps = maps.withColumn(
@@ -238,8 +249,6 @@ def download(
                 F.coalesce(F.col("mask_fetch_error"), F.col("maskError")),
             ).drop("mask_fetch_error")
     elif config.mask_source is not None:
-        from pyspark.sql import functions as F
-
         # Schema-stable non-enrich branch: the checkpointed maps table
         # must look the same whether or not the transform ran — fetch
         # failures still surface as maskError (reference :90), and
@@ -256,15 +265,18 @@ def download(
         maps = maps.drop("mask")
 
     if config.map_layers_source is not None:
-        membership_pages = scan_until_short_page(
-            spark, config.map_layers_source
-        )
+        membership_pages, waves = _scan_waves(spark, config.map_layers_source)
+        cached.extend(waves)
         membership = page_items(
             membership_pages, config.map_layers_item_schema
         ).drop("page")
         maps = attach_map_layers(maps.drop("layerIds"), membership)
 
     out["maps"] = _write(maps, dirs, "maps")
+    # Every output is a read-back of its checkpoint, so the caches can
+    # go; dependents first, so no cached plan is re-planned.
+    for df in reversed(cached):
+        df.unpersist()
     return out
 
 
@@ -279,10 +291,8 @@ def transform(
     maps = spark.read.parquet(os.path.join(dirs.previous, "maps"))
     layers = spark.read.parquet(os.path.join(dirs.previous, "layers"))
 
-    from pyspark.sql import functions as F
-
-    mo = map_objects(maps)
-    lo = transform_layers(layers)
+    mo = _write(map_objects(maps), dirs, "map_objects")
+    lo = _write(transform_layers(layers), dirs, "layer_objects")
     # Map and layer objects have different nested `data` shapes (the
     # reference's oneOf output schema, mapwarper.dataset.json:41-153);
     # they stay one-DataFrame-per-variant, and the unified tagged
@@ -304,8 +314,8 @@ def transform(
         return df.select(*cols)
 
     out = {
-        "map_objects": _write(mo, dirs, "map_objects"),
-        "layer_objects": _write(lo, dirs, "layer_objects"),
+        "map_objects": mo,
+        "layer_objects": lo,
         "objects": _write(
             _boundary(mo).unionByName(_boundary(lo)), dirs, "objects"
         ),

@@ -236,12 +236,26 @@ def scan_until_short_page(
     per downstream action. At 100 TB scale the same shape holds — the
     driver's working set is O(pages probed), not O(bytes fetched).
     """
+    return _scan_waves(spark, config, items_field, wave_size, max_pages)[0]
+
+
+def _scan_waves(
+    spark: SparkSession,
+    config: RestSourceConfig,
+    items_field: str = "items",
+    wave_size: int = 8,
+    max_pages: int = 100_000,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """``scan_until_short_page`` plus the persisted waves behind it, so
+    a caller that has written what it needs can ``unpersist`` them."""
     kept: list[DataFrame] = []
+    waves: list[DataFrame] = []
     page = 1
     done = False
     while not done and page <= max_pages:
         n = min(wave_size, max_pages - page + 1)
         wave = scan_pages(spark, config, n, page).persist()
+        waves.append(wave)
         meta = sorted(
             _wave_meta(wave, items_field).collect(), key=lambda r: r.page
         )
@@ -275,11 +289,11 @@ def scan_until_short_page(
             )
         page += len(meta)
     if not kept:
-        return spark.createDataFrame([], PAGE_SCHEMA)
+        return spark.createDataFrame([], PAGE_SCHEMA), waves
     out = kept[0]
     for w in kept[1:]:
         out = out.unionByName(w)
-    return out
+    return out, waves
 
 
 def page_items(

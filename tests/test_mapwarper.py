@@ -1,22 +1,26 @@
 """Unit tests for the mapwarper transform (reference parity).
 
-Golden values are computed by an INDEPENDENT pure-Python port of the
-published geojson-area algorithm (the same one turf.area v3 uses), so
-the Spark column expression is cross-checked against a second
-implementation, not against itself.
+Golden values are computed by INDEPENDENT pure-Python ports — of the
+published geojson-area algorithm (the same one turf.area v3 uses) and
+of the strict segment-crossing count behind the self-intersection
+rule — so the Spark column expressions are cross-checked against a
+second implementation, not against themselves.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import random
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from etl_mapwarper_spark.functions.geo import _ring_kinks  # noqa: E402
+from etl_mapwarper_spark.functions.geo import (  # noqa: E402
+    self_intersection_count,
+)
 from etl_mapwarper_spark.operators.mapwarper import (  # noqa: E402
     map_logs,
     map_objects,
@@ -68,11 +72,105 @@ def test_geodesic_area_matches_independent_impl(spark):
         assert abs(got[r["id"]] - expected) <= max(1e-6 * abs(expected), 1e-6), r["id"]
 
 
-def test_kinks_bowtie_and_square():
-    square = [[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]]
-    bowtie = [[0, 0], [1, 1], [1, 0], [0, 1], [0, 0]]
-    assert _ring_kinks(square) == 0
-    assert _ring_kinks(bowtie) == 1
+def _proper_cross(ax, ay, bx, by, cx, cy, dx, dy) -> bool:
+    """Strict proper crossing of segments AB and CD (no collinear/touch)."""
+
+    def ccw(px, py, qx, qy, rx, ry):
+        return (qx - px) * (ry - py) - (qy - py) * (rx - px)
+
+    d1 = ccw(cx, cy, dx, dy, ax, ay)
+    d2 = ccw(cx, cy, dx, dy, bx, by)
+    d3 = ccw(ax, ay, bx, by, cx, cy)
+    d4 = ccw(ax, ay, bx, by, dx, dy)
+    return ((d1 > 0 and d2 < 0) or (d1 < 0 and d2 > 0)) and (
+        (d3 > 0 and d4 < 0) or (d3 < 0 and d4 > 0)
+    )
+
+
+def _ring_kinks(ring) -> int:
+    pts = [(float(p[0]), float(p[1])) for p in ring]
+    nseg = len(pts) - 1  # closed ring: last point repeats the first
+    count = 0
+    for i in range(nseg):
+        for j in range(i + 1, nseg):
+            # skip adjacent segments (share an endpoint), incl. wraparound
+            if j == i + 1 or (i == 0 and j == nseg - 1):
+                continue
+            a, b = pts[i], pts[i + 1]
+            c, d = pts[j], pts[j + 1]
+            if _proper_cross(a[0], a[1], b[0], b[1], c[0], c[1], d[0], d[1]):
+                count += 1
+    return count
+
+
+def ref_kinks(coords) -> int:
+    if coords is None:
+        return 0
+    return sum(
+        _ring_kinks(ring) for ring in coords if ring is not None and len(ring) >= 4
+    )
+
+
+SQUARE = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]
+BOWTIE = [[0.0, 0.0], [1.0, 1.0], [1.0, 0.0], [0.0, 1.0], [0.0, 0.0]]
+
+
+def _random_ring(rng: random.Random):
+    n = rng.choice([0, 1, 2, 3, 4, 5, 6, 8, 12])
+    if rng.random() < 0.5:
+        # small integer grid: many collinear and duplicate points
+        pts = [[float(rng.randint(0, 3)), float(rng.randint(0, 3))] for _ in range(n)]
+    else:
+        pts = [[rng.uniform(-74.1, -73.8), rng.uniform(40.6, 40.9)] for _ in range(n)]
+    if pts and rng.random() < 0.2:
+        k = rng.randrange(len(pts))
+        pts.insert(k, list(pts[k]))  # repeated vertex
+    if pts and rng.random() < 0.8:
+        pts.append(list(pts[0]))  # closed ring
+    return pts
+
+
+def _kinks_corpus(n: int, seed: int = 20260):
+    rng = random.Random(seed)
+    corpus = [None, [], [None], [SQUARE], [BOWTIE], [SQUARE, BOWTIE]]
+    while len(corpus) < n:
+        if rng.random() < 0.05:
+            corpus.append(None)
+            continue
+        rings = [
+            None if rng.random() < 0.05 else _random_ring(rng)
+            for _ in range(rng.choice([1, 1, 1, 2, 3]))
+        ]
+        corpus.append(rings)
+    return corpus
+
+
+def test_kinks_bowtie_and_square(spark):
+    assert _ring_kinks(SQUARE) == 0
+    assert _ring_kinks(BOWTIE) == 1
+    df = spark.createDataFrame(
+        [(0, [SQUARE]), (1, [BOWTIE])], "id int, c array<array<array<double>>>"
+    )
+    got = dict(df.select("id", self_intersection_count("c")).collect())
+    assert got == {0: 0, 1: 1}
+
+
+def test_kinks_expression_matches_reference(spark):
+    """The JVM kinks expression equals the pure-Python reference on a
+    seeded corpus with null polygons, null and short rings, collinear
+    and repeated points, and multi-ring polygons."""
+    corpus = _kinks_corpus(3000)
+    df = spark.createDataFrame(
+        list(enumerate(corpus)), "id int, c array<array<array<double>>>"
+    )
+    got = dict(
+        df.select("id", self_intersection_count("c").alias("k")).collect()
+    )
+    expected = {i: ref_kinks(c) for i, c in enumerate(corpus)}
+    mismatched = sorted(i for i in expected if got[i] != expected[i])
+    assert not mismatched, [(corpus[i], got[i], expected[i]) for i in mismatched[:5]]
+    # the corpus exercises the crossing branch, not just the zero paths
+    assert sum(v > 0 for v in expected.values()) > 300
 
 
 def test_logs_xor_objects(spark):

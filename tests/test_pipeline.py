@@ -7,13 +7,23 @@ round-trip, parquet checkpoints) and quarantine fetch errors as data.
 
 from __future__ import annotations
 
+import dataclasses
+import os
+from collections import Counter
+
 from etl_mapwarper_spark.operators.mapwarper import (
     map_objects,
     synthetic_maps,
 )
-from etl_mapwarper_spark.operators.pipeline_queries import _config, _outputs
+from etl_mapwarper_spark.operators.pipeline_queries import (
+    _config,
+    _e2e_config,
+    _outputs,
+)
 from etl_mapwarper_spark.pipeline import (
     PipelineConfig,
+    PipelineDirs,
+    download,
     run_pipeline,
 )
 from etl_mapwarper_spark.sources.paginated_rest import RestSourceConfig
@@ -87,6 +97,71 @@ def test_download_quarantines_fetch_errors(spark, tmp_path):
     assert "HTTP 500" in errs[0].error
     # pages 1 and 3 still landed their items
     assert out["maps"].count() > 0
+
+
+def _logging_fetcher(inner, log_dir):
+    """Wrap a fetcher so every request appends its URL to a per-process
+    file under ``log_dir``; a closure, so it pickles by value to the
+    Python workers."""
+
+    def fetch(url, timeout_s):
+        with open(os.path.join(log_dir, f"{os.getpid()}.log"), "a") as fh:
+            fh.write(url + "\n")
+        return inner(url, timeout_s)
+
+    return fetch
+
+
+def _read_requests(log_dir) -> Counter:
+    urls: Counter = Counter()
+    for name in os.listdir(log_dir):
+        with open(os.path.join(log_dir, name)) as fh:
+            urls.update(line.rstrip("\n") for line in fh)
+    return urls
+
+
+def test_download_fetches_each_page_and_mask_once(spark, tmp_path):
+    """Every maps page and every masked map's mask is requested exactly
+    once per download (page 1 once more for the driver's count probe),
+    however many outputs and enrichment branches read them."""
+    log_dir = tmp_path / "requests"
+    log_dir.mkdir()
+    base = _e2e_config(spark, SF_DIR)
+    cfg = dataclasses.replace(
+        base,
+        maps_source=dataclasses.replace(
+            base.maps_source,
+            fetcher=_logging_fetcher(base.maps_source.fetcher, str(log_dir)),
+        ),
+        mask_source=dataclasses.replace(
+            base.mask_source,
+            fetcher=_logging_fetcher(base.mask_source.fetcher, str(log_dir)),
+        ),
+    )
+    download(spark, cfg, PipelineDirs(current=str(tmp_path / "dl")))
+    urls = _read_requests(str(log_dir))
+
+    keys = base.maps_source.fetcher.keywords["rows"]
+    n_pages = -(-len(keys) // cfg.maps_source.per_page)
+    expected_pages = Counter(
+        cfg.maps_source.url_for(p) for p in range(1, n_pages + 1)
+    )
+    expected_pages[cfg.maps_source.url_for(1)] += 1  # count probe
+    masked = [k for k in keys if k % 10 != 0]  # the fixture's mask gate
+    expected_masks = Counter(
+        cfg.mask_source.url_template.format(id=k) for k in masked
+    )
+    assert n_pages > 1 and masked
+    assert urls == expected_pages + expected_masks
+
+
+def test_run_pipeline_releases_its_caches(spark, tmp_path):
+    """The short-page waves, fetched pages and mask-joined maps that
+    download persists are all released by the end of the run."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    run_pipeline(spark, _e2e_config(spark, SF_DIR), str(tmp_path / "pipe"))
+    assert persistent().size() == before
 
 
 def test_download_maps_schema_stable_across_enrich_flag(spark, tmp_path):

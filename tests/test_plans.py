@@ -1371,7 +1371,8 @@ def test_persist_sites_are_classified():
         ("textops.py", "tx_bpe_fertility"),
         ("textops.py", "tx_logreg_train_steps"),
         ("mapwarper.py", "_fixture_df"),
-        ("paginated_rest.py", "scan_until_short_page"),
+        ("paginated_rest.py", "_scan_waves"),
+        ("pipeline.py", "download"),
     }
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
