@@ -28,15 +28,26 @@ join (:57-77, replaced by a real aggregate+broadcast join). Each
 REST page and each mask is fetched once per run: the fetched pages
 and the mask-joined maps are persisted while the step writes from
 them, and released (with the short-page waves) once ``maps`` is
-written.
+written, or once the step fails. The reference builds its layers and
+maps pipelines in one call (:155-166, :183-212); here the layers,
+membership and maps crawls run concurrently from driver threads, each
+against its own source's politeness budget (token bucket and
+``max_concurrency``), so only different endpoints overlap.
 
 Step 2 — ``transform`` (reference :417-437): route records by type
 (:418-421), validation split into clean objects vs quarantine logs
 (:358-361), relation edge derivation (:333-346), layer projection
 (:399-415); writes ``objects``, ``relations``, ``logs`` sinks. The
-unified ``objects`` sink is built from the written ``map_objects`` and
-``layer_objects`` checkpoints, and validation is a pure column
-expression, so the step has no Python boundary.
+independent sinks are written concurrently, like the reference's
+three (:417-437); the unified ``objects`` sink is built from the
+written ``map_objects`` and ``layer_objects`` checkpoints after they
+land, and validation is a pure column expression, so the step has no
+Python boundary.
+
+Concurrent branches run on threads that inherit the caller's job
+group, description and tags, so their jobs are counted and cancelled
+with the caller's. When a branch fails, its error is re-raised after
+the branches still in flight have ended.
 
 Scale: every transform is a narrow column expression over the
 parquet checkpoint — one scan stage per input, no shuffle (only the
@@ -48,9 +59,11 @@ budget, not the cluster size (see sources/paginated_rest.py).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Callable, Optional
+from typing import Any, Callable, Optional
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -196,6 +209,19 @@ class PipelineConfig:
             )
 
 
+def _concurrently(spark: SparkSession, *thunks: Callable[[], Any]) -> list:
+    """Run each thunk on its own driver thread; return their results in
+    submission order. Each thread starts with the caller's Spark local
+    properties (job group, description) and session tags, so its jobs
+    count where the caller's would. A failure is re-raised (the first in
+    submission order) only after every thunk has finished."""
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
+        ]
+    return [f.result() for f in futures]
+
+
 def _write(df: DataFrame, dirs: PipelineDirs, name: str) -> DataFrame:
     """Write ``df`` as parquet and return the read-back checkpoint. The
     schema is passed so the read-back starts no schema-inference job."""
@@ -209,75 +235,97 @@ def download(
 ) -> dict[str, DataFrame]:
     """Step 1 (reference :151-219): crawl maps + layers, quarantine
     fetch errors, optionally enrich masks and attach layer membership;
-    checkpoint everything as parquet under ``dirs.current``."""
+    checkpoint everything as parquet under ``dirs.current``.
+
+    The layers crawl and its two writes, the membership crawl, and the
+    maps crawl (count probe, fan-out, ``map_errors`` write, mask
+    fetch/enrich plan) run concurrently; ``maps`` is joined and written
+    once all three end. Each crawl keeps its own source's token bucket
+    and ``max_concurrency``: only different endpoints overlap. If a
+    branch fails, its error is re-raised once the others have ended,
+    and every cache the step persisted is released either way."""
     config.precheck()  # abort before the first fetch (:168-171)
-    out: dict[str, DataFrame] = {}
+    # Every persisted frame, appended right after its persist() by the
+    # branch that made it, so each branch's dependents follow its bases.
+    cached: list[DataFrame] = []
 
-    # Layers branch (:155-166): short-page loop. ``cached`` collects
-    # every persisted frame; all are released once ``maps`` is written.
-    layer_pages, cached = _scan_waves(spark, config.layers_source)
-    layers = page_items(layer_pages, config.layer_item_schema).drop("page")
-    out["layers"] = _write(layers, dirs, "layers")
-    out["layer_errors"] = _write(page_errors(layer_pages), dirs, "layer_errors")
-
-    # Maps branch (:183-212): count precheck then fan-out.
-    total = fetch_count(config.maps_source)
-    num_pages = -(-total // config.maps_source.per_page)
-    map_pages = scan_pages(spark, config.maps_source, num_pages).persist()
-    cached.append(map_pages)
-    maps = page_items(map_pages, config.map_item_schema).drop("page")
-    out["map_errors"] = _write(page_errors(map_pages), dirs, "map_errors")
-
-    if config.mask_source is not None:
-        # Reference getMask hop (:79-110): masks/GCPs come from the
-        # Warper API per map, not the items payload. Persisted: the
-        # enrichment's two branches and the write all read it.
-        maps = fetch_masks(
-            spark,
-            maps.drop("gcps", "maskGeometry", "maskError"),
-            config.mask_source,
-        ).persist()
-        cached.append(maps)
-
-    if config.enrich:
-        maps = enrich_masks(maps, order=config.transform_order)
-        if config.mask_source is not None:
-            # fetch-level errors win over transform-level ones, like
-            # the reference's maskError attachment on fetch failure
-            maps = maps.withColumn(
-                "maskError",
-                F.coalesce(F.col("mask_fetch_error"), F.col("maskError")),
-            ).drop("mask_fetch_error")
-    elif config.mask_source is not None:
-        # Schema-stable non-enrich branch: the checkpointed maps table
-        # must look the same whether or not the transform ran — fetch
-        # failures still surface as maskError (reference :90), and
-        # maskGeometry exists (null: nothing computed it yet).
-        maps = maps.withColumnRenamed(
-            "mask_fetch_error", "maskError"
-        ).withColumn(
-            "maskGeometry",
-            F.lit(None).cast(MAP_ITEM_SCHEMA["maskGeometry"].dataType),
-        )
-    if config.mask_source is not None:
-        # raw pixel-space mask ring is fetch-internal (the transform
-        # consumes it); MAP_ITEM_SCHEMA has no such column
-        maps = maps.drop("mask")
-
-    if config.map_layers_source is not None:
-        membership_pages, waves = _scan_waves(spark, config.map_layers_source)
+    def layers_branch() -> dict[str, DataFrame]:
+        # Short-page loop (:155-166).
+        pages, waves = _scan_waves(spark, config.layers_source)
         cached.extend(waves)
-        membership = page_items(
-            membership_pages, config.map_layers_item_schema
-        ).drop("page")
-        maps = attach_map_layers(maps.drop("layerIds"), membership)
+        layers = page_items(pages, config.layer_item_schema).drop("page")
+        return {
+            "layers": _write(layers, dirs, "layers"),
+            "layer_errors": _write(page_errors(pages), dirs, "layer_errors"),
+        }
 
-    out["maps"] = _write(maps, dirs, "maps")
-    # Every output is a read-back of its checkpoint, so the caches can
-    # go; dependents first, so no cached plan is re-planned.
-    for df in reversed(cached):
-        df.unpersist()
-    return out
+    def membership_branch() -> Optional[DataFrame]:
+        if config.map_layers_source is None:
+            return None
+        pages, waves = _scan_waves(spark, config.map_layers_source)
+        cached.extend(waves)
+        return page_items(pages, config.map_layers_item_schema).drop("page")
+
+    def maps_branch() -> tuple[DataFrame, DataFrame]:
+        # Count precheck then fan-out (:183-212).
+        total = fetch_count(config.maps_source)
+        num_pages = -(-total // config.maps_source.per_page)
+        map_pages = scan_pages(spark, config.maps_source, num_pages).persist()
+        cached.append(map_pages)
+        maps = page_items(map_pages, config.map_item_schema).drop("page")
+        map_errors = _write(page_errors(map_pages), dirs, "map_errors")
+
+        if config.mask_source is not None:
+            # Reference getMask hop (:79-110): masks/GCPs come from the
+            # Warper API per map, not the items payload. Persisted: the
+            # enrichment's two branches and the write all read it.
+            maps = fetch_masks(
+                spark,
+                maps.drop("gcps", "maskGeometry", "maskError"),
+                config.mask_source,
+            ).persist()
+            cached.append(maps)
+
+        if config.enrich:
+            maps = enrich_masks(maps, order=config.transform_order)
+            if config.mask_source is not None:
+                # fetch-level errors win over transform-level ones, like
+                # the reference's maskError attachment on fetch failure
+                maps = maps.withColumn(
+                    "maskError",
+                    F.coalesce(F.col("mask_fetch_error"), F.col("maskError")),
+                ).drop("mask_fetch_error")
+        elif config.mask_source is not None:
+            # Schema-stable non-enrich branch: the checkpointed maps table
+            # must look the same whether or not the transform ran — fetch
+            # failures still surface as maskError (reference :90), and
+            # maskGeometry exists (null: nothing computed it yet).
+            maps = maps.withColumnRenamed(
+                "mask_fetch_error", "maskError"
+            ).withColumn(
+                "maskGeometry",
+                F.lit(None).cast(MAP_ITEM_SCHEMA["maskGeometry"].dataType),
+            )
+        if config.mask_source is not None:
+            # raw pixel-space mask ring is fetch-internal (the transform
+            # consumes it); MAP_ITEM_SCHEMA has no such column
+            maps = maps.drop("mask")
+        return maps, map_errors
+
+    try:
+        out, membership, (maps, map_errors) = _concurrently(
+            spark, layers_branch, membership_branch, maps_branch
+        )
+        out["map_errors"] = map_errors
+        if membership is not None:
+            maps = attach_map_layers(maps.drop("layerIds"), membership)
+        out["maps"] = _write(maps, dirs, "maps")
+        return out
+    finally:
+        # Every output is a read-back of its checkpoint, so the caches
+        # can go; dependents first, so no cached plan is re-planned.
+        for df in reversed(cached):
+            df.unpersist()
 
 
 def transform(
@@ -291,8 +339,15 @@ def transform(
     maps = spark.read.parquet(os.path.join(dirs.previous, "maps"))
     layers = spark.read.parquet(os.path.join(dirs.previous, "layers"))
 
-    mo = _write(map_objects(maps), dirs, "map_objects")
-    lo = _write(transform_layers(layers), dirs, "layer_objects")
+    # The four sinks are independent and written concurrently; the
+    # unified ``objects`` sink reads two of them back once they land.
+    mo, lo, relations, logs = _concurrently(
+        spark,
+        lambda: _write(map_objects(maps), dirs, "map_objects"),
+        lambda: _write(transform_layers(layers), dirs, "layer_objects"),
+        lambda: _write(map_relations(maps), dirs, "relations"),
+        lambda: _write(map_logs(maps), dirs, "logs"),
+    )
     # Map and layer objects have different nested `data` shapes (the
     # reference's oneOf output schema, mapwarper.dataset.json:41-153);
     # they stay one-DataFrame-per-variant, and the unified tagged
@@ -313,16 +368,15 @@ def transform(
         )
         return df.select(*cols)
 
-    out = {
+    return {
         "map_objects": mo,
         "layer_objects": lo,
         "objects": _write(
             _boundary(mo).unionByName(_boundary(lo)), dirs, "objects"
         ),
-        "relations": _write(map_relations(maps), dirs, "relations"),
-        "logs": _write(map_logs(maps), dirs, "logs"),
+        "relations": relations,
+        "logs": logs,
     }
-    return out
 
 
 # The reference's public API (mapwarper.js:441-444).

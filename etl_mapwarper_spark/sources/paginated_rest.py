@@ -14,9 +14,12 @@ Spark mapping (designed for a 1000-executor cluster, tested local):
 
 - Fan-out = ``spark.range(num_pages)`` coalesced to ``max_concurrency``
   partitions; each partition runs a token-bucket rate limiter so the
-  *global* request rate matches the politeness budget no matter how
-  many executors the cluster has. The reference's ``H.series()``
-  (concurrency 1) is the degenerate case ``max_concurrency=1``.
+  scan's *global* request rate (summed over its partitions) matches the
+  politeness budget no matter how many executors the cluster has. The
+  reference's ``H.series()`` (concurrency 1) is the degenerate case
+  ``max_concurrency=1``. The budget is per scan, not per process: two
+  scans of one endpoint running at once would each spend it, so
+  ``pipeline.download`` overlaps only scans of different endpoints.
 - Short-page termination is inherently sequential; we fetch in *waves*
   of ``wave_size`` pages (driver loop), stopping after the first wave
   that contains a short or failed page — at most ``wave_size - 1``

@@ -8,8 +8,13 @@ round-trip, parquet checkpoints) and quarantine fetch errors as data.
 from __future__ import annotations
 
 import dataclasses
+import json
 import os
+import warnings
 from collections import Counter
+from urllib.parse import parse_qs, urlparse
+
+import pytest
 
 from etl_mapwarper_spark.operators.mapwarper import (
     map_objects,
@@ -26,7 +31,11 @@ from etl_mapwarper_spark.pipeline import (
     download,
     run_pipeline,
 )
-from etl_mapwarper_spark.sources.paginated_rest import RestSourceConfig
+from etl_mapwarper_spark.sources.paginated_rest import (
+    FetchResult,
+    RestSourceConfig,
+    with_injected_failures,
+)
 
 from conftest import SF_DIR
 
@@ -162,6 +171,105 @@ def test_run_pipeline_releases_its_caches(spark, tmp_path):
     before = persistent().size()
     run_pipeline(spark, _e2e_config(spark, SF_DIR), str(tmp_path / "pipe"))
     assert persistent().size() == before
+
+
+def test_failed_download_releases_its_caches(spark, tmp_path):
+    """A download whose maps count probe fails re-raises that error and
+    still releases what it persisted (the layers wave) on the way out."""
+    base = _e2e_config(spark, SF_DIR)
+    cfg = dataclasses.replace(
+        base,
+        maps_source=dataclasses.replace(
+            base.maps_source,
+            fetcher=with_injected_failures(base.maps_source.fetcher, [1]),
+        ),
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(RuntimeError, match="count request failed"):
+        download(spark, cfg, PipelineDirs(current=str(tmp_path / "dl")))
+    assert persistent().size() == before
+
+
+def test_run_pipeline_jobs_stay_in_the_callers_job_group(spark, tmp_path):
+    """Every job the pipeline starts, on whichever driver thread, runs in
+    the caller's job group, so per-group job and failed-task counts see
+    them all; escalating UserWarning also catches a thread started
+    without the session ("Tags will not be inherited")."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    cfg = _e2e_config(spark, SF_DIR)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("pipeline-job-group-guard", "run_pipeline")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", UserWarning)
+            run_pipeline(spark, cfg, str(tmp_path / "pipe"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert tracker.getJobIdsForGroup("pipeline-job-group-guard")
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def _membership_fetcher(pairs, log_dir):
+    """Short-page ``{"items": [{map_id, layer_id}, ...]}`` endpoint over
+    ``pairs`` that logs every request like ``_logging_fetcher``; a
+    closure, so it pickles by value to the Python workers."""
+
+    def serve(url, timeout_s):
+        q = parse_qs(urlparse(url).query)
+        per_page = int(q["per_page"][0])
+        lo = (int(q["page"][0]) - 1) * per_page
+        items = [
+            {"map_id": m, "layer_id": layer}
+            for m, layer in pairs[lo : lo + per_page]
+        ]
+        return FetchResult(200, json.dumps({"items": items}))
+
+    return _logging_fetcher(serve, log_dir)
+
+
+def test_download_attaches_map_layer_membership(spark, tmp_path):
+    """With ``map_layers_source`` set, ``maps.layerIds`` is each map's
+    sorted distinct layer ids (null for a map with no membership), and
+    each membership page is requested once across the scan's waves."""
+    log_dir = tmp_path / "requests"
+    log_dir.mkdir()
+    base = _e2e_config(spark, SF_DIR)
+    keys = base.maps_source.fetcher.keywords["rows"]
+    # A duplicate pair per map, sorted by layer so a map's pairs span
+    # several pages; every 7th map has none.
+    pairs = sorted(
+        ((k, layer) for k in keys if k % 7 for layer in (k % 5, k % 11, k % 5)),
+        key=lambda p: (p[1], p[0]),
+    )
+    per_page = 20
+    cfg = dataclasses.replace(
+        base,
+        map_layers_source=RestSourceConfig(
+            url_template="http://fake/map_layers.json"
+            "?page={page}&per_page={per_page}",
+            per_page=per_page,
+            requests_per_second=1e9,
+            backoff_s=0.0,
+            max_concurrency=4,
+            fetcher=_membership_fetcher(pairs, str(log_dir)),
+        ),
+    )
+    out = download(spark, cfg, PipelineDirs(current=str(tmp_path / "dl")))
+
+    got = {r.id: r.layerIds for r in out["maps"].select("id", "layerIds").collect()}
+    expected = {k: None for k in keys}
+    for m, layer in pairs:
+        expected[m] = sorted({*(expected[m] or []), layer})
+    assert got == expected
+
+    short_page = len(pairs) // per_page + 1  # first page under per_page
+    waves = -(-short_page // 8)  # the scan's default wave size
+    assert waves > 1
+    assert _read_requests(str(log_dir)) == Counter(
+        cfg.map_layers_source.url_for(p) for p in range(1, 8 * waves + 1)
+    )
 
 
 def test_download_maps_schema_stable_across_enrich_flag(spark, tmp_path):

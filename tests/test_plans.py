@@ -1373,6 +1373,7 @@ def test_persist_sites_are_classified():
         ("mapwarper.py", "_fixture_df"),
         ("paginated_rest.py", "_scan_waves"),
         ("pipeline.py", "download"),
+        ("pipeline.py", "maps_branch"),
     }
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
