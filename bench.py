@@ -42,6 +42,7 @@ from etl_mapwarper_spark.functions.dist_rank import (  # noqa: E402
     release_ranked_cache,
 )
 from etl_mapwarper_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
+from etl_mapwarper_spark.sources.tables import TABLE_NAMES  # noqa: E402
 
 # Headline set: relational core (scan-agg, multi-join, window, as-of),
 # dedup (exact, minhash-LSH, inverted-index jaccard, simhash),
@@ -289,10 +290,7 @@ def main() -> None:
             or 4
         )
         con.execute(f"SET threads TO {n_threads}")
-        for t in (
-            "region nation customer supplier part orders lineitem "
-            "events documents embeddings"
-        ).split():
+        for t in TABLE_NAMES:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
             )

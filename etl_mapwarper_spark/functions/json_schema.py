@@ -18,7 +18,7 @@ and tuple-form items collapse to their merged element type.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -109,16 +109,6 @@ def merge_structs(variants: list[T.DataType]) -> T.StructType:
             for name, dt in types.items()
         ]
     )
-
-
-def flatten_path_columns(paths: list[str]) -> list[Column]:
-    """``flattenPaths`` hints (``$.data.uuid`` …) → column projections
-    aliased to their leaf name."""
-    cols = []
-    for p in paths:
-        dotted = p.removeprefix("$.")
-        cols.append(F.col(dotted).alias(dotted.rsplit(".", 1)[-1]))
-    return cols
 
 
 def apply_flatten_paths(df: DataFrame, paths: list[str]) -> DataFrame:

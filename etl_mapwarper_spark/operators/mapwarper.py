@@ -22,32 +22,98 @@ Deviation from the reference, documented: node ids are STRING in all
 outputs (the reference mixes number ids for maps with ``layer-N``
 strings for layers).
 
-Synthetic fixtures: ``synthetic_maps`` / ``synthetic_layers`` derive
-deterministic mapwarper-shaped records from the driver's ``part`` and
-``nation`` parquet tables using pure arithmetic, and the oracle SQL
-reproduces the identical records in DuckDB — so the whole transform
-(rules, area, edges) is value-level oracle-checked, not rows-only.
+Item contract: ``MAP_ITEM_SCHEMA`` / ``LAYER_ITEM_SCHEMA`` are the
+API item fields the reference reads; the pipeline parses REST pages
+with them, and nothing else restates them.
+
+Synthetic fixtures: ``map_records`` / ``layer_records`` derive
+deterministic items of those shapes from the driver's ``part`` and
+``nation`` parquet tables using pure arithmetic. ``synthetic_maps`` /
+``synthetic_layers`` serve them as parquet scans (Arrow schema derived
+from the Spark one), pipeline_queries' fake API serves the same dicts
+as JSON pages, and the oracle SQL reproduces the identical records in
+DuckDB — so the whole transform (rules, area, edges) is value-level
+oracle-checked, not rows-only.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.geo import coords_all_valid, geodesic_area, self_intersection_count
 from ..functions.scalar import bbox_to_array, coalesce_year
 from ..sources.tables import load_table
 
 # ---------------------------------------------------------------------------
+# Item contract: the Map Warper API item fields the reference reads
+# (transformMap/transformLayer, mapwarper.js:353-415; SURVEY.md
+# §1.2-1.3). maskGeometry/gcps are present when the API items arrive
+# pre-enriched (or after the enrichment stage fills them).
+# ---------------------------------------------------------------------------
+
+MAP_ITEM_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("title", T.StringType()),
+        T.StructField("description", T.StringType()),
+        T.StructField("nypl_digital_id", T.StringType()),
+        T.StructField("uuid", T.StringType()),
+        T.StructField("parent_uuid", T.StringType()),
+        T.StructField("bbox", T.StringType()),
+        T.StructField("map_type", T.StringType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("mask_status", T.StringType()),
+        T.StructField("transform_options", T.StringType()),
+        T.StructField("depicts_year", T.StringType()),
+        T.StructField("issue_year", T.StringType()),
+        T.StructField("maskError", T.StringType()),
+        T.StructField(
+            "maskGeometry",
+            T.StructType(
+                [
+                    T.StructField("type", T.StringType()),
+                    T.StructField(
+                        "coordinates",
+                        T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))),
+                    ),
+                ]
+            ),
+        ),
+        T.StructField("gcps", T.ArrayType(T.ArrayType(T.DoubleType()))),
+        T.StructField("layerIds", T.ArrayType(T.LongType())),
+    ]
+)
+
+LAYER_ITEM_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("depicts_year", T.StringType()),
+        T.StructField("issue_year", T.StringType()),
+        T.StructField("maps_count", T.IntegerType()),
+        T.StructField("bbox", T.StringType()),
+    ]
+)
+
+# Map↔layer membership stream items (config.includeMapLayers, :172-181).
+MAP_LAYER_ITEM_SCHEMA = T.StructType(
+    [
+        T.StructField("map_id", T.LongType()),
+        T.StructField("layer_id", T.LongType()),
+    ]
+)
+
+# ---------------------------------------------------------------------------
 # Synthetic fixture sources (deterministic from part/nation keys).
 # ---------------------------------------------------------------------------
 
 N_MAPS = 150  # p_partkey < 150 exists at every SF
-N_LAYERS = 25  # nation keys 0..24
 
 # The fixtures are tiny by construction (150 / 25 rows at every SF).
-# They are built driver-side (plain Python arithmetic over the key
-# column collected from the driver's parquet tables, exactly
+# Their records are built driver-side (plain Python arithmetic over the
+# key column collected from the driver's parquet tables, exactly
 # mirroring the oracle SQL's IEEE-double arithmetic in DuckDB),
 # written once per process to a temp parquet file, and read back with
 # spark.read.parquet. Two earlier shapes were pathological:
@@ -65,7 +131,9 @@ N_LAYERS = 25  # nation keys 0..24
 _FIXTURE_CACHE: dict = {}
 
 
-def _fixture_df(spark, sf_dir: str, name: str, build_table) -> DataFrame:
+def _fixture_df(
+    spark, sf_dir: str, name: str, records, schema: T.StructType
+) -> DataFrame:
     key = (spark, sf_dir, name)
     entry = _FIXTURE_CACHE.get(key)
     if entry is not None:
@@ -73,25 +141,30 @@ def _fixture_df(spark, sf_dir: str, name: str, build_table) -> DataFrame:
     import os
     import tempfile
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     path = os.path.join(
         tempfile.gettempdir(),
         f"mw_fixture_{name}_{abs(hash(sf_dir)) % (1 << 32)}_{os.getpid()}.parquet",
     )
     if not os.path.exists(path):
-        pq.write_table(build_table(), path)
+        table = pa.Table.from_pylist(
+            records(spark, sf_dir), schema=to_arrow_schema(schema)
+        )
+        pq.write_table(table, path)
     df = spark.read.parquet(path).persist()
     _FIXTURE_CACHE[key] = df
     return df
 
 
 def synthetic_maps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """maps_enriched-shaped fixture rows keyed by p_partkey < 150."""
-    return _fixture_df(spark, sf_dir, "maps", lambda: _maps_table(spark, sf_dir))
+    """maps_enriched-shaped fixture: ``map_records`` as a parquet scan."""
+    return _fixture_df(spark, sf_dir, "maps", map_records, MAP_ITEM_SCHEMA)
 
 
-def _map_row(k: int) -> tuple:
+def _map_record(k: int) -> dict:
     ks = str(k)
     lon0 = -74.0 + (k % 10) * 0.01
     lat0 = 40.7 + ((k * 7) % 10) * 0.01
@@ -135,106 +208,60 @@ def _map_row(k: int) -> tuple:
         uuid = "inset-" + ks
     else:
         uuid = "uuid-" + ks
-    return (
-        k,
-        "Map " + ks,
-        "Description of map " + ks if k % 9 != 0 else None,
-        "img-" + ks if k % 27 != 0 else None,
-        uuid,
-        "uuid-parent-" + ks if k % 11 == 0 else None,
-        "-74.0,40.7,-73.9,40.8" if k % 17 != 0 else None,
-        "not_map" if k % 13 == 0 else "is_map",
-        ["warped", "published", "unwarped", "warped"][k % 4],
-        ["masked", "masking", "unmasked"][k % 3],
-        "affine",
-        str(1850 + k % 100) if k % 4 != 0 else None,
-        str(1900 + k % 50) if k % 8 < 6 else None,
-        "mask-to-geojson failed: timeout" if k % 19 == 0 else None,
-        ("Polygon", coords) if coords is not None else None,
-        [
+    return {
+        "id": k,
+        "title": "Map " + ks,
+        "description": "Description of map " + ks if k % 9 != 0 else None,
+        "nypl_digital_id": "img-" + ks if k % 27 != 0 else None,
+        "uuid": uuid,
+        "parent_uuid": "uuid-parent-" + ks if k % 11 == 0 else None,
+        "bbox": "-74.0,40.7,-73.9,40.8" if k % 17 != 0 else None,
+        "map_type": "not_map" if k % 13 == 0 else "is_map",
+        "status": ["warped", "published", "unwarped", "warped"][k % 4],
+        "mask_status": ["masked", "masking", "unmasked"][k % 3],
+        "transform_options": "affine",
+        "depicts_year": str(1850 + k % 100) if k % 4 != 0 else None,
+        "issue_year": str(1900 + k % 50) if k % 8 < 6 else None,
+        "maskError": "mask-to-geojson failed: timeout" if k % 19 == 0 else None,
+        "maskGeometry": (
+            {"type": "Polygon", "coordinates": coords}
+            if coords is not None
+            else None
+        ),
+        "gcps": [
             [float(k), k + 0.5, 40.0 + k * 0.001, -74.0 + k * 0.001],
             [k + 10.0, k + 10.5, 40.01 + k * 0.001, -73.99 + k * 0.001],
         ],
-        [k % 25, (k * 3) % 25] if k % 43 != 0 else None,
-    )
+        "layerIds": [k % 25, (k * 3) % 25] if k % 43 != 0 else None,
+    }
 
 
-def _maps_arrow_schema():
-    import pyarrow as pa
-
-    coords = pa.list_(pa.list_(pa.list_(pa.float64())))
-    return pa.schema(
-        [
-            ("id", pa.int64()),
-            ("title", pa.string()),
-            ("description", pa.string()),
-            ("nypl_digital_id", pa.string()),
-            ("uuid", pa.string()),
-            ("parent_uuid", pa.string()),
-            ("bbox", pa.string()),
-            ("map_type", pa.string()),
-            ("status", pa.string()),
-            ("mask_status", pa.string()),
-            ("transform_options", pa.string()),
-            ("depicts_year", pa.string()),
-            ("issue_year", pa.string()),
-            ("maskError", pa.string()),
-            (
-                "maskGeometry",
-                pa.struct([("type", pa.string()), ("coordinates", coords)]),
-            ),
-            ("gcps", pa.list_(pa.list_(pa.float64()))),
-            ("layerIds", pa.list_(pa.int64())),
-        ]
-    )
-
-
-def _maps_table(spark: SparkSession, sf_dir: str):
-    import pyarrow as pa
-
-    keys = [
-        r[0]
-        for r in load_table(spark, sf_dir, "part")
+def map_records(spark: SparkSession, sf_dir: str) -> list[dict]:
+    """``MAP_ITEM_SCHEMA``-shaped map items, one per p_partkey < 150,
+    in key order."""
+    keys = (
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_partkey") < N_MAPS)
         .select("p_partkey")
         .collect()
-    ]
-    schema = _maps_arrow_schema()
-    names = [f.name for f in schema]
-    rows = []
-    for k in sorted(int(k) for k in keys):
-        row = dict(zip(names, _map_row(k)))
-        geom = row["maskGeometry"]
-        if geom is not None:
-            row["maskGeometry"] = {"type": geom[0], "coordinates": geom[1]}
-        rows.append(row)
-    return pa.Table.from_pylist(rows, schema=schema)
+    )
+    return [_map_record(k) for k in sorted(int(r[0]) for r in keys)]
 
 
 def synthetic_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """layers_raw-shaped fixture rows keyed by n_nationkey (0..24)."""
-    return _fixture_df(spark, sf_dir, "layers", lambda: _layers_table(spark, sf_dir))
+    """layers_raw-shaped fixture: ``layer_records`` as a parquet scan."""
+    return _fixture_df(spark, sf_dir, "layers", layer_records, LAYER_ITEM_SCHEMA)
 
 
-def _layers_table(spark: SparkSession, sf_dir: str):
-    import pyarrow as pa
-
+def layer_records(spark: SparkSession, sf_dir: str) -> list[dict]:
+    """``LAYER_ITEM_SCHEMA``-shaped layer items, one per nation key
+    (0..24), in key order."""
     rows = (
         load_table(spark, sf_dir, "nation")
         .select("n_nationkey", "n_regionkey")
         .collect()
     )
-    schema = pa.schema(
-        [
-            ("id", pa.int64()),
-            ("name", pa.string()),
-            ("depicts_year", pa.string()),
-            ("issue_year", pa.string()),
-            ("maps_count", pa.int32()),
-            ("bbox", pa.string()),
-        ]
-    )
-    data = [
+    return [
         {
             "id": n,
             "name": "Layer " + str(n),
@@ -245,7 +272,6 @@ def _layers_table(spark: SparkSession, sf_dir: str):
         }
         for n, r in sorted((int(x[0]), int(x[1])) for x in rows)
     ]
-    return pa.Table.from_pylist(data, schema=schema)
 
 
 # ---------------------------------------------------------------------------

@@ -3,11 +3,13 @@
 These run the WHOLE reference workflow end-to-end — paginated REST
 download (count-first fan-out for maps, short-page loop for layers)
 → parquet checkpoint → transform step (validation split, projection,
-edge derivation) — against a deterministic in-process API that serves
-the SAME fixture records as operators/mapwarper.py. The oracle SQL is
-therefore shared verbatim with the mw_* queries: if the pipeline's
-plumbing (pagination, JSON round-trip, checkpointing, step chaining)
-changes any value anywhere, the hash comparison fails.
+edge derivation) — against a deterministic in-process API whose one
+page server, ``_serve``, pages the SAME record dicts
+(``mapwarper.map_records`` / ``layer_records``) that the mw_* parquet
+fixtures hold. The oracle SQL is therefore shared verbatim with the
+mw_* queries: if the pipeline's plumbing (pagination, JSON round-trip,
+checkpointing, step chaining) changes any value anywhere, the hash
+comparison fails.
 
 Reference trace covered end-to-end: mapwarper.js:151-219 (download) →
 :417-437 (transform), chained via dirs (:152-153 ↔ :424).
@@ -17,18 +19,16 @@ from __future__ import annotations
 
 import functools
 import json
-import math
 import tempfile
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline import PipelineConfig, PipelineDirs, run_pipeline
+from ..pipeline import PipelineConfig, run_pipeline
 from ..sources.paginated_rest import FetchResult, RestSourceConfig
-from ..sources.tables import load_table
 from . import registry
-from .mapwarper import _map_row
+from .mapwarper import layer_records, map_records
 from .mapwarper_queries import ORACLE as MW_ORACLE
 
 QUERIES, ORACLE, _register = registry()
@@ -40,79 +40,31 @@ QUERIES, ORACLE, _register = registry()
 # ---------------------------------------------------------------------------
 
 
-def _map_item(k: int) -> dict:
-    names = [
-        "id", "title", "description", "nypl_digital_id", "uuid",
-        "parent_uuid", "bbox", "map_type", "status", "mask_status",
-        "transform_options", "depicts_year", "issue_year", "maskError",
-        "maskGeometry", "gcps", "layerIds",
-    ]
-    row = dict(zip(names, _map_row(k)))
-    geom = row["maskGeometry"]
-    if geom is not None:
-        row["maskGeometry"] = {"type": geom[0], "coordinates": geom[1]}
-    return row
-
-
-def _layer_item(n: int, r: int) -> dict:
-    return {
-        "id": n,
-        "name": "Layer " + str(n),
-        "depicts_year": str(1860 + n) if n % 5 != 0 else None,
-        "issue_year": str(1910 + n) if n % 10 < 8 else None,
-        "maps_count": r * 3 + n % 4,
-        "bbox": "-74.1,40.6,-73.8,40.9" if n % 6 != 0 else None,
-    }
-
-
-def _serve(url: str, timeout_s: float, kind: str, rows: tuple) -> FetchResult:
+def _serve(url: str, timeout_s: float, items: list) -> FetchResult:
+    """One ``{total_entries, items}`` page of ``items``."""
     q = parse_qs(urlparse(url).query)
-    page = int(q["page"][0])
     per_page = int(q["per_page"][0])
-    if kind == "maps":
-        items = [_map_item(k) for k in rows]
-    else:
-        items = [_layer_item(n, r) for n, r in rows]
-    start = (page - 1) * per_page
-    body = {
-        "total_entries": len(items),
-        "items": items[start : start + per_page],
-    }
+    start = (int(q["page"][0]) - 1) * per_page
+    body = {"total_entries": len(items), "items": items[start : start + per_page]}
     return FetchResult(200, json.dumps(body))
 
 
+_FAST = dict(requests_per_second=1e9, backoff_s=0.0, max_concurrency=4)
+
+
+def _source(kind: str, per_page: int, items: list) -> RestSourceConfig:
+    return RestSourceConfig(
+        url_template=f"http://fake/{kind}.json?page={{page}}&per_page={{per_page}}",
+        per_page=per_page,
+        fetcher=functools.partial(_serve, items=items),
+        **_FAST,
+    )
+
+
 def _config(spark: SparkSession, sf_dir: str) -> PipelineConfig:
-    map_keys = tuple(
-        sorted(
-            int(r[0])
-            for r in load_table(spark, sf_dir, "part")
-            .filter(F.col("p_partkey") < 150)
-            .select("p_partkey")
-            .collect()
-        )
-    )
-    layer_rows = tuple(
-        sorted(
-            (int(r[0]), int(r[1]))
-            for r in load_table(spark, sf_dir, "nation")
-            .select("n_nationkey", "n_regionkey")
-            .collect()
-        )
-    )
-    fast = dict(requests_per_second=1e9, backoff_s=0.0, max_concurrency=4)
     return PipelineConfig(
-        maps_source=RestSourceConfig(
-            url_template="http://fake/maps.json?page={page}&per_page={per_page}",
-            per_page=50,
-            fetcher=functools.partial(_serve, kind="maps", rows=map_keys),
-            **fast,
-        ),
-        layers_source=RestSourceConfig(
-            url_template="http://fake/layers.json?page={page}&per_page={per_page}",
-            per_page=10,
-            fetcher=functools.partial(_serve, kind="layers", rows=layer_rows),
-            **fast,
-        ),
+        maps_source=_source("maps", 50, map_records(spark, sf_dir)),
+        layers_source=_source("layers", 10, layer_records(spark, sf_dir)),
     )
 
 
@@ -153,19 +105,7 @@ def _affine_params(k: int):
     return a, e, c, f0, w, h
 
 
-def _map_item_unenriched(k: int) -> dict:
-    row = _map_item(k)
-    row["maskGeometry"] = None
-    row["gcps"] = None
-    row["maskError"] = None
-    # gating mirrors enrichment.synthetic_masked_maps: k%10 unmasked
-    row["mask_status"] = "unmasked" if k % 10 == 0 else "masked"
-    return row
-
-
 def _serve_mask(url: str, timeout_s: float) -> FetchResult:
-    from urllib.parse import urlparse
-
     k = int(urlparse(url).path.split("/")[-2])
     a, e, c, f0, w, h = _affine_params(k)
 
@@ -185,38 +125,28 @@ def _serve_mask(url: str, timeout_s: float) -> FetchResult:
     return FetchResult(200, json.dumps({"mask": ring, "gcps": gcps}))
 
 
-def _serve_unenriched(url: str, timeout_s: float, rows: tuple) -> FetchResult:
-    q = parse_qs(urlparse(url).query)
-    page = int(q["page"][0])
-    per_page = int(q["per_page"][0])
-    items = [_map_item_unenriched(k) for k in rows]
-    start = (page - 1) * per_page
-    body = {
-        "total_entries": len(items),
-        "items": items[start : start + per_page],
-    }
-    return FetchResult(200, json.dumps(body))
-
-
 def _e2e_config(spark: SparkSession, sf_dir: str) -> PipelineConfig:
-    base = _config(spark, sf_dir)
-    map_keys = base.maps_source.fetcher.keywords["rows"]
-    fast = dict(requests_per_second=1e9, backoff_s=0.0, max_concurrency=4)
+    # The maps API serves no mask data; gating mirrors
+    # enrichment.synthetic_masked_maps: k%10 unmasked.
+    maps = [
+        {
+            **m,
+            "maskGeometry": None,
+            "gcps": None,
+            "maskError": None,
+            "mask_status": "unmasked" if m["id"] % 10 == 0 else "masked",
+        }
+        for m in map_records(spark, sf_dir)
+    ]
     return PipelineConfig(
-        maps_source=RestSourceConfig(
-            url_template="http://fake/maps.json?page={page}&per_page={per_page}",
-            per_page=50,
-            fetcher=functools.partial(_serve_unenriched, rows=map_keys),
-            **fast,
-        ),
-        layers_source=base.layers_source,
+        maps_source=_source("maps", 50, maps),
+        layers_source=_source("layers", 10, layer_records(spark, sf_dir)),
         mask_source=RestSourceConfig(
             url_template="http://fake/maps/{id}/mask.json",
             fetcher=_serve_mask,
-            **fast,
+            **_FAST,
         ),
         enrich=True,
-        transform_order=1,
     )
 
 

@@ -14,7 +14,7 @@ contract Spark-first:
   re-runs the plan that produced it;
 - the inter-step handoff is **Parquet** (columnar, splittable,
   prunable), not the reference's NDJSON (:152-153 ↔ :424) — NDJSON
-  remains available at the export boundary via ``export_ndjson``;
+  remains available at the export boundary via ``export_ndjson_file``;
 - ``run_pipeline`` chains the steps exactly like the spacetime-etl
   framework: step N+1's ``dirs.previous`` is step N's
   ``dirs.current`` — which also gives step-level restartability, the
@@ -24,7 +24,10 @@ Step 1 — ``download`` (reference :151-219): paginated REST scans
 (count-first fan-out for maps :183-199, short-page loop for layers
 :112-149), error quarantine (:122-129), optional conditional
 mask→GeoJSON enrichment (:79-110) and optional map↔layer membership
-join (:57-77, replaced by a real aggregate+broadcast join). Each
+join (:57-77, replaced by a real aggregate+broadcast join). Page
+items are parsed with the item schemas of operators/mapwarper.py
+(``MAP_ITEM_SCHEMA`` and ``LAYER_ITEM_SCHEMA`` are importable from
+here too); the config carries only sources and flags. Each
 REST page and each mask is fetched once per run: the fetched pages
 and the mask-joined maps are persisted while the step writes from
 them, and released (with the short-page waves) once ``maps`` is
@@ -60,16 +63,18 @@ from __future__ import annotations
 
 import os
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Callable, Optional
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .operators.enrichment import attach_map_layers, enrich_masks, fetch_masks
 from .operators.mapwarper import (
+    LAYER_ITEM_SCHEMA,
+    MAP_ITEM_SCHEMA,
+    MAP_LAYER_ITEM_SCHEMA,
     map_logs,
     map_objects,
     map_relations,
@@ -84,55 +89,6 @@ from .sources.paginated_rest import (
     page_items,
     scan_pages,
 )
-
-# Item schemas for the two REST streams (the reference reads these
-# fields off the API JSON; SURVEY.md §1.2-1.3). maskGeometry/gcps are
-# present when the API items arrive pre-enriched (or after the
-# enrichment stage fills them).
-MAP_ITEM_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("description", T.StringType()),
-        T.StructField("nypl_digital_id", T.StringType()),
-        T.StructField("uuid", T.StringType()),
-        T.StructField("parent_uuid", T.StringType()),
-        T.StructField("bbox", T.StringType()),
-        T.StructField("map_type", T.StringType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("mask_status", T.StringType()),
-        T.StructField("transform_options", T.StringType()),
-        T.StructField("depicts_year", T.StringType()),
-        T.StructField("issue_year", T.StringType()),
-        T.StructField("maskError", T.StringType()),
-        T.StructField(
-            "maskGeometry",
-            T.StructType(
-                [
-                    T.StructField("type", T.StringType()),
-                    T.StructField(
-                        "coordinates",
-                        T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))),
-                    ),
-                ]
-            ),
-        ),
-        T.StructField("gcps", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("layerIds", T.ArrayType(T.LongType())),
-    ]
-)
-
-LAYER_ITEM_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("depicts_year", T.StringType()),
-        T.StructField("issue_year", T.StringType()),
-        T.StructField("maps_count", T.IntegerType()),
-        T.StructField("bbox", T.StringType()),
-    ]
-)
-
 
 @dataclass(frozen=True)
 class PipelineDirs:
@@ -162,19 +118,9 @@ class PipelineConfig:
     maps_source: RestSourceConfig
     layers_source: RestSourceConfig
     mask_source: Optional[RestSourceConfig] = None
-    map_item_schema: T.StructType = field(default=MAP_ITEM_SCHEMA)
-    layer_item_schema: T.StructType = field(default=LAYER_ITEM_SCHEMA)
     enrich: bool = False
     transform_order: int = 1
     map_layers_source: Optional[RestSourceConfig] = None
-    map_layers_item_schema: T.StructType = field(
-        default_factory=lambda: T.StructType(
-            [
-                T.StructField("map_id", T.LongType()),
-                T.StructField("layer_id", T.LongType()),
-            ]
-        )
-    )
     # Importable module names an enrichment stage needs at runtime;
     # checked driver-side BEFORE any fetch/submit (see precheck).
     required_modules: tuple = ()
@@ -253,7 +199,7 @@ def download(
         # Short-page loop (:155-166).
         pages, waves = _scan_waves(spark, config.layers_source)
         cached.extend(waves)
-        layers = page_items(pages, config.layer_item_schema).drop("page")
+        layers = page_items(pages, LAYER_ITEM_SCHEMA).drop("page")
         return {
             "layers": _write(layers, dirs, "layers"),
             "layer_errors": _write(page_errors(pages), dirs, "layer_errors"),
@@ -264,7 +210,7 @@ def download(
             return None
         pages, waves = _scan_waves(spark, config.map_layers_source)
         cached.extend(waves)
-        return page_items(pages, config.map_layers_item_schema).drop("page")
+        return page_items(pages, MAP_LAYER_ITEM_SCHEMA).drop("page")
 
     def maps_branch() -> tuple[DataFrame, DataFrame]:
         # Count precheck then fan-out (:183-212).
@@ -272,7 +218,7 @@ def download(
         num_pages = -(-total // config.maps_source.per_page)
         map_pages = scan_pages(spark, config.maps_source, num_pages).persist()
         cached.append(map_pages)
-        maps = page_items(map_pages, config.map_item_schema).drop("page")
+        maps = page_items(map_pages, MAP_ITEM_SCHEMA).drop("page")
         map_errors = _write(page_errors(map_pages), dirs, "map_errors")
 
         if config.mask_source is not None:
@@ -398,11 +344,6 @@ def run_pipeline(
         )
         previous = current
     return outputs
-
-
-def export_ndjson(df: DataFrame, path: str) -> None:
-    """Final-boundary NDJSON export (reference sink format, :164-165)."""
-    to_ndjson_lines(df).write.mode("overwrite").text(path)
 
 
 def export_ndjson_file(df: DataFrame, path: str) -> None:

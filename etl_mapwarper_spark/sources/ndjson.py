@@ -1,4 +1,4 @@
-"""NDJSON source/sink + tagged-union record helpers.
+"""NDJSON source and sink.
 
 Reference capabilities re-expressed (citations into
 /root/reference/mapwarper.js):
@@ -9,10 +9,8 @@ Reference capabilities re-expressed (citations into
 - NDJSON sink: JSON.stringify + intersperse('\n') + write (:152-153,
   :157-166, :205-211) → ``df.write.json`` for partitioned output, or
   ``to_ndjson_lines`` when the exact one-line-per-record text format
-  matters at an export boundary.
-- Tagged-union records: every line is ``{type, data}`` (:160-163,
-  :205-208) — ``wrap_tagged`` / ``split_by_type`` convert between one
-  mixed stream and the per-variant DataFrames Spark prefers.
+  matters at an export boundary (``pipeline.export_ndjson_file``
+  writes it as the reference's single file).
 
 Scale note: NDJSON is the *boundary* format only. Inter-stage
 checkpoints must be Parquet (columnar, splittable, predicate-pushdown);
@@ -22,7 +20,7 @@ JSON parse per pass.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,33 +50,3 @@ def to_ndjson_lines(df: DataFrame) -> DataFrame:
     return df.select(
         F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("line")
     )
-
-
-def wrap_tagged(df: DataFrame, record_type: str) -> DataFrame:
-    """``{cols…}`` → ``{type, data:{cols…}}`` (reference :160-163, :205-208)."""
-    return df.select(
-        F.lit(record_type).alias("type"),
-        F.struct(*[F.col(c) for c in df.columns]).alias("data"),
-    )
-
-
-def split_by_type(
-    tagged: DataFrame, record_type: str, schema: Optional[T.StructType] = None
-) -> DataFrame:
-    """Route one variant out of a mixed tagged stream (dispatch :417-421).
-
-    The idiomatic replacement for per-row dispatch is a filtered branch
-    per variant off one (cached) source — each branch is a narrow
-    filter+project Catalyst can prune independently.
-    """
-    out = tagged.filter(F.col("type") == record_type).select("data.*")
-    return out
-
-
-def union_sources(*dfs: DataFrame) -> DataFrame:
-    """Union by name with missing-column tolerance (reference :423-425)."""
-    first, *rest = dfs
-    out = first
-    for df in rest:
-        out = out.unionByName(df, allowMissingColumns=True)
-    return out

@@ -130,25 +130,20 @@ class _TokenBucket:
         self._next_ok = now + self._interval
 
 
-def _fetch_pages_partition(
-    config: RestSourceConfig, pages: Iterable[int]
-) -> Iterator[Row]:
-    per_partition_rate = config.requests_per_second / max(
-        config.max_concurrency, 1
+def _fetch_partition(
+    config: RestSourceConfig, keys: Iterable[int], url_of: Callable[[int], str]
+) -> Iterator[tuple]:
+    """Fetch ``url_of(key)`` for each key of one partition under the
+    partition's share of the rate budget; yields ``(key, url, status,
+    ok, body, error)`` — the PAGE_SCHEMA / KEYED_SCHEMA row."""
+    bucket = _TokenBucket(
+        config.requests_per_second / max(config.max_concurrency, 1)
     )
-    bucket = _TokenBucket(per_partition_rate)
-    for page in pages:
+    for key in keys:
         bucket.acquire()
-        url = config.url_for(page)
+        url = url_of(key)
         r = _fetch_with_retry(config, url)
-        yield Row(
-            page=page,
-            url=url,
-            status=r.status,
-            ok=r.error is None,
-            body=r.body,
-            error=r.error,
-        )
+        yield (key, url, r.status, r.error is None, r.body, r.error)
 
 
 def fetch_count(
@@ -180,8 +175,8 @@ def scan_pages(
     )
     cfg = config  # capture a picklable copy for executors
 
-    def run(it: Iterator[Row]) -> Iterator[Row]:
-        return _fetch_pages_partition(cfg, (int(r.id) for r in it))
+    def run(it: Iterator[Row]) -> Iterator[tuple]:
+        return _fetch_partition(cfg, (int(r.id) for r in it), cfg.url_for)
 
     return spark.createDataFrame(
         pages.rdd.mapPartitions(run), PAGE_SCHEMA
@@ -363,23 +358,10 @@ def fetch_by_key(
         max(config.max_concurrency, 1)
     )
 
-    def run(it: Iterator[Row]) -> Iterator[Row]:
-        per_partition_rate = cfg.requests_per_second / max(
-            cfg.max_concurrency, 1
+    def run(it: Iterator[Row]) -> Iterator[tuple]:
+        return _fetch_partition(
+            cfg, (int(r.key) for r in it), lambda k: cfg.url_template.format(id=k)
         )
-        bucket = _TokenBucket(per_partition_rate)
-        for r in it:
-            bucket.acquire()
-            url = cfg.url_template.format(id=int(r.key))
-            rr = _fetch_with_retry(cfg, url)
-            yield Row(
-                key=int(r.key),
-                url=url,
-                status=rr.status,
-                ok=rr.error is None,
-                body=rr.body,
-                error=rr.error,
-            )
 
     return spark.createDataFrame(keys.rdd.mapPartitions(run), KEYED_SCHEMA)
 

@@ -41,11 +41,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .paginated_rest import (
-    PAGE_SCHEMA,
-    RestSourceConfig,
-    _fetch_pages_partition,
-)
+from .paginated_rest import PAGE_SCHEMA, RestSourceConfig, _fetch_partition
 
 
 def _resolve_fetcher(path: str):
@@ -73,30 +69,28 @@ class _Pages(InputPartition):
         self.pages = pages
 
 
+def _partitions(options: dict, pages: list[int]) -> list[_Pages]:
+    """Deal ``pages`` round-robin into ``max_concurrency`` partitions,
+    dropping empty ones."""
+    n = max(_config_from_options(options).max_concurrency, 1)
+    return [_Pages(pages[i::n]) for i in range(n) if pages[i::n]]
+
+
+def _read(options: dict, partition: _Pages):
+    cfg = _config_from_options(options)
+    return _fetch_partition(cfg, partition.pages, cfg.url_for)
+
+
 class PaginatedRestReader(DataSourceReader):
     def __init__(self, options: dict):
         self._options = dict(options)
         self._total_pages = int(options["total_pages"])
 
     def partitions(self):
-        cfg = _config_from_options(self._options)
-        n_parts = max(cfg.max_concurrency, 1)
-        buckets: list[list[int]] = [[] for _ in range(n_parts)]
-        for page in range(1, self._total_pages + 1):
-            buckets[(page - 1) % n_parts].append(page)
-        return [_Pages(b) for b in buckets if b]
+        return _partitions(self._options, list(range(1, self._total_pages + 1)))
 
     def read(self, partition: _Pages):
-        cfg = _config_from_options(self._options)
-        for row in _fetch_pages_partition(cfg, partition.pages):
-            yield (
-                row.page,
-                row.url,
-                row.status,
-                row.ok,
-                row.body,
-                row.error,
-            )
+        return _read(self._options, partition)
 
 
 class PaginatedRestStreamReader(DataSourceStreamReader):
@@ -124,28 +118,13 @@ class PaginatedRestStreamReader(DataSourceStreamReader):
         return {"page": self._available}
 
     def partitions(self, start, end):
-        cfg = _config_from_options(self._options)
         pages = list(range(start["page"] + 1, end["page"] + 1))
-        n_parts = max(cfg.max_concurrency, 1)
-        buckets: list[list[int]] = [[] for _ in range(n_parts)]
-        for i, page in enumerate(pages):
-            buckets[i % n_parts].append(page)
-        parts = [_Pages(b) for b in buckets if b]
         # Spark requires >=1 partition per microbatch even when the
         # delta is empty
-        return parts or [_Pages([])]
+        return _partitions(self._options, pages) or [_Pages([])]
 
     def read(self, partition: _Pages):
-        cfg = _config_from_options(self._options)
-        for row in _fetch_pages_partition(cfg, partition.pages):
-            yield (
-                row.page,
-                row.url,
-                row.status,
-                row.ok,
-                row.body,
-                row.error,
-            )
+        return _read(self._options, partition)
 
     def commit(self, end) -> None:
         pass

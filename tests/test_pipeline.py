@@ -18,6 +18,8 @@ import pytest
 
 from etl_mapwarper_spark.operators.mapwarper import (
     map_objects,
+    map_records,
+    synthetic_layers,
     synthetic_maps,
 )
 from etl_mapwarper_spark.operators.pipeline_queries import (
@@ -26,6 +28,8 @@ from etl_mapwarper_spark.operators.pipeline_queries import (
     _outputs,
 )
 from etl_mapwarper_spark.pipeline import (
+    LAYER_ITEM_SCHEMA,
+    MAP_ITEM_SCHEMA,
     PipelineConfig,
     PipelineDirs,
     download,
@@ -44,8 +48,22 @@ def _rows(df, cols):
     return sorted(map(repr, df.select(*cols).collect()))
 
 
+def _shape(schema):
+    # simpleString ignores nullability: names, order and types only
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
 def test_pipeline_matches_operator_outputs(spark, tmp_path):
     out = _outputs(spark, SF_DIR)
+    # the parquet fixtures and the landed checkpoints both carry exactly
+    # the item contract
+    for df, schema in (
+        (synthetic_maps(spark, SF_DIR), MAP_ITEM_SCHEMA),
+        (synthetic_layers(spark, SF_DIR), LAYER_ITEM_SCHEMA),
+        (out["maps"], MAP_ITEM_SCHEMA),
+        (out["layers"], LAYER_ITEM_SCHEMA),
+    ):
+        assert _shape(df.schema) == _shape(schema)
     direct = map_objects(synthetic_maps(spark, SF_DIR))
     cols = ["id", "name", "validSince", "validUntil", "data", "geometry"]
     assert _rows(out["map_objects"], cols) == _rows(direct, cols)
@@ -150,7 +168,7 @@ def test_download_fetches_each_page_and_mask_once(spark, tmp_path):
     download(spark, cfg, PipelineDirs(current=str(tmp_path / "dl")))
     urls = _read_requests(str(log_dir))
 
-    keys = base.maps_source.fetcher.keywords["rows"]
+    keys = [m["id"] for m in map_records(spark, SF_DIR)]
     n_pages = -(-len(keys) // cfg.maps_source.per_page)
     expected_pages = Counter(
         cfg.maps_source.url_for(p) for p in range(1, n_pages + 1)
@@ -236,7 +254,7 @@ def test_download_attaches_map_layer_membership(spark, tmp_path):
     log_dir = tmp_path / "requests"
     log_dir.mkdir()
     base = _e2e_config(spark, SF_DIR)
-    keys = base.maps_source.fetcher.keywords["rows"]
+    keys = [m["id"] for m in map_records(spark, SF_DIR)]
     # A duplicate pair per map, sorted by layer so a map's pairs span
     # several pages; every 7th map has none.
     pairs = sorted(

@@ -141,14 +141,12 @@ def main() -> int:
 
     spark = _vanilla_session()
     import __spark_entry__ as E
+    from etl_mapwarper_spark.sources.tables import TABLE_NAMES
 
     qs, osql = E.queries(), E.oracle_sql()
     sf = os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01")
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
+    for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
     args = sys.argv[1:]

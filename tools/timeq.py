@@ -30,13 +30,12 @@ def main() -> None:
 
     import duckdb
 
+    from etl_mapwarper_spark.sources.tables import TABLE_NAMES
+
     con = duckdb.connect()
     n_threads = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     con.execute(f"SET threads TO {n_threads}")
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
+    for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     out = {}
