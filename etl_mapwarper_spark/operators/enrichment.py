@@ -11,21 +11,26 @@ Reference behavior (citations into /root/reference/mapwarper.js):
   ``transform_options`` (:86).
 
 Spark-first design:
-- The polynomial fit/apply is genuinely non-relational → one Arrow-
-  batched ``pandas_udf`` (``gcp_transform_udf``) that least-squares
-  fits pixel→world per row (numpy) and returns a **result struct**
-  ``{ok, coordinates, error}`` — executors never raise on bad data.
-- The masked-only gate is an explicit ``filter`` + ``unionByName`` so
-  Catalyst cannot reorder the expensive Python stage in front of the
-  cheap predicate; unmasked rows never reach Python at all.
+- Every row's fit yields a **result struct** ``{ok, coordinates,
+  error}`` — executors never raise on bad data.
+- Order 1 (affine, the pipeline default) is a pure JVM column
+  expression (``_AFFINE_SQL``): GCP means, centered 2×2 normal
+  equations, a closed-form solve and a ``transform`` over the ring,
+  parsed from one SQL string, with the masked-only gate as a ``CASE``
+  in the same projection. No Python node in its plan.
+- Orders 2/3 and TPS least-squares fit per row in numpy inside one
+  Arrow-batched ``pandas_udf`` (``make_gcp_transform_udf``). Their
+  masked-only gate is an explicit ``filter`` + ``unionByName`` so
+  Catalyst cannot reorder the Python stage in front of the cheap
+  predicate; unmasked rows never reach Python at all.
 - ``attach_map_layers`` replaces the reference's N+1 per-map HTTP
   lookup (:57-77) with a real aggregate+broadcast join: fetch the
   membership table ONCE, ``collect_list`` per map, broadcast (bounded
   by |layers|, tiny next to |maps| at scale).
 
-Polynomial orders: 1 (affine, 6 coefficients — GDAL ``-order 1``) and
-2 (quadratic, 12 coefficients — ``-order 2``); both need the same
-least-squares machinery, requiring ≥3 / ≥6 GCPs respectively.
+Polynomial orders: 1 (affine, 6 coefficients — GDAL ``-order 1``),
+2 (quadratic, 12 coefficients — ``-order 2``) and 3 (20 coefficients),
+requiring ≥3 / ≥6 / ≥10 GCPs respectively.
 """
 
 from __future__ import annotations
@@ -221,6 +226,10 @@ def _transform_one(mask, gcps, order):
         return (False, None, "no GCPs")
     try:
         ring = np.asarray([list(p) for p in mask], dtype=np.float64)
+        if ring.ndim != 2 or ring.shape[1] < 2:
+            raise ValueError(
+                f"mask points must be [px,py], got shape {ring.shape}"
+            )
         if order == "tps":
             pts, sol_lon, sol_lat = fit_gcp_tps(gcps)
             lon = apply_tps(pts, sol_lon, ring)
@@ -234,7 +243,7 @@ def _transform_one(mask, gcps, order):
             return (False, None, "non-finite transform result")
         coords = [[[float(x), float(y)] for x, y in zip(lon, lat)]]
         return (True, coords, None)
-    except (ValueError, np.linalg.LinAlgError) as e:
+    except (TypeError, ValueError, np.linalg.LinAlgError) as e:
         return (False, None, f"{type(e).__name__}: {e}")
 
 
@@ -255,6 +264,78 @@ def make_gcp_transform_udf(order: int = 1):
     return gcp_transform
 
 
+# The order-1 (affine) fit as one SQL expression over the row's own
+# ``{mask}`` ring and ``{gcps}`` rows [px, py, lat, lon]. ``_let`` binds
+# each intermediate once per row as a lambda variable: the GCP means
+# ``m``, the centered 2x2 normal equations ``c`` and their determinant
+# ``det`` (the intercept is the target mean, so px/py offsets of 1e5
+# cost no precision), the closed-form solution ``k`` and the
+# transformed ring ``r``. Guards run first, in CASE order, so no
+# division or index can fail in ANSI mode.
+def _let(value: str, var: str, body: str) -> str:
+    return f"element_at(transform(array({value}), {var} -> {body}), 1)"
+
+
+def _fail(message: str) -> str:
+    return f"named_struct('ok', false, 'coordinates', NULL, 'error', {message})"
+
+
+_MALFORMED_MSG = (
+    "ValueError: mask points must be [px,py] and GCP rows [px,py,lat,lon] "
+    "of finite numbers"
+)
+_SINGULAR_MSG = (
+    "LinAlgError: collinear or coincident GCPs, the order 1 fit is singular"
+)
+_TOO_FEW_FMT = (
+    "ValueError: need >= 3 GCPs of [px,py,lat,lon] for order 1, "
+    "got shape (%d, 4)"
+)
+_FINITE = "abs({0}) < double('Infinity')"  # false for NaN and ±inf
+_MEANS = """aggregate({gcps}, named_struct('x', 0D, 'y', 0D, 'lat', 0D, 'lon', 0D),
+  (s, q) -> named_struct('x', s.x + q[0], 'y', s.y + q[1],
+                         'lat', s.lat + q[2], 'lon', s.lon + q[3]),
+  s -> named_struct('x', s.x / size({gcps}), 'y', s.y / size({gcps}),
+                    'lat', s.lat / size({gcps}), 'lon', s.lon / size({gcps})))"""
+_NORMAL = """aggregate({gcps},
+  named_struct('uu', 0D, 'uv', 0D, 'vv', 0D, 'ulat', 0D, 'vlat', 0D,
+               'ulon', 0D, 'vlon', 0D),
+  (s, q) -> named_struct(
+    'uu', s.uu + (q[0] - m.x) * (q[0] - m.x),
+    'uv', s.uv + (q[0] - m.x) * (q[1] - m.y),
+    'vv', s.vv + (q[1] - m.y) * (q[1] - m.y),
+    'ulat', s.ulat + (q[0] - m.x) * (q[2] - m.lat),
+    'vlat', s.vlat + (q[1] - m.y) * (q[2] - m.lat),
+    'ulon', s.ulon + (q[0] - m.x) * (q[3] - m.lon),
+    'vlon', s.vlon + (q[1] - m.y) * (q[3] - m.lon)))"""
+_SOLVE = """named_struct(
+  'alon', (c.vv * c.ulon - c.uv * c.vlon) / det,
+  'blon', (c.uu * c.vlon - c.uv * c.ulon) / det,
+  'alat', (c.vv * c.ulat - c.uv * c.vlat) / det,
+  'blat', (c.uu * c.vlat - c.uv * c.ulat) / det)"""
+_APPLY = """transform({mask}, p -> array(
+  m.lon + k.alon * (p[0] - m.x) + k.blon * (p[1] - m.y),
+  m.lat + k.alat * (p[0] - m.x) + k.blat * (p[1] - m.y)))"""
+_RESULT = f"""CASE WHEN forall(r, p -> {_FINITE.format("p[0]")} AND {_FINITE.format("p[1]")})
+  THEN named_struct('ok', true, 'coordinates', array(r), 'error', CAST(NULL AS STRING))
+  ELSE {_fail("'non-finite transform result'")} END"""
+_FIT = _let(_MEANS, "m", _let(_NORMAL, "c", _let("c.uu * c.vv - c.uv * c.uv", "det", f"""
+  CASE WHEN det <= 1e-9 * c.uu * c.vv THEN {_fail(f"'{_SINGULAR_MSG}'")}
+  ELSE {_let(_SOLVE, "k", _let(_APPLY, "r", _RESULT))} END""")))
+_AFFINE_SQL = f"""CASE
+  WHEN {{mask}} IS NULL OR size({{mask}}) = 0 THEN {_fail("'empty mask'")}
+  WHEN {{gcps}} IS NULL OR size({{gcps}}) = 0 THEN {_fail("'no GCPs'")}
+  WHEN NOT forall({{mask}}, p -> coalesce(
+      size(p) >= 2 AND p[0] IS NOT NULL AND p[1] IS NOT NULL, false))
+    OR NOT forall({{gcps}}, q -> coalesce(
+      size(q) = 4 AND forall(q, z -> z IS NOT NULL AND {_FINITE.format("z")}), false))
+    THEN {_fail(f"'{_MALFORMED_MSG}'")}
+  WHEN size({{gcps}}) < 3
+    THEN {_fail(f"format_string('{_TOO_FEW_FMT}', size({{gcps}}))")}
+  ELSE {_FIT}
+END"""
+
+
 def enrich_masks(
     maps: DataFrame,
     mask_col: str = "mask",
@@ -263,23 +344,51 @@ def enrich_masks(
 ) -> DataFrame:
     """Conditional enrichment with the reference's gating (:81).
 
-    Only ``mask_status ∈ {masked, masking}`` rows pass through Python;
-    the rest are unioned back untouched with null enrichment columns.
-    Success → ``maskGeometry`` polygon struct; failure → ``maskError``
-    string (:90) — downstream validation rule #6 picks it up.
+    Only ``mask_status ∈ {masked, masking}`` rows are transformed; the
+    rest keep null enrichment columns. Success → ``maskGeometry``
+    polygon struct; failure → ``maskError`` string (:90) — downstream
+    validation rule #6 picks it up. ``mask_col``/``gcps_col`` name
+    (or path) the pixel ring and the GCP rows.
+
+    Order 1 (the default, GDAL ``-order 1``) is a pure JVM expression
+    (``_AFFINE_SQL``): no Python node in the plan, one projection, and
+    every row gets its result in SQL. It matches ``fit_gcp_polynomial``
+    to ~1e-11 relative on well-posed sets (tests pin 1e-9), with the
+    same ``empty mask``, ``no GCPs``, too-few-GCPs and ``non-finite
+    transform result`` messages. Two deliberate differences from the
+    numpy path:
+    - a GCP row that is not 4 non-null finite numbers, or a ring point
+      without a non-null x and y, gets ``_MALFORMED_MSG``;
+    - collinear or coincident GCPs (centered determinant
+      ``uu·vv − uv² ≤ 1e-9·uu·vv``) get ``_SINGULAR_MSG``, where
+      ``lstsq`` returns a min-norm "fit". GDAL's GCP transformer
+      (gdal/alg/gdal_crs.cpp) likewise refuses an unsolvable set.
+
+    Orders 2/3 and ``"tps"`` run ``make_gcp_transform_udf`` behind an
+    explicit ``filter`` + ``unionByName``, so Catalyst cannot move the
+    Python stage in front of the gate and unmasked rows never reach
+    Python.
     """
-    udf = make_gcp_transform_udf(order)
     gate = F.col("mask_status").isin("masked", "masking")
-    masked = maps.filter(gate)
-    unmasked = maps.filter(~gate | F.col("mask_status").isNull())
-    res = F.col("_gcp_result")
-    # JSON-string boundary (see make_gcp_transform_udf docstring).
-    enriched = (
-        masked.withColumn(
-            "_gcp_result",
-            udf(F.to_json(F.col(mask_col)), F.to_json(F.col(gcps_col))),
+    if order == 1:
+        affine = F.expr(_AFFINE_SQL.format(mask=mask_col, gcps=gcps_col))
+        enriched = maps.withColumn("_gcp_result", F.when(gate, affine))
+    else:
+        udf = make_gcp_transform_udf(order)
+        # JSON-string boundary (see make_gcp_transform_udf docstring).
+        result = udf(F.to_json(F.col(mask_col)), F.to_json(F.col(gcps_col)))
+        enriched = (
+            maps.filter(gate)
+            .withColumn("_gcp_result", result)
+            .unionByName(
+                maps.filter(~gate | F.col("mask_status").isNull()).withColumn(
+                    "_gcp_result", F.lit(None).cast(RESULT_SCHEMA)
+                )
+            )
         )
-        .withColumn(
+    res = F.col("_gcp_result")
+    return (
+        enriched.withColumn(
             "maskGeometry",
             F.when(
                 res["ok"],
@@ -291,12 +400,6 @@ def enrich_masks(
         )
         .withColumn("maskError", F.when(~res["ok"], res["error"]))
         .drop("_gcp_result")
-    )
-    geom_type = enriched.schema["maskGeometry"].dataType
-    return enriched.unionByName(
-        unmasked.withColumn(
-            "maskGeometry", F.lit(None).cast(geom_type)
-        ).withColumn("maskError", F.lit(None).cast("string"))
     )
 
 

@@ -85,8 +85,8 @@ def _outputs(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # End-to-end with the mask-fetch hop (reference getMask,
 # mapwarper.js:79-110): the maps API serves items WITHOUT mask data;
 # a per-map mask endpoint serves {mask, gcps}; download fetches masks
-# for the gated subset, the Arrow GCP stage transforms them, and both
-# steps run through run_pipeline's parquet checkpoint chain. The
+# for the gated subset, the order-1 GCP expression transforms them, and
+# both steps run through run_pipeline's parquet checkpoint chain. The
 # fixture GCPs are the exact-affine family from
 # enrichment.synthetic_masked_maps, so the oracle SQL is shared
 # verbatim with mw_gcp_transform — any drift anywhere in the chain

@@ -132,8 +132,9 @@ class PipelineConfig:
         168-171 aborts the whole run when gdal_translate is missing).
         Without this, a missing optional dependency surfaces as a
         mid-crawl executor NotImplementedError after the politeness
-        budget was already spent. The engine's own GCP transform is
-        numpy-native, so ``enrich`` implies numpy; callers extend via
+        budget was already spent. The engine's GCP transform fits
+        orders 2/3 and TPS in numpy (order 1 is a JVM expression), so
+        ``enrich`` implies numpy; callers extend via
         ``required_modules`` (e.g. codec libs for media enrichment).
         """
         import importlib

@@ -1,6 +1,7 @@
 """Unit tests for the GCP mask-enrichment operator (reference #20,
-mapwarper.js:79-110): polynomial fit math, result-struct error
-handling, masked-only gating, and the map-layers broadcast join."""
+mapwarper.js:79-110): polynomial fit math, the order-1 JVM expression
+against the numpy fit, result-struct error handling, masked-only
+gating, plan shape, and the map-layers broadcast join."""
 
 from __future__ import annotations
 
@@ -15,9 +16,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from etl_mapwarper_spark.operators.enrichment import (  # noqa: E402
+    _TOO_FEW_GCPS_MSG,
+    _design,
     attach_map_layers,
     enrich_masks,
     fit_gcp_polynomial,
+)
+from etl_mapwarper_spark.plans.audit import audit  # noqa: E402
+
+_MASKS_DDL = (
+    "id INT, mask_status STRING, mask ARRAY<ARRAY<DOUBLE>>, "
+    "gcps ARRAY<ARRAY<DOUBLE>>"
 )
 
 
@@ -242,14 +251,159 @@ def test_enrich_masks_success_and_gating(spark, maps_df):
     assert out[5].maskError == "empty mask"
 
 
-def test_enrich_masks_never_throws_on_garbage(spark):
+def _parity_cases(seed: int = 7):
+    """Seeded order-1 GCP sets: rotated and sheared affine maps plus
+    non-affine noise (so the fit is a true least-squares solve), pixel
+    offsets of 0, 1e4 and 1e5, 3, 4 and 8 GCPs, and near-collinear sets
+    (a thin band along a line) that the fit must still accept."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(240):
+        n = (3, 4, 8)[i % 3]
+        offset = (0.0, 1e4, 1e5)[(i // 3) % 3]
+        theta = rng.uniform(0, 2 * np.pi)
+        rot = np.array(
+            [[np.cos(theta), -np.sin(theta)], [np.sin(theta), np.cos(theta)]]
+        )
+        shear = np.array(
+            [[1.0, rng.uniform(-0.5, 0.5)], [0.0, rng.uniform(0.5, 2.0)]]
+        )
+        lin = 1e-4 * rot @ shear
+        if i % 4 == 3:  # near-collinear: a 1-px-wide band, ~500 px long
+            t = rng.uniform(0, 500, n)
+            px = offset + t
+            py = offset + 0.3 * t + rng.uniform(-0.5, 0.5, n)
+        else:
+            px = offset + rng.uniform(0, 600, n)
+            py = offset + rng.uniform(0, 400, n)
+        lon = lin[0, 0] * px + lin[0, 1] * py - 74.0 + rng.normal(0, 1e-4, n)
+        lat = lin[1, 0] * px + lin[1, 1] * py + 40.7 + rng.normal(0, 1e-4, n)
+        gcps = [list(map(float, r)) for r in zip(px, py, lat, lon)]
+        ring = [
+            [float(offset + x), float(offset + y)]
+            for x, y in zip(rng.uniform(-100, 700, 7), rng.uniform(-100, 500, 7))
+        ]
+        rows.append((i, "masked", ring, gcps))
+    return rows
+
+
+def test_affine_expression_matches_numpy_fit(spark):
+    """The order-1 JVM expression computes the least-squares fit of
+    ``fit_gcp_polynomial``: every seeded well-posed row succeeds and
+    matches numpy's lstsq to 1e-9 relative per coordinate."""
+    rows = _parity_cases()
+    out = {
+        r.id: r
+        for r in enrich_masks(spark.createDataFrame(rows, _MASKS_DDL)).collect()
+    }
+    worst = 0.0
+    for i, _, ring, gcps in rows:
+        assert out[i].maskError is None, (i, out[i].maskError)
+        lon_c, lat_c = fit_gcp_polynomial(gcps, order=1)
+        xy = np.asarray(ring)
+        X = _design(xy[:, 0], xy[:, 1], 1)
+        want = np.column_stack([X @ lon_c, X @ lat_c])
+        got = np.asarray(out[i].maskGeometry.coordinates[0])
+        worst = max(worst, float(np.max(np.abs(got - want) / np.abs(want))))
+    assert worst < 1e-9, worst
+
+
+_RING = [[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 0.0]]
+_GCPS = [
+    [0.0, 0.0, 40.7, -74.0],
+    [200.0, 0.0, 40.7, -73.98],
+    [0.0, 200.0, 40.71, -74.0],
+    [200.0, 200.0, 40.71, -73.98],
+]
+_MALFORMED = (
+    "ValueError: mask points must be [px,py] and GCP rows [px,py,lat,lon] "
+    "of finite numbers"
+)
+_SINGULAR = (
+    "LinAlgError: collinear or coincident GCPs, the order 1 fit is singular"
+)
+_NAN, _INF = float("nan"), float("inf")
+_COLLINEAR = [
+    [float(t), float(t), 40.7 + t * 1e-5, -74.0 + t * 1e-4] for t in range(4)
+]
+
+# (case, mask ring, GCP rows, the exact maskError at order 1)
+_GARBAGE = [
+    ("ring_points_1_wide", [[0.0], [1.0]], _GCPS, _MALFORMED),
+    ("ring_and_gcps_both_short", [[0.0], [1.0]], [[1.0, 2.0]], _MALFORMED),
+    ("ring_null_point", [_RING[0], None, _RING[2]], _GCPS, _MALFORMED),
+    ("ring_null_coordinate", [[0.0, None], _RING[1]], _GCPS, _MALFORMED),
+    ("gcps_ragged", _RING, [_GCPS[0], _GCPS[1][:3], *_GCPS[2:]], _MALFORMED),
+    ("gcps_null_row", _RING, [_GCPS[0], None, *_GCPS[2:]], _MALFORMED),
+    ("gcps_null_coordinate", _RING, [*_GCPS[:3], [200.0, None, 40.71, -73.98]], _MALFORMED),
+    ("gcps_nan", _RING, [*_GCPS[:3], [200.0, 200.0, _NAN, -73.98]], _MALFORMED),
+    ("gcps_inf", _RING, [*_GCPS[:3], [_INF, 200.0, 40.71, -73.98]], _MALFORMED),
+    ("gcps_collinear", _RING, _COLLINEAR, _SINGULAR),
+    ("gcps_coincident", _RING, [_GCPS[0]] * 4, _SINGULAR),
+    ("gcps_too_few", _RING, _GCPS[:2], _TOO_FEW_GCPS_MSG),
+    ("gcps_one", _RING, _GCPS[:1], _TOO_FEW_GCPS_MSG.replace("2, 4", "1, 4")),
+    ("ring_inf", [[_INF, 0.0], *_RING[1:]], _GCPS, "non-finite transform result"),
+    ("ring_nan", [[_NAN, 0.0], *_RING[1:]], _GCPS, "non-finite transform result"),
+    ("mask_empty", [], _GCPS, "empty mask"),
+    ("mask_null", None, _GCPS, "empty mask"),
+    ("gcps_empty", _RING, [], "no GCPs"),
+    ("gcps_null", _RING, None, "no GCPs"),
+]
+
+
+@pytest.fixture(scope="module")
+def garbage_out(spark):
+    rows = [(i, "masked", ring, gcps) for i, (_, ring, gcps, _) in enumerate(_GARBAGE)]
+    df = spark.createDataFrame(rows, _MASKS_DDL)
+    return {r.id: r for r in enrich_masks(df).collect()}  # must not raise
+
+
+@pytest.mark.parametrize(
+    "i", range(len(_GARBAGE)), ids=[case[0] for case in _GARBAGE]
+)
+def test_enrich_masks_never_throws_on_garbage(garbage_out, i):
+    """Bad rows become exact error records, never executor exceptions.
+    Collinear and coincident GCPs are refused (numpy's lstsq would
+    return a min-norm "fit" for them)."""
+    assert garbage_out[i].maskGeometry is None
+    assert garbage_out[i].maskError == _GARBAGE[i][3]
+
+
+@pytest.mark.parametrize("order", [2, "tps"])
+def test_numpy_orders_turn_bad_rings_into_error_records(spark, order):
+    """A ring whose points have one coordinate, or a null point, lands
+    an error record on the UDF path too (it used to raise IndexError /
+    TypeError on the executor and fail the task)."""
+    gcps = [
+        [float(x), float(y), 40.7 + y * 5e-5, -74.0 + x * 1e-4]
+        for x in (0, 100, 200)
+        for y in (0, 150)
+    ]
     df = spark.createDataFrame(
-        [(1, "masked", [[0.0], [1.0]], [[1.0, 2.0]])],
-        "id INT, mask_status STRING, mask ARRAY<ARRAY<DOUBLE>>, "
-        "gcps ARRAY<ARRAY<DOUBLE>>",
+        [
+            (1, "masked", [[0.0], [1.0]], gcps),
+            (2, "masked", [[0.0, 0.0], None], gcps),
+        ],
+        _MASKS_DDL,
     )
-    rows = enrich_masks(df).collect()  # must not raise
-    assert rows[0].maskError is not None
+    out = {r.id: r for r in enrich_masks(df, order=order).collect()}
+    assert out[1].maskGeometry is None
+    assert out[1].maskError == (
+        "ValueError: mask points must be [px,py], got shape (2, 1)"
+    )
+    assert out[2].maskGeometry is None
+    assert out[2].maskError.startswith("TypeError: ")
+
+
+def test_order1_plan_has_no_python_and_other_orders_stay_arrow(maps_df):
+    """Order 1 is one JVM projection; orders 2 and tps keep the Arrow
+    UDF behind the masked-only filter."""
+    affine = audit(enrich_masks(maps_df))
+    assert not affine.has_row_python and affine.arrow_python_nodes == []
+    for order in (2, "tps"):
+        a = audit(enrich_masks(maps_df, order=order))
+        assert a.arrow_python_nodes == ["ArrowEvalPython"]
+        assert not a.has_row_python
 
 
 def test_attach_map_layers_left_join_and_broadcast(spark):

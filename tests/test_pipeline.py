@@ -16,6 +16,7 @@ from urllib.parse import parse_qs, urlparse
 
 import pytest
 
+from etl_mapwarper_spark import pipeline
 from etl_mapwarper_spark.operators.mapwarper import (
     map_objects,
     map_records,
@@ -180,6 +181,26 @@ def test_download_fetches_each_page_and_mask_once(spark, tmp_path):
     )
     assert n_pages > 1 and masked
     assert urls == expected_pages + expected_masks
+
+
+def test_download_maps_write_has_no_python(spark, tmp_path, monkeypatch):
+    """With the default order-1 enrichment, the plan that writes the
+    ``maps`` checkpoint has no Python evaluation node: the mask fetch is
+    the only Python on download's maps path."""
+    plans = {}
+    write = pipeline._write
+
+    def recording_write(df, dirs, name):
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        return write(df, dirs, name)
+
+    monkeypatch.setattr(pipeline, "_write", recording_write)
+    cfg = _e2e_config(spark, SF_DIR)
+    assert cfg.enrich and cfg.transform_order == 1
+    out = download(spark, cfg, PipelineDirs(current=str(tmp_path / "dl")))
+    assert "InMemoryTableScan" in plans["maps"]  # the fetched masks
+    assert "EvalPython" not in plans["maps"], plans["maps"]
+    assert out["maps"].filter("maskGeometry IS NOT NULL").count() > 0
 
 
 def test_run_pipeline_releases_its_caches(spark, tmp_path):
