@@ -13,7 +13,7 @@ Reference behavior (citations into /root/reference/mapwarper.js):
 Spark-first design:
 - Every row's fit yields a **result struct** ``{ok, coordinates,
   error}`` — executors never raise on bad data.
-- Order 1 (affine, the pipeline default) is a pure JVM column
+- Order 1 (affine, the fit the pipeline runs) is a pure JVM column
   expression (``_AFFINE_SQL``): GCP means, centered 2×2 normal
   equations, a closed-form solve and a ``transform`` over the ring,
   parsed from one SQL string, with the masked-only gate as a ``CASE``
@@ -39,12 +39,13 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import broadcast, pandas_udf
 
 from . import registry
+from .mapwarper import _fixture_df, _map_keys, _masked
 
 QUERIES, ORACLE, _register = registry()
 
@@ -265,7 +266,7 @@ def make_gcp_transform_udf(order: int = 1):
 
 
 # The order-1 (affine) fit as one SQL expression over the row's own
-# ``{mask}`` ring and ``{gcps}`` rows [px, py, lat, lon]. ``_let`` binds
+# ``mask`` ring and ``gcps`` rows [px, py, lat, lon]. ``_let`` binds
 # each intermediate once per row as a lambda variable: the GCP means
 # ``m``, the centered 2x2 normal equations ``c`` and their determinant
 # ``det`` (the intercept is the target mean, so px/py offsets of 1e5
@@ -292,12 +293,12 @@ _TOO_FEW_FMT = (
     "got shape (%d, 4)"
 )
 _FINITE = "abs({0}) < double('Infinity')"  # false for NaN and ±inf
-_MEANS = """aggregate({gcps}, named_struct('x', 0D, 'y', 0D, 'lat', 0D, 'lon', 0D),
+_MEANS = """aggregate(gcps, named_struct('x', 0D, 'y', 0D, 'lat', 0D, 'lon', 0D),
   (s, q) -> named_struct('x', s.x + q[0], 'y', s.y + q[1],
                          'lat', s.lat + q[2], 'lon', s.lon + q[3]),
-  s -> named_struct('x', s.x / size({gcps}), 'y', s.y / size({gcps}),
-                    'lat', s.lat / size({gcps}), 'lon', s.lon / size({gcps})))"""
-_NORMAL = """aggregate({gcps},
+  s -> named_struct('x', s.x / size(gcps), 'y', s.y / size(gcps),
+                    'lat', s.lat / size(gcps), 'lon', s.lon / size(gcps)))"""
+_NORMAL = """aggregate(gcps,
   named_struct('uu', 0D, 'uv', 0D, 'vv', 0D, 'ulat', 0D, 'vlat', 0D,
                'ulon', 0D, 'vlon', 0D),
   (s, q) -> named_struct(
@@ -313,7 +314,7 @@ _SOLVE = """named_struct(
   'blon', (c.uu * c.vlon - c.uv * c.ulon) / det,
   'alat', (c.vv * c.ulat - c.uv * c.vlat) / det,
   'blat', (c.uu * c.vlat - c.uv * c.ulat) / det)"""
-_APPLY = """transform({mask}, p -> array(
+_APPLY = """transform(mask, p -> array(
   m.lon + k.alon * (p[0] - m.x) + k.blon * (p[1] - m.y),
   m.lat + k.alat * (p[0] - m.x) + k.blat * (p[1] - m.y)))"""
 _RESULT = f"""CASE WHEN forall(r, p -> {_FINITE.format("p[0]")} AND {_FINITE.format("p[1]")})
@@ -323,32 +324,29 @@ _FIT = _let(_MEANS, "m", _let(_NORMAL, "c", _let("c.uu * c.vv - c.uv * c.uv", "d
   CASE WHEN det <= 1e-9 * c.uu * c.vv THEN {_fail(f"'{_SINGULAR_MSG}'")}
   ELSE {_let(_SOLVE, "k", _let(_APPLY, "r", _RESULT))} END""")))
 _AFFINE_SQL = f"""CASE
-  WHEN {{mask}} IS NULL OR size({{mask}}) = 0 THEN {_fail("'empty mask'")}
-  WHEN {{gcps}} IS NULL OR size({{gcps}}) = 0 THEN {_fail("'no GCPs'")}
-  WHEN NOT forall({{mask}}, p -> coalesce(
+  WHEN mask IS NULL OR size(mask) = 0 THEN {_fail("'empty mask'")}
+  WHEN gcps IS NULL OR size(gcps) = 0 THEN {_fail("'no GCPs'")}
+  WHEN NOT forall(mask, p -> coalesce(
       size(p) >= 2 AND p[0] IS NOT NULL AND p[1] IS NOT NULL, false))
-    OR NOT forall({{gcps}}, q -> coalesce(
+    OR NOT forall(gcps, q -> coalesce(
       size(q) = 4 AND forall(q, z -> z IS NOT NULL AND {_FINITE.format("z")}), false))
     THEN {_fail(f"'{_MALFORMED_MSG}'")}
-  WHEN size({{gcps}}) < 3
-    THEN {_fail(f"format_string('{_TOO_FEW_FMT}', size({{gcps}}))")}
+  WHEN size(gcps) < 3
+    THEN {_fail(f"format_string('{_TOO_FEW_FMT}', size(gcps))")}
   ELSE {_FIT}
 END"""
 
 
-def enrich_masks(
-    maps: DataFrame,
-    mask_col: str = "mask",
-    gcps_col: str = "gcps",
-    order: int = 1,
-) -> DataFrame:
+def enrich_masks(maps: DataFrame, order: int = 1) -> DataFrame:
     """Conditional enrichment with the reference's gating (:81).
 
-    Only ``mask_status ∈ {masked, masking}`` rows are transformed; the
-    rest keep null enrichment columns. Success → ``maskGeometry``
-    polygon struct; failure → ``maskError`` string (:90) — downstream
-    validation rule #6 picks it up. ``mask_col``/``gcps_col`` name
-    (or path) the pixel ring and the GCP rows.
+    Only rows that pass the mask gate (``mapwarper._masked``:
+    ``mask_status ∈ {masked, masking}``) are transformed; the rest
+    keep null enrichment columns. Success → ``maskGeometry`` polygon
+    struct; failure → ``maskError`` string (:90) — downstream
+    validation rule #6 picks it up. The pixel ring and the GCP rows
+    are the ``mask`` and ``gcps`` columns, as ``MASK_BODY_SCHEMA``
+    names them.
 
     Order 1 (the default, GDAL ``-order 1``) is a pure JVM expression
     (``_AFFINE_SQL``): no Python node in the plan, one projection, and
@@ -369,14 +367,13 @@ def enrich_masks(
     Python stage in front of the gate and unmasked rows never reach
     Python.
     """
-    gate = F.col("mask_status").isin("masked", "masking")
+    gate = _masked()
     if order == 1:
-        affine = F.expr(_AFFINE_SQL.format(mask=mask_col, gcps=gcps_col))
-        enriched = maps.withColumn("_gcp_result", F.when(gate, affine))
+        enriched = maps.withColumn("_gcp_result", F.when(gate, F.expr(_AFFINE_SQL)))
     else:
         udf = make_gcp_transform_udf(order)
         # JSON-string boundary (see make_gcp_transform_udf docstring).
-        result = udf(F.to_json(F.col(mask_col)), F.to_json(F.col(gcps_col)))
+        result = udf(F.to_json(F.col("mask")), F.to_json(F.col("gcps")))
         enriched = (
             maps.filter(gate)
             .withColumn("_gcp_result", result)
@@ -414,18 +411,12 @@ MASK_BODY_SCHEMA = T.StructType(
 )
 
 
-def fetch_masks(
-    spark,
-    maps: DataFrame,
-    config,
-    map_id: str = "id",
-    status_col: str = "mask_status",
-) -> DataFrame:
+def fetch_masks(spark, maps: DataFrame, config) -> DataFrame:
     """The mask-FETCH hop of reference getMask (mapwarper.js:79-110).
 
-    Only ``mask_status ∈ {masked, masking}`` map ids are requested
-    (:81) — the gate runs before any network work, exactly like the
-    reference. Fetched bodies parse JVM-side (``from_json``) into
+    Only the ids of maps that pass the mask gate (``_masked``) are
+    requested (:81) — the gate runs before any network work, exactly
+    like the reference. Fetched bodies parse JVM-side (``from_json``) into
     ``mask``/``gcps`` columns; fetch failures land in
     ``mask_fetch_error`` (error-as-data, :90). Compose with
     ``enrich_masks`` for the transform half. The join back to the maps
@@ -434,10 +425,7 @@ def fetch_masks(
     """
     from ..sources.paginated_rest import fetch_by_key
 
-    gate = F.col(status_col).isin("masked", "masking")
-    fetched = fetch_by_key(
-        spark, config, maps.filter(gate).select(map_id), map_id
-    )
+    fetched = fetch_by_key(spark, config, maps.filter(_masked()).select("id"))
     parsed = fetched.select(
         F.col("key").alias("_mf_id"),
         F.when(F.col("ok"), F.from_json("body", MASK_BODY_SCHEMA)).alias(
@@ -450,35 +438,23 @@ def fetch_masks(
         F.col("_mb.gcps").alias("gcps"),
         "mask_fetch_error",
     )
-    return maps.join(
-        parsed, maps[map_id] == parsed["_mf_id"], "left"
-    ).drop("_mf_id")
+    return maps.join(parsed, maps["id"] == parsed["_mf_id"], "left").drop("_mf_id")
 
 
-def attach_map_layers(
-    maps: DataFrame,
-    map_layers: DataFrame,
-    map_id: str = "id",
-    layers_map_id: str = "map_id",
-    layer_id: str = "layer_id",
-) -> DataFrame:
+def attach_map_layers(maps: DataFrame, map_layers: DataFrame) -> DataFrame:
     """Left join maps to aggregated layer membership (replaces :57-77).
 
-    The aggregated membership side is broadcast: it is bounded by the
-    number of (map, layer) pairs — dimension-sized next to a 100 TB
-    fact scan — so the maps side never shuffles.
+    ``map_layers`` carries ``MAP_LAYER_ITEM_SCHEMA``'s ``map_id`` and
+    ``layer_id``. The aggregated membership side is broadcast: it is
+    bounded by the number of (map, layer) pairs — dimension-sized next
+    to a 100 TB fact scan — so the maps side never shuffles.
     """
-    grouped = map_layers.groupBy(F.col(layers_map_id).alias("_ml_map_id")).agg(
-        F.sort_array(F.collect_set(F.col(layer_id))).alias("layerIds")
+    grouped = map_layers.groupBy(F.col("map_id").alias("_ml_map_id")).agg(
+        F.sort_array(F.collect_set(F.col("layer_id"))).alias("layerIds")
     )
-    return (
-        maps.join(
-            broadcast(grouped),
-            maps[map_id] == grouped["_ml_map_id"],
-            "left",
-        )
-        .drop("_ml_map_id")
-    )
+    return maps.join(
+        broadcast(grouped), maps["id"] == grouped["_ml_map_id"], "left"
+    ).drop("_ml_map_id")
 
 
 # ---------------------------------------------------------------------------
@@ -495,60 +471,63 @@ _TOO_FEW_GCPS_MSG = (
 )
 
 
-def synthetic_masked_maps(spark, sf_dir: str) -> DataFrame:
-    """Pixel-space mask + exact-affine GCP fixture keyed by p_partkey<150.
+def _masked_map_record(k: int) -> dict:
+    """Map ``k`` of the masked-map fixture: a pixel-space ``mask`` ring
+    and ``gcps`` lying exactly on lon = a·px + c, lat = e·py + f0.
 
-    k%10==0 → unmasked (gated out of Python); k%17==0 → only 2 GCPs
-    (error record); everything else transforms cleanly.
+    k%10==0 → unmasked (gated out of the fit); k%17==0 → only 2 GCPs
+    (error record); everything else transforms cleanly. The oracle SQL
+    repeats this arithmetic in the same IEEE operation order. Both
+    ``synthetic_masked_maps`` and the pipeline's fake mask endpoint
+    (``pipeline_queries._serve_mask``) serve these records.
     """
-    from ..sources.tables import load_table
+    a = (k % 3 + 1) * 0.0001
+    e = (k % 2 + 2) * 0.00005
+    c = -74.0 + k * 0.001
+    f0 = 40.7 + k * 0.0005
+    w = float(k % 50 + 100)
+    h = float(k % 40 + 80)
+    corners = [(0.0, 0.0), (200.0, 0.0), (0.0, 200.0), (200.0, 200.0)]
+    return {
+        "id": k,
+        "mask_status": "unmasked" if k % 10 == 0 else "masked",
+        "mask": [[0.0, 0.0], [w, 0.0], [w, h], [0.0, h], [0.0, 0.0]],
+        "gcps": [
+            [px, py, e * py + f0, a * px + c]
+            for px, py in corners[: 2 if k % 17 == 0 else 4]
+        ],
+    }
 
-    k = F.col("p_partkey")
-    kd = k.cast("double")
-    a = (k % 3 + 1).cast("double") * F.lit(0.0001)
-    e = (k % 2 + 2).cast("double") * F.lit(0.00005)
-    c = F.lit(-74.0) + kd * F.lit(0.001)
-    f0 = F.lit(40.7) + kd * F.lit(0.0005)
-    w = (k % 50 + 100).cast("double")
-    h = (k % 40 + 80).cast("double")
 
-    def gcp(px: float, py: float) -> Column:
-        return F.array(
-            F.lit(px),
-            F.lit(py),
-            e * F.lit(py) + f0,  # lat
-            a * F.lit(px) + c,  # lon
-        )
+_MASKED_MAP_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("mask_status", T.StringType()),
+        *MASK_BODY_SCHEMA.fields,
+    ]
+)
 
-    full_gcps = F.array(gcp(0.0, 0.0), gcp(200.0, 0.0), gcp(0.0, 200.0), gcp(200.0, 200.0))
-    short_gcps = F.array(gcp(0.0, 0.0), gcp(200.0, 0.0))
-    zero = F.lit(0.0)
-    ring = F.array(
-        F.array(zero, zero),
-        F.array(w, zero),
-        F.array(w, h),
-        F.array(zero, h),
-        F.array(zero, zero),
-    )
-    return (
-        load_table(spark, sf_dir, "part")
-        .filter(k < 150)
-        .select(
-            k.cast("long").alias("id"),
-            F.when(k % 10 == 0, "unmasked").otherwise("masked").alias("mask_status"),
-            ring.alias("mask"),
-            F.when(k % 17 == 0, short_gcps).otherwise(full_gcps).alias("gcps"),
-        )
+
+def synthetic_masked_maps(spark, sf_dir: str) -> DataFrame:
+    """``_masked_map_record`` for each p_partkey < 150, as a parquet scan."""
+    return _fixture_df(
+        spark,
+        sf_dir,
+        "masked_maps",
+        lambda s, d: [_masked_map_record(k) for k in _map_keys(s, d)],
+        _MASKED_MAP_SCHEMA,
     )
 
 
 def mw_gcp_transform(spark, sf_dir: str) -> DataFrame:
     maps = synthetic_masked_maps(spark, sf_dir)
     enriched = enrich_masks(maps)
+    # posexplode of a null ring yields no rows, so unfitted maps drop
+    # out without a filter (one on maskGeometry would copy the whole
+    # _AFFINE_SQL into the Filter as well as the Project).
     ring0 = F.element_at(F.col("maskGeometry")["coordinates"], 1)
     return (
-        enriched.filter(F.col("maskGeometry").isNotNull())
-        .select("id", F.posexplode(ring0).alias("idx", "pt"))
+        enriched.select("id", F.posexplode(ring0).alias("idx", "pt"))
         .select(
             "id",
             "idx",
@@ -594,8 +573,7 @@ def mw_gcp_transform_tps(spark, sf_dir: str) -> DataFrame:
     enriched = enrich_masks(maps, order=order_from_transform_options("tps"))
     ring0 = F.element_at(F.col("maskGeometry")["coordinates"], 1)
     return (
-        enriched.filter(F.col("maskGeometry").isNotNull())
-        .select("id", F.posexplode(ring0).alias("idx", "pt"))
+        enriched.select("id", F.posexplode(ring0).alias("idx", "pt"))
         .select(
             "id",
             "idx",

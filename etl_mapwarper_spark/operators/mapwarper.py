@@ -24,7 +24,10 @@ strings for layers).
 
 Item contract: ``MAP_ITEM_SCHEMA`` / ``LAYER_ITEM_SCHEMA`` are the
 API item fields the reference reads; the pipeline parses REST pages
-with them, and nothing else restates them.
+with them, and nothing else restates them. The reference's one mask
+gate (``mask_status ∈ {masked, masking}``, :81 and :382) is
+``_masked``; the mask fetch, the GCP enrichment and the ``masked``
+flag all use it.
 
 Synthetic fixtures: ``map_records`` / ``layer_records`` derive
 deterministic items of those shapes from the driver's ``part`` and
@@ -104,6 +107,14 @@ MAP_LAYER_ITEM_SCHEMA = T.StructType(
         T.StructField("layer_id", T.LongType()),
     ]
 )
+
+
+def _masked() -> Column:
+    """The mask gate (:81, :382): the map's ``mask_status`` is
+    ``masked`` or ``masking``. A function, not a module-level Column:
+    building a Column needs a live SparkContext."""
+    return F.col("mask_status").isin("masked", "masking")
+
 
 # ---------------------------------------------------------------------------
 # Synthetic fixture sources (deterministic from part/nation keys).
@@ -236,16 +247,21 @@ def _map_record(k: int) -> dict:
     }
 
 
-def map_records(spark: SparkSession, sf_dir: str) -> list[dict]:
-    """``MAP_ITEM_SCHEMA``-shaped map items, one per p_partkey < 150,
-    in key order."""
+def _map_keys(spark: SparkSession, sf_dir: str) -> list[int]:
+    """The fixture map ids: every p_partkey < 150, ascending."""
     keys = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_partkey") < N_MAPS)
         .select("p_partkey")
         .collect()
     )
-    return [_map_record(k) for k in sorted(int(r[0]) for r in keys)]
+    return sorted(int(r[0]) for r in keys)
+
+
+def map_records(spark: SparkSession, sf_dir: str) -> list[dict]:
+    """``MAP_ITEM_SCHEMA``-shaped map items, one per p_partkey < 150,
+    in key order."""
+    return [_map_record(k) for k in _map_keys(spark, sf_dir)]
 
 
 def synthetic_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -426,7 +442,7 @@ def map_objects(maps: DataFrame) -> DataFrame:
             F.col("uuid"),
             F.col("parent_uuid").alias("parentUuid"),
             F.coalesce(F.col("uuid").startswith("inset"), F.lit(False)).alias("inset"),
-            F.col("mask_status").isin("masked", "masking").alias("masked"),
+            _masked().alias("masked"),
             F.concat(
                 F.lit("http://digitalcollections.nypl.org/items/"), F.col("uuid")
             ).alias("nyplUrl"),

@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from ..pipeline import PipelineConfig, run_pipeline
 from ..sources.paginated_rest import FetchResult, RestSourceConfig
 from . import registry
+from .enrichment import ORACLE as ENRICH_ORACLE
+from .enrichment import _masked_map_record
 from .mapwarper import layer_records, map_records
 from .mapwarper_queries import ORACLE as MW_ORACLE
 
@@ -87,54 +89,28 @@ def _outputs(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # a per-map mask endpoint serves {mask, gcps}; download fetches masks
 # for the gated subset, the order-1 GCP expression transforms them, and
 # both steps run through run_pipeline's parquet checkpoint chain. The
-# fixture GCPs are the exact-affine family from
-# enrichment.synthetic_masked_maps, so the oracle SQL is shared
-# verbatim with mw_gcp_transform — any drift anywhere in the chain
-# (pagination, JSON, keyed fetch, join-back, enrichment, checkpoint)
-# breaks the hash.
+# mask endpoint and the maps' mask_status serve the records of
+# enrichment.synthetic_masked_maps (``_masked_map_record``), so the
+# oracle SQL is shared verbatim with mw_gcp_transform — any drift
+# anywhere in the chain (pagination, JSON, keyed fetch, join-back,
+# enrichment, checkpoint) breaks the hash.
 # ---------------------------------------------------------------------------
 
 
-def _affine_params(k: int):
-    a = (k % 3 + 1) * 0.0001
-    e = (k % 2 + 2) * 0.00005
-    c = -74.0 + k * 0.001
-    f0 = 40.7 + k * 0.0005
-    w = float(k % 50 + 100)
-    h = float(k % 40 + 80)
-    return a, e, c, f0, w, h
-
-
 def _serve_mask(url: str, timeout_s: float) -> FetchResult:
-    k = int(urlparse(url).path.split("/")[-2])
-    a, e, c, f0, w, h = _affine_params(k)
-
-    def gcp(px: float, py: float) -> list:
-        return [px, py, e * py + f0, a * px + c]
-
-    if k % 17 == 0:
-        gcps = [gcp(0.0, 0.0), gcp(200.0, 0.0)]
-    else:
-        gcps = [
-            gcp(0.0, 0.0),
-            gcp(200.0, 0.0),
-            gcp(0.0, 200.0),
-            gcp(200.0, 200.0),
-        ]
-    ring = [[0.0, 0.0], [w, 0.0], [w, h], [0.0, h], [0.0, 0.0]]
-    return FetchResult(200, json.dumps({"mask": ring, "gcps": gcps}))
+    r = _masked_map_record(int(urlparse(url).path.split("/")[-2]))
+    return FetchResult(200, json.dumps({"mask": r["mask"], "gcps": r["gcps"]}))
 
 
 def _e2e_config(spark: SparkSession, sf_dir: str) -> PipelineConfig:
-    # The maps API serves no mask data; gating mirrors
-    # enrichment.synthetic_masked_maps: k%10 unmasked.
+    # The maps API serves no mask data.
     maps = [
         {
             **m,
             "maskGeometry": None,
             "gcps": None,
             "maskError": None,
-            "mask_status": "unmasked" if m["id"] % 10 == 0 else "masked",
+            "mask_status": _masked_map_record(m["id"])["mask_status"],
         }
         for m in map_records(spark, sf_dir)
     ]
@@ -175,8 +151,6 @@ def pipe_rest_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-from .enrichment import ORACLE as ENRICH_ORACLE  # noqa: E402
 
 _register(
     "pipe_rest_end_to_end",

@@ -22,20 +22,23 @@ contract Spark-first:
 
 Step 1 — ``download`` (reference :151-219): paginated REST scans
 (count-first fan-out for maps :183-199, short-page loop for layers
-:112-149), error quarantine (:122-129), optional conditional
-mask→GeoJSON enrichment (:79-110) and optional map↔layer membership
-join (:57-77, replaced by a real aggregate+broadcast join). Page
-items are parsed with the item schemas of operators/mapwarper.py
+:112-149), error quarantine (:122-129), optional mask fetch and
+order-1 (GDAL ``-order 1``) mask→GeoJSON enrichment (:79-110) and
+optional map↔layer membership join (:57-77, replaced by a real
+aggregate+broadcast join). The Map Warper contract is stated once
+elsewhere: the item schemas and the mask gate in operators/mapwarper.py
 (``MAP_ITEM_SCHEMA`` and ``LAYER_ITEM_SCHEMA`` are importable from
-here too); the config carries only sources and flags. Each
-REST page and each mask is fetched once per run: the fetched pages
-and the mask-joined maps are persisted while the step writes from
-them, and released (with the short-page waves) once ``maps`` is
-written, or once the step fails. The reference builds its layers and
-maps pipelines in one call (:155-166, :183-212); here the layers,
-membership and maps crawls run concurrently from driver threads, each
-against its own source's politeness budget (token bucket and
-``max_concurrency``), so only different endpoints overlap.
+here too), the page format in sources/paginated_rest.py and the mask
+body in operators/enrichment.py; the config carries only sources and
+the ``enrich`` flag. Each REST page and each mask is fetched once per
+run: the fetched pages and the mask-joined maps are persisted while
+the step writes from them, and released (with the short-page waves)
+once ``maps`` is written, or once the step fails. The reference
+builds its layers and maps pipelines in one call (:155-166,
+:183-212); here the layers, membership and maps crawls run
+concurrently from driver threads, each against its own source's
+politeness budget (token bucket and ``max_concurrency``), so only
+different endpoints overlap.
 
 Step 2 — ``transform`` (reference :417-437): route records by type
 (:418-421), validation split into clean objects vs quarantine logs
@@ -102,57 +105,39 @@ class PipelineDirs:
 class PipelineConfig:
     """Pipeline parameters (the reference's ``config`` argument).
 
-    ``enrich``: run the GCP mask→GeoJSON stage on mask/gcps columns
-    (reference :79-110). Off when the API serves pre-enriched items.
     ``mask_source``: optional per-map mask endpoint (``{id}`` URL
     template). When set, ``download`` performs the reference's mask
-    FETCH hop (getMask, :79-110) before the transform: masked maps'
-    ``mask``/``gcps`` come from this endpoint rather than the items
-    payload, and fetch failures surface as ``maskError``.
+    FETCH hop (getMask, :79-110): masked maps' ``mask``/``gcps`` come
+    from this endpoint rather than the items payload, and fetch
+    failures surface as ``maskError``.
+    ``enrich``: fit the fetched masks to GeoJSON with the order-1 GCP
+    transform (reference :79-110); needs ``mask_source``, the only
+    source of the ``mask`` ring. With ``mask_source`` but not
+    ``enrich``, ``maskGeometry`` is null; with neither, the items' own
+    ``maskGeometry`` passes through (an API serving enriched items).
     ``map_layers_source``: optional membership stream config; when
     set, ``download`` attaches ``layerIds`` via a real join instead
     of the reference's N+1 lookups (``config.includeMapLayers``,
     :172-181).
+
+    A config ``download`` cannot run is rejected here, before the first
+    fetch, as the reference aborts a run it cannot finish
+    (mapwarper.js:168-171). The run's other prerequisite, numpy, fails
+    this module's import when missing (operators/enrichment.py imports
+    it), which is earlier still.
     """
 
     maps_source: RestSourceConfig
     layers_source: RestSourceConfig
     mask_source: Optional[RestSourceConfig] = None
     enrich: bool = False
-    transform_order: int = 1
     map_layers_source: Optional[RestSourceConfig] = None
-    # Importable module names an enrichment stage needs at runtime;
-    # checked driver-side BEFORE any fetch/submit (see precheck).
-    required_modules: tuple = ()
 
-    def precheck(self) -> None:
-        """Fail fast before any work is submitted.
-
-        Mirror of the reference's environment gate (mapwarper.js:
-        168-171 aborts the whole run when gdal_translate is missing).
-        Without this, a missing optional dependency surfaces as a
-        mid-crawl executor NotImplementedError after the politeness
-        budget was already spent. The engine's GCP transform fits
-        orders 2/3 and TPS in numpy (order 1 is a JVM expression), so
-        ``enrich`` implies numpy; callers extend via
-        ``required_modules`` (e.g. codec libs for media enrichment).
-        """
-        import importlib
-
-        mods = set(self.required_modules)
-        if self.enrich:
-            mods.add("numpy")
-        missing = []
-        for m in sorted(mods):
-            try:
-                importlib.import_module(m)
-            except ImportError:
-                missing.append(m)
-        if missing:
-            raise RuntimeError(
-                "pipeline precheck failed — missing required "
-                f"dependencies {missing}; aborting before any fetch "
-                "(reference mapwarper.js:168-171)"
+    def __post_init__(self) -> None:
+        if self.enrich and self.mask_source is None:
+            raise ValueError(
+                "enrich=True needs mask_source: the maps items carry no "
+                "mask ring to fit"
             )
 
 
@@ -190,8 +175,11 @@ def download(
     once all three end. Each crawl keeps its own source's token bucket
     and ``max_concurrency``: only different endpoints overlap. If a
     branch fails, its error is re-raised once the others have ended,
-    and every cache the step persisted is released either way."""
-    config.precheck()  # abort before the first fetch (:168-171)
+    and every cache the step persisted is released either way.
+
+    With ``mask_source`` set, ``maps`` carries ``maskError`` (fetch
+    errors first, then fit errors) and ``maskGeometry`` (null unless
+    ``enrich``), and never the raw ``mask`` ring."""
     # Every persisted frame, appended right after its persist() by the
     # branch that made it, so each branch's dependents follow its bases.
     cached: list[DataFrame] = []
@@ -224,38 +212,35 @@ def download(
 
         if config.mask_source is not None:
             # Reference getMask hop (:79-110): masks/GCPs come from the
-            # Warper API per map, not the items payload. Persisted: the
-            # enrichment's two branches and the write all read it.
+            # Warper API per map, not the items payload. Persisted like
+            # the pages; the order-1 fit is one projection, so only the
+            # maps write reads it.
             maps = fetch_masks(
                 spark,
                 maps.drop("gcps", "maskGeometry", "maskError"),
                 config.mask_source,
             ).persist()
             cached.append(maps)
-
-        if config.enrich:
-            maps = enrich_masks(maps, order=config.transform_order)
-            if config.mask_source is not None:
+            if config.enrich:
                 # fetch-level errors win over transform-level ones, like
                 # the reference's maskError attachment on fetch failure
-                maps = maps.withColumn(
+                maps = enrich_masks(maps).withColumn(
                     "maskError",
                     F.coalesce(F.col("mask_fetch_error"), F.col("maskError")),
                 ).drop("mask_fetch_error")
-        elif config.mask_source is not None:
-            # Schema-stable non-enrich branch: the checkpointed maps table
-            # must look the same whether or not the transform ran — fetch
-            # failures still surface as maskError (reference :90), and
-            # maskGeometry exists (null: nothing computed it yet).
-            maps = maps.withColumnRenamed(
-                "mask_fetch_error", "maskError"
-            ).withColumn(
-                "maskGeometry",
-                F.lit(None).cast(MAP_ITEM_SCHEMA["maskGeometry"].dataType),
-            )
-        if config.mask_source is not None:
-            # raw pixel-space mask ring is fetch-internal (the transform
-            # consumes it); MAP_ITEM_SCHEMA has no such column
+            else:
+                # Schema-stable: the checkpointed maps table looks the
+                # same whether or not the transform ran — fetch failures
+                # still surface as maskError (reference :90), and
+                # maskGeometry exists (null: nothing computed it).
+                maps = maps.withColumnRenamed(
+                    "mask_fetch_error", "maskError"
+                ).withColumn(
+                    "maskGeometry",
+                    F.lit(None).cast(MAP_ITEM_SCHEMA["maskGeometry"].dataType),
+                )
+            # The raw pixel-space ring is fetch-internal (the transform
+            # consumes it); MAP_ITEM_SCHEMA has no such column.
             maps = maps.drop("mask")
         return maps, map_errors
 

@@ -28,6 +28,15 @@ Spark mapping (designed for a 1000-executor cluster, tested local):
   body, error)`` — error-as-data (:122-129); callers split ok/error
   with two filters and parse bodies JVM-side via ``from_json`` so the
   Python boundary carries raw page text only, never per-item objects.
+  Page scans and per-key fetches share one fetch path (``_fetch``).
+- The page format is the Map Warper API's, stated once here: a page
+  body is a JSON object whose ``items`` (``_ITEMS_FIELD``) array holds
+  the records, and the count probe reads ``total_entries``
+  (``_COUNT_FIELD``, :185-187).
+- The short-page loop stops at ``_MAX_PAGES`` pages. An API that has
+  served that many full pages without a short one raises a
+  ``RuntimeError`` naming the cap; the loop never returns a truncated
+  scan as if it were complete.
 - Retry/timeout mirror GOT_OPTIONS (:12-16): 25 s timeout, 5 retries,
   exponential backoff. Spark's own task retry is the outer layer.
 
@@ -63,6 +72,10 @@ PAGE_SCHEMA = T.StructType(
 )
 
 Fetcher = Callable[[str, float], "FetchResult"]
+
+_ITEMS_FIELD = "items"  # body.items, mapwarper.js:138-143, :195-197
+_COUNT_FIELD = "total_entries"  # body.total_entries, :185-187
+_MAX_PAGES = 100_000  # short-page scan cap, see _scan_waves
 
 
 @dataclass(frozen=True)
@@ -146,17 +159,35 @@ def _fetch_partition(
         yield (key, url, r.status, r.error is None, r.body, r.error)
 
 
-def fetch_count(
-    config: RestSourceConfig, count_field: str = "total_entries"
-) -> int:
+def fetch_count(config: RestSourceConfig) -> int:
     """Driver-side count precheck (reference :183-187; throws if absent)."""
     r = _fetch_with_retry(config, config.url_for(1))
     if r.error is not None:
         raise RuntimeError(f"count request failed: {r.error}")
     body = json.loads(r.body)
-    if count_field not in body:
-        raise RuntimeError(f"API response has no {count_field!r} field")
-    return int(body[count_field])
+    if _COUNT_FIELD not in body:
+        raise RuntimeError(f"API response has no {_COUNT_FIELD!r} field")
+    return int(body[_COUNT_FIELD])
+
+
+def _fetch(
+    spark: SparkSession,
+    config: RestSourceConfig,
+    keys: DataFrame,
+    url_of: Callable[[int], str],
+    schema: T.StructType,
+) -> DataFrame:
+    """Fetch ``url_of(key)`` for each value of the one-column ``keys``.
+
+    Coalescing to ``max_concurrency`` partitions bounds in-flight
+    requests exactly; each partition runs ``_fetch_partition`` under
+    its share of the rate budget. One ``schema`` row per key."""
+
+    def run(it: Iterator[Row]) -> Iterator[tuple]:
+        return _fetch_partition(config, (int(r[0]) for r in it), url_of)
+
+    parts = keys.coalesce(max(config.max_concurrency, 1))
+    return spark.createDataFrame(parts.rdd.mapPartitions(run), schema)
 
 
 def scan_pages(
@@ -167,20 +198,10 @@ def scan_pages(
 ) -> DataFrame:
     """Count-first fan-out scan: one result row per page (:49-55, :189-199).
 
-    ``spark.range`` plans the page list cluster-side; coalescing to
-    ``max_concurrency`` partitions bounds in-flight requests exactly.
+    ``spark.range`` plans the page list cluster-side.
     """
-    pages = spark.range(first_page, first_page + num_pages).coalesce(
-        max(config.max_concurrency, 1)
-    )
-    cfg = config  # capture a picklable copy for executors
-
-    def run(it: Iterator[Row]) -> Iterator[tuple]:
-        return _fetch_partition(cfg, (int(r.id) for r in it), cfg.url_for)
-
-    return spark.createDataFrame(
-        pages.rdd.mapPartitions(run), PAGE_SCHEMA
-    )
+    pages = spark.range(first_page, first_page + num_pages)
+    return _fetch(spark, config, pages, config.url_for, PAGE_SCHEMA)
 
 
 # Columns the short-page probe is allowed to pull to the driver —
@@ -188,14 +209,14 @@ def scan_pages(
 WAVE_META_COLUMNS = ("page", "ok", "n_items", "bad_json")
 
 
-def _wave_meta(wave: DataFrame, items_field: str) -> DataFrame:
+def _wave_meta(wave: DataFrame) -> DataFrame:
     """Per-page termination metadata, computed JVM-side on executors.
 
     ``n_items`` = length of the items array (0 when the field is
-    absent, mirroring the reference's ``.get(items_field, [])``);
+    absent, mirroring the reference's ``.get('items', [])``);
     ``bad_json`` = body present but not a parseable JSON object.
     """
-    raw_items = F.get_json_object("body", f"$.{items_field}")
+    raw_items = F.get_json_object("body", f"$.{_ITEMS_FIELD}")
     return wave.select(
         "page",
         "ok",
@@ -211,11 +232,7 @@ def _wave_meta(wave: DataFrame, items_field: str) -> DataFrame:
 
 
 def scan_until_short_page(
-    spark: SparkSession,
-    config: RestSourceConfig,
-    items_field: str = "items",
-    wave_size: int = 8,
-    max_pages: int = 100_000,
+    spark: SparkSession, config: RestSourceConfig, wave_size: int = 8
 ) -> DataFrame:
     """Unknown-total scan (reference downloadLayers loop, :112-149).
 
@@ -233,16 +250,15 @@ def scan_until_short_page(
     fetched exactly once; the politeness budget is paid per wave, not
     per downstream action. At 100 TB scale the same shape holds — the
     driver's working set is O(pages probed), not O(bytes fetched).
+
+    Raises ``RuntimeError`` when ``_MAX_PAGES`` pages come back with no
+    short one, rather than return a scan cut short at the cap.
     """
-    return _scan_waves(spark, config, items_field, wave_size, max_pages)[0]
+    return _scan_waves(spark, config, wave_size)[0]
 
 
 def _scan_waves(
-    spark: SparkSession,
-    config: RestSourceConfig,
-    items_field: str = "items",
-    wave_size: int = 8,
-    max_pages: int = 100_000,
+    spark: SparkSession, config: RestSourceConfig, wave_size: int = 8
 ) -> tuple[DataFrame, list[DataFrame]]:
     """``scan_until_short_page`` plus the persisted waves behind it, so
     a caller that has written what it needs can ``unpersist`` them."""
@@ -250,13 +266,11 @@ def _scan_waves(
     waves: list[DataFrame] = []
     page = 1
     done = False
-    while not done and page <= max_pages:
-        n = min(wave_size, max_pages - page + 1)
+    while not done and page <= _MAX_PAGES:
+        n = min(wave_size, _MAX_PAGES - page + 1)
         wave = scan_pages(spark, config, n, page).persist()
         waves.append(wave)
-        meta = sorted(
-            _wave_meta(wave, items_field).collect(), key=lambda r: r.page
-        )
+        meta = sorted(_wave_meta(wave).collect(), key=lambda r: r.page)
         last_accepted = None  # last page of this wave kept as-is
         bad_json_page = None  # page replaced by an invalid-JSON error row
         for r in meta:
@@ -286,6 +300,13 @@ def _scan_waves(
                 )
             )
         page += len(meta)
+    if not done:
+        for wave in waves:
+            wave.unpersist()
+        raise RuntimeError(
+            f"short-page scan of {config.url_template} reached its cap of "
+            f"{_MAX_PAGES} pages without a short page"
+        )
     if not kept:
         return spark.createDataFrame([], PAGE_SCHEMA), waves
     out = kept[0]
@@ -294,9 +315,7 @@ def _scan_waves(
     return out, waves
 
 
-def page_items(
-    pages: DataFrame, item_schema: T.StructType, items_field: str = "items"
-) -> DataFrame:
+def page_items(pages: DataFrame, item_schema: T.StructType) -> DataFrame:
     """Explode ok-pages into item rows — parsing stays JVM-side.
 
     ``from_json`` + ``explode`` is the reference's ``.map(body =>
@@ -304,14 +323,14 @@ def page_items(
     string is the only thing that ever crossed from Python.
     """
     body_schema = T.StructType(
-        [T.StructField(items_field, T.ArrayType(item_schema))]
+        [T.StructField(_ITEMS_FIELD, T.ArrayType(item_schema))]
     )
     return (
         pages.filter(F.col("ok"))
         .select(
             "page",
             F.explode(
-                F.from_json(F.col("body"), body_schema)[items_field]
+                F.from_json(F.col("body"), body_schema)[_ITEMS_FIELD]
             ).alias("item"),
         )
         .select("page", "item.*")
@@ -337,33 +356,27 @@ KEYED_SCHEMA = T.StructType(
 
 
 def fetch_by_key(
-    spark: SparkSession,
-    config: RestSourceConfig,
-    keys_df: DataFrame,
-    key_col: str = "id",
+    spark: SparkSession, config: RestSourceConfig, keys_df: DataFrame
 ) -> DataFrame:
     """Per-entity endpoint fetch (reference getMask, mapwarper.js:79-110).
 
     The reference hits ``…/{mapId}/mask`` once per qualifying map,
-    serially. Spark shape: the key column (and ONLY the key column —
-    never whole records) is coalesced to ``max_concurrency`` partitions
-    and fetched through the same token-bucket + retry machinery as the
-    page scans, so the global request rate honors the politeness budget
-    on any cluster size. ``url_template`` receives ``{id}``. Errors are
-    result rows (error-as-data), mirroring the reference's maskError
-    attachment (:90) rather than stream failure.
+    serially. Spark shape: the ``id`` column of ``keys_df`` (and ONLY
+    that column — never whole records) is fetched through the same
+    path as the page scans (``_fetch``: token bucket, retry,
+    ``max_concurrency`` partitions), so the global request rate honors
+    the politeness budget on any cluster size. ``url_template``
+    receives ``{id}``. Errors are result rows (error-as-data),
+    mirroring the reference's maskError attachment (:90) rather than
+    stream failure.
     """
-    cfg = config
-    keys = keys_df.select(F.col(key_col).cast("long").alias("key")).coalesce(
-        max(config.max_concurrency, 1)
+    return _fetch(
+        spark,
+        config,
+        keys_df.select(F.col("id").cast("long").alias("key")),
+        lambda k: config.url_template.format(id=k),
+        KEYED_SCHEMA,
     )
-
-    def run(it: Iterator[Row]) -> Iterator[tuple]:
-        return _fetch_partition(
-            cfg, (int(r.key) for r in it), lambda k: cfg.url_template.format(id=k)
-        )
-
-    return spark.createDataFrame(keys.rdd.mapPartitions(run), KEYED_SCHEMA)
 
 
 def _inject(url: str, timeout_s: float, inner: Fetcher, pages: tuple, status: int):

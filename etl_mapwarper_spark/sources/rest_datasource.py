@@ -32,7 +32,7 @@ Options (all strings, per the DataSource API):
 from __future__ import annotations
 
 import importlib
-from dataclasses import replace
+from dataclasses import fields
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -50,18 +50,16 @@ def _resolve_fetcher(path: str):
 
 
 def _config_from_options(options: dict) -> RestSourceConfig:
-    cfg = RestSourceConfig(
-        url_template=options["url_template"],
-        per_page=int(options.get("per_page", 250)),
-        requests_per_second=float(options.get("requests_per_second", 0.5)),
-        timeout_s=float(options.get("timeout_s", 25.0)),
-        retries=int(options.get("retries", 5)),
-        max_concurrency=int(options.get("max_concurrency", 1)),
-        backoff_s=float(options.get("backoff_s", 0.5)),
-    )
+    """Each numeric ``RestSourceConfig`` field is an option; its type
+    and default are the dataclass field's."""
+    kw = {
+        f.name: type(f.default)(options[f.name])
+        for f in fields(RestSourceConfig)
+        if isinstance(f.default, (int, float)) and f.name in options
+    }
     if "fetcher" in options:
-        cfg = replace(cfg, fetcher=_resolve_fetcher(options["fetcher"]))
-    return cfg
+        kw["fetcher"] = _resolve_fetcher(options["fetcher"])
+    return RestSourceConfig(options["url_template"], **kw)
 
 
 class _Pages(InputPartition):

@@ -178,7 +178,7 @@ def test_fetch_by_key_roundtrip_and_errors(spark, server):
         max_concurrency=3,
         retries=0,
     )
-    rows = fetch_by_key(spark, cfg, keys, "id").collect()
+    rows = fetch_by_key(spark, cfg, keys).collect()
     assert sorted(r.key for r in rows) == [1, 2, 3, 4, 5]
     assert all(r.ok and r.status == 200 and r.body for r in rows)
     assert all(f"page={r.key}" in r.url for r in rows)
@@ -189,7 +189,7 @@ def test_fetch_by_key_roundtrip_and_errors(spark, server):
         max_concurrency=2,
         retries=0,
     )
-    errs = fetch_by_key(spark, broken, keys, "id").collect()
+    errs = fetch_by_key(spark, broken, keys).collect()
     assert all((not r.ok) and r.error for r in errs)
     assert len(errs) == 5
 
@@ -273,3 +273,23 @@ def test_short_page_invalid_json_becomes_error_record(spark, server):
     assert rows[3].body is None
     assert rows[3].error == "invalid JSON body"
     assert rows[1].ok and rows[2].ok
+
+
+def test_short_page_scan_raises_at_its_page_cap(spark, server, monkeypatch):
+    """An API that never serves a short page stops the scan at the page
+    cap with an error naming it, not a silently truncated result; the
+    waves it persisted are released."""
+    from etl_mapwarper_spark.sources import paginated_rest
+
+    def full_page_fetch(url, timeout_s):
+        items = [{"id": 1, "name": "rec-1"}] * PER_PAGE
+        return FetchResult(200, json.dumps({"items": items}))
+
+    monkeypatch.setattr(paginated_rest, "_MAX_PAGES", 5)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(RuntimeError, match="cap of 5 pages"):
+        scan_until_short_page(
+            spark, _cfg(server, fetcher=full_page_fetch), wave_size=2
+        )
+    assert persistent().size() == before

@@ -196,7 +196,7 @@ def test_download_maps_write_has_no_python(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(pipeline, "_write", recording_write)
     cfg = _e2e_config(spark, SF_DIR)
-    assert cfg.enrich and cfg.transform_order == 1
+    assert cfg.enrich
     out = download(spark, cfg, PipelineDirs(current=str(tmp_path / "dl")))
     assert "InMemoryTableScan" in plans["maps"]  # the fetched masks
     assert "EvalPython" not in plans["maps"], plans["maps"]
@@ -349,39 +349,33 @@ def test_download_maps_schema_stable_across_enrich_flag(spark, tmp_path):
         assert leaked not in plain
 
 
-def test_precheck_aborts_before_any_fetch(spark):
-    """A missing enrichment dependency must abort the run driver-side
-    BEFORE the first request (reference mapwarper.js:168-171), not as
-    a mid-crawl executor error after politeness budget was spent."""
-    import dataclasses
-
-    import pytest
-
-    from etl_mapwarper_spark.operators.pipeline_queries import _e2e_config
-    from etl_mapwarper_spark.pipeline import PipelineDirs, download
-
-    calls = []
-
-    def exploding_fetcher(url, timeout_s):
-        calls.append(url)
-        raise AssertionError("fetch happened despite failed precheck")
-
-    base = _e2e_config(spark, SF_DIR)
-    cfg = dataclasses.replace(
-        base,
-        maps_source=dataclasses.replace(
-            base.maps_source, fetcher=exploding_fetcher
-        ),
-        layers_source=dataclasses.replace(
-            base.layers_source, fetcher=exploding_fetcher
-        ),
-        required_modules=("definitely_not_a_real_module_xyz",),
-    )
-    with pytest.raises(RuntimeError, match="precheck failed"):
-        download(spark, cfg, PipelineDirs(current="/tmp/never", previous=None))
-    assert calls == [], "precheck must run before any fetch"
-    # and a satisfiable precheck passes
-    dataclasses.replace(base, required_modules=("json", "math")).precheck()
+def test_enrich_without_mask_source_is_rejected_before_any_fetch(
+    spark, tmp_path
+):
+    """``enrich`` fits the fetched ``mask`` ring, which the maps items do
+    not carry: such a config must fail driver-side BEFORE the first
+    request (reference mapwarper.js:168-171), not after download has
+    crawled every maps and layers page."""
+    log_dir = tmp_path / "requests"
+    log_dir.mkdir()
+    base = _config(spark, SF_DIR)
+    with pytest.raises(ValueError, match="mask_source"):
+        cfg = dataclasses.replace(
+            base,
+            maps_source=dataclasses.replace(
+                base.maps_source,
+                fetcher=_logging_fetcher(base.maps_source.fetcher, str(log_dir)),
+            ),
+            layers_source=dataclasses.replace(
+                base.layers_source,
+                fetcher=_logging_fetcher(
+                    base.layers_source.fetcher, str(log_dir)
+                ),
+            ),
+            enrich=True,
+        )
+        download(spark, cfg, PipelineDirs(current=str(tmp_path / "dl")))
+    assert _read_requests(str(log_dir)) == Counter()
 
 
 def test_export_ndjson_single_file_golden(spark, tmp_path):
