@@ -149,7 +149,9 @@ def _fixture_df(
     entry = _FIXTURE_CACHE.get(key)
     if entry is not None:
         return entry
+    import atexit
     import os
+    import pathlib
     import tempfile
 
     import pyarrow as pa
@@ -165,6 +167,9 @@ def _fixture_df(
             records(spark, sf_dir), schema=to_arrow_schema(schema)
         )
         pq.write_table(table, path)
+        # The cached DataFrame reads the file lazily, so it stays until
+        # the interpreter exits.
+        atexit.register(pathlib.Path(path).unlink, missing_ok=True)
     df = spark.read.parquet(path).persist()
     _FIXTURE_CACHE[key] = df
     return df

@@ -17,8 +17,10 @@ Reference trace covered end-to-end: mapwarper.js:151-219 (download) →
 
 from __future__ import annotations
 
+import atexit
 import functools
 import json
+import shutil
 import tempfile
 from urllib.parse import parse_qs, urlparse
 
@@ -75,11 +77,20 @@ def _config(spark: SparkSession, sf_dir: str) -> PipelineConfig:
 _RUNS: dict = {}
 
 
+def _workdir(prefix: str) -> str:
+    """A fresh run directory, removed at interpreter exit: the returned
+    DataFrames read its checkpoints lazily until then."""
+    workdir = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    return workdir
+
+
 def _outputs(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     key = (spark, sf_dir)
     if key not in _RUNS:
-        workdir = tempfile.mkdtemp(prefix="mw_pipeline_")
-        _RUNS[key] = run_pipeline(spark, _config(spark, sf_dir), workdir)
+        _RUNS[key] = run_pipeline(
+            spark, _config(spark, sf_dir), _workdir("mw_pipeline_")
+        )
     return _RUNS[key]
 
 
@@ -132,8 +143,9 @@ _E2E_RUNS: dict = {}
 def _e2e_outputs(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     key = (spark, sf_dir)
     if key not in _E2E_RUNS:
-        workdir = tempfile.mkdtemp(prefix="mw_pipeline_e2e_")
-        _E2E_RUNS[key] = run_pipeline(spark, _e2e_config(spark, sf_dir), workdir)
+        _E2E_RUNS[key] = run_pipeline(
+            spark, _e2e_config(spark, sf_dir), _workdir("mw_pipeline_e2e_")
+        )
     return _E2E_RUNS[key]
 
 

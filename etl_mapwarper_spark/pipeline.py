@@ -31,9 +31,10 @@ elsewhere: the item schemas and the mask gate in operators/mapwarper.py
 here too), the page format in sources/paginated_rest.py and the mask
 body in operators/enrichment.py; the config carries only sources and
 the ``enrich`` flag. Each REST page and each mask is fetched once per
-run: the fetched pages and the mask-joined maps are persisted while
-the step writes from them, and released (with the short-page waves)
-once ``maps`` is written, or once the step fails. The reference
+run: the fetched maps pages are persisted while the step writes from
+them, and released (with the short-page waves) once ``maps`` is
+written, or once the step fails; the mask fetch and its order-1 fit
+are one projection that only the ``maps`` write reads. The reference
 builds its layers and maps pipelines in one call (:155-166,
 :183-212); here the layers, membership and maps crawls run
 concurrently from driver threads, each against its own source's
@@ -58,8 +59,11 @@ the branches still in flight have ended.
 Scale: every transform is a narrow column expression over the
 parquet checkpoint — one scan stage per input, no shuffle (only the
 optional membership join shuffles, and its aggregated side is
-broadcast). The REST scan's parallelism is bounded by the politeness
-budget, not the cluster size (see sources/paginated_rest.py).
+broadcast). Each REST scan, wave and mask fetch is one Spark task
+whose ``max_concurrency`` threads share the source's token bucket:
+its parallelism is the politeness budget, not the cluster size, and
+it pays the per-Python-task start-up cost once per fetch (see
+sources/paginated_rest.py).
 """
 
 from __future__ import annotations
@@ -212,15 +216,14 @@ def download(
 
         if config.mask_source is not None:
             # Reference getMask hop (:79-110): masks/GCPs come from the
-            # Warper API per map, not the items payload. Persisted like
-            # the pages; the order-1 fit is one projection, so only the
-            # maps write reads it.
+            # Warper API per map, not the items payload. Not persisted:
+            # the order-1 fit is one projection, so only the maps write
+            # reads the fetched masks.
             maps = fetch_masks(
                 spark,
                 maps.drop("gcps", "maskGeometry", "maskError"),
                 config.mask_source,
-            ).persist()
-            cached.append(maps)
+            )
             if config.enrich:
                 # fetch-level errors win over transform-level ones, like
                 # the reference's maskError attachment on fetch failure

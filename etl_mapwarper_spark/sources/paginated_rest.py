@@ -12,14 +12,19 @@ The reference crawls a REST API two ways:
 
 Spark mapping (designed for a 1000-executor cluster, tested local):
 
-- Fan-out = ``spark.range(num_pages)`` coalesced to ``max_concurrency``
-  partitions; each partition runs a token-bucket rate limiter so the
-  scan's *global* request rate (summed over its partitions) matches the
-  politeness budget no matter how many executors the cluster has. The
-  reference's ``H.series()`` (concurrency 1) is the degenerate case
-  ``max_concurrency=1``. The budget is per scan, not per process: two
-  scans of one endpoint running at once would each spend it, so
-  ``pipeline.download`` overlaps only scans of different endpoints.
+- Fan-out = ``spark.range(num_pages)`` fetched in ONE Spark task by
+  ``max_concurrency`` threads that share one token bucket at the full
+  ``requests_per_second``, so at most ``max_concurrency`` requests are
+  in flight and the scan's global request rate matches the politeness
+  budget no matter how many executors the cluster has. REST
+  parallelism is a politeness budget, not a compute need, and every
+  Python task pays a fixed worker start-up cost (BASELINE.md, "The
+  per-Python-task floor"), so a fetch is one task. The reference's
+  ``H.series()`` (concurrency 1) is the degenerate case
+  ``max_concurrency=1``: strictly serial.
+  The budget is per scan, not per process: two scans of one endpoint
+  running at once would each spend it, so ``pipeline.download``
+  overlaps only scans of different endpoints.
 - Short-page termination is inherently sequential; we fetch in *waves*
   of ``wave_size`` pages (driver loop), stopping after the first wave
   that contains a short or failed page — at most ``wave_size - 1``
@@ -49,9 +54,12 @@ budget, the slowest resource in the pipeline.
 from __future__ import annotations
 
 import json
+import threading
 import time
 import urllib.error
 import urllib.request
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable, Iterable, Iterator, Optional
 
@@ -129,34 +137,50 @@ def _fetch_with_retry(config: RestSourceConfig, url: str) -> FetchResult:
 
 
 class _TokenBucket:
-    """Per-partition limiter; global rate = rate/partition × partitions."""
+    """One fetch's global limiter: request starts are spaced
+    ``1 / rate_per_s`` apart, whichever thread makes them."""
 
     def __init__(self, rate_per_s: float):
         self._interval = 1.0 / rate_per_s if rate_per_s > 0 else 0.0
         self._next_ok = 0.0
+        self._lock = threading.Lock()
 
     def acquire(self) -> None:
-        now = time.monotonic()
-        if now < self._next_ok:
-            time.sleep(self._next_ok - now)
+        with self._lock:
             now = time.monotonic()
-        self._next_ok = now + self._interval
+            at = max(now, self._next_ok)
+            self._next_ok = at + self._interval
+        if at > now:
+            time.sleep(at - now)
 
 
 def _fetch_partition(
     config: RestSourceConfig, keys: Iterable[int], url_of: Callable[[int], str]
 ) -> Iterator[tuple]:
-    """Fetch ``url_of(key)`` for each key of one partition under the
-    partition's share of the rate budget; yields ``(key, url, status,
-    ok, body, error)`` — the PAGE_SCHEMA / KEYED_SCHEMA row."""
-    bucket = _TokenBucket(
-        config.requests_per_second / max(config.max_concurrency, 1)
-    )
-    for key in keys:
+    """Fetch ``url_of(key)`` for each key on ``max_concurrency`` threads
+    under one token bucket; yields ``(key, url, status, ok, body,
+    error)`` — the PAGE_SCHEMA / KEYED_SCHEMA row — in key order.
+
+    At most ``max_concurrency`` requests are in flight and at most that
+    many results wait to be yielded; with ``max_concurrency=1`` each
+    request starts after the previous one has ended."""
+    bucket = _TokenBucket(config.requests_per_second)
+
+    def one(key: int) -> tuple:
         bucket.acquire()
         url = url_of(key)
         r = _fetch_with_retry(config, url)
-        yield (key, url, r.status, r.error is None, r.body, r.error)
+        return (key, url, r.status, r.error is None, r.body, r.error)
+
+    n = max(config.max_concurrency, 1)
+    window: deque = deque()
+    with ThreadPoolExecutor(max_workers=n) as pool:
+        for key in keys:
+            if len(window) == n:
+                yield window.popleft().result()
+            window.append(pool.submit(one, key))
+        while window:
+            yield window.popleft().result()
 
 
 def fetch_count(config: RestSourceConfig) -> int:
@@ -177,17 +201,14 @@ def _fetch(
     url_of: Callable[[int], str],
     schema: T.StructType,
 ) -> DataFrame:
-    """Fetch ``url_of(key)`` for each value of the one-column ``keys``.
-
-    Coalescing to ``max_concurrency`` partitions bounds in-flight
-    requests exactly; each partition runs ``_fetch_partition`` under
-    its share of the rate budget. One ``schema`` row per key."""
+    """Fetch ``url_of(key)`` for each value of the one-column ``keys``
+    in one Spark task, which runs ``_fetch_partition``. One ``schema``
+    row per key."""
 
     def run(it: Iterator[Row]) -> Iterator[tuple]:
         return _fetch_partition(config, (int(r[0]) for r in it), url_of)
 
-    parts = keys.coalesce(max(config.max_concurrency, 1))
-    return spark.createDataFrame(parts.rdd.mapPartitions(run), schema)
+    return spark.createDataFrame(keys.coalesce(1).rdd.mapPartitions(run), schema)
 
 
 def scan_pages(
@@ -363,9 +384,10 @@ def fetch_by_key(
     The reference hits ``…/{mapId}/mask`` once per qualifying map,
     serially. Spark shape: the ``id`` column of ``keys_df`` (and ONLY
     that column — never whole records) is fetched through the same
-    path as the page scans (``_fetch``: token bucket, retry,
-    ``max_concurrency`` partitions), so the global request rate honors
-    the politeness budget on any cluster size. ``url_template``
+    path as the page scans (``_fetch``: one task, ``max_concurrency``
+    threads, one token bucket, retry), so at most ``max_concurrency``
+    requests are in flight and the global request rate honors the
+    politeness budget on any cluster size. ``url_template``
     receives ``{id}``. Errors are result rows (error-as-data),
     mirroring the reference's maskError attachment (:90) rather than
     stream failure.

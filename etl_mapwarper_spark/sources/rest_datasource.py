@@ -1,10 +1,11 @@
 """Paginated REST as a Spark 4 Python DataSource (DataSource V2 API).
 
-``sources/paginated_rest.py`` drives the crawl imperatively
-(mapPartitions over a page-id range). This module exposes the same
-scan as a REGISTERED SOURCE — ``spark.read.format("paginated_rest")``
-— which is the idiomatic Spark 4 surface: the planner sees a real
-relation, partition planning lives in ``partitions()``, and any SQL
+``sources/paginated_rest.py`` drives the crawl imperatively (one
+mapPartitions task over a page-id range). This module exposes the
+same scan as a REGISTERED SOURCE —
+``spark.read.format("paginated_rest")`` — which is the idiomatic
+Spark 4 surface: the planner sees a real relation, partition
+planning lives in ``partitions()``, and any SQL
 user can consume the API without touching Python plumbing
 (SURVEY.md §2.B "Scans/sources"; reference crawl semantics
 mapwarper.js:49-55, :183-199).
@@ -13,9 +14,10 @@ Contract mirrors the imperative scanner:
 - one output row per page, PAGE_SCHEMA-shaped (page/url/status/ok/
   body/error) — error-as-data (:122-129); item explosion stays
   JVM-side via ``page_items`` / ``from_json``;
-- pages are grouped into ``max_concurrency`` input partitions; each
-  partition rate-limits with the shared token bucket so the global
-  request rate honors the politeness budget on any cluster size;
+- all pages are one input partition, fetched by ``max_concurrency``
+  threads under one token bucket, so at most ``max_concurrency``
+  requests are in flight and the global request rate honors the
+  politeness budget on any cluster size;
 - retry/timeout mirror GOT_OPTIONS (:12-16).
 
 Options (all strings, per the DataSource API):
@@ -67,13 +69,6 @@ class _Pages(InputPartition):
         self.pages = pages
 
 
-def _partitions(options: dict, pages: list[int]) -> list[_Pages]:
-    """Deal ``pages`` round-robin into ``max_concurrency`` partitions,
-    dropping empty ones."""
-    n = max(_config_from_options(options).max_concurrency, 1)
-    return [_Pages(pages[i::n]) for i in range(n) if pages[i::n]]
-
-
 def _read(options: dict, partition: _Pages):
     cfg = _config_from_options(options)
     return _fetch_partition(cfg, partition.pages, cfg.url_for)
@@ -85,7 +80,7 @@ class PaginatedRestReader(DataSourceReader):
         self._total_pages = int(options["total_pages"])
 
     def partitions(self):
-        return _partitions(self._options, list(range(1, self._total_pages + 1)))
+        return [_Pages(list(range(1, self._total_pages + 1)))]
 
     def read(self, partition: _Pages):
         return _read(self._options, partition)
@@ -116,10 +111,9 @@ class PaginatedRestStreamReader(DataSourceStreamReader):
         return {"page": self._available}
 
     def partitions(self, start, end):
-        pages = list(range(start["page"] + 1, end["page"] + 1))
-        # Spark requires >=1 partition per microbatch even when the
-        # delta is empty
-        return _partitions(self._options, pages) or [_Pages([])]
+        # One partition per microbatch, also when the delta is empty:
+        # Spark requires >=1
+        return [_Pages(list(range(start["page"] + 1, end["page"] + 1)))]
 
     def read(self, partition: _Pages):
         return _read(self._options, partition)

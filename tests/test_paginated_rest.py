@@ -293,3 +293,150 @@ def test_short_page_scan_raises_at_its_page_cap(spark, server, monkeypatch):
             spark, _cfg(server, fetcher=full_page_fetch), wave_size=2
         )
     assert persistent().size() == before
+
+
+# --- fetch contract: one task, bounded in flight, one global rate ---------
+
+
+@pytest.mark.parametrize("concurrency", [1, 3, 8])
+def test_each_fetch_plans_one_partition(spark, server, concurrency):
+    """REST parallelism is threads inside one task, never partitions."""
+    from etl_mapwarper_spark.sources.paginated_rest import fetch_by_key
+    from etl_mapwarper_spark.sources.rest_datasource import register
+
+    cfg = _cfg(server, max_concurrency=concurrency)
+    keyed = RestSourceConfig(
+        url_template=server + "/items.json?per_page=10&page={id}",
+        max_concurrency=concurrency,
+    )
+    register(spark)
+    source = (
+        spark.read.format("paginated_rest")
+        .option("url_template", cfg.url_template)
+        .option("total_pages", 20)
+        .option("max_concurrency", concurrency)
+        .load()
+    )
+    for df in (
+        scan_pages(spark, cfg, 20),
+        fetch_by_key(spark, keyed, spark.range(1, 21).repartition(5)),
+        source,
+    ):
+        assert df.rdd.getNumPartitions() == 1
+
+
+def _timed_fetcher(log: str):
+    """A fetcher that takes 50 ms and appends its request's monotonic
+    start and end times to ``log``."""
+
+    def fetch(url, timeout_s):
+        import time
+
+        t0 = time.monotonic()
+        time.sleep(0.05)
+        t1 = time.monotonic()
+        with open(log, "a") as fh:
+            fh.write(f"{t0!r} {t1!r}\n")
+        return FetchResult(200, json.dumps({"items": []}))
+
+    return fetch
+
+
+def _spans(log: str) -> list[tuple[float, float]]:
+    with open(log) as fh:
+        return [tuple(map(float, line.split())) for line in fh]
+
+
+def _max_in_flight(spans: list[tuple[float, float]]) -> int:
+    # (t, -1) sorts before (t, +1): a request that ends as another
+    # starts does not overlap it
+    events = sorted([(t0, 1) for t0, _ in spans] + [(t1, -1) for _, t1 in spans])
+    depth = peak = 0
+    for _, d in events:
+        depth += d
+        peak = max(peak, depth)
+    return peak
+
+
+@pytest.mark.parametrize("via", ["scan_pages", "fetch_by_key"])
+@pytest.mark.parametrize("concurrency", [1, 4])
+def test_in_flight_requests_stay_within_max_concurrency(
+    spark, tmp_path, via, concurrency
+):
+    from etl_mapwarper_spark.sources.paginated_rest import fetch_by_key
+
+    log = str(tmp_path / "requests.log")
+    cfg = RestSourceConfig(
+        url_template=(
+            "http://fake/p.json?page={page}"
+            if via == "scan_pages"
+            else "http://fake/k/{id}.json"
+        ),
+        requests_per_second=1e9,
+        max_concurrency=concurrency,
+        retries=0,
+        fetcher=_timed_fetcher(log),
+    )
+    if via == "scan_pages":
+        rows = scan_pages(spark, cfg, 12).collect()
+    else:
+        rows = fetch_by_key(spark, cfg, spark.range(1, 13)).collect()
+    assert len(rows) == 12 and all(r.ok for r in rows)
+    spans = _spans(log)
+    assert len(spans) == 12
+    peak = _max_in_flight(spans)
+    if concurrency == 1:
+        assert peak == 1  # strictly serial, as the reference's H.series()
+    else:
+        assert 2 <= peak <= concurrency
+
+
+def test_rate_is_global_across_threads(spark, tmp_path):
+    """Nine requests at 20 req/s take >= 0.4 s however many threads
+    share them: the token bucket is one per fetch, not one per thread."""
+    log = str(tmp_path / "requests.log")
+    cfg = RestSourceConfig(
+        url_template="http://fake/p.json?page={page}",
+        requests_per_second=20.0,
+        max_concurrency=4,
+        retries=0,
+        fetcher=_timed_fetcher(log),
+    )
+    assert len(scan_pages(spark, cfg, 9).collect()) == 9
+    spans = _spans(log)
+    assert len(spans) == 9
+    assert max(t1 for _, t1 in spans) - min(t0 for t0, _ in spans) >= 0.4
+
+
+def test_token_bucket_loses_no_slot_under_thread_contention(monkeypatch):
+    """Every acquire reserves its own slot. With the clock frozen and
+    sleeps skipped, 16 threads x 1,000 acquires at 1/s must leave the
+    next slot at exactly 16,000 s; a lost read-modify-write of the slot
+    leaves it short."""
+    import types
+
+    from etl_mapwarper_spark.sources import paginated_rest
+
+    monkeypatch.setattr(
+        paginated_rest,
+        "time",
+        types.SimpleNamespace(monotonic=lambda: 0.0, sleep=lambda s: None),
+    )
+    bucket = paginated_rest._TokenBucket(1.0)
+
+    def hammer():
+        for _ in range(1000):
+            bucket.acquire()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert bucket._next_ok == 16_000.0
