@@ -414,31 +414,24 @@ MASK_BODY_SCHEMA = T.StructType(
 def fetch_masks(spark, maps: DataFrame, config) -> DataFrame:
     """The mask-FETCH hop of reference getMask (mapwarper.js:79-110).
 
-    Only the ids of maps that pass the mask gate (``_masked``) are
-    requested (:81) — the gate runs before any network work, exactly
-    like the reference. Fetched bodies parse JVM-side (``from_json``) into
-    ``mask``/``gcps`` columns; fetch failures land in
-    ``mask_fetch_error`` (error-as-data, :90). Compose with
-    ``enrich_masks`` for the transform half. The join back to the maps
-    stream is a plain equi-join on the map id — at scale the fetched
-    side is bounded by the masked subset, not the corpus.
+    Only maps that pass the mask gate (``_masked``, computed JVM-side)
+    are requested (:81). The map rows themselves go through the fetch
+    (``paginated_rest._fetch``), so each mask lands on its own map, as
+    the reference attaches it (:84-90): no join back. Bodies parse
+    JVM-side (``from_json``) into ``mask``/``gcps``; fetch failures land
+    in ``mask_fetch_error`` (error-as-data, :90). Compose with
+    ``enrich_masks`` for the transform half.
     """
-    from ..sources.paginated_rest import fetch_by_key
+    from ..sources.paginated_rest import _fetch
 
-    fetched = fetch_by_key(spark, config, maps.filter(_masked()).select("id"))
-    parsed = fetched.select(
-        F.col("key").alias("_mf_id"),
-        F.when(F.col("ok"), F.from_json("body", MASK_BODY_SCHEMA)).alias(
-            "_mb"
-        ),
-        F.when(~F.col("ok"), F.col("error")).alias("mask_fetch_error"),
-    ).select(
-        "_mf_id",
-        F.col("_mb.mask").alias("mask"),
-        F.col("_mb.gcps").alias("gcps"),
-        "mask_fetch_error",
-    )
-    return maps.join(parsed, maps["id"] == parsed["_mf_id"], "left").drop("_mf_id")
+    masked = maps.withColumn("_mask_id", F.when(_masked(), F.col("id")))
+    url_of = lambda k: config.url_template.format(id=k)  # noqa: E731
+    f = F.col("_fetched")
+    return _fetch(config, masked, "_mask_id", url_of).select(
+        *maps.columns,
+        F.when(f["ok"], F.from_json(f["body"], MASK_BODY_SCHEMA)).alias("_mb"),
+        F.when(~f["ok"], f["error"]).alias("mask_fetch_error"),
+    ).select(*maps.columns, "_mb.*", "mask_fetch_error")
 
 
 def attach_map_layers(maps: DataFrame, map_layers: DataFrame) -> DataFrame:
@@ -591,11 +584,11 @@ _register(
 
 
 def mw_gcp_errors(spark, sf_dir: str) -> DataFrame:
-    maps = synthetic_masked_maps(spark, sf_dir)
-    return (
-        enrich_masks(maps)
-        .filter(F.col("maskError").isNotNull())
-        .select("id", F.col("maskError"))
+    # explode, not filter: Catalyst pushes a Filter on maskError through
+    # enrich_masks' projection, which copies _AFFINE_SQL into the Filter
+    errors = F.explode(F.array_compact(F.array("maskError")))
+    return enrich_masks(synthetic_masked_maps(spark, sf_dir)).select(
+        "id", errors.alias("maskError")
     )
 
 

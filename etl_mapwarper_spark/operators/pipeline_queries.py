@@ -40,7 +40,7 @@ QUERIES, ORACLE, _register = registry()
 
 # ---------------------------------------------------------------------------
 # Deterministic fake API. Module-level + functools.partial → picklable
-# for executor-side fetch inside scan_pages' mapPartitions.
+# for executor-side fetch inside the fetch task's mapInArrow.
 # ---------------------------------------------------------------------------
 
 
@@ -103,7 +103,7 @@ def _outputs(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # mask endpoint and the maps' mask_status serve the records of
 # enrichment.synthetic_masked_maps (``_masked_map_record``), so the
 # oracle SQL is shared verbatim with mw_gcp_transform — any drift
-# anywhere in the chain (pagination, JSON, keyed fetch, join-back,
+# anywhere in the chain (pagination, JSON, in-line mask fetch,
 # enrichment, checkpoint) breaks the hash.
 # ---------------------------------------------------------------------------
 

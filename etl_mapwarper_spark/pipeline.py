@@ -33,8 +33,11 @@ body in operators/enrichment.py; the config carries only sources and
 the ``enrich`` flag. Each REST page and each mask is fetched once per
 run: the fetched maps pages are persisted while the step writes from
 them, and released (with the short-page waves) once ``maps`` is
-written, or once the step fails; the mask fetch and its order-1 fit
-are one projection that only the ``maps`` write reads. The reference
+written, or once the step fails. The masks are fetched in line: the
+map rows themselves pass through the mask fetch task, which attaches
+each mask to its own map as the reference does (:79-110), and the
+order-1 fit is a projection over them, so the ``maps`` write has no
+join or shuffle on its mask path. The reference
 builds its layers and maps pipelines in one call (:155-166,
 :183-212); here the layers, membership and maps crawls run
 concurrently from driver threads, each against its own source's
@@ -175,11 +178,12 @@ def download(
 
     The layers crawl and its two writes, the membership crawl, and the
     maps crawl (count probe, fan-out, ``map_errors`` write, mask
-    fetch/enrich plan) run concurrently; ``maps`` is joined and written
-    once all three end. Each crawl keeps its own source's token bucket
-    and ``max_concurrency``: only different endpoints overlap. If a
-    branch fails, its error is re-raised once the others have ended,
-    and every cache the step persisted is released either way.
+    fetch/enrich plan) run concurrently; ``maps`` gets its membership
+    and is written once all three end. Each crawl keeps its own
+    source's token bucket and ``max_concurrency``: only different
+    endpoints overlap. If a branch fails, its error is re-raised once
+    the others have ended, and every cache the step persisted is
+    released either way.
 
     With ``mask_source`` set, ``maps`` carries ``maskError`` (fetch
     errors first, then fit errors) and ``maskGeometry`` (null unless
@@ -216,9 +220,9 @@ def download(
 
         if config.mask_source is not None:
             # Reference getMask hop (:79-110): masks/GCPs come from the
-            # Warper API per map, not the items payload. Not persisted:
-            # the order-1 fit is one projection, so only the maps write
-            # reads the fetched masks.
+            # Warper API per map, not the items payload, fetched onto the
+            # map rows in line. Not persisted: only the maps write reads
+            # them, and it requests each mask once.
             maps = fetch_masks(
                 spark,
                 maps.drop("gcps", "maskGeometry", "maskError"),

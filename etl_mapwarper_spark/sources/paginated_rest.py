@@ -29,11 +29,11 @@ Spark mapping (designed for a 1000-executor cluster, tested local):
   of ``wave_size`` pages (driver loop), stopping after the first wave
   that contains a short or failed page — at most ``wave_size - 1``
   wasted requests, with full parallelism inside a wave.
-- Every fetch returns a **result record** ``(page, url, status, ok,
-  body, error)`` — error-as-data (:122-129); callers split ok/error
-  with two filters and parse bodies JVM-side via ``from_json`` so the
-  Python boundary carries raw page text only, never per-item objects.
-  Page scans and per-key fetches share one fetch path (``_fetch``).
+- Every fetch adds one **result struct** ``(url, status, ok, body,
+  error)`` to the row whose key it requested — error-as-data
+  (:122-129); callers split ok/error with two filters and parse bodies
+  JVM-side via ``from_json``. Page scans, keyed fetches and the mask
+  fetch share one fetch path (``_fetch``, one ``mapInArrow`` task).
 - The page format is the Map Warper API's, stated once here: a page
   body is a JSON object whose ``items`` (``_ITEMS_FIELD``) array holds
   the records, and the count probe reads ``total_entries``
@@ -53,6 +53,7 @@ budget, the slowest resource in the pipeline.
 
 from __future__ import annotations
 
+import itertools
 import json
 import threading
 import time
@@ -63,20 +64,22 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable, Iterable, Iterator, Optional
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Fetch result contract: one row per requested page, success or not.
-PAGE_SCHEMA = T.StructType(
+# Fetch result contract: one per requested key, success or not.
+FETCHED_SCHEMA = T.StructType(
     [
-        T.StructField("page", T.IntegerType(), False),
         T.StructField("url", T.StringType(), False),
         T.StructField("status", T.IntegerType(), True),
         T.StructField("ok", T.BooleanType(), False),
         T.StructField("body", T.StringType(), True),
         T.StructField("error", T.StringType(), True),
     ]
+)
+PAGE_SCHEMA = T.StructType(
+    [T.StructField("page", T.IntegerType(), False), *FETCHED_SCHEMA.fields]
 )
 
 Fetcher = Callable[[str, float], "FetchResult"]
@@ -159,7 +162,7 @@ def _fetch_partition(
 ) -> Iterator[tuple]:
     """Fetch ``url_of(key)`` for each key on ``max_concurrency`` threads
     under one token bucket; yields ``(key, url, status, ok, body,
-    error)`` — the PAGE_SCHEMA / KEYED_SCHEMA row — in key order.
+    error)`` in key order.
 
     At most ``max_concurrency`` requests are in flight and at most that
     many results wait to be yielded; with ``max_concurrency=1`` each
@@ -195,20 +198,41 @@ def fetch_count(config: RestSourceConfig) -> int:
 
 
 def _fetch(
-    spark: SparkSession,
     config: RestSourceConfig,
-    keys: DataFrame,
+    rows: DataFrame,
+    key: str,
     url_of: Callable[[int], str],
-    schema: T.StructType,
 ) -> DataFrame:
-    """Fetch ``url_of(key)`` for each value of the one-column ``keys``
-    in one Spark task, which runs ``_fetch_partition``. One ``schema``
-    row per key."""
+    """``rows`` plus a ``_fetched`` struct (``FETCHED_SCHEMA``, nested so rows
+    may have their own ``status``): ``url_of(row[key])``'s result, null where
+    ``key`` is null. One ``coalesce(1).mapInArrow`` task; its one fetcher (one
+    token bucket, one in-flight window) spans all the task's Arrow batches."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    def run(it: Iterator[Row]) -> Iterator[tuple]:
-        return _fetch_partition(config, (int(r[0]) for r in it), url_of)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        held: deque = deque()  # (batch, its keys) once the fetcher has them
 
-    return spark.createDataFrame(keys.coalesce(1).rdd.mapPartitions(run), schema)
+        def keys() -> Iterator[int]:
+            for batch in batches:
+                held.append((batch, batch.column(key).to_pylist()))
+                yield from (k for k in held[-1][1] if k is not None)
+
+        fetched = _fetch_partition(config, keys(), url_of)
+        results = (dict(zip(FETCHED_SCHEMA.names, r[1:])) for r in fetched)
+        # The fetcher yields a result only after taking the next key, so the
+        # next batch is held by then; pulling the first result fills ``held``.
+        results = itertools.chain(list(itertools.islice(results, 1)), results)
+        while held:
+            batch, ks = held.popleft()
+            col = [None if k is None else next(results) for k in ks]
+            col = pa.array(col, to_arrow_type(FETCHED_SCHEMA))
+            yield batch.append_column("_fetched", col)
+
+    schema = T.StructType(
+        [*rows.schema.fields, T.StructField("_fetched", FETCHED_SCHEMA)]
+    )
+    return rows.coalesce(1).mapInArrow(run, schema)
 
 
 def scan_pages(
@@ -221,8 +245,8 @@ def scan_pages(
 
     ``spark.range`` plans the page list cluster-side.
     """
-    pages = spark.range(first_page, first_page + num_pages)
-    return _fetch(spark, config, pages, config.url_for, PAGE_SCHEMA)
+    pages = spark.range(first_page, first_page + num_pages).selectExpr("int(id) page")
+    return _fetch(config, pages, "page", config.url_for).select("page", "_fetched.*")
 
 
 # Columns the short-page probe is allowed to pull to the driver —
@@ -363,42 +387,24 @@ def page_errors(pages: DataFrame) -> DataFrame:
     return pages.filter(~F.col("ok")).select("page", "url", "status", "error")
 
 
-# Keyed (per-entity) fetch contract: one row per requested key.
-KEYED_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.LongType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("status", T.IntegerType(), True),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("body", T.StringType(), True),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-
 def fetch_by_key(
     spark: SparkSession, config: RestSourceConfig, keys_df: DataFrame
 ) -> DataFrame:
     """Per-entity endpoint fetch (reference getMask, mapwarper.js:79-110).
 
     The reference hits ``…/{mapId}/mask`` once per qualifying map,
-    serially. Spark shape: the ``id`` column of ``keys_df`` (and ONLY
-    that column — never whole records) is fetched through the same
-    path as the page scans (``_fetch``: one task, ``max_concurrency``
-    threads, one token bucket, retry), so at most ``max_concurrency``
-    requests are in flight and the global request rate honors the
-    politeness budget on any cluster size. ``url_template``
-    receives ``{id}``. Errors are result rows (error-as-data),
-    mirroring the reference's maskError attachment (:90) rather than
-    stream failure.
+    serially. Spark shape: one ``(key, url, status, ok, body, error)``
+    row per ``id`` of ``keys_df``, fetched through the same path as the
+    page scans (``_fetch``: one task, ``max_concurrency`` threads, one
+    token bucket, retry), so at most ``max_concurrency`` requests are
+    in flight and the global request rate honors the politeness budget
+    on any cluster size. ``url_template`` receives ``{id}``. Errors are
+    result rows (error-as-data), mirroring the reference's maskError
+    attachment (:90) rather than stream failure.
     """
-    return _fetch(
-        spark,
-        config,
-        keys_df.select(F.col("id").cast("long").alias("key")),
-        lambda k: config.url_template.format(id=k),
-        KEYED_SCHEMA,
-    )
+    keys = keys_df.select(F.col("id").cast("long").alias("key"))
+    url_of = lambda k: config.url_template.format(id=k)  # noqa: E731
+    return _fetch(config, keys, "key", url_of).select("key", "_fetched.*")
 
 
 def _inject(url: str, timeout_s: float, inner: Fetcher, pages: tuple, status: int):

@@ -1,7 +1,7 @@
 """Paginated REST as a Spark 4 Python DataSource (DataSource V2 API).
 
 ``sources/paginated_rest.py`` drives the crawl imperatively (one
-mapPartitions task over a page-id range). This module exposes the
+``mapInArrow`` task over a page-number range). This module exposes the
 same scan as a REGISTERED SOURCE —
 ``spark.read.format("paginated_rest")`` — which is the idiomatic
 Spark 4 surface: the planner sees a real relation, partition

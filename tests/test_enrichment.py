@@ -16,13 +16,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from etl_mapwarper_spark.operators.enrichment import (  # noqa: E402
+    _SINGULAR_MSG,
     _TOO_FEW_GCPS_MSG,
     _design,
     attach_map_layers,
     enrich_masks,
     fit_gcp_polynomial,
+    mw_gcp_errors,
 )
 from etl_mapwarper_spark.plans.audit import audit  # noqa: E402
+
+from conftest import SF_DIR  # noqa: E402
 
 _MASKS_DDL = (
     "id INT, mask_status STRING, mask ARRAY<ARRAY<DOUBLE>>, "
@@ -418,3 +422,12 @@ def test_attach_map_layers_left_join_and_broadcast(spark):
     assert got[3] is None  # left join keeps layer-less maps
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+
+
+def test_gcp_errors_plan_holds_the_affine_fit_once(spark):
+    """``mw_gcp_errors`` selects the error rows without a Filter on
+    ``maskError``, which Catalyst would push through ``enrich_masks``'
+    projection and so copy ``_AFFINE_SQL`` into the plan again."""
+    df = mw_gcp_errors(spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count(_SINGULAR_MSG) == 1, plan

@@ -9,6 +9,7 @@ import json
 import os
 import sys
 import threading
+from collections import Counter
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -325,26 +326,37 @@ def test_each_fetch_plans_one_partition(spark, server, concurrency):
         assert df.rdd.getNumPartitions() == 1
 
 
-def _timed_fetcher(log: str):
-    """A fetcher that takes 50 ms and appends its request's monotonic
-    start and end times to ``log``."""
+def _timed_fetcher(log: str, sleep_s: float = 0.05):
+    """A fetcher that takes ``sleep_s`` and appends its request's
+    monotonic start and end times and its URL to ``log``. It serves an
+    empty page, which for ``…/{k}/mask.json`` also carries the mask
+    ``[[k, k]]``."""
 
     def fetch(url, timeout_s):
         import time
 
         t0 = time.monotonic()
-        time.sleep(0.05)
+        time.sleep(sleep_s)
         t1 = time.monotonic()
         with open(log, "a") as fh:
-            fh.write(f"{t0!r} {t1!r}\n")
-        return FetchResult(200, json.dumps({"items": []}))
+            fh.write(f"{t0!r} {t1!r} {url}\n")
+        body = {"items": []}
+        if url.endswith("/mask.json"):
+            k = float(url.split("/")[-2])
+            body.update(mask=[[k, k]], gcps=[])
+        return FetchResult(200, json.dumps(body))
 
     return fetch
 
 
 def _spans(log: str) -> list[tuple[float, float]]:
     with open(log) as fh:
-        return [tuple(map(float, line.split())) for line in fh]
+        return [tuple(map(float, line.split()[:2])) for line in fh]
+
+
+def _urls(log: str) -> Counter:
+    with open(log) as fh:
+        return Counter(line.split()[2] for line in fh)
 
 
 def _max_in_flight(spans: list[tuple[float, float]]) -> int:
@@ -440,3 +452,148 @@ def test_token_bucket_loses_no_slot_under_thread_contention(monkeypatch):
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert bucket._next_ok == 16_000.0
+
+
+# --- in-line fetch: rows pass through, results stay on their own row -------
+
+
+@pytest.fixture
+def two_row_batches(spark):
+    """Arrow batches of two rows, so every fetch spans several batches."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    yield
+    spark.conf.set(conf, old)
+
+
+def _mask_cfg(fetcher, **kw) -> RestSourceConfig:
+    defaults = dict(requests_per_second=1e9, max_concurrency=4, retries=0)
+    defaults.update(kw)
+    return RestSourceConfig(
+        url_template="http://fake/maps/{id}/mask.json", fetcher=fetcher, **defaults
+    )
+
+
+def test_fetch_masks_keeps_columns_named_like_fetch_results(spark, tmp_path):
+    """Map rows that carry ``status``, ``url``, ``ok``, ``body`` and
+    ``error`` columns of their own come out of ``fetch_masks`` unchanged:
+    the fetch result is one struct beside them, never flat columns."""
+    from etl_mapwarper_spark.operators.enrichment import fetch_masks
+
+    maps = spark.createDataFrame(
+        [
+            (1, "masked", "active", "u1", True, "b1", None),
+            (2, "unmasked", "draft", None, False, None, "e2"),
+        ],
+        "id long, mask_status string, status string, url string, "
+        "ok boolean, body string, error string",
+    )
+    log = str(tmp_path / "requests.log")
+    out = fetch_masks(spark, maps, _mask_cfg(_timed_fetcher(log, 0.0)))
+    assert out.columns == maps.columns + ["mask", "gcps", "mask_fetch_error"]
+    assert sorted(out.select(*maps.columns).collect()) == sorted(maps.collect())
+    assert {r.id: r.mask for r in out.collect()} == {1: [[1.0, 1.0]], 2: None}
+
+
+def test_fetch_masks_fetches_map_id_zero(spark, tmp_path):
+    """A masked map with id 0 is fetched: 0 is a key, not a missing one."""
+    from etl_mapwarper_spark.operators.enrichment import fetch_masks
+
+    maps = spark.createDataFrame(
+        [(0, "masked"), (1, "masking")], "id long, mask_status string"
+    )
+    log = str(tmp_path / "requests.log")
+    out = fetch_masks(spark, maps, _mask_cfg(_timed_fetcher(log, 0.0)))
+    assert {r.id: r.mask for r in out.collect()} == {
+        0: [[0.0, 0.0]],
+        1: [[1.0, 1.0]],
+    }
+    assert _urls(log) == Counter(
+        f"http://fake/maps/{k}/mask.json" for k in (0, 1)
+    )
+
+
+def test_fetch_spans_arrow_batches_with_one_window(
+    spark, tmp_path, two_row_batches
+):
+    """With two-row Arrow batches, each row still gets its own fetch
+    result, each key is requested once, and the fetch keeps one in-flight
+    window across batches: more than one batch's requests overlap, never
+    more than ``max_concurrency``."""
+    from etl_mapwarper_spark.operators.enrichment import fetch_masks
+
+    ids = range(14)
+    maps = spark.createDataFrame(
+        [(k, "unmasked" if k % 3 == 2 else "masked") for k in ids],
+        "id long, mask_status string",
+    )
+    log = str(tmp_path / "requests.log")
+    rows = fetch_masks(spark, maps, _mask_cfg(_timed_fetcher(log))).collect()
+    masked = [k for k in ids if k % 3 != 2]
+    assert {r.id: r.mask for r in rows} == {
+        k: [[float(k), float(k)]] if k in masked else None for k in ids
+    }
+    assert all(r.mask_fetch_error is None for r in rows)
+    assert _urls(log) == Counter(f"http://fake/maps/{k}/mask.json" for k in masked)
+    assert 3 <= _max_in_flight(_spans(log)) <= 4
+
+
+def test_rate_is_global_across_arrow_batches(spark, tmp_path, two_row_batches):
+    """Nine requests at 20 req/s span >= 0.4 s when each Arrow batch
+    carries two keys: the token bucket is one per fetch, not one per
+    batch (a bucket per batch lets each batch start at once)."""
+    from etl_mapwarper_spark.sources.paginated_rest import fetch_by_key
+
+    log = str(tmp_path / "requests.log")
+    cfg = RestSourceConfig(
+        url_template="http://fake/k/{id}.json",
+        requests_per_second=20.0,
+        max_concurrency=4,
+        retries=0,
+        fetcher=_timed_fetcher(log, 0.0),
+    )
+    assert len(fetch_by_key(spark, cfg, spark.range(9)).collect()) == 9
+    spans = _spans(log)
+    assert len(spans) == 9
+    assert max(t1 for _, t1 in spans) - min(t0 for t0, _ in spans) >= 0.4
+
+
+def test_all_failed_mask_batch_writes(spark, tmp_path, two_row_batches):
+    """A batch whose masked fetches all fail (one with no HTTP status),
+    on maps whose ``layerIds`` are null, writes without a worker error,
+    and every failure lands in ``maskError``."""
+    from etl_mapwarper_spark.operators.enrichment import enrich_masks, fetch_masks
+
+    def fail(url, timeout_s):
+        if "/1/" in url:
+            return FetchResult(None, None, "ConnectionError: refused")
+        return FetchResult(404, None, "HTTP 404: mask not found")
+
+    maps = spark.createDataFrame(
+        [
+            (1, "masked", None),
+            (2, "masked", None),
+            (3, "unmasked", None),
+            (5, "unmasked", None),
+            (4, "masked", [7]),
+        ],
+        "id long, mask_status string, layerIds array<long>",
+    )
+    out = enrich_masks(fetch_masks(spark, maps, _mask_cfg(fail)))
+    out = out.withColumn(
+        "maskError", F.coalesce("mask_fetch_error", "maskError")
+    ).drop("mask_fetch_error", "mask")
+    path = str(tmp_path / "maps")
+    out.write.parquet(path)
+    got = {
+        r.id: (r.maskError, r.layerIds)
+        for r in spark.read.parquet(path).collect()
+    }
+    assert got == {
+        1: ("ConnectionError: refused", None),
+        2: ("HTTP 404: mask not found", None),
+        3: (None, None),
+        5: (None, None),
+        4: ("HTTP 404: mask not found", [7]),
+    }

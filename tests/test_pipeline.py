@@ -183,10 +183,8 @@ def test_download_fetches_each_page_and_mask_once(spark, tmp_path):
     assert urls == expected_pages + expected_masks
 
 
-def test_download_maps_write_has_no_python(spark, tmp_path, monkeypatch):
-    """With the default order-1 enrichment, the plan that writes the
-    ``maps`` checkpoint has no Python evaluation node: the mask fetch is
-    the only Python on download's maps path."""
+def _recorded_write_plans(monkeypatch) -> dict[str, str]:
+    """Record the executed plan of each ``pipeline._write``, by name."""
     plans = {}
     write = pipeline._write
 
@@ -195,17 +193,43 @@ def test_download_maps_write_has_no_python(spark, tmp_path, monkeypatch):
         return write(df, dirs, name)
 
     monkeypatch.setattr(pipeline, "_write", recording_write)
+    return plans
+
+
+def _own_nodes(plan: str) -> str:
+    """``plan`` without the plans of the cached relations it scans, which
+    ran when the cache was filled, not in this plan."""
+    lines, cached_at = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" +-:"))
+        if cached_at is not None and depth > cached_at:
+            continue
+        cached_at = depth if "InMemoryRelation" in line else None
+        lines.append(line)
+    return "\n".join(lines)
+
+
+def test_download_maps_write_fetches_masks_in_line(spark, tmp_path, monkeypatch):
+    """With the default order-1 enrichment, the plan that writes the
+    ``maps`` checkpoint has one Python node, the mask fetch
+    (``MapInArrow``), and no exchange or join: each mask is fetched onto
+    its own map row. No write of the step scans an RDD."""
+    plans = _recorded_write_plans(monkeypatch)
     cfg = _e2e_config(spark, SF_DIR)
     assert cfg.enrich
     out = download(spark, cfg, PipelineDirs(current=str(tmp_path / "dl")))
-    assert "InMemoryTableScan" in plans["maps"]  # the fetched masks
-    assert "EvalPython" not in plans["maps"], plans["maps"]
+    maps = _own_nodes(plans["maps"])
+    assert "InMemoryTableScan" in maps  # the fetched maps pages
+    assert maps.count("MapInArrow") == 1, maps
+    for node in ("EvalPython", "InPandas", "Exchange", "SortMergeJoin"):
+        assert node not in maps, maps
+    assert not [name for name, plan in plans.items() if "ExistingRDD" in plan]
     assert out["maps"].filter("maskGeometry IS NOT NULL").count() > 0
 
 
 def test_run_pipeline_releases_its_caches(spark, tmp_path):
-    """The short-page waves, fetched pages and mask-joined maps that
-    download persists are all released by the end of the run."""
+    """The short-page waves and fetched maps pages that download
+    persists are all released by the end of the run."""
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = persistent().size()
     run_pipeline(spark, _e2e_config(spark, SF_DIR), str(tmp_path / "pipe"))
@@ -268,10 +292,12 @@ def _membership_fetcher(pairs, log_dir):
     return _logging_fetcher(serve, log_dir)
 
 
-def test_download_attaches_map_layer_membership(spark, tmp_path):
+def test_download_attaches_map_layer_membership(spark, tmp_path, monkeypatch):
     """With ``map_layers_source`` set, ``maps.layerIds`` is each map's
-    sorted distinct layer ids (null for a map with no membership), and
-    each membership page is requested once across the scan's waves."""
+    sorted distinct layer ids (null for a map with no membership), each
+    membership page is requested once across the scan's waves, and the
+    membership join stays a broadcast, so the maps side never shuffles."""
+    plans = _recorded_write_plans(monkeypatch)
     log_dir = tmp_path / "requests"
     log_dir.mkdir()
     base = _e2e_config(spark, SF_DIR)
@@ -296,6 +322,8 @@ def test_download_attaches_map_layer_membership(spark, tmp_path):
         ),
     )
     out = download(spark, cfg, PipelineDirs(current=str(tmp_path / "dl")))
+    assert "BroadcastHashJoin" in plans["maps"], plans["maps"]
+    assert "SortMergeJoin" not in plans["maps"], plans["maps"]
 
     got = {r.id: r.layerIds for r in out["maps"].select("id", "layerIds").collect()}
     expected = {k: None for k in keys}
