@@ -6,7 +6,7 @@ geometry functions (geodesic area, coordinate bounds, kinks) live in
 `geo.py`, also as pure column expressions.
 """
 
-from .scalar import bbox_to_array, coalesce_year, round_decimals
+from .scalar import round_decimals
 from .text import (
     doc_fingerprint,
     punct_ratio,
@@ -18,8 +18,6 @@ from .text import (
 from .vectors import cosine_similarity, dot, l2_norm, to_double_array
 
 __all__ = [
-    "bbox_to_array",
-    "coalesce_year",
     "round_decimals",
     "doc_fingerprint",
     "punct_ratio",

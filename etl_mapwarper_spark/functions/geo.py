@@ -13,12 +13,16 @@
 - ``self_intersection_count``: segment-crossing count (the
   reference's ``turf.kinks``, mapwarper.js:250-257). O(n²) per ring,
   also a pure column expression (nested higher-order aggregates over
-  segment pairs, parsed from one SQL string), so the whole validation
-  step stays on the JVM.
+  segment pairs), so the whole validation step stays on the JVM.
   Counts strict proper crossings of non-adjacent segments; the
   reference counts each detected intersection feature, which can
   differ on degenerate (collinear/touching) rings — rule firing
   (count > 0) is equivalent for simple crossing cases.
+
+Each is parsed from one SQL string and takes the name (or nested field
+path, e.g. ``"maskGeometry.coordinates"``) of the coordinates column:
+built from Column calls, these expressions cost tens of milliseconds
+of driver-side py4j construction per use.
 
 Geometry column type: STRUCT<type: STRING,
 coordinates: ARRAY<ARRAY<ARRAY<DOUBLE>>>> (GeoJSON Polygon).
@@ -32,66 +36,61 @@ from pyspark.sql import functions as F
 EARTH_RADIUS_M = 6378137.0
 
 
-def _ring_area(ring: Column) -> Column:
-    """Signed spherical area of one ring (array<array<double>>).
+def _ring_area_sql(ring: str) -> str:
+    """Signed spherical area of one ring (array<array<double>>), as SQL
+    over the expression ``ring``.
 
     Mirrors geojson-area's ringArea: for each i, with modular indices
     lower=i, middle=i+1, upper=i+2,
     term = (rad(lon_upper) - rad(lon_lower)) * sin(rad(lat_middle));
     area = Σ term * R² / 2. Rings with ≤ 2 points have area 0.
     """
-    n = F.size(ring)
 
-    def lon(j: Column) -> Column:
-        return F.element_at(F.element_at(ring, (j % n + 1).cast("int")), 1)
+    def point(j: str) -> str:
+        return f"element_at({ring}, CAST(({j}) % size({ring}) + 1 AS INT))"
 
-    def lat(j: Column) -> Column:
-        return F.element_at(F.element_at(ring, (j % n + 1).cast("int")), 2)
-
-    term = lambda i: (  # noqa: E731
-        (F.radians(lon(i + 2)) - F.radians(lon(i)))
-        * F.sin(F.radians(lat(i + 1)))
+    term = (
+        f"(radians(element_at({point('i + 2')}, 1))"
+        f" - radians(element_at({point('i')}, 1)))"
+        f" * sin(radians(element_at({point('i + 1')}, 2)))"
     )
-    total = F.aggregate(
-        F.sequence(F.lit(0), n - 1),
-        F.lit(0.0),
-        lambda acc, i: acc + term(i),
-    )
-    return F.when(n > 2, total * EARTH_RADIUS_M * EARTH_RADIUS_M / 2.0).otherwise(
-        F.lit(0.0)
+    return (
+        f"CASE WHEN size({ring}) > 2 THEN"
+        f" aggregate(sequence(0, size({ring}) - 1), 0D, (acc, i) -> acc + {term})"
+        f" * {EARTH_RADIUS_M!r}D * {EARTH_RADIUS_M!r}D / 2D ELSE 0D END"
     )
 
 
-def geodesic_area(coordinates: Column) -> Column:
-    """Polygon area in m²: |outer ring| − Σ |holes| (geojson-area
-    polygonArea semantics). ``coordinates``: array<array<array<double>>>.
-
-    Structured as ONE aggregate over ring indices (sign flips for
-    holes) rather than slice()+aggregate over a ring subarray — the
-    latter shape trips a Spark whole-stage-codegen bug ("expression
-    is not an rvalue") when nested inside further expressions.
-    """
-    return F.aggregate(
-        F.sequence(F.lit(1), F.size(coordinates)),
-        F.lit(0.0),
-        lambda acc, ri: acc
-        + F.when(
-            ri == 1, F.abs(_ring_area(F.element_at(coordinates, ri.cast("int"))))
-        ).otherwise(
-            -F.abs(_ring_area(F.element_at(coordinates, ri.cast("int"))))
-        ),
-    )
+# |outer ring| − Σ |holes| (geojson-area polygonArea semantics), as ONE
+# aggregate over ring indices (sign flips for holes) rather than
+# slice()+aggregate over a ring subarray — the latter shape trips a
+# Spark whole-stage-codegen bug ("expression is not an rvalue") when
+# nested inside further expressions.
+_RING = "element_at({coords}, CAST(ri AS INT))"
+_AREA_SQL = (
+    "aggregate(sequence(1, size({coords})), 0D, (acc_r, ri) -> acc_r +"
+    f" CASE WHEN ri = 1 THEN abs({_ring_area_sql(_RING)})"
+    f" ELSE -abs({_ring_area_sql(_RING)}) END)"
+)
 
 
-def coords_all_valid(coordinates: Column) -> Column:
-    """True iff every [lon, lat] satisfies lon∈[-180,180], lat∈[-90,90]."""
-    return F.forall(
-        F.flatten(coordinates),
-        lambda c: (F.element_at(c, 1) >= -180)
-        & (F.element_at(c, 1) <= 180)
-        & (F.element_at(c, 2) >= -90)
-        & (F.element_at(c, 2) <= 90),
-    )
+def geodesic_area(coordinates: str) -> Column:
+    """Polygon area in m²: |outer ring| − Σ |holes| of the
+    ``coordinates`` column."""
+    return F.expr(_AREA_SQL.format(coords=coordinates))
+
+
+_VALID_SQL = (
+    "forall(flatten({coords}), c -> element_at(c, 1) >= -180"
+    " AND element_at(c, 1) <= 180 AND element_at(c, 2) >= -90"
+    " AND element_at(c, 2) <= 90)"
+)
+
+
+def coords_all_valid(coordinates: str) -> Column:
+    """True iff every [lon, lat] of the ``coordinates`` column satisfies
+    lon∈[-180,180], lat∈[-90,90]."""
+    return F.expr(_VALID_SQL.format(coords=coordinates))
 
 
 def _ccw(p: str, q: str, r: str) -> str:

@@ -10,27 +10,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def coalesce_year(depicts_year: Column, issue_year: Column) -> Column:
-    """``depicts_year || issue_year`` parsed to int.
-
-    Reference: mapwarper.js:323-329 (getYear) — used for both
-    validSince and validUntil (point-in-time validity).
-    """
-    return F.coalesce(depicts_year, issue_year).cast("int")
-
-
-def bbox_to_array(bbox: Column) -> Column:
-    """``"w,s,e,n"`` comma string → array<double>.
-
-    Reference: mapwarper.js:411 (`bbox.split(',').map(parseFloat)`).
-    Null input stays null (the reference leaves bbox undefined).
-    """
-    return F.when(
-        bbox.isNotNull(),
-        F.transform(F.split(bbox, ","), lambda x: x.cast("double")),
-    )
-
-
 def round_decimals(value: Column, decimals: int) -> Column:
     """Round to fixed decimals; reference mapwarper.js:348-351."""
     return F.round(value, decimals)

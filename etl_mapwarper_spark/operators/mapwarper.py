@@ -14,9 +14,19 @@ Capabilities re-expressed (citations into /root/reference/mapwarper.js):
 
 Dataflow shape: all transforms are narrow column expressions, the
 kinks count and geodesic area included, so nothing crosses to Python —
-on a cluster this pipeline is a single scan stage per input with zero
-shuffles, exactly the reference's per-record pipe but
-partition-parallel.
+on a cluster each sink is a single stage with zero shuffles, exactly
+the reference's per-record pipe but partition-parallel. The rules and
+projections are SQL text, each parsed in one call: built from Column
+calls, they took ~0.4 s of driver-side py4j construction per
+``pipeline.transform``, before its first write could start.
+
+Validate once: ``map_objects``, ``map_logs`` and ``map_relations`` are
+each ``with_validation`` followed by a private sink function
+(``_objects``, ``_logs``, ``_relations``) of the validated frame.
+``pipeline.transform`` validates once, persists the result and calls
+the three private functions on it, as the reference runs ``getLogs``
+once per map and routes it to the object or the log stream
+(:353-361).
 
 Deviation from the reference, documented: node ids are STRING in all
 outputs (the reference mixes number ids for maps with ``layer-N``
@@ -26,8 +36,8 @@ Item contract: ``MAP_ITEM_SCHEMA`` / ``LAYER_ITEM_SCHEMA`` are the
 API item fields the reference reads; the pipeline parses REST pages
 with them, and nothing else restates them. The reference's one mask
 gate (``mask_status ∈ {masked, masking}``, :81 and :382) is
-``_masked``; the mask fetch, the GCP enrichment and the ``masked``
-flag all use it.
+``_MASKED`` (``_masked()`` is its Column); the mask fetch, the GCP
+enrichment and the ``masked`` flag all use it.
 
 Synthetic fixtures: ``map_records`` / ``layer_records`` derive
 deterministic items of those shapes from the driver's ``part`` and
@@ -46,7 +56,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.geo import coords_all_valid, geodesic_area, self_intersection_count
-from ..functions.scalar import bbox_to_array, coalesce_year
 from ..sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -109,11 +118,14 @@ MAP_LAYER_ITEM_SCHEMA = T.StructType(
 )
 
 
+_MASKED = "mask_status IN ('masked', 'masking')"
+
+
 def _masked() -> Column:
     """The mask gate (:81, :382): the map's ``mask_status`` is
     ``masked`` or ``masking``. A function, not a module-level Column:
     building a Column needs a live SparkContext."""
-    return F.col("mask_status").isin("masked", "masking")
+    return F.expr(_MASKED)
 
 
 # ---------------------------------------------------------------------------
@@ -300,23 +312,26 @@ def layer_records(spark: SparkSession, sf_dir: str) -> list[dict]:
 # ---------------------------------------------------------------------------
 
 
+# getYear (:323-329): depicts_year || issue_year, parsed to int; used
+# for both validSince and validUntil (point-in-time validity).
+_YEAR = "CAST(coalesce(depicts_year, issue_year) AS INT)"
+
+
 def transform_layers(layers: DataFrame) -> DataFrame:
-    year = coalesce_year(F.col("depicts_year"), F.col("issue_year"))
-    return layers.select(
-        F.concat(F.lit("layer-"), F.col("id").cast("string")).alias("id"),
-        F.lit("st:Map").alias("type"),
-        F.col("name"),
-        year.alias("validSince"),
-        year.alias("validUntil"),
-        F.struct(
-            F.col("maps_count").alias("mapCount"),
-            F.concat(
-                F.lit("http://maps.nypl.org/warper/layers/tile/"),
-                F.col("id").cast("string"),
-                F.lit("/{z}/{x}/{y}.png"),
-            ).alias("tileUrl"),
-            bbox_to_array(F.col("bbox")).alias("bbox"),
-        ).alias("data"),
+    return layers.selectExpr(
+        "concat('layer-', CAST(id AS STRING)) AS id",
+        "'st:Map' AS type",
+        "name",
+        f"{_YEAR} AS validSince",
+        f"{_YEAR} AS validUntil",
+        "named_struct("
+        "'mapCount', maps_count, "
+        "'tileUrl', concat('http://maps.nypl.org/warper/layers/tile/',"
+        " CAST(id AS STRING), '/{z}/{x}/{y}.png'), "
+        # bbox.split(',').map(parseFloat) (:411); a null bbox stays null
+        "'bbox', CASE WHEN bbox IS NOT NULL"
+        " THEN transform(split(bbox, ','), x -> CAST(x AS DOUBLE)) END"
+        ") AS data",
     )
 
 
@@ -327,13 +342,69 @@ def transform_layers(layers: DataFrame) -> DataFrame:
 _LOG_STRUCT = "struct<type:string,message:string>"
 
 
-def _log(cond: Column, log_type: str, message: Column) -> Column:
-    return F.when(
-        cond,
-        F.struct(
-            F.lit(log_type).alias("type"), message.alias("message")
-        ),
-    ).cast(_LOG_STRUCT)
+def _log(cond: str, log_type: str, message: str) -> str:
+    """SQL for one rule's log record: {type, message} where ``cond``
+    holds, else null."""
+    return (
+        f"CAST(CASE WHEN {cond} THEN named_struct('type', '{log_type}',"
+        f" 'message', {message}) END AS {_LOG_STRUCT})"
+    )
+
+
+_RING0_N = "size(element_at(maskGeometry.coordinates, 1))"
+_N_RINGS = "size(maskGeometry.coordinates)"
+# The rules in the reference's order (:221-321), so log arrays compare
+# byte for byte. ``_kinks`` and ``_valid`` are columns that
+# ``with_validation`` adds before them.
+_BASE_LOGS = "array_compact(array({}))".format(
+    ", ".join(
+        [
+            _log("uuid IS NULL OR uuid = ''", "missing_uuid", "'Map has no UUID'"),
+            _log(
+                f"maskGeometry IS NOT NULL AND {_RING0_N} < 4",
+                "mask_coordinates_count",
+                f"concat('Mask has ', CAST({_RING0_N} AS STRING),"
+                " ' coordinates (should have at least 4)')",
+            ),
+            _log(
+                "maskGeometry IS NOT NULL AND _kinks > 0",
+                "self_intersection",
+                "concat('Mask has ', CAST(_kinks AS STRING), ' self-intersections')",
+            ),
+            _log(
+                "maskGeometry IS NOT NULL AND NOT _valid",
+                "invalid_coordinates",
+                "'Mask has invalid coordinates'",
+            ),
+            _log(
+                f"maskGeometry IS NOT NULL AND {_N_RINGS} != 1",
+                "multipolygon",
+                f"concat('Mask is a MultiPolygon with ', CAST({_N_RINGS} AS STRING),"
+                " ' polygons')",
+            ),
+            _log("maskError IS NOT NULL", "mask_to_geojson", "maskError"),
+            _log(
+                "status = 'warped' AND mask_status = 'unmasked'",
+                "warped_but_unmasked",
+                "'Map is warped, but not masked'",
+            ),
+            _log(
+                "status != 'warped' AND status != 'published'"
+                " AND mask_status != 'unmasked'",
+                "unwarped_but_masked",
+                "'Map is masked, but not warped'",
+            ),
+        ]
+    )
+)
+# The ninth rule, mask_missing, fires only when no other did.
+_LOGS = (
+    f"CASE WHEN size({_BASE_LOGS}) = 0"
+    " AND (maskGeometry IS NULL OR maskGeometry.coordinates IS NULL)"
+    " THEN array(named_struct('type', 'mask_missing', 'message', 'Map is unmasked'))"
+    f" ELSE {_BASE_LOGS} END"
+)
+_GUARD = "bbox IS NOT NULL AND map_type = 'is_map'"
 
 
 def with_validation(maps: DataFrame) -> DataFrame:
@@ -342,139 +413,77 @@ def with_validation(maps: DataFrame) -> DataFrame:
     Rule order matches the reference exactly (:221-321) so log arrays
     compare byte-for-byte.
     """
-    geom = F.col("maskGeometry")
-    coords = geom["coordinates"]
-    ring0_n = F.size(F.element_at(coords, 1))
-    kinks = F.when(
-        geom.isNotNull(), self_intersection_count("maskGeometry.coordinates")
-    ).otherwise(F.lit(0))
-    df = maps.withColumn("_kinks", kinks)
-    rules = F.array(
-        _log(
-            F.col("uuid").isNull() | (F.col("uuid") == ""),
-            "missing_uuid",
-            F.lit("Map has no UUID"),
-        ),
-        _log(
-            geom.isNotNull() & (ring0_n < 4),
-            "mask_coordinates_count",
-            F.concat(
-                F.lit("Mask has "),
-                ring0_n.cast("string"),
-                F.lit(" coordinates (should have at least 4)"),
-            ),
-        ),
-        _log(
-            geom.isNotNull() & (F.col("_kinks") > 0),
-            "self_intersection",
-            F.concat(
-                F.lit("Mask has "),
-                F.col("_kinks").cast("string"),
-                F.lit(" self-intersections"),
-            ),
-        ),
-        _log(
-            geom.isNotNull() & ~coords_all_valid(coords),
-            "invalid_coordinates",
-            F.lit("Mask has invalid coordinates"),
-        ),
-        _log(
-            geom.isNotNull() & (F.size(coords) != 1),
-            "multipolygon",
-            F.concat(
-                F.lit("Mask is a MultiPolygon with "),
-                F.size(coords).cast("string"),
-                F.lit(" polygons"),
-            ),
-        ),
-        _log(F.col("maskError").isNotNull(), "mask_to_geojson", F.col("maskError")),
-        _log(
-            (F.col("status") == "warped") & (F.col("mask_status") == "unmasked"),
-            "warped_but_unmasked",
-            F.lit("Map is warped, but not masked"),
-        ),
-        _log(
-            (F.col("status") != "warped")
-            & (F.col("status") != "published")
-            & (F.col("mask_status") != "unmasked"),
-            "unwarped_but_masked",
-            F.lit("Map is masked, but not warped"),
-        ),
-    )
-    base_logs = F.array_compact(rules)
-    mask_missing = F.struct(
-        F.lit("mask_missing").alias("type"), F.lit("Map is unmasked").alias("message")
-    )
-    logs = F.when(
-        (F.size(base_logs) == 0) & (geom.isNull() | coords.isNull()),
-        F.array(mask_missing),
-    ).otherwise(base_logs)
+    geom = {
+        "_kinks": F.when(
+            F.col("maskGeometry").isNotNull(),
+            self_intersection_count("maskGeometry.coordinates"),
+        ).otherwise(F.lit(0)),
+        "_valid": coords_all_valid("maskGeometry.coordinates"),
+    }
     return (
-        df.withColumn("logs", logs)
-        .withColumn(
-            "passes_guard",
-            F.col("bbox").isNotNull() & (F.col("map_type") == "is_map"),
-        )
-        .drop("_kinks")
+        maps.withColumns(geom)
+        .withColumns({"logs": F.expr(_LOGS), "passes_guard": F.expr(_GUARD)})
+        .drop(*geom)
     )
 
 
 def map_logs(maps: DataFrame) -> DataFrame:
     """Quarantine records: {id, imageId, logs[]} (reference :222-226)."""
-    v = with_validation(maps)
-    return v.filter(F.col("passes_guard") & (F.size("logs") > 0)).select(
-        F.col("id"),
-        F.col("nypl_digital_id").alias("imageId"),
-        F.col("logs"),
-    )
+    return _logs(with_validation(maps))
 
 
 def map_objects(maps: DataFrame) -> DataFrame:
     """Space/Time objects for maps that pass guard + validation."""
-    v = with_validation(maps)
-    clean = v.filter(F.col("passes_guard") & (F.size("logs") == 0))
-    year = coalesce_year(F.col("depicts_year"), F.col("issue_year"))
-    area_m2 = F.round(geodesic_area(F.col("maskGeometry")["coordinates"]), 0)
-    return clean.select(
-        F.col("id").cast("string").alias("id"),
-        F.lit("st:Map").alias("type"),
-        F.col("title").alias("name"),
-        year.alias("validSince"),
-        year.alias("validUntil"),
-        F.struct(
-            F.col("description"),
-            F.col("nypl_digital_id").alias("imageId"),
-            F.col("uuid"),
-            F.col("parent_uuid").alias("parentUuid"),
-            F.coalesce(F.col("uuid").startswith("inset"), F.lit(False)).alias("inset"),
-            _masked().alias("masked"),
-            F.concat(
-                F.lit("http://digitalcollections.nypl.org/items/"), F.col("uuid")
-            ).alias("nyplUrl"),
-            F.concat(
-                F.lit("http://maps.nypl.org/warper/maps/tile/"),
-                F.col("id").cast("string"),
-                F.lit("/{z}/{x}/{y}.png"),
-            ).alias("tileUrl"),
-            F.round(area_m2 * 0.000001, 5).alias("area"),
-            F.col("gcps"),
-        ).alias("data"),
-        F.col("maskGeometry").alias("geometry"),
-    )
+    return _objects(with_validation(maps))
 
 
 def map_relations(maps: DataFrame) -> DataFrame:
     """st:in edges from passing maps to their layers (:333-346)."""
-    v = with_validation(maps)
-    clean = v.filter(
-        F.col("passes_guard")
-        & (F.size("logs") == 0)
-        & F.col("layerIds").isNotNull()
+    return _relations(with_validation(maps))
+
+
+# The sinks of one validated frame ``v``, ``with_validation``'s output.
+
+
+def _logs(v: DataFrame) -> DataFrame:
+    return v.filter("passes_guard AND size(logs) > 0").selectExpr(
+        "id", "nypl_digital_id AS imageId", "logs"
     )
-    return clean.select(
-        F.col("id"), F.explode(F.col("layerIds")).alias("layer_id")
-    ).select(
-        F.lit("st:in").alias("rel_type"),
-        F.col("id").cast("string").alias("src"),
-        F.concat(F.lit("layer-"), F.col("layer_id").cast("string")).alias("dst"),
+
+
+def _objects(v: DataFrame) -> DataFrame:
+    clean = v.filter("passes_guard AND size(logs) = 0").withColumn(
+        "_area_m2", F.round(geodesic_area("maskGeometry.coordinates"), 0)
+    )
+    return clean.selectExpr(
+        "CAST(id AS STRING) AS id",
+        "'st:Map' AS type",
+        "title AS name",
+        f"{_YEAR} AS validSince",
+        f"{_YEAR} AS validUntil",
+        "named_struct("
+        "'description', description, "
+        "'imageId', nypl_digital_id, "
+        "'uuid', uuid, "
+        "'parentUuid', parent_uuid, "
+        "'inset', coalesce(startswith(uuid, 'inset'), false), "
+        f"'masked', {_MASKED}, "
+        "'nyplUrl', concat('http://digitalcollections.nypl.org/items/', uuid), "
+        "'tileUrl', concat('http://maps.nypl.org/warper/maps/tile/',"
+        " CAST(id AS STRING), '/{z}/{x}/{y}.png'), "
+        # m² rounded to the metre, then km² to 5 decimals (:363-364)
+        "'area', round(_area_m2 * 0.000001D, 5), "
+        "'gcps', gcps"
+        ") AS data",
+        "maskGeometry AS geometry",
+    )
+
+
+def _relations(v: DataFrame) -> DataFrame:
+    return v.filter(
+        "passes_guard AND size(logs) = 0 AND layerIds IS NOT NULL"
+    ).selectExpr("id", "explode(layerIds) AS layer_id").selectExpr(
+        "'st:in' AS rel_type",
+        "CAST(id AS STRING) AS src",
+        "concat('layer-', CAST(layer_id AS STRING)) AS dst",
     )

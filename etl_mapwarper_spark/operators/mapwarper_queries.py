@@ -349,7 +349,7 @@ def mw_geodesic_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     maps = synthetic_maps(spark, sf_dir)
     geom = F.col("maskGeometry")
     return maps.filter(geom.isNotNull()).select(
-        "id", F.round(geodesic_area(geom["coordinates"]), 0).alias("area_m2")
+        "id", F.round(geodesic_area("maskGeometry.coordinates"), 0).alias("area_m2")
     )
 
 

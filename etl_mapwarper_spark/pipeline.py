@@ -47,12 +47,15 @@ different endpoints overlap.
 Step 2 — ``transform`` (reference :417-437): route records by type
 (:418-421), validation split into clean objects vs quarantine logs
 (:358-361), relation edge derivation (:333-346), layer projection
-(:399-415); writes ``objects``, ``relations``, ``logs`` sinks. The
-independent sinks are written concurrently, like the reference's
-three (:417-437); the unified ``objects`` sink is built from the
-written ``map_objects`` and ``layer_objects`` checkpoints after they
-land, and validation is a pure column expression, so the step has no
-Python boundary.
+(:399-415); writes ``objects``, ``relations``, ``logs`` sinks. It
+reads ``maps`` and ``layers`` with their declared item schemas, so no
+schema-inference job runs, and it validates each map once, as the
+reference runs ``getLogs`` once per map (:353-361): the validated maps
+are persisted and feed the map objects, the relations and the logs.
+All five sinks, the unified ``objects`` one included, are written in
+one concurrent round, like the reference's three streams (:417-437).
+Validation is a pure column expression, so the step has no Python
+boundary.
 
 Concurrent branches run on threads that inherit the caller's job
 group, description and tags, so their jobs are counted and cancelled
@@ -60,9 +63,10 @@ with the caller's. When a branch fails, its error is re-raised after
 the branches still in flight have ended.
 
 Scale: every transform is a narrow column expression over the
-parquet checkpoint — one scan stage per input, no shuffle (only the
-optional membership join shuffles, and its aggregated side is
-broadcast). Each REST scan, wave and mask fetch is one Spark task
+parquet checkpoint, with no shuffle (only the optional membership join
+shuffles, and its aggregated side is broadcast): each sink is one
+stage, which scans ``layers`` or the cached validated maps. Each REST
+scan, wave and mask fetch is one Spark task
 whose ``max_concurrency`` threads share the source's token bucket:
 its parallelism is the politeness budget, not the cluster size, and
 it pays the per-Python-task start-up cost once per fetch (see
@@ -71,24 +75,29 @@ sources/paginated_rest.py).
 
 from __future__ import annotations
 
+import functools
+import glob
 import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any, Callable, Optional
 
+import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .operators.enrichment import attach_map_layers, enrich_masks, fetch_masks
 from .operators.mapwarper import (
     LAYER_ITEM_SCHEMA,
     MAP_ITEM_SCHEMA,
     MAP_LAYER_ITEM_SCHEMA,
-    map_logs,
-    map_objects,
-    map_relations,
+    _logs,
+    _objects,
+    _relations,
     transform_layers,
+    with_validation,
 )
 from .sources.ndjson import to_ndjson_lines
 from .sources.paginated_rest import (
@@ -161,6 +170,24 @@ def _concurrently(spark: SparkSession, *thunks: Callable[[], Any]) -> list:
     return [f.result() for f in futures]
 
 
+def _read_checkpoint(
+    spark: SparkSession, step_dir: str, name: str, schema: StructType
+) -> DataFrame:
+    """Read checkpoint ``name`` of ``step_dir`` with its declared
+    ``schema``, so the read starts no schema-inference job. Such a read
+    would fill a missing column with nulls, so the names are checked
+    first against one part file's footer, on the driver."""
+    path = os.path.join(step_dir, name)
+    parts = sorted(glob.glob(os.path.join(path, "part-*")))
+    if not parts:
+        raise FileNotFoundError(f"checkpoint {path} has no part files")
+    footer = set(pq.read_schema(parts[0]).names)
+    missing = [c for c in schema.names if c not in footer]
+    if missing:
+        raise ValueError(f"checkpoint {path} lacks the columns {missing}")
+    return spark.read.schema(schema).parquet(path)
+
+
 def _write(df: DataFrame, dirs: PipelineDirs, name: str) -> DataFrame:
     """Write ``df`` as parquet and return the read-back checkpoint. The
     schema is passed so the read-back starts no schema-inference job."""
@@ -216,6 +243,10 @@ def download(
         map_pages = scan_pages(spark, config.maps_source, num_pages).persist()
         cached.append(map_pages)
         maps = page_items(map_pages, MAP_ITEM_SCHEMA).drop("page")
+        if config.map_layers_source is not None:
+            # Replaced by the membership join, so it need not cross the
+            # mask fetch's Arrow boundary.
+            maps = maps.drop("layerIds")
         map_errors = _write(page_errors(map_pages), dirs, "map_errors")
 
         if config.mask_source is not None:
@@ -257,7 +288,7 @@ def download(
         )
         out["map_errors"] = map_errors
         if membership is not None:
-            maps = attach_map_layers(maps.drop("layerIds"), membership)
+            maps = attach_map_layers(maps, membership)
         out["maps"] = _write(maps, dirs, "maps")
         return out
     finally:
@@ -273,49 +304,68 @@ def transform(
     """Step 2 (reference :417-437): previous checkpoint → objects +
     relations + logs sinks. The reference routes one mixed NDJSON
     stream by ``line.type`` (:418-421, :429); the Spark-first shape
-    keeps one DataFrame per variant and unions the object outputs."""
-    assert dirs.previous is not None, "transform needs dirs.previous"
-    maps = spark.read.parquet(os.path.join(dirs.previous, "maps"))
-    layers = spark.read.parquet(os.path.join(dirs.previous, "layers"))
+    keeps one DataFrame per variant and unions the object outputs.
 
-    # The four sinks are independent and written concurrently; the
-    # unified ``objects`` sink reads two of them back once they land.
-    mo, lo, relations, logs = _concurrently(
-        spark,
-        lambda: _write(map_objects(maps), dirs, "map_objects"),
-        lambda: _write(transform_layers(layers), dirs, "layer_objects"),
-        lambda: _write(map_relations(maps), dirs, "relations"),
-        lambda: _write(map_logs(maps), dirs, "logs"),
-    )
+    ``maps`` and ``layers`` are read with their declared item schemas,
+    so no schema-inference job runs. The maps are validated once, as
+    the reference runs ``getLogs`` once per map (:353-361), and the
+    validated frame is persisted: ``map_objects``, ``relations`` and
+    ``logs`` all read it, and the unified ``objects`` sink is built
+    from the same map and layer object frames. All five sinks are
+    written in one concurrent round; the cache is released once they
+    are written, or once one fails."""
+    assert dirs.previous is not None, "transform needs dirs.previous"
+    maps = _read_checkpoint(spark, dirs.previous, "maps", MAP_ITEM_SCHEMA)
+    layers = _read_checkpoint(spark, dirs.previous, "layers", LAYER_ITEM_SCHEMA)
+
     # Map and layer objects have different nested `data` shapes (the
     # reference's oneOf output schema, mapwarper.dataset.json:41-153);
     # they stay one-DataFrame-per-variant, and the unified tagged
     # stream serializes the variant payload to JSON at the boundary.
     def _boundary(df: DataFrame) -> DataFrame:
-        cols = [
+        geometry_json = (
+            "to_json(geometry)"
+            if "geometry" in df.columns
+            else "CAST(NULL AS STRING)"
+        )
+        return df.selectExpr(
             "id",
-            "type",
+            # ``type`` is a literal, so Catalyst marks it not null. The
+            # sink keeps it nullable, like every other column of a
+            # checkpoint read-back: ``data`` is a non-null struct, so
+            # the guard always holds, and a to_json result cannot be
+            # proven non-null, so it is not folded away.
+            "CASE WHEN to_json(data) IS NOT NULL THEN type END AS type",
             "name",
             "validSince",
             "validUntil",
-            F.to_json(F.col("data")).alias("data_json"),
-        ]
-        cols.append(
-            F.to_json(F.col("geometry")).alias("geometry_json")
-            if "geometry" in df.columns
-            else F.lit(None).cast("string").alias("geometry_json")
+            "to_json(data) AS data_json",
+            f"{geometry_json} AS geometry_json",
         )
-        return df.select(*cols)
 
-    return {
-        "map_objects": mo,
-        "layer_objects": lo,
-        "objects": _write(
-            _boundary(mo).unionByName(_boundary(lo)), dirs, "objects"
-        ),
-        "relations": relations,
-        "logs": logs,
-    }
+    # Validated once; the first write to read the cache fills it, and
+    # the other map sinks wait on its block and read it.
+    v = with_validation(maps).persist()
+    try:
+        mo, lo = _objects(v), transform_layers(layers)
+        sinks = {
+            "map_objects": mo,
+            "layer_objects": lo,
+            "objects": _boundary(mo).unionByName(_boundary(lo)),
+            "relations": _relations(v),
+            "logs": _logs(v),
+        }
+        written = _concurrently(
+            spark,
+            *(
+                functools.partial(_write, df, dirs, name)
+                for name, df in sinks.items()
+            ),
+        )
+        return dict(zip(sinks, written))
+    finally:
+        # Every output is a read-back of its checkpoint.
+        v.unpersist()
 
 
 # The reference's public API (mapwarper.js:441-444).
@@ -354,7 +404,6 @@ def export_ndjson_file(df: DataFrame, path: str) -> None:
     format is stable for a given schema. Use for boundary handoffs
     only; 100 TB intermediates stay parquet (see sources/ndjson.py).
     """
-    import glob
     import shutil
 
     tmp = path + ".parts.tmp"

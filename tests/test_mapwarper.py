@@ -62,7 +62,7 @@ def test_geodesic_area_matches_independent_impl(spark):
     got = {
         r["id"]: r["a"]
         for r in maps.select(
-            "id", geodesic_area(F.col("maskGeometry.coordinates")).alias("a")
+            "id", geodesic_area("maskGeometry.coordinates").alias("a")
         ).collect()
     }
     rows = maps.select("id", "maskGeometry.coordinates").collect()

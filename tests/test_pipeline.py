@@ -10,6 +10,7 @@ from __future__ import annotations
 import dataclasses
 import json
 import os
+import re
 import warnings
 from collections import Counter
 from urllib.parse import parse_qs, urlparse
@@ -274,6 +275,90 @@ def test_run_pipeline_jobs_stay_in_the_callers_job_group(spark, tmp_path):
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
+def _fixture_checkpoint(spark, tmp_path, drop=()) -> PipelineDirs:
+    """A download-shaped previous step built from the parquet fixtures,
+    less the ``drop`` columns of ``maps``."""
+    prev = tmp_path / "prev"
+    synthetic_maps(spark, SF_DIR).drop(*drop).write.parquet(str(prev / "maps"))
+    synthetic_layers(spark, SF_DIR).write.parquet(str(prev / "layers"))
+    return PipelineDirs(current=str(tmp_path / "tf"), previous=str(prev))
+
+
+def test_transform_writes_every_sink_in_one_round(spark, tmp_path):
+    """``transform`` runs one job per sink and nothing else: both inputs
+    are read with their declared schemas (no schema-inference jobs), and
+    ``objects`` does not wait for other sinks to land."""
+    dirs, cfg = _fixture_checkpoint(spark, tmp_path), _config(spark, SF_DIR)
+    sc = spark.sparkContext
+    sc.setJobGroup("transform-one-round", "transform")
+    try:
+        out = pipeline.transform(spark, cfg, dirs)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sorted(out) == sorted(
+        ["map_objects", "layer_objects", "objects", "relations", "logs"]
+    )
+    assert len(sc.statusTracker().getJobIdsForGroup("transform-one-round")) == 5
+
+
+def test_transform_validates_once(spark, tmp_path, monkeypatch):
+    """The validation (its kinks aggregate marks it) is computed only in
+    the cached relation that every map sink scans, ``objects`` included,
+    and ``objects`` scans no sink checkpoint."""
+    # the kinks count's outer aggregate, over the rings with an int zero
+    kinks = re.compile(r"aggregate\(maskGeometry#\d+\.coordinates, 0,")
+    plans = _recorded_write_plans(monkeypatch)
+    dirs = _fixture_checkpoint(spark, tmp_path)
+    pipeline.transform(spark, _config(spark, SF_DIR), dirs)
+    assert len(plans) == 5
+    for name, plan in plans.items():
+        assert not kinks.search(_own_nodes(plan)), (name, plan)
+    for name in ("map_objects", "relations", "logs", "objects"):
+        assert "InMemoryTableScan" in plans[name], (name, plans[name])
+        assert kinks.search(plans[name]), (name, plans[name])
+    assert dirs.current not in plans["objects"], plans["objects"]
+
+
+def test_failed_transform_releases_its_cache(spark, tmp_path, monkeypatch):
+    """A transform whose ``logs`` write fails re-raises that error once
+    the other writes end, and releases the validated maps it cached."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    dirs = _fixture_checkpoint(spark, tmp_path)
+    before = persistent().size()
+    during = []
+    write = pipeline._write
+
+    def failing_write(df, dirs, name):
+        written = write(df, dirs, name)
+        if name == "logs":
+            during.append(persistent().size())
+            raise RuntimeError("logs write failed")
+        return written
+
+    monkeypatch.setattr(pipeline, "_write", failing_write)
+    with pytest.raises(RuntimeError, match="logs write failed"):
+        pipeline.transform(spark, _config(spark, SF_DIR), dirs)
+    assert during == [before + 1]
+    assert persistent().size() == before
+
+
+def test_transform_rejects_a_checkpoint_missing_a_column(spark, tmp_path):
+    """A declared-schema read would fill a missing item column with
+    nulls; ``transform`` refuses such a checkpoint instead, before any
+    Spark job."""
+    dirs = _fixture_checkpoint(spark, tmp_path, drop=["uuid"])
+    cfg = _config(spark, SF_DIR)
+    sc = spark.sparkContext
+    sc.setJobGroup("transform-missing-column", "transform")
+    try:
+        with pytest.raises(ValueError, match=r"lacks the columns \['uuid'\]"):
+            pipeline.transform(spark, cfg, dirs)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup("transform-missing-column") == []
+    assert not os.path.exists(dirs.current)
+
+
 def _membership_fetcher(pairs, log_dir):
     """Short-page ``{"items": [{map_id, layer_id}, ...]}`` endpoint over
     ``pairs`` that logs every request like ``_logging_fetcher``; a
@@ -324,6 +409,11 @@ def test_download_attaches_map_layer_membership(spark, tmp_path, monkeypatch):
     out = download(spark, cfg, PipelineDirs(current=str(tmp_path / "dl")))
     assert "BroadcastHashJoin" in plans["maps"], plans["maps"]
     assert "SortMergeJoin" not in plans["maps"], plans["maps"]
+    # the join replaces the items' layerIds, so they never cross the
+    # mask fetch's Arrow boundary
+    maps = _own_nodes(plans["maps"])
+    (fetch,) = [ln for ln in maps.splitlines() if "MapInArrow" in ln]
+    assert "layerIds" not in fetch, fetch
 
     got = {r.id: r.layerIds for r in out["maps"].select("id", "layerIds").collect()}
     expected = {k: None for k in keys}

@@ -1374,6 +1374,7 @@ def test_persist_sites_are_classified():
         ("paginated_rest.py", "_scan_waves"),
         ("pipeline.py", "download"),
         ("pipeline.py", "maps_branch"),
+        ("pipeline.py", "transform"),
     }
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
