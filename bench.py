@@ -245,6 +245,21 @@ def _warm_session_jit(spark) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _oracle_min(con, sql: str, n_runs: int) -> tuple[float | None, str | None]:
+    """Min-of-``n_runs`` DuckDB wall-clock of ``sql`` as ``(min_s, None)``,
+    or ``(None, "ExcType: first line")`` when a run raises."""
+    try:
+        runs = []
+        for _ in range(n_runs):
+            t0 = time.perf_counter()
+            con.execute(sql).fetchall()
+            runs.append(time.perf_counter() - t0)
+    except Exception as e:
+        first = str(e).strip().splitlines()
+        return None, f"{type(e).__name__}: {first[0] if first else ''}"
+    return round(min(runs), 3), None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -302,6 +317,15 @@ def main() -> None:
     cold: dict[str, float] = {}
     steady: dict[str, float] = {}
     oracle: dict[str, float] = {}
+    oracle_errors: dict[str, str] = {}
+
+    def oracle_time(name: str, runs: int, out: dict[str, float]) -> None:
+        t, err = _oracle_min(con, osql[name], runs)
+        if err is None:
+            out[name] = t
+        else:
+            oracle_errors[name] = err
+
     for name in BENCH_QUERIES:
         fn = queries[name]
         runs = []
@@ -333,15 +357,7 @@ def main() -> None:
         # are unchanged.
         release_ranked_cache()
         if con is not None and name in osql:
-            try:
-                oruns = []
-                for _ in range(n_runs):
-                    t0 = time.perf_counter()
-                    con.execute(osql[name]).fetchall()
-                    oruns.append(time.perf_counter() - t0)
-                oracle[name] = round(min(oruns), 3)
-            except Exception:
-                pass
+            oracle_time(name, n_runs, oracle)
     # Same denominator discipline as core43 below: a query whose
     # oracle run failed is dropped from BOTH sides of the headline
     # ratio and reported, never left inflating the numerator.
@@ -381,15 +397,7 @@ def main() -> None:
         t2_steady[name] = round(min(runs), 3)
         release_ranked_cache()
         if con is not None and name in osql:
-            try:
-                oruns = []
-                for _ in range(t2_runs):
-                    t0 = time.perf_counter()
-                    con.execute(osql[name]).fetchall()
-                    oruns.append(time.perf_counter() - t0)
-                t2_oracle[name] = round(min(oruns), 3)
-            except Exception:
-                pass
+            oracle_time(name, t2_runs, t2_oracle)
     spark.sparkContext.setJobDescription(None)
     t2_ok = [q for q in TIER2_QUERIES if q in t2_oracle]
     t2_total_ok = round(sum(t2_steady[q] for q in t2_ok), 3)
@@ -411,6 +419,9 @@ def main() -> None:
                 "queries_cold": cold,
                 "total_cold": round(sum(cold.values()), 3),
                 "oracle_queries": oracle,
+                # Why each missing oracle time is missing; before the
+                # ratios, which must stay in the stdout tail.
+                "oracle_errors": oracle_errors,
                 "oracle_total": oracle_total,
                 "vs_oracle": round(total_ok / oracle_total, 3)
                 if oracle_total

@@ -62,15 +62,16 @@ def _ring_area_sql(ring: str) -> str:
 
 
 # |outer ring| − Σ |holes| (geojson-area polygonArea semantics), as ONE
-# aggregate over ring indices (sign flips for holes) rather than
-# slice()+aggregate over a ring subarray — the latter shape trips a
-# Spark whole-stage-codegen bug ("expression is not an rvalue") when
-# nested inside further expressions.
-_RING = "element_at({coords}, CAST(ri AS INT))"
+# aggregate over the signed ring areas (sign flips for holes) rather
+# than slice()+aggregate over a ring subarray — the latter shape trips
+# a Spark whole-stage-codegen bug ("expression is not an rvalue") when
+# nested inside further expressions. The rings are mapped directly,
+# not indexed by sequence(1, size): that counts down for an empty ring
+# list, whose element 0 then raised.
 _AREA_SQL = (
-    "aggregate(sequence(1, size({coords})), 0D, (acc_r, ri) -> acc_r +"
-    f" CASE WHEN ri = 1 THEN abs({_ring_area_sql(_RING)})"
-    f" ELSE -abs({_ring_area_sql(_RING)}) END)"
+    "aggregate(transform({coords}, (ring, ri) -> CASE WHEN ri = 0"
+    f" THEN abs({_ring_area_sql('ring')}) ELSE -abs({_ring_area_sql('ring')}) END),"
+    " 0D, (acc_r, a) -> acc_r + a)"
 )
 
 

@@ -177,6 +177,47 @@ _register(
 # ---------------------------------------------------------------------------
 
 
+def _capped_index(
+    spark: SparkSession, docs: DataFrame, df_cap: int
+) -> DataFrame:
+    """The hashed-shingle index ``(doc_id, n, h)`` of ``docs``, hash
+    partitioned on ``h``, without the keys more than ``df_cap`` rows share."""
+    # Shingles are hashed from the zipped token slices directly (r10/r11):
+    # materializing per-doc string arrays and re-hashing them doubled the
+    # scan (dd_containment_capped: corpus pass 1.45 → 0.72 s at sf0.1).
+    # n is the distinct-hash count == distinct-shingle count (tokens are
+    # space-free, so triple ↔ string is bijective; collisions are the
+    # 2⁻⁶⁴ caveat any xxhash64 key carries).
+    #
+    # The repartition at full core width lets the self-join run
+    # co-partitioned and parallel even under a narrow static shuffle
+    # config; with a shuffle_hash hint on the build side both sides reuse
+    # ONE exchange of this subtree (a broadcast would double-compute the
+    # index and is impossible at corpus scale; SMJ would add two sorts
+    # the hash join doesn't need). The stop-shingle cap is a WINDOW over
+    # the join key, which the repartition already satisfies, so it adds
+    # zero exchanges (the groupBy-count + semi-join form re-derived the
+    # index twice and shuffled it again — 1.75 s vs 0.79 s uncapped at
+    # sf0.1).
+    from pyspark.sql.window import Window
+
+    sh = (
+        docs.select(
+            "doc_id",
+            hashed_word_shingles(tokens(F.col("text")), 3).alias("hs"),
+        )
+        .select(
+            "doc_id", F.size("hs").alias("n"), F.explode("hs").alias("h")
+        )
+        .repartition(spark.sparkContext.defaultParallelism, "h")
+    )
+    return (
+        sh.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("h")))
+        .filter(F.col("df") <= df_cap)
+        .drop("df")
+    )
+
+
 def dd_ngram_jaccard(
     spark: SparkSession, sf_dir: str, df_cap: int | None = None
 ) -> DataFrame:
@@ -327,44 +368,7 @@ def dd_ngram_jaccard(
             .select("d1", "d2", "jacc")
         )
         return verified
-    # r11: hash-direct shingles (see the exact path above) — the
-    # index carries the same (doc_id, n, 8-byte h) rows, minus the
-    # string-materialize-then-rehash scan tax.
-    sh = (
-        docs.select(
-            "doc_id",
-            hashed_word_shingles(tokens(F.col("text")), 3).alias("hs"),
-        )
-        .select(
-            "doc_id", F.size("hs").alias("n"), F.explode("hs").alias("h")
-        )
-    )
-    # Pair expansion is the CPU-heavy stage; partition the index by its
-    # join key at full core width so the self-join runs co-partitioned
-    # and parallel even under a narrow static shuffle config. The
-    # shuffle_hash hint pins a shuffled hash join: both sides are the
-    # SAME repartitioned subtree, so the planner reuses one exchange
-    # (one shingle pass, not two) — a broadcast here would both
-    # double-compute the index and be impossible at corpus scale, and
-    # SMJ would add two sorts the hash join doesn't need. Build side =
-    # one hash partition of the index, bounded by partition width, not
-    # corpus size.
-    sh = sh.repartition(spark.sparkContext.defaultParallelism, "h")
-    if df_cap is not None:
-        # Stop-shingle cap as a WINDOW over the join key: the window's
-        # partitionBy(h) is satisfied by the repartition above, so the
-        # cap adds zero exchanges (the groupBy-count + semi-join form
-        # re-derived the index twice and shuffled it again — measured
-        # 1.75 s vs 0.79 s uncapped at sf0.1).
-        from pyspark.sql.window import Window as _W
-
-        sh = (
-            sh.withColumn(
-                "df", F.count(F.lit(1)).over(_W.partitionBy("h"))
-            )
-            .filter(F.col("df") <= df_cap)
-            .drop("df")
-        )
+    sh = _capped_index(spark, docs, df_cap)
     a, b = sh.alias("a"), sh.alias("b").hint("shuffle_hash")
     common = (
         a.join(
@@ -418,6 +422,42 @@ _register(
 # scale path: candidates per band are O(bucket occupancy), independent
 # of corpus size.
 # ---------------------------------------------------------------------------
+
+
+def _minhash_sql(band_key: str) -> str:
+    """DuckDB MinHash-LSH over ``_SH_CTE`` with exact Jaccard verify;
+    ``band_key`` aggregates one band's ``mh`` rows into its key."""
+    return (
+        _SH_CTE
+        + f"""
+    , m AS (
+      SELECT doc_id, seeds.seed,
+             min(md5(seeds.seed::VARCHAR || '|' || shingle)) AS mh
+      FROM sh CROSS JOIN (SELECT unnest(range({N_SEEDS})) AS seed) seeds
+      GROUP BY 1, 2
+    ), bands AS (
+      SELECT doc_id, seed // {N_SEEDS // N_BANDS} AS band,
+             {band_key} AS band_key
+      FROM m GROUP BY 1, 2
+    ), candidates AS (
+      SELECT DISTINCT ba.doc_id AS d1, bb.doc_id AS d2
+      FROM bands ba JOIN bands bb
+        ON ba.band = bb.band AND ba.band_key = bb.band_key
+       AND ba.doc_id < bb.doc_id
+    ), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+    common AS (
+      SELECT a.doc_id AS cd1, b.doc_id AS cd2, count(*) AS c
+      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    )
+    SELECT d1, d2, round(c * 1.0 / (s1.n + s2.n - c), 4) AS jacc
+    FROM candidates
+    JOIN common ON d1 = cd1 AND d2 = cd2
+    JOIN sizes s1 ON d1 = s1.doc_id
+    JOIN sizes s2 ON d2 = s2.doc_id
+    WHERE round(c * 1.0 / (s1.n + s2.n - c), 4) >= {JACCARD_THRESHOLD}
+    """
+    )
 
 
 def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -493,35 +533,7 @@ def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _register(
     "dd_minhash_lsh",
     dd_minhash_lsh,
-    _SH_CTE
-    + f"""
-    , m AS (
-      SELECT doc_id, seeds.seed,
-             min(md5(seeds.seed::VARCHAR || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range({N_SEEDS})) AS seed) seeds
-      GROUP BY 1, 2
-    ), bands AS (
-      SELECT doc_id, seed // {N_SEEDS // N_BANDS} AS band,
-             md5(string_agg(mh, '|' ORDER BY seed)) AS band_key
-      FROM m GROUP BY 1, 2
-    ), candidates AS (
-      SELECT DISTINCT ba.doc_id AS d1, bb.doc_id AS d2
-      FROM bands ba JOIN bands bb
-        ON ba.band = bb.band AND ba.band_key = bb.band_key
-       AND ba.doc_id < bb.doc_id
-    ), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    common AS (
-      SELECT a.doc_id AS cd1, b.doc_id AS cd2, count(*) AS c
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT d1, d2, round(c * 1.0 / (s1.n + s2.n - c), 4) AS jacc
-    FROM candidates
-    JOIN common ON d1 = cd1 AND d2 = cd2
-    JOIN sizes s1 ON d1 = s1.doc_id
-    JOIN sizes s2 ON d2 = s2.doc_id
-    WHERE round(c * 1.0 / (s1.n + s2.n - c), 4) >= {JACCARD_THRESHOLD}
-    """,
+    _minhash_sql("md5(string_agg(mh, '|' ORDER BY seed))"),
 )
 
 
@@ -530,6 +542,39 @@ _register(
 # bit_j(token) = bit j of md5(token); signature bit j = majority vote.
 # Pure integer arithmetic (no engine-specific bit ops) for parity.
 # ---------------------------------------------------------------------------
+
+
+# DuckDB form of dd_simhash's per-(doc, bit) vote sums: the toks, bits
+# and contribs CTEs every simhash oracle starts from.
+_SIMHASH_CTES = """
+    WITH toks AS (
+      SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok
+      FROM documents
+    ), bits AS (
+      SELECT doc_id, tok, js.j,
+             (strpos('0123456789abcdef',
+                     substring(md5(tok), (js.j // 4) + 1, 1)) - 1) AS val
+      FROM toks CROSS JOIN (SELECT unnest(range(64)) AS j) js
+    ), contribs AS (
+      SELECT doc_id, j,
+             sum(((val // (CASE j % 4 WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) % 2) * 2 - 1) AS s
+      FROM bits GROUP BY 1, 2
+    )"""
+# ... plus the signatures themselves as the CTE ``sig``.
+_SIMHASH_SIG_CTES = _SIMHASH_CTES + """, sig AS (
+      SELECT doc_id,
+             string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS simhash
+      FROM contribs GROUP BY doc_id
+    )"""
+# The Hamming <= 3 verify over the candidate CTE ``cand(d1, d2, s1, s2)``.
+_HAMMING_SQL = """
+    SELECT d1, d2,
+           list_sum(list_transform(range(1, 65),
+                    i -> CASE WHEN s1[i] = s2[i] THEN 0 ELSE 1 END))::BIGINT AS hamming
+    FROM cand
+    WHERE list_sum(list_transform(range(1, 65),
+                   i -> CASE WHEN s1[i] = s2[i] THEN 0 ELSE 1 END)) <= 3
+    """
 
 
 def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -575,20 +620,8 @@ def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _register(
     "dd_simhash",
     dd_simhash,
-    """
-    WITH toks AS (
-      SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok
-      FROM documents
-    ), bits AS (
-      SELECT doc_id, tok, js.j,
-             (strpos('0123456789abcdef',
-                     substring(md5(tok), (js.j // 4) + 1, 1)) - 1) AS val
-      FROM toks CROSS JOIN (SELECT unnest(range(64)) AS j) js
-    ), contribs AS (
-      SELECT doc_id, j,
-             sum(((val // (CASE j % 4 WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) % 2) * 2 - 1) AS s
-      FROM bits GROUP BY 1, 2
-    )
+    _SIMHASH_CTES
+    + """
     SELECT doc_id,
            string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS simhash
     FROM contribs
@@ -605,13 +638,33 @@ _register(
 # ---------------------------------------------------------------------------
 
 
+def _simhash_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """dd_simhash's signatures, one row per (doc, 16-bit chunk)."""
+    return (
+        dd_simhash(spark, sf_dir)
+        .select(
+            "doc_id",
+            "simhash",
+            F.explode(F.sequence(F.lit(0), F.lit(3))).alias("chunk"),
+        )
+        .withColumn("chunk_val", F.expr("substring(simhash, chunk * 16 + 1, 16)"))
+    )
+
+
+def _hamming_pairs(cand: DataFrame) -> DataFrame:
+    """The candidate pairs ``(d1, d2, s1, s2)`` within Hamming 3."""
+    hamming = F.expr(
+        "aggregate(sequence(1, 64), 0, (acc, i) -> acc + IF(substring(s1, i, 1) = substring(s2, i, 1), 0, 1))"
+    )
+    return (
+        cand.withColumn("hamming", hamming)
+        .filter(F.col("hamming") <= 3)
+        .select("d1", "d2", "hamming")
+    )
+
+
 def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = dd_simhash(spark, sf_dir)
-    chunks = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("chunk"),
-    ).withColumn("chunk_val", F.expr("substring(simhash, chunk * 16 + 1, 16)"))
+    chunks = _simhash_chunks(spark, sf_dir)
     a = chunks.alias("a")
     b = chunks.alias("b")
     cand = (
@@ -629,37 +682,14 @@ def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    hamming = F.expr(
-        "aggregate(sequence(1, 64), 0, (acc, i) -> acc + IF(substring(s1, i, 1) = substring(s2, i, 1), 0, 1))"
-    )
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= 3)
-        .select("d1", "d2", "hamming")
-    )
+    return _hamming_pairs(cand)
 
 
 _register(
     "dd_simhash_pairs",
     dd_simhash_pairs,
-    """
-    WITH toks AS (
-      SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok
-      FROM documents
-    ), bits AS (
-      SELECT doc_id, tok, js.j,
-             (strpos('0123456789abcdef',
-                     substring(md5(tok), (js.j // 4) + 1, 1)) - 1) AS val
-      FROM toks CROSS JOIN (SELECT unnest(range(64)) AS j) js
-    ), contribs AS (
-      SELECT doc_id, j,
-             sum(((val // (CASE j % 4 WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) % 2) * 2 - 1) AS s
-      FROM bits GROUP BY 1, 2
-    ), sig AS (
-      SELECT doc_id,
-             string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS simhash
-      FROM contribs GROUP BY doc_id
-    ), chunks AS (
+    _SIMHASH_SIG_CTES
+    + """, chunks AS (
       SELECT doc_id, simhash, cs.chunk,
              substring(simhash, cs.chunk * 16 + 1, 16) AS chunk_val
       FROM sig CROSS JOIN (SELECT unnest(range(4)) AS chunk) cs
@@ -669,14 +699,8 @@ _register(
       FROM chunks a JOIN chunks b
         ON a.chunk = b.chunk AND a.chunk_val = b.chunk_val
        AND a.doc_id < b.doc_id
-    )
-    SELECT d1, d2,
-           list_sum(list_transform(range(1, 65),
-                    i -> CASE WHEN s1[i] = s2[i] THEN 0 ELSE 1 END))::BIGINT AS hamming
-    FROM cand
-    WHERE list_sum(list_transform(range(1, 65),
-                   i -> CASE WHEN s1[i] = s2[i] THEN 0 ELSE 1 END)) <= 3
-    """,
+    )"""
+    + _HAMMING_SQL,
 )
 
 
@@ -727,12 +751,7 @@ def simhash_banded_pairs(
     """Hamming<=3 simhash pairs with per-bucket rank banding."""
     from ..functions.dist_rank import ranked_in_groups
 
-    sig = dd_simhash(spark, sf_dir)
-    chunks = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("chunk"),
-    ).withColumn("chunk_val", F.expr("substring(simhash, chunk * 16 + 1, 16)"))
+    chunks = _simhash_chunks(spark, sf_dir)
     ranked = ranked_in_groups(
         chunks, ["chunk", "chunk_val"], ["doc_id"]
     )
@@ -785,35 +804,13 @@ def simhash_banded_pairs(
         ).hint("shuffle_hash"),
         "d2",
     )
-    hamming = F.expr(
-        "aggregate(sequence(1, 64), 0, (acc, i) -> acc + IF(substring(s1, i, 1) = substring(s2, i, 1), 0, 1))"
-    )
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= 3)
-        .select("d1", "d2", "hamming")
-    )
+    return _hamming_pairs(cand)
 
 
 def _banded_pairs_sql(band: int = _SIMHASH_BAND) -> str:
-    return f"""
-    WITH toks AS (
-      SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok
-      FROM documents
-    ), bits AS (
-      SELECT doc_id, tok, js.j,
-             (strpos('0123456789abcdef',
-                     substring(md5(tok), (js.j // 4) + 1, 1)) - 1) AS val
-      FROM toks CROSS JOIN (SELECT unnest(range(64)) AS j) js
-    ), contribs AS (
-      SELECT doc_id, j,
-             sum(((val // (CASE j % 4 WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) % 2) * 2 - 1) AS s
-      FROM bits GROUP BY 1, 2
-    ), sig AS (
-      SELECT doc_id,
-             string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS simhash
-      FROM contribs GROUP BY doc_id
-    ), ranked AS (
+    return (
+        _SIMHASH_SIG_CTES
+        + f""", ranked AS (
       SELECT doc_id, simhash, cs.chunk,
              substring(simhash, cs.chunk * 16 + 1, 16) AS chunk_val,
              row_number() OVER (
@@ -827,14 +824,9 @@ def _banded_pairs_sql(band: int = _SIMHASH_BAND) -> str:
       FROM ranked a JOIN ranked b
         ON a.chunk = b.chunk AND a.chunk_val = b.chunk_val
        AND b.r > a.r AND b.r <= a.r + {band}
+    )"""
+        + _HAMMING_SQL
     )
-    SELECT d1, d2,
-           list_sum(list_transform(range(1, 65),
-                    i -> CASE WHEN s1[i] = s2[i] THEN 0 ELSE 1 END))::BIGINT AS hamming
-    FROM cand
-    WHERE list_sum(list_transform(range(1, 65),
-                   i -> CASE WHEN s1[i] = s2[i] THEN 0 ELSE 1 END)) <= 3
-    """
 
 
 _register("dd_simhash_pairs_banded", simhash_banded_pairs, _banded_pairs_sql())
@@ -1081,20 +1073,26 @@ def dd_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return labels
 
 
-_CC_EDGE_SQL = ORACLE["dd_simhash_pairs"]
-_BANDED_EDGE_SQL = ORACLE["dd_simhash_pairs_banded"]
+# Pair columns, entity table and label column of a components oracle,
+# by id column.
+_CC_SHAPE = {
+    "doc_id": ("d1", "d2", "documents", "component"),
+    "vec_id": ("v1", "v2", "embeddings", "cluster"),
+}
 
-_register(
-    "dd_connected_components",
-    dd_connected_components,
-    f"""
-    WITH RECURSIVE pairs AS (
-      {_CC_EDGE_SQL}
-    ),
+
+def _cc_sql(pairs: str, id_col: str) -> str:
+    """DuckDB min-label connected components. ``pairs`` is the CTE text
+    after ``WITH RECURSIVE`` and ends with the CTE ``pairs``; each row
+    of the entity table is labelled with the least id it reaches."""
+    a, b, table, label = _CC_SHAPE[id_col]
+    t = table[0]
+    return f"""
+    WITH RECURSIVE {pairs},
     edges AS (
-      SELECT d1 AS src, d2 AS dst FROM pairs
+      SELECT {a} AS src, {b} AS dst FROM pairs
       UNION
-      SELECT d2 AS src, d1 AS dst FROM pairs
+      SELECT {b} AS src, {a} AS dst FROM pairs
     ),
     reach(src, dst) AS (
       SELECT src, dst FROM edges
@@ -1102,12 +1100,26 @@ _register(
       SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
     ),
     comp AS (
-      SELECT src AS doc_id, min(dst) AS min_reach FROM reach GROUP BY src
+      SELECT src AS {id_col}, min(dst) AS min_reach FROM reach GROUP BY src
     )
-    SELECT d.doc_id,
-           least(d.doc_id, coalesce(c.min_reach, d.doc_id)) AS component
-    FROM documents d LEFT JOIN comp c USING (doc_id)
-    """,
+    SELECT {t}.{id_col},
+           least({t}.{id_col}, coalesce(c.min_reach, {t}.{id_col})) AS {label}
+    FROM {table} {t} LEFT JOIN comp c USING ({id_col})
+    """
+
+
+_CC_EDGE_SQL = ORACLE["dd_simhash_pairs"]
+_BANDED_EDGE_SQL = ORACLE["dd_simhash_pairs_banded"]
+
+_register(
+    "dd_connected_components",
+    dd_connected_components,
+    _cc_sql(
+        f"""pairs AS (
+      {_CC_EDGE_SQL}
+    )""",
+        "doc_id",
+    ),
 )
 
 
@@ -1256,27 +1268,12 @@ def dd_cc_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 _register(
     "dd_cc_banded",
     dd_cc_banded,
-    f"""
-    WITH RECURSIVE pairs AS (
+    _cc_sql(
+        f"""pairs AS (
       {_BANDED_EDGE_SQL}
+    )""",
+        "doc_id",
     ),
-    edges AS (
-      SELECT d1 AS src, d2 AS dst FROM pairs
-      UNION
-      SELECT d2 AS src, d1 AS dst FROM pairs
-    ),
-    reach(src, dst) AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
-    comp AS (
-      SELECT src AS doc_id, min(dst) AS min_reach FROM reach GROUP BY src
-    )
-    SELECT d.doc_id,
-           least(d.doc_id, coalesce(c.min_reach, d.doc_id)) AS component
-    FROM documents d LEFT JOIN comp c USING (doc_id)
-    """,
 )
 
 
@@ -1428,19 +1425,10 @@ _register(
 CONTAINMENT_THRESHOLD = 0.9
 
 
-def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    sh = (
-        docs.select(
-            "doc_id", word_shingles(tokens(F.col("text")), 3).alias("shs")
-        )
-        .select(
-            "doc_id", F.size("shs").alias("n"), F.explode("shs").alias("s")
-        )
-        .select("doc_id", "n", F.xxhash64("s").alias("h"))
-    )
-    sh = sh.repartition(spark.sparkContext.defaultParallelism, "h")
-    a, b = sh.alias("a"), sh.alias("b")
+def _containment(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Directed pairs ``src -> dst`` whose containment clears the
+    threshold, from the shingle index ``(doc_id, n, h)`` aliased ``a``
+    and ``b``."""
     common = (
         a.join(
             b,
@@ -1463,16 +1451,19 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_register(
-    "dd_containment",
-    dd_containment,
-    _SH_CTE
-    + f"""
-    , sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+def _containment_sql(ctes: str, src: str) -> str:
+    """DuckDB form of ``_containment`` over ``_SH_CTE``: ``ctes`` are
+    the CTEs before ``sizes`` and ``src`` is the shingle CTE that the
+    self-join reads."""
+    pad = " " * len(f"FROM {src} a JOIN {src} b")
+    return (
+        _SH_CTE
+        + f"""
+    , {ctes}sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
     common AS (
       SELECT a.doc_id AS src, b.doc_id AS dst, count(*) AS c
-      FROM sh a JOIN sh b ON a.shingle = b.shingle
-                         AND a.doc_id != b.doc_id
+      FROM {src} a JOIN {src} b ON a.shingle = b.shingle
+      {pad}AND a.doc_id != b.doc_id
       GROUP BY 1, 2
     )
     SELECT src, dst,
@@ -1480,7 +1471,29 @@ _register(
     FROM common
     JOIN sizes s ON src = s.doc_id
     WHERE round(c * 1.0 / s.n, 4) >= {CONTAINMENT_THRESHOLD}
-    """,
+    """
+    )
+
+
+def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents", parallelize=True)
+    sh = (
+        docs.select(
+            "doc_id", word_shingles(tokens(F.col("text")), 3).alias("shs")
+        )
+        .select(
+            "doc_id", F.size("shs").alias("n"), F.explode("shs").alias("s")
+        )
+        .select("doc_id", "n", F.xxhash64("s").alias("h"))
+    )
+    sh = sh.repartition(spark.sparkContext.defaultParallelism, "h")
+    return _containment(sh.alias("a"), sh.alias("b"))
+
+
+_register(
+    "dd_containment",
+    dd_containment,
+    _containment_sql("", "sh"),
 )
 
 
@@ -1511,82 +1524,23 @@ _CT_DF_CAP = 10
 
 
 def dd_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as _W
-
-    from ..functions.text import hashed_word_shingles
-
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    # r10 floor fix: the shingle scan dominated this entry's
-    # wall-clock (0.66-0.72 s of a ~1.1 s total at sf0.1 — more than
-    # the ENTIRE DuckDB oracle). hashed_word_shingles hashes the
-    # zipped token slices directly instead of materializing per-doc
-    # string arrays and re-hashing them: the corpus pass halves
-    # (1.45 s → 0.72 s) and the full entry drops 1.11 → 0.94 s solo.
-    # n (the containment denominator) is the distinct-hash count ==
-    # distinct-shingle count (tokens are space-free, so triple ↔
-    # string is bijective; collisions are the same 2⁻⁶⁴ caveat the
-    # old xxhash64-of-string join already carried).
-    sh = (
-        docs.select(
-            "doc_id",
-            hashed_word_shingles(tokens(F.col("text")), 3).alias("hs"),
-        )
-        .select(
-            "doc_id", F.size("hs").alias("n"), F.explode("hs").alias("h")
-        )
-    )
-    sh = sh.repartition(spark.sparkContext.defaultParallelism, "h")
-    sh = (
-        sh.withColumn("df", F.count(F.lit(1)).over(_W.partitionBy("h")))
-        .filter(F.col("df") <= _CT_DF_CAP)
-        .drop("df")
-    )
-    a, b = sh.alias("a"), sh.alias("b").hint("shuffle_hash")
-    common = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("src"),
-            F.col("b.doc_id").alias("dst"),
-            F.col("a.n").alias("n_src"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        common.withColumn(
-            "containment", F.round(F.col("c") / F.col("n_src"), 4)
-        )
-        .filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
-        .select("src", "dst", "containment")
-    )
+    sh = _capped_index(spark, docs, _CT_DF_CAP)
+    return _containment(sh.alias("a"), sh.alias("b").hint("shuffle_hash"))
 
 
 _register(
     "dd_containment_capped",
     dd_containment_capped,
-    _SH_CTE
-    + f"""
-    , keep AS (
+    _containment_sql(
+        f"""keep AS (
       SELECT shingle FROM sh GROUP BY shingle
       HAVING count(*) <= {_CT_DF_CAP}
     ),
     shc AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN keep USING (shingle)),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    common AS (
-      SELECT a.doc_id AS src, b.doc_id AS dst, count(*) AS c
-      FROM shc a JOIN shc b ON a.shingle = b.shingle
-                           AND a.doc_id != b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT src, dst,
-           round(c * 1.0 / s.n, 4) AS containment
-    FROM common
-    JOIN sizes s ON src = s.doc_id
-    WHERE round(c * 1.0 / s.n, 4) >= {CONTAINMENT_THRESHOLD}
     """,
+        "shc",
+    ),
 )
 
 
@@ -2122,6 +2076,35 @@ _register(
 
 _INCR_SPLIT = 400
 
+# The landed-fingerprint formula, defined ONCE and folded into the
+# fixture cache key (r7 ADVICE): if the normalization or hash ever
+# changes, the key changes with it and a stale cached parquet can
+# never be silently reused against the new oracle.
+_LANDED_FP_SQL = (
+    "md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))"
+)
+
+# Admitted/rejected per source of the batch against the landed
+# fingerprints; ``n_batch`` optionally adds a batch-size column.
+_ADMISSION_SQL = f"""
+    WITH fps AS (
+      SELECT doc_id, source,
+             {_LANDED_FP_SQL} AS fp
+      FROM documents
+    ),
+    landed AS (
+      SELECT DISTINCT fp FROM fps WHERE doc_id < {_INCR_SPLIT}
+    ),
+    batch AS (SELECT * FROM fps WHERE doc_id >= {_INCR_SPLIT})
+    SELECT source,
+           count(*) FILTER (WHERE fp NOT IN (SELECT fp FROM landed))
+             AS n_admitted,
+           count(*) FILTER (WHERE fp IN (SELECT fp FROM landed))
+             AS n_rejected{{n_batch}}
+    FROM batch
+    GROUP BY source
+    """
+
 
 def dd_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", parallelize=True).select(
@@ -2156,24 +2139,7 @@ def _admission_report(landed: DataFrame, batch: DataFrame) -> DataFrame:
 _register(
     "dd_incremental_dedup",
     dd_incremental_dedup,
-    f"""
-    WITH fps AS (
-      SELECT doc_id, source,
-             md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp
-      FROM documents
-    ),
-    landed AS (
-      SELECT DISTINCT fp FROM fps WHERE doc_id < {_INCR_SPLIT}
-    ),
-    batch AS (SELECT * FROM fps WHERE doc_id >= {_INCR_SPLIT})
-    SELECT source,
-           count(*) FILTER (WHERE fp NOT IN (SELECT fp FROM landed))
-             AS n_admitted,
-           count(*) FILTER (WHERE fp IN (SELECT fp FROM landed))
-             AS n_rejected
-    FROM batch
-    GROUP BY source
-    """,
+    _ADMISSION_SQL.format(n_batch=""),
 )
 
 
@@ -2282,8 +2248,8 @@ def _semantic_cc(
 def _semantic_clusters_sql() -> str:
     from .similarity import _SRP_BUCKET_SQL
 
-    return f"""
-    WITH RECURSIVE bucketed AS (
+    return _cc_sql(
+        f"""bucketed AS (
       SELECT vec_id, embedding, {_SRP_BUCKET_SQL} AS bucket FROM embeddings
     ),
     pairs AS (
@@ -2293,24 +2259,9 @@ def _semantic_clusters_sql() -> str:
       WHERE round(list_cosine_similarity(a.embedding::DOUBLE[],
                                          b.embedding::DOUBLE[]), 4)
             >= {_SEM_THRESHOLD}
-    ),
-    edges AS (
-      SELECT v1 AS src, v2 AS dst FROM pairs
-      UNION
-      SELECT v2 AS src, v1 AS dst FROM pairs
-    ),
-    reach(src, dst) AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
-    comp AS (
-      SELECT src AS vec_id, min(dst) AS min_reach FROM reach GROUP BY src
+    )""",
+        "vec_id",
     )
-    SELECT e.vec_id,
-           least(e.vec_id, coalesce(c.min_reach, e.vec_id)) AS cluster
-    FROM embeddings e LEFT JOIN comp c USING (vec_id)
-    """
 
 
 _register(
@@ -2363,28 +2314,13 @@ def dd_semantic_clusters_banded(
 def _semantic_clusters_banded_sql() -> str:
     from .similarity import SRP_BAND, _srp_banded_cand_sql
 
-    return f"""
-    WITH RECURSIVE {_srp_banded_cand_sql(SRP_BAND, 4)},
+    return _cc_sql(
+        f"""{_srp_banded_cand_sql(SRP_BAND, 4)},
     pairs AS (
       SELECT v1, v2 FROM cand WHERE cos >= {_SEM_THRESHOLD}
-    ),
-    edges AS (
-      SELECT v1 AS src, v2 AS dst FROM pairs
-      UNION
-      SELECT v2 AS src, v1 AS dst FROM pairs
-    ),
-    reach(src, dst) AS (
-      SELECT src, dst FROM edges
-      UNION
-      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-    ),
-    comp AS (
-      SELECT src AS vec_id, min(dst) AS min_reach FROM reach GROUP BY src
+    )""",
+        "vec_id",
     )
-    SELECT e.vec_id,
-           least(e.vec_id, coalesce(c.min_reach, e.vec_id)) AS cluster
-    FROM embeddings e LEFT JOIN comp c USING (vec_id)
-    """
 
 
 _register(
@@ -2828,25 +2764,7 @@ def _bloom_route(
 _register(
     "dd_bloom_incremental",
     dd_bloom_incremental,
-    f"""
-    WITH fps AS (
-      SELECT doc_id, source,
-             md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp
-      FROM documents
-    ),
-    landed AS (
-      SELECT DISTINCT fp FROM fps WHERE doc_id < {_INCR_SPLIT}
-    ),
-    batch AS (SELECT * FROM fps WHERE doc_id >= {_INCR_SPLIT})
-    SELECT source,
-           count(*) FILTER (WHERE fp NOT IN (SELECT fp FROM landed))
-             AS n_admitted,
-           count(*) FILTER (WHERE fp IN (SELECT fp FROM landed))
-             AS n_rejected,
-           count(*) AS n_batch
-    FROM batch
-    GROUP BY source
-    """,
+    _ADMISSION_SQL.format(n_batch=",\n           count(*) AS n_batch"),
 )
 
 
@@ -2870,14 +2788,6 @@ _register(
 # construction; steady-state construction is one os.stat.
 # ---------------------------------------------------------------------------
 
-
-# The landed-fingerprint formula, defined ONCE and folded into the
-# fixture cache key (r7 ADVICE): if the normalization or hash ever
-# changes, the key changes with it and a stale cached parquet can
-# never be silently reused against the new oracle.
-_LANDED_FP_SQL = (
-    "md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'))"
-)
 
 
 def _landed_fp_table(sf_dir: str) -> str:
@@ -2939,25 +2849,7 @@ _register(
     # recomputes the landed fps from text because DuckDB sees only the
     # catalog tables; value-equality proves the materialized table IS
     # the landed fingerprint set.
-    f"""
-    WITH fps AS (
-      SELECT doc_id, source,
-             md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp
-      FROM documents
-    ),
-    landed AS (
-      SELECT DISTINCT fp FROM fps WHERE doc_id < {_INCR_SPLIT}
-    ),
-    batch AS (SELECT * FROM fps WHERE doc_id >= {_INCR_SPLIT})
-    SELECT source,
-           count(*) FILTER (WHERE fp NOT IN (SELECT fp FROM landed))
-             AS n_admitted,
-           count(*) FILTER (WHERE fp IN (SELECT fp FROM landed))
-             AS n_rejected,
-           count(*) AS n_batch
-    FROM batch
-    GROUP BY source
-    """,
+    ORACLE["dd_bloom_incremental"],
 )
 
 
@@ -2999,24 +2891,7 @@ _register(
     # recomputes landed fps from text (DuckDB sees only the catalog
     # tables); value-equality proves the materialized table IS the
     # landed fingerprint set.
-    f"""
-    WITH fps AS (
-      SELECT doc_id, source,
-             {_LANDED_FP_SQL} AS fp
-      FROM documents
-    ),
-    landed AS (
-      SELECT DISTINCT fp FROM fps WHERE doc_id < {_INCR_SPLIT}
-    ),
-    batch AS (SELECT * FROM fps WHERE doc_id >= {_INCR_SPLIT})
-    SELECT source,
-           count(*) FILTER (WHERE fp NOT IN (SELECT fp FROM landed))
-             AS n_admitted,
-           count(*) FILTER (WHERE fp IN (SELECT fp FROM landed))
-             AS n_rejected
-    FROM batch
-    GROUP BY source
-    """,
+    ORACLE["dd_incremental_dedup"],
 )
 
 
@@ -3189,38 +3064,12 @@ def dd_bbit_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _register(
     "dd_bbit_minhash_lsh",
     dd_bbit_minhash_lsh,
-    _SH_CTE
-    + f"""
-    , m AS (
-      SELECT doc_id, seeds.seed,
-             min(md5(seeds.seed::VARCHAR || '|' || shingle)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(range({N_SEEDS})) AS seed) seeds
-      GROUP BY 1, 2
-    ), bands AS (
-      SELECT doc_id, seed // {N_SEEDS // N_BANDS} AS band,
-             string_agg(
+    _minhash_sql(
+        f"""string_agg(
                (CAST(('0x' || substr(mh, 29, 4)) AS BIGINT)
                 % {1 << _BBIT_B})::VARCHAR,
-               '|' ORDER BY seed) AS band_key
-      FROM m GROUP BY 1, 2
-    ), candidates AS (
-      SELECT DISTINCT ba.doc_id AS d1, bb.doc_id AS d2
-      FROM bands ba JOIN bands bb
-        ON ba.band = bb.band AND ba.band_key = bb.band_key
-       AND ba.doc_id < bb.doc_id
-    ), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-    common AS (
-      SELECT a.doc_id AS cd1, b.doc_id AS cd2, count(*) AS c
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT d1, d2, round(c * 1.0 / (s1.n + s2.n - c), 4) AS jacc
-    FROM candidates
-    JOIN common ON d1 = cd1 AND d2 = cd2
-    JOIN sizes s1 ON d1 = s1.doc_id
-    JOIN sizes s2 ON d2 = s2.doc_id
-    WHERE round(c * 1.0 / (s1.n + s2.n - c), 4) >= {JACCARD_THRESHOLD}
-    """,
+               '|' ORDER BY seed)"""
+    ),
 )
 
 

@@ -264,15 +264,23 @@ def _map_record(k: int) -> dict:
     }
 
 
+# Collected fixture keys per (table, sf_dir): each collect is a Spark
+# job, and the pipeline configs rebuild their records on every call.
+_KEYS_CACHE: dict = {}
+
+
 def _map_keys(spark: SparkSession, sf_dir: str) -> list[int]:
     """The fixture map ids: every p_partkey < 150, ascending."""
-    keys = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") < N_MAPS)
-        .select("p_partkey")
-        .collect()
-    )
-    return sorted(int(r[0]) for r in keys)
+    key = ("part", sf_dir)
+    if key not in _KEYS_CACHE:
+        keys = (
+            load_table(spark, sf_dir, "part")
+            .filter(F.col("p_partkey") < N_MAPS)
+            .select("p_partkey")
+            .collect()
+        )
+        _KEYS_CACHE[key] = sorted(int(r[0]) for r in keys)
+    return _KEYS_CACHE[key]
 
 
 def map_records(spark: SparkSession, sf_dir: str) -> list[dict]:
@@ -289,11 +297,14 @@ def synthetic_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def layer_records(spark: SparkSession, sf_dir: str) -> list[dict]:
     """``LAYER_ITEM_SCHEMA``-shaped layer items, one per nation key
     (0..24), in key order."""
-    rows = (
-        load_table(spark, sf_dir, "nation")
-        .select("n_nationkey", "n_regionkey")
-        .collect()
-    )
+    key = ("nation", sf_dir)
+    if key not in _KEYS_CACHE:
+        rows = (
+            load_table(spark, sf_dir, "nation")
+            .select("n_nationkey", "n_regionkey")
+            .collect()
+        )
+        _KEYS_CACHE[key] = sorted((int(x[0]), int(x[1])) for x in rows)
     return [
         {
             "id": n,
@@ -303,7 +314,7 @@ def layer_records(spark: SparkSession, sf_dir: str) -> list[dict]:
             "maps_count": r * 3 + n % 4,
             "bbox": "-74.1,40.6,-73.8,40.9" if n % 6 != 0 else None,
         }
-        for n, r in sorted((int(x[0]), int(x[1])) for x in rows)
+        for n, r in _KEYS_CACHE[key]
     ]
 
 
@@ -351,7 +362,10 @@ def _log(cond: str, log_type: str, message: str) -> str:
     )
 
 
-_RING0_N = "size(element_at(maskGeometry.coordinates, 1))"
+# The outer ring's point count; 0 when there is no ring. try_element_at
+# does not raise on an empty ring list under ANSI, and the coalesce keeps
+# size(NULL) from reading -1 (legacy) in one session and NULL in another.
+_RING0_N = "size(coalesce(try_element_at(maskGeometry.coordinates, 1), array()))"
 _N_RINGS = "size(maskGeometry.coordinates)"
 # The rules in the reference's order (:221-321), so log arrays compare
 # byte for byte. ``_kinks`` and ``_valid`` are columns that

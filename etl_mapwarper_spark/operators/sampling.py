@@ -571,7 +571,9 @@ _PACK_BUDGET = 256  # tokens per training sequence
 _PACK_SHARDS = 8
 
 
-def ds_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _shard_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Non-empty docs ``(doc_id, shard, dl)`` with ``cum``, the running
+    token total of their shard in doc_id order."""
     from pyspark.sql.window import Window
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -584,7 +586,11 @@ def ds_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    placed = docs.withColumn("cum", F.sum("dl").over(w)).select(
+    return docs.withColumn("cum", F.sum("dl").over(w))
+
+
+def ds_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
+    placed = _shard_cumsum(spark, sf_dir).select(
         "shard",
         "doc_id",
         "dl",
@@ -1029,6 +1035,28 @@ def ds_llm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _contaminated_ctes(src: str) -> str:
+    """DuckDB: the benchmark docs' 5-gram set ``bench_sh`` and the ids
+    of ``src(doc_id, toks)`` rows sharing one, ``contaminated``."""
+    return f"""bench_sh AS (
+      SELECT DISTINCT
+             unnest(list_transform(range(1, greatest(len(t) - 3, 1)),
+                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' '
+                         || t[i+3] || ' ' || t[i+4])) AS s
+      FROM (SELECT string_split(text, ' ') AS t FROM documents
+            WHERE doc_id % 50 = 0 AND len(string_split(text, ' ')) >= 5)
+    ),
+    contaminated AS (
+      SELECT DISTINCT doc_id FROM (
+        SELECT doc_id,
+               unnest(list_transform(range(1, greatest(len(toks) - 3, 1)),
+                      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                           || ' ' || toks[i+3] || ' ' || toks[i+4])) AS s
+        FROM {src} WHERE len(toks) >= 5
+      ) JOIN bench_sh USING (s)
+    ),"""
+
+
 def _llm_pipeline_sql() -> str:
     from .textops import C4_KEPT_COND_SQL, C4_SCORED_COLS_SQL
 
@@ -1049,23 +1077,7 @@ def _llm_pipeline_sql() -> str:
       SELECT * FROM kept
       QUALIFY doc_id = min(doc_id) OVER (PARTITION BY fp)
     ),
-    bench_sh AS (
-      SELECT DISTINCT
-             unnest(list_transform(range(1, greatest(len(t) - 3, 1)),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' '
-                         || t[i+3] || ' ' || t[i+4])) AS s
-      FROM (SELECT string_split(text, ' ') AS t FROM documents
-            WHERE doc_id % 50 = 0 AND len(string_split(text, ' ')) >= 5)
-    ),
-    contaminated AS (
-      SELECT DISTINCT doc_id FROM (
-        SELECT doc_id,
-               unnest(list_transform(range(1, greatest(len(toks) - 3, 1)),
-                      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                           || ' ' || toks[i+3] || ' ' || toks[i+4])) AS s
-        FROM deduped WHERE len(toks) >= 5
-      ) JOIN bench_sh USING (s)
-    ),
+    {_contaminated_ctes("deduped")}
     clean AS (
       SELECT d.doc_id, d.source, d.dl FROM deduped d
       WHERE d.doc_id NOT IN (SELECT doc_id FROM contaminated) AND d.dl > 0
@@ -1348,23 +1360,7 @@ def _ablation_sql() -> str:
              min(doc_id) OVER (PARTITION BY fp) = doc_id AS d_ok
       FROM base
     ),
-    bench_sh AS (
-      SELECT DISTINCT
-             unnest(list_transform(range(1, greatest(len(t) - 3, 1)),
-                    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' '
-                         || t[i+3] || ' ' || t[i+4])) AS s
-      FROM (SELECT string_split(text, ' ') AS t FROM documents
-            WHERE doc_id % 50 = 0 AND len(string_split(text, ' ')) >= 5)
-    ),
-    contaminated AS (
-      SELECT DISTINCT doc_id FROM (
-        SELECT doc_id,
-               unnest(list_transform(range(1, greatest(len(toks) - 3, 1)),
-                      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                           || ' ' || toks[i+3] || ' ' || toks[i+4])) AS s
-        FROM flagged WHERE len(toks) >= 5
-      ) JOIN bench_sh USING (s)
-    ),
+    {_contaminated_ctes("flagged")}
     ann AS (
       SELECT f.doc_id, f.dl, f.q_ok, f.d_ok,
              f.doc_id NOT IN (SELECT doc_id FROM contaminated) AS c_ok
@@ -1460,19 +1456,7 @@ _register(
 
 
 def ds_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        hash_bucket(F.col("doc_id"), _PACK_SHARDS).alias("shard"),
-        token_count(F.col("text")).alias("dl"),
-    ).filter(F.col("dl") > 0)
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    seqd = docs.withColumn("cum", F.sum("dl").over(w))
+    seqd = _shard_cumsum(spark, sf_dir)
     per_shard = seqd.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.max("cum").alias("n_tokens"),

@@ -524,39 +524,44 @@ _register(
 # ---------------------------------------------------------------------------
 
 
-def sim_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    exact = sim_bruteforce_topk(spark, sf_dir).select("probe_id", "vec_id")
-    approx = sim_srp_lsh_topk(spark, sf_dir).select(
-        F.col("probe_id").alias("p2"), F.col("vec_id").alias("v2")
-    )
-    hit = F.col("v2").isNotNull()
-    return (
-        exact.join(
-            broadcast(approx),
-            (F.col("probe_id") == F.col("p2"))
-            & (F.col("vec_id") == F.col("v2")),
-            "left",
+def _recall(exact_fn, approx_fn):
+    """A recall@k entry: ``exact_fn``'s top-k per probe, left-joined to
+    ``approx_fn``'s broadcast top-k and rolled up per probe."""
+
+    def recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+        exact = exact_fn(spark, sf_dir).select("probe_id", "vec_id")
+        approx = approx_fn(spark, sf_dir).select(
+            F.col("probe_id").alias("p2"), F.col("vec_id").alias("v2")
         )
-        .groupBy("probe_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(hit.cast("int")).alias("n_hit"),
-            F.round(
-                F.sum(hit.cast("int")) / F.count(F.lit(1)), 4
-            ).alias("recall_at_k"),
+        hit = F.col("v2").isNotNull()
+        return (
+            exact.join(
+                broadcast(approx),
+                (F.col("probe_id") == F.col("p2"))
+                & (F.col("vec_id") == F.col("v2")),
+                "left",
+            )
+            .groupBy("probe_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_exact"),
+                F.sum(hit.cast("int")).alias("n_hit"),
+                F.round(
+                    F.sum(hit.cast("int")) / F.count(F.lit(1)), 4
+                ).alias("recall_at_k"),
+            )
         )
-    )
+
+    return recall
 
 
-_register(
-    "sim_lsh_recall",
-    sim_lsh_recall,
-    f"""
+def _recall_sql(exact: str, approx: str) -> str:
+    """The DuckDB form of ``_recall`` over two registered oracles."""
+    return """
     WITH exact AS (
-      SELECT probe_id, vec_id FROM ({{exact_sql}})
+      SELECT probe_id, vec_id FROM ({exact_sql})
     ),
     approx AS (
-      SELECT probe_id AS p2, vec_id AS v2 FROM ({{approx_sql}})
+      SELECT probe_id AS p2, vec_id AS v2 FROM ({approx_sql})
     )
     SELECT probe_id,
            count(*) AS n_exact,
@@ -566,10 +571,14 @@ _register(
     FROM exact
     LEFT JOIN approx ON probe_id = p2 AND vec_id = v2
     GROUP BY probe_id
-    """.format(
-        exact_sql=ORACLE["sim_bruteforce_topk"],
-        approx_sql=ORACLE["sim_srp_lsh_topk"],
-    ),
+    """.format(exact_sql=ORACLE[exact], approx_sql=ORACLE[approx])
+
+
+sim_lsh_recall = _recall(sim_bruteforce_topk, sim_srp_lsh_topk)
+_register(
+    "sim_lsh_recall",
+    sim_lsh_recall,
+    _recall_sql("sim_bruteforce_topk", "sim_srp_lsh_topk"),
 )
 
 
@@ -650,6 +659,50 @@ def _pq_code_expr(codebook_m: list, base: int) -> F.Column:
         ),
     )
     return F.array_max(scored)["pos"]
+
+
+def _pq_lloyd_ctes(src: str) -> str:
+    """DuckDB PQ codebook training over ``src(vec_id, dim, x)``: Forgy
+    init, one Lloyd pass (``final_cent``) and the final codes
+    (``codes2``), as a CTE block with no leading comma."""
+    return f"""init_cent AS (
+      SELECT vec_id AS k, dim, round(x, 6) AS c
+      FROM {src} WHERE vec_id < {_PQ_K}
+    ),
+    assign1 AS (
+      SELECT v.vec_id, ic.dim // {_PQ_D} AS m, ic.k,
+             round(sum((v.x - ic.c) * (v.x - ic.c)), 6) AS d2
+      FROM {src} v JOIN init_cent ic ON v.dim = ic.dim
+      GROUP BY 1, 2, 3
+    ),
+    codes1 AS (
+      SELECT vec_id, m, k FROM (
+        SELECT vec_id, m, k,
+               row_number() OVER (PARTITION BY vec_id, m
+                                  ORDER BY d2 ASC, k ASC) AS rn
+        FROM assign1
+      ) WHERE rn = 1
+    ),
+    final_cent AS (
+      SELECT c.m, c.k, v.dim, round(avg(v.x), 6) AS c
+      FROM codes1 c
+      JOIN {src} v ON v.vec_id = c.vec_id AND v.dim // {_PQ_D} = c.m
+      GROUP BY 1, 2, 3
+    ),
+    assign2 AS (
+      SELECT v.vec_id, fc.m, fc.k,
+             round(sum((v.x - fc.c) * (v.x - fc.c)), 6) AS d2
+      FROM {src} v JOIN final_cent fc ON v.dim = fc.dim
+      GROUP BY 1, 2, 3
+    ),
+    codes2 AS (
+      SELECT vec_id, m, k FROM (
+        SELECT vec_id, m, k,
+               row_number() OVER (PARTITION BY vec_id, m
+                                  ORDER BY d2 ASC, k ASC) AS rn
+        FROM assign2
+      ) WHERE rn = 1
+    )"""
 
 
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -795,44 +848,7 @@ _register(
       FROM embeddings
       CROSS JOIN (SELECT unnest(range({_PQ_M * _PQ_D})) AS dim) ds
     ),
-    init_cent AS (
-      SELECT vec_id AS k, dim, round(x, 6) AS c
-      FROM vdims WHERE vec_id < {_PQ_K}
-    ),
-    assign1 AS (
-      SELECT v.vec_id, ic.dim // {_PQ_D} AS m, ic.k,
-             round(sum((v.x - ic.c) * (v.x - ic.c)), 6) AS d2
-      FROM vdims v JOIN init_cent ic ON v.dim = ic.dim
-      GROUP BY 1, 2, 3
-    ),
-    codes1 AS (
-      SELECT vec_id, m, k FROM (
-        SELECT vec_id, m, k,
-               row_number() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d2 ASC, k ASC) AS rn
-        FROM assign1
-      ) WHERE rn = 1
-    ),
-    final_cent AS (
-      SELECT c.m, c.k, v.dim, round(avg(v.x), 6) AS c
-      FROM codes1 c
-      JOIN vdims v ON v.vec_id = c.vec_id AND v.dim // {_PQ_D} = c.m
-      GROUP BY 1, 2, 3
-    ),
-    assign2 AS (
-      SELECT v.vec_id, fc.m, fc.k,
-             round(sum((v.x - fc.c) * (v.x - fc.c)), 6) AS d2
-      FROM vdims v JOIN final_cent fc ON v.dim = fc.dim
-      GROUP BY 1, 2, 3
-    ),
-    codes2 AS (
-      SELECT vec_id, m, k FROM (
-        SELECT vec_id, m, k,
-               row_number() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d2 ASC, k ASC) AS rn
-        FROM assign2
-      ) WHERE rn = 1
-    ),
+    {_pq_lloyd_ctes("vdims")},
     ptab AS (
       SELECT v.vec_id AS probe_id, fc.m, fc.k,
              round(sum((v.x - fc.c) * (v.x - fc.c)), 6) AS t
@@ -918,52 +934,11 @@ _register(
 # ---------------------------------------------------------------------------
 
 
-def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    exact = sim_l2_bruteforce_topk(spark, sf_dir).select("probe_id", "vec_id")
-    approx = sim_pq_topk(spark, sf_dir).select(
-        F.col("probe_id").alias("p2"), F.col("vec_id").alias("v2")
-    )
-    hit = F.col("v2").isNotNull()
-    return (
-        exact.join(
-            broadcast(approx),
-            (F.col("probe_id") == F.col("p2"))
-            & (F.col("vec_id") == F.col("v2")),
-            "left",
-        )
-        .groupBy("probe_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(hit.cast("int")).alias("n_hit"),
-            F.round(
-                F.sum(hit.cast("int")) / F.count(F.lit(1)), 4
-            ).alias("recall_at_k"),
-        )
-    )
-
-
+sim_pq_recall = _recall(sim_l2_bruteforce_topk, sim_pq_topk)
 _register(
     "sim_pq_recall",
     sim_pq_recall,
-    """
-    WITH exact AS (
-      SELECT probe_id, vec_id FROM ({exact_sql})
-    ),
-    approx AS (
-      SELECT probe_id AS p2, vec_id AS v2 FROM ({approx_sql})
-    )
-    SELECT probe_id,
-           count(*) AS n_exact,
-           sum(CASE WHEN v2 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit,
-           round(sum(CASE WHEN v2 IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / count(*), 4) AS recall_at_k
-    FROM exact
-    LEFT JOIN approx ON probe_id = p2 AND vec_id = v2
-    GROUP BY probe_id
-    """.format(
-        exact_sql=ORACLE["sim_l2_bruteforce_topk"],
-        approx_sql=ORACLE["sim_pq_topk"],
-    ),
+    _recall_sql("sim_l2_bruteforce_topk", "sim_pq_topk"),
 )
 
 
@@ -1387,6 +1362,25 @@ def _srp_banded_cand_sql(
     )"""
 
 
+def _both_ways() -> F.Column:
+    """Each pair ``(v1, v2, cos)`` as its two directed edges, struct
+    ``e(src, dst, cos)``."""
+    return F.explode(
+        F.array(
+            F.struct(
+                F.col("v1").alias("src"),
+                F.col("v2").alias("dst"),
+                F.col("cos"),
+            ),
+            F.struct(
+                F.col("v2").alias("src"),
+                F.col("v1").alias("dst"),
+                F.col("cos"),
+            ),
+        )
+    ).alias("e")
+
+
 def sim_knn_graph_banded(
     spark: SparkSession,
     sf_dir: str,
@@ -1413,22 +1407,7 @@ def sim_knn_graph_banded(
     # cand-flipped) would DUPLICATE the banded-join subtree in the
     # physical plan and compute every candidate twice (caught in the
     # r7 plan audit).
-    directed = cand.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("v1").alias("src"),
-                    F.col("v2").alias("dst"),
-                    F.col("cos"),
-                ),
-                F.struct(
-                    F.col("v2").alias("src"),
-                    F.col("v1").alias("dst"),
-                    F.col("cos"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst", "e.cos")
+    directed = cand.select(_both_ways()).select("e.src", "e.dst", "e.cos")
     w = Window.partitionBy("src").orderBy(F.desc("cos"), F.asc("dst"))
     return (
         directed.withColumn("rank", F.row_number().over(w))
@@ -1565,56 +1544,13 @@ _register(
 # exact brute-force ground truth, beside sim_lsh_recall's single-probe
 # number: the pair of entries IS the multi-probe trade quantified
 # (5x candidates -> strictly-dominating recall, no extra hash tables).
-# Same plan shape as sim_lsh_recall: tiny approx side broadcast into a
-# left join against the exact top-k, per-probe rollup.
 
 
-def sim_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    exact = sim_bruteforce_topk(spark, sf_dir).select("probe_id", "vec_id")
-    approx = sim_srp_multiprobe_topk(spark, sf_dir).select(
-        F.col("probe_id").alias("p2"), F.col("vec_id").alias("v2")
-    )
-    hit = F.col("v2").isNotNull()
-    return (
-        exact.join(
-            broadcast(approx),
-            (F.col("probe_id") == F.col("p2"))
-            & (F.col("vec_id") == F.col("v2")),
-            "left",
-        )
-        .groupBy("probe_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(hit.cast("int")).alias("n_hit"),
-            F.round(
-                F.sum(hit.cast("int")) / F.count(F.lit(1)), 4
-            ).alias("recall_at_k"),
-        )
-    )
-
-
+sim_multiprobe_recall = _recall(sim_bruteforce_topk, sim_srp_multiprobe_topk)
 _register(
     "sim_multiprobe_recall",
     sim_multiprobe_recall,
-    """
-    WITH exact AS (
-      SELECT probe_id, vec_id FROM ({exact_sql})
-    ),
-    approx AS (
-      SELECT probe_id AS p2, vec_id AS v2 FROM ({approx_sql})
-    )
-    SELECT probe_id,
-           count(*) AS n_exact,
-           sum(CASE WHEN v2 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit,
-           round(sum(CASE WHEN v2 IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / count(*), 4) AS recall_at_k
-    FROM exact
-    LEFT JOIN approx ON probe_id = p2 AND vec_id = v2
-    GROUP BY probe_id
-    """.format(
-        exact_sql=ORACLE["sim_bruteforce_topk"],
-        approx_sql=ORACLE["sim_srp_multiprobe_topk"],
-    ),
+    _recall_sql("sim_bruteforce_topk", "sim_srp_multiprobe_topk"),
 )
 
 
@@ -1772,24 +1708,9 @@ def sim_band_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_cand = pairs.groupBy("band", "n_projs").agg(
         F.count(F.lit(1)).alias("n_cand")
     )
-    directed = pairs.select(
-        "band",
-        "n_projs",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("v1").alias("src"),
-                    F.col("v2").alias("dst"),
-                    F.col("cos"),
-                ),
-                F.struct(
-                    F.col("v2").alias("src"),
-                    F.col("v1").alias("dst"),
-                    F.col("cos"),
-                ),
-            )
-        ).alias("e"),
-    ).select("band", "n_projs", "e.src", "e.dst", "e.cos")
+    directed = pairs.select("band", "n_projs", _both_ways()).select(
+        "band", "n_projs", "e.src", "e.dst", "e.cos"
+    )
     w = Window.partitionBy("band", "n_projs", "src").orderBy(
         F.desc("cos"), F.asc("dst")
     )
@@ -2576,44 +2497,7 @@ def _ivfpq_train_ctes(src: str) -> str:
       FROM e JOIN asn a USING (vec_id) JOIN cents c ON a.cell = c.cell
       CROSS JOIN (SELECT unnest(range({_EMB_DIM})) AS dim) ds
     ),
-    init_cent AS (
-      SELECT vec_id AS k, dim, round(x, 6) AS c
-      FROM rd WHERE vec_id < {_PQ_K}
-    ),
-    assign1 AS (
-      SELECT v.vec_id, ic.dim // {_PQ_D} AS m, ic.k,
-             round(sum((v.x - ic.c) * (v.x - ic.c)), 6) AS d2
-      FROM rd v JOIN init_cent ic ON v.dim = ic.dim
-      GROUP BY 1, 2, 3
-    ),
-    codes1 AS (
-      SELECT vec_id, m, k FROM (
-        SELECT vec_id, m, k,
-               row_number() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d2 ASC, k ASC) AS rn
-        FROM assign1
-      ) WHERE rn = 1
-    ),
-    final_cent AS (
-      SELECT c.m, c.k, v.dim, round(avg(v.x), 6) AS c
-      FROM codes1 c
-      JOIN rd v ON v.vec_id = c.vec_id AND v.dim // {_PQ_D} = c.m
-      GROUP BY 1, 2, 3
-    ),
-    assign2 AS (
-      SELECT v.vec_id, fc.m, fc.k,
-             round(sum((v.x - fc.c) * (v.x - fc.c)), 6) AS d2
-      FROM rd v JOIN final_cent fc ON v.dim = fc.dim
-      GROUP BY 1, 2, 3
-    ),
-    codes2 AS (
-      SELECT vec_id, m, k FROM (
-        SELECT vec_id, m, k,
-               row_number() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d2 ASC, k ASC) AS rn
-        FROM assign2
-      ) WHERE rn = 1
-    )"""
+    {_pq_lloyd_ctes("rd")}"""
 
 
 _IVFPQ_PROBE_SQL = f"""
@@ -2673,52 +2557,11 @@ _register(
 # ---------------------------------------------------------------------------
 
 
-def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    exact = sim_l2_bruteforce_topk(spark, sf_dir).select("probe_id", "vec_id")
-    approx = sim_ivfpq_topk(spark, sf_dir).select(
-        F.col("probe_id").alias("p2"), F.col("vec_id").alias("v2")
-    )
-    hit = F.col("v2").isNotNull()
-    return (
-        exact.join(
-            broadcast(approx),
-            (F.col("probe_id") == F.col("p2"))
-            & (F.col("vec_id") == F.col("v2")),
-            "left",
-        )
-        .groupBy("probe_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(hit.cast("int")).alias("n_hit"),
-            F.round(
-                F.sum(hit.cast("int")) / F.count(F.lit(1)), 4
-            ).alias("recall_at_k"),
-        )
-    )
-
-
+sim_ivfpq_recall = _recall(sim_l2_bruteforce_topk, sim_ivfpq_topk)
 _register(
     "sim_ivfpq_recall",
     sim_ivfpq_recall,
-    """
-    WITH exact AS (
-      SELECT probe_id, vec_id FROM ({exact_sql})
-    ),
-    approx AS (
-      SELECT probe_id AS p2, vec_id AS v2 FROM ({approx_sql})
-    )
-    SELECT probe_id,
-           count(*) AS n_exact,
-           sum(CASE WHEN v2 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit,
-           round(sum(CASE WHEN v2 IS NOT NULL THEN 1 ELSE 0 END) * 1.0
-                 / count(*), 4) AS recall_at_k
-    FROM exact
-    LEFT JOIN approx ON probe_id = p2 AND vec_id = v2
-    GROUP BY probe_id
-    """.format(
-        exact_sql=ORACLE["sim_l2_bruteforce_topk"],
-        approx_sql=ORACLE["sim_ivfpq_topk"],
-    ),
+    _recall_sql("sim_l2_bruteforce_topk", "sim_ivfpq_topk"),
 )
 
 

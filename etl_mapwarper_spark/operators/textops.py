@@ -714,6 +714,20 @@ def _ngrams_all(toks, n: int):
     )
 
 
+# DuckDB: each doc's tokens ``toks(doc_id, t)`` and every bigram
+# instance ``bg(doc_id, b)``, the opening CTEs of the bigram oracles.
+_BIGRAM_CTES = """
+    WITH toks AS (
+      SELECT doc_id, string_split(text, ' ') AS t FROM documents
+    ),
+    bg AS (
+      SELECT doc_id,
+             unnest(list_transform(range(1, greatest(len(t), 1)),
+                                   i -> t[i] || ' ' || t[i+1])) AS b
+      FROM toks WHERE len(t) >= 2
+    ),"""
+
+
 def tx_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
     staged = docs.select(
@@ -745,16 +759,8 @@ def tx_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 _register(
     "tx_repetition_filter",
     tx_repetition_filter,
-    f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    bg AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, greatest(len(t), 1)),
-                                   i -> t[i] || ' ' || t[i+1])) AS b
-      FROM toks WHERE len(t) >= 2
-    ),
+    _BIGRAM_CTES
+    + f"""
     bgc AS (SELECT doc_id, b, count(*) AS c FROM bg GROUP BY 1, 2),
     bga AS (
       SELECT doc_id, max(c) AS top_n, sum(c) AS total FROM bgc GROUP BY 1
@@ -992,6 +998,21 @@ def _cms_bucket(term, i: int):
     )
 
 
+def _cms_cells() -> F.Column:
+    """The ``_CMS_D`` sketch cells of ``term``, struct ``ib(i, b)``."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias("i"),
+                    _cms_bucket(F.col("term"), i).alias("b"),
+                )
+                for i in range(_CMS_D)
+            ]
+        )
+    ).alias("ib")
+
+
 def tx_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
     toks = docs.select(F.explode(tokens(F.col("text"))).alias("term"))
@@ -1008,38 +1029,13 @@ def tx_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Cell values are identical integers; the sketch stays mergeable
     # (sums of sums).
     sketch = (
-        exact.select(
-            "n",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("i"),
-                            _cms_bucket(F.col("term"), i).alias("b"),
-                        )
-                        for i in range(_CMS_D)
-                    ]
-                )
-            ).alias("ib"),
-        )
+        exact.select("n", _cms_cells())
         .groupBy(F.col("ib.i").alias("i"), F.col("ib.b").alias("b"))
         .agg(F.sum("n").alias("c"))
     )
-    probes = top.select(
-        "term",
-        "n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("i"),
-                        _cms_bucket(F.col("term"), i).alias("b"),
-                    )
-                    for i in range(_CMS_D)
-                ]
-            )
-        ).alias("ib"),
-    ).select("term", "n", F.col("ib.i").alias("i"), F.col("ib.b").alias("b"))
+    probes = top.select("term", "n", _cms_cells()).select(
+        "term", "n", F.col("ib.i").alias("i"), F.col("ib.b").alias("b")
+    )
     # the sketch is the bounded artifact (d×w cells) — broadcast side
     from pyspark.sql.functions import broadcast as _bc
 
@@ -1361,16 +1357,8 @@ def tx_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 _register(
     "tx_bigram_logprob",
     tx_bigram_logprob,
-    f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    bg AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, greatest(len(t), 1)),
-                                   i -> t[i] || ' ' || t[i+1])) AS b
-      FROM toks WHERE len(t) >= 2
-    ),
+    _BIGRAM_CTES
+    + f"""
     bgk AS (
       SELECT doc_id, b, string_split(b, ' ')[1] AS w1 FROM bg
     ),
@@ -2496,6 +2484,19 @@ _register(
 _KN_D = 0.75  # absolute discount
 
 
+def _kn_scores(inst: DataFrame, lptab: DataFrame) -> DataFrame:
+    """Per-doc bigram count and mean KN log-prob of the instances
+    ``(doc_id, bh)`` under the model ``lptab(bh, lp)``."""
+    return (
+        inst.join(lptab, "bh")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_bigrams"),
+            F.round(F.avg("lp"), 4).alias("avg_kn_logprob"),
+        )
+    )
+
+
 def tx_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
     inst = _bigram_instances(docs, with_w2=True)
@@ -2528,29 +2529,14 @@ def tx_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if _input_bytes(f"{sf_dir}/documents.parquet") <= _BLM_BCAST_MAX_INPUT:
         lptab = broadcast(lptab)
-    return (
-        inst.join(lptab, "bh")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(F.avg("lp"), 4).alias("avg_kn_logprob"),
-        )
-    )
+    return _kn_scores(inst, lptab)
 
 
 _register(
     "tx_kneser_ney_logprob",
     tx_kneser_ney_logprob,
-    f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    bg AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, greatest(len(t), 1)),
-                                   i -> t[i] || ' ' || t[i+1])) AS b
-      FROM toks WHERE len(t) >= 2
-    ),
+    _BIGRAM_CTES
+    + f"""
     bgk AS (
       SELECT doc_id, b,
              string_split(b, ' ')[1] AS w1,
@@ -2702,14 +2688,7 @@ def tx_kneser_ney_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
         lptab = broadcast(lptab)
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
     inst = _bigram_instances(docs).select("doc_id", "bh")
-    return (
-        inst.join(lptab, "bh")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.round(F.avg("lp"), 4).alias("avg_kn_logprob"),
-        )
-    )
+    return _kn_scores(inst, lptab)
 
 
 _register(
@@ -2719,45 +2698,5 @@ _register(
     # recomputes the model from text (DuckDB sees only the catalog
     # tables); value-equality proves the materialized table IS the
     # interpolated-KN model.
-    f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    bg AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, greatest(len(t), 1)),
-                                   i -> t[i] || ' ' || t[i+1])) AS b
-      FROM toks WHERE len(t) >= 2
-    ),
-    bgk AS (
-      SELECT doc_id, b,
-             string_split(b, ' ')[1] AS w1,
-             string_split(b, ' ')[2] AS w2
-      FROM bg
-    ),
-    c12 AS (
-      SELECT b, any_value(w1) AS w1, any_value(w2) AS w2,
-             count(*) AS c12
-      FROM bgk GROUP BY b
-    ),
-    fwd AS (
-      SELECT w1, sum(c12) AS cdot, count(*) AS n1fwd FROM c12 GROUP BY 1
-    ),
-    bwd AS (
-      SELECT w2, count(*) AS n1bwd FROM c12 GROUP BY 1
-    ),
-    nbi AS (SELECT count(*) AS nbi FROM c12),
-    lptab AS (
-      SELECT c12.b,
-             ln(greatest(c12.c12 - {_KN_D}, 0.0) / fwd.cdot
-                + ({_KN_D} * fwd.n1fwd / fwd.cdot)
-                * (bwd.n1bwd / nbi.nbi)) AS lp
-      FROM c12 JOIN fwd USING (w1) JOIN bwd USING (w2) CROSS JOIN nbi
-    )
-    SELECT doc_id,
-           count(*) AS n_bigrams,
-           round(avg(lp), 4) AS avg_kn_logprob
-    FROM bgk JOIN lptab USING (b)
-    GROUP BY doc_id
-    """,
+    ORACLE["tx_kneser_ney_logprob"],
 )

@@ -228,3 +228,55 @@ def test_layer_objects_surrogate_key_and_year(spark):
     # n=6: bbox null → data.bbox null
     assert by_id["layer-6"]["data"]["bbox"] is None
     assert by_id["layer-3"]["data"]["bbox"] == [-74.1, 40.6, -73.8, 40.9]
+
+
+def test_empty_ring_list_is_logged_in_ansi_and_legacy_sessions(spark, tmp_path):
+    """A mask with an empty ring list gets log records, not a failed job,
+    in an ANSI session (Spark 4's default, so that of a plain
+    ``SparkSession``) and in ``get_spark``'s non-ANSI one alike: the same
+    records, reading 0 coordinates. ANSI is a SQL conf, so a
+    ``newSession`` of the test context with it on runs the ANSI
+    semantics."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from etl_mapwarper_spark.functions.geo import coords_all_valid, geodesic_area
+    from etl_mapwarper_spark.operators.mapwarper import MAP_ITEM_SCHEMA, map_records
+
+    good = [r for r in map_records(spark, SF) if r["maskGeometry"]][:20]
+    empty = {
+        **good[1],
+        "id": 10_000,
+        "maskGeometry": {"type": "Polygon", "coordinates": []},
+    }
+    path = str(tmp_path / "maps.parquet")
+    pq.write_table(
+        pa.Table.from_pylist(good + [empty], schema=to_arrow_schema(MAP_ITEM_SCHEMA)),
+        path,
+    )
+    ansi = spark.newSession()
+    ansi.conf.set("spark.sql.ansi.enabled", "true")
+    outputs = []
+    for session in (ansi, spark):
+        maps = session.read.schema(MAP_ITEM_SCHEMA).parquet(path)
+        logs = {r["id"]: r["logs"] for r in map_logs(maps).collect()}
+        objects = sorted(r["id"] for r in map_objects(maps).collect())
+        relations = sorted(map(tuple, map_relations(maps).collect()))
+        geo = maps.filter("id = 10000").select(
+            self_intersection_count("maskGeometry.coordinates").alias("k"),
+            coords_all_valid("maskGeometry.coordinates").alias("ok"),
+            geodesic_area("maskGeometry.coordinates").alias("a"),
+        ).collect()
+        assert [tuple(r) for r in geo] == [(0, True, 0.0)]
+        outputs.append((logs, objects, relations))
+    assert outputs[0] == outputs[1]
+    logs = outputs[0][0]
+    assert {(l["type"], l["message"]) for l in logs[10_000]} >= {
+        (
+            "mask_coordinates_count",
+            "Mask has 0 coordinates (should have at least 4)",
+        ),
+        ("multipolygon", "Mask is a MultiPolygon with 0 polygons"),
+    }
+    assert "10000" not in outputs[0][1]

@@ -275,6 +275,21 @@ def test_run_pipeline_jobs_stay_in_the_callers_job_group(spark, tmp_path):
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
+def test_repeat_config_runs_no_spark_job(spark):
+    """``_config``/``_e2e_config`` rebuild their records on every call,
+    but the part and nation keys they collect are memoized per sf_dir:
+    a repeat call runs no Spark job."""
+    _config(spark, SF_DIR)
+    sc = spark.sparkContext
+    sc.setJobGroup("repeat-config", "_config and _e2e_config again")
+    try:
+        _config(spark, SF_DIR)
+        _e2e_config(spark, SF_DIR)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert not sc.statusTracker().getJobIdsForGroup("repeat-config")
+
+
 def _fixture_checkpoint(spark, tmp_path, drop=()) -> PipelineDirs:
     """A download-shaped previous step built from the parquet fixtures,
     less the ``drop`` columns of ``maps``."""
