@@ -11,6 +11,8 @@ generator parameters — so editing a formula can never silently
 reuse a stale cache. All writers are pure Python (duckdb / file
 I/O, no Spark jobs at construction) and use write-to-temp +
 ``os.replace`` so concurrent constructions race benignly.
+``duckdb_fixture`` is that whole sequence for parquet fixtures
+derived from one source file.
 """
 
 from __future__ import annotations
@@ -45,3 +47,27 @@ def atomic_write_bytes(path: str, payload: bytes) -> None:
     with open(tmp, "wb") as f:
         f.write(payload)
     os.replace(tmp, path)
+
+
+def duckdb_fixture(kind: str, src: str, salt: tuple, selects: dict) -> dict:
+    """Materialize each DuckDB query in ``selects`` (name → SELECT) as
+    ``<name>.parquet`` once per identity of the parquet file ``src``:
+    its (absolute path, size, mtime_ns) followed by ``salt`` (the
+    formula text and parameters). Returns name → path. The queries
+    may read the source as the view ``src``. Steady state is one
+    ``os.stat`` and one exists-check per file, and no Spark job."""
+    st = os.stat(src)
+    key = content_key(os.path.abspath(src), st.st_size, st.st_mtime_ns, *salt)
+    base = fixture_dir(kind, key)
+    paths = {n: f"{base}/{n}.parquet" for n in selects}
+    if all(os.path.exists(p) for p in paths.values()):
+        return paths
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW src AS SELECT * FROM read_parquet('{src}')")
+    for name, sql in selects.items():
+        tmp = f"{paths[name]}.tmp{os.getpid()}"
+        con.execute(f"COPY ({sql}) TO '{tmp}' (FORMAT PARQUET)")
+        os.replace(tmp, paths[name])
+    return paths

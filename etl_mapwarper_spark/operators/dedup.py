@@ -2672,10 +2672,12 @@ def _bloom_route(
        not a left_semi against the raw one. The r6-r12 semi join was
        silently REORDERED by Catalyst's PushDownLeftSemiAntiJoin:
        the optimizer pushed the semi join below the Bloom probe's
-       cross join (plans/r13/dd_bloom_incremental*_before.txt show
-       LeftSemi under the BroadcastNestedLoopJoin carrying the
-       maybe_dup condition), so the exact confirm ran on EVERY batch
-       row and the Bloom pre-screen pruned nothing — the inverse of
+       cross join (``git show
+       f2710bd:plans/r13/dd_bloom_incremental_before.txt`` and its
+       ``_fp_before.txt`` twin show LeftSemi under the
+       BroadcastNestedLoopJoin carrying the maybe_dup condition; the
+       plan contract in plans/contract.json now fails on that
+       shape), so the exact confirm ran on EVERY batch row and the Bloom pre-screen pruned nothing — the inverse of
        this entry's reason to exist, and corpus-vs-corpus at 100 TB.
        Inner joins are not subject to that rule; the after-plan keeps
        the probe below the confirm, so only "maybe" rows meet the
@@ -2793,38 +2795,19 @@ _register(
 def _landed_fp_table(sf_dir: str) -> str:
     import os
 
-    from ..functions.fixture_cache import content_key, fixture_dir
+    from ..functions.fixture_cache import duckdb_fixture
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = content_key(
-        os.path.abspath(src),
-        st.st_size,
-        st.st_mtime_ns,
-        _INCR_SPLIT,
-        _LANDED_FP_SQL,
-    )
-    out = os.path.join(fixture_dir("landed_fp", key), "landed_fp.parquet")
-    if os.path.exists(out):
-        return out
-    import duckdb
-
-    tmp = f"{out}.tmp{os.getpid()}"
     # DISTINCT here mirrors what a landing pipeline keeps: one row per
     # admitted fingerprint. ORDER BY makes the file byte-deterministic.
-    duckdb.sql(
-        f"""
-        COPY (
-          SELECT DISTINCT
-                 {_LANDED_FP_SQL} AS fp
-          FROM read_parquet('{src}')
-          WHERE doc_id < {_INCR_SPLIT}
-          ORDER BY fp
-        ) TO '{tmp}' (FORMAT PARQUET)
-        """
-    )
-    os.replace(tmp, out)
-    return out
+    return duckdb_fixture(
+        "landed_fp",
+        os.path.join(sf_dir, "documents.parquet"),
+        (_INCR_SPLIT, _LANDED_FP_SQL),
+        {
+            "landed_fp": f"""SELECT DISTINCT {_LANDED_FP_SQL} AS fp
+                FROM src WHERE doc_id < {_INCR_SPLIT} ORDER BY fp"""
+        },
+    )["landed_fp"]
 
 
 def dd_bloom_incremental_fp(spark: SparkSession, sf_dir: str) -> DataFrame:

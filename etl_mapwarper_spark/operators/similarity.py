@@ -2599,33 +2599,14 @@ _register(
 def _ivfpq_index_tables(sf_dir: str) -> dict:
     """Materialize (once per dataset identity) the trained IVF-PQ
     index as three parquet tables; returns their paths. Pure-Python
-    duckdb build, write-to-temp + atomic rename (the _landed_fp_table
-    pattern) — no Spark jobs at construction; steady-state
-    construction is one os.stat."""
+    duckdb build through ``fixture_cache.duckdb_fixture`` — no Spark
+    jobs at construction; steady-state construction is one os.stat."""
     import os
 
-    from ..functions.fixture_cache import content_key, fixture_dir
+    from ..functions.fixture_cache import duckdb_fixture
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
     # the training text IS the version salt: any change to the
     # formula invalidates every cached index
-    formula = _ivfpq_train_ctes("src")
-    key = content_key(
-        os.path.abspath(src), st.st_size, st.st_mtime_ns, formula
-    )
-    base = fixture_dir("ivfpq_index", key)
-    paths = {
-        n: f"{base}/{n}.parquet" for n in ("cells", "codebook", "coded")
-    }
-    if all(os.path.exists(p) for p in paths.values()):
-        return paths
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW src AS SELECT * FROM read_parquet('{src}')"
-    )
     ctes = _ivfpq_train_ctes("src")
     # ORDER BY makes each file byte-deterministic; BIGINT casts give
     # Spark stable long-typed join keys.
@@ -2643,13 +2624,12 @@ def _ivfpq_index_tables(sf_dir: str) -> dict:
             " ORDER BY c2.vec_id, c2.m"
         ),
     }
-    for name, sel in finals.items():
-        tmp = f"{paths[name]}.tmp{os.getpid()}"
-        con.execute(
-            f"COPY (WITH {ctes} {sel}) TO '{tmp}' (FORMAT PARQUET)"
-        )
-        os.replace(tmp, paths[name])
-    return paths
+    return duckdb_fixture(
+        "ivfpq_index",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        (ctes,),
+        {n: f"WITH {ctes} {sel}" for n, sel in finals.items()},
+    )
 
 
 def sim_ivfpq_search_fp(spark: SparkSession, sf_dir: str) -> DataFrame:

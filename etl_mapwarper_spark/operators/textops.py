@@ -2638,27 +2638,15 @@ _KN_LPTAB_SQL_TMPL = """
 def _kn_lptab_table(sf_dir: str) -> str:
     import os
 
-    from ..functions.fixture_cache import content_key, fixture_dir
+    from ..functions.fixture_cache import duckdb_fixture
 
     src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = content_key(
-        os.path.abspath(src),
-        st.st_size,
-        st.st_mtime_ns,
-        _KN_D,
-        _KN_LPTAB_SQL_TMPL,
-    )
-    out = os.path.join(fixture_dir("kn_lptab", key), "kn_lptab.parquet")
-    if os.path.exists(out):
-        return out
-    import duckdb
-
-    tmp = f"{out}.tmp{os.getpid()}"
-    sql = _KN_LPTAB_SQL_TMPL.format(src=src, d=_KN_D)
-    duckdb.sql(f"COPY ({sql}) TO '{tmp}' (FORMAT PARQUET)")
-    os.replace(tmp, out)
-    return out
+    return duckdb_fixture(
+        "kn_lptab",
+        src,
+        (_KN_D, _KN_LPTAB_SQL_TMPL),
+        {"kn_lptab": _KN_LPTAB_SQL_TMPL.format(src=src, d=_KN_D)},
+    )["kn_lptab"]
 
 
 def tx_kneser_ney_fp(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,12 +7,19 @@ exchanges (shuffles) does one run pay, and did anything fall back to
 row-at-a-time Python. ``audit(df)`` parses ``explain("formatted")``
 into a structured summary so those properties can be asserted in
 tests (tests/test_plans.py) or checked interactively while tuning.
+
+``contract_row(df)`` is the checked form: the audit facts plus a
+digest of the plan tree. ``python plan_audit.py`` stores one row per
+``auditable`` entry in plans/contract.json, and
+tests/test_plans.py::test_plan_contract rebuilds and compares them.
 """
 
 from __future__ import annotations
 
+import hashlib
 import io
 import re
+import tempfile
 from contextlib import redirect_stdout
 from dataclasses import dataclass, field
 
@@ -72,8 +79,20 @@ _ARROW_NODES = (
 )
 
 
+def auditable(names) -> list[str]:
+    """The registry entries that carry a plan contract, sorted.
+    Streaming (``st_*``) entries run a stream and REST-source
+    (``src_rest*``) entries start a mock HTTP server when constructed;
+    their plans are pinned in tests/test_streaming.py and
+    tests/test_paginated_rest.py instead."""
+    return sorted(n for n in names if not n.startswith(("st_", "src_rest")))
+
+
 def audit(df: DataFrame) -> PlanAudit:
-    plan = formatted_plan(df)
+    return _audit_text(formatted_plan(df))
+
+
+def _audit_text(plan: str) -> PlanAudit:
     # "(n) NodeName" detail entries are unique per physical node; the
     # tree section repeats names, so count only the numbered entries.
     nodes = re.findall(r"\(\d+\) ([A-Za-z]+)", plan)
@@ -101,7 +120,20 @@ def audit(df: DataFrame) -> PlanAudit:
             n_global += 1
     a.n_global_sorts = n_global
     scans: dict = {}
+    temp_names: dict = {}
+    temp_child = re.compile(
+        rf"(?:file:)?{re.escape(tempfile.gettempdir())}/([^/]+)/?"
+    )
     for loc in re.findall(r"Location: \S+ \[([^\]\n]*)", plan):
+        # a direct child of the temp dir is named per process (a
+        # tempfile.mkdtemp dir, a pid-tagged fixture file): key it by
+        # order of first appearance so the facts match across processes
+        m = temp_child.fullmatch(loc)
+        if m:
+            t = f"<temp{len(temp_names) + 1}>"
+            t = temp_names.setdefault(m.group(1), t)
+            scans[t] = scans.get(t, 0) + 1
+            continue
         # canonical testdata tables render as .../<stem>.parquet;
         # derived inputs (bucketed warehouse tables, compacted dirs)
         # have no .parquet suffix — fall back to the last path
@@ -139,3 +171,35 @@ def audit(df: DataFrame) -> PlanAudit:
         set(re.findall(r"\[codegen id : (\d+)\]", plan))
     )
     return a
+
+
+def tree_digest(plan: str) -> str:
+    """16-hex sha256 of the tree section of a formatted plan (the text
+    before the numbered node details). The details carry partition
+    counts, split sizes and file paths that follow the host and the
+    fixture directory; the tree carries only node names, their order
+    and their nesting. Expression ids (``#12L``) and RDD ids
+    (``RDD[7]``) change from one process to the next, so they are
+    masked wherever a node label prints them."""
+    tree = plan.split("\n\n", 1)[0]
+    tree = re.sub(r"#\d+L?", "#N", tree)
+    tree = re.sub(r"RDD\[\d+\]", "RDD[N]", tree)
+    return hashlib.sha256(tree.encode()).hexdigest()[:16]
+
+
+def contract_row(df: DataFrame) -> dict:
+    """One plans/contract.json row: the audit facts that do not depend
+    on the host, plus ``tree_digest``."""
+    plan = formatted_plan(df)
+    a = _audit_text(plan)
+    return {
+        "n_exchanges": a.n_exchanges,
+        "n_broadcast_joins": a.n_broadcast_joins,
+        "n_shuffle_joins": a.n_shuffle_joins,
+        "n_sorts": a.n_sorts,
+        "n_global_sorts": a.n_global_sorts,
+        "table_scans": dict(sorted(a.table_scans.items())),
+        "arrow_python_nodes": sorted(a.arrow_python_nodes),
+        "has_row_python": a.has_row_python,
+        "tree": tree_digest(plan),
+    }

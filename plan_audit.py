@@ -1,27 +1,30 @@
-"""Generate PLAN_AUDIT.md: the physical-plan facts for every batch
-query in the driver gate.
+"""Write plans/contract.json, the checked plan contract, and render
+PLAN_AUDIT.md from it.
 
-Correctness is the oracle's job; this artifact records the properties
+Correctness is the oracle's job; the contract records the properties
 that decide 100 TB behavior — shuffle count, join strategy, sorts,
-and Python execution mode — per query, from `explain("formatted")`
-via ``plans.audit``. Plan shape is SF-independent, so the audit runs
-at sf0.001. Streaming and REST-source queries execute side effects on
-construction and are excluded (their plan properties are pinned in
-tests/test_streaming.py and tests/test_paginated_rest.py).
+table rescans and Python execution mode — per auditable entry, from
+``explain("formatted")`` via ``plans.audit.contract_row``, plus a
+digest of each plan tree. Plan shape is SF-independent, so the
+contract is built at sf0.001. tests/test_plans.py::test_plan_contract
+rebuilds every row and fails on any difference.
 
-Run: ``python plan_audit.py`` (rewrites PLAN_AUDIT.md).
+Run: ``python plan_audit.py`` (rewrites plans/contract.json and
+PLAN_AUDIT.md). A change that moves a row reruns it and says which
+entries moved and why.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-from etl_mapwarper_spark.plans.audit import audit  # noqa: E402
-from etl_mapwarper_spark.session import get_spark  # noqa: E402
-
+CONTRACT_PATH = os.path.join(ROOT, "plans", "contract.json")
+DOC_PATH = os.path.join(ROOT, "PLAN_AUDIT.md")
 SF_DIR = "/root/testdata/sf0.001"
 
 # Iterative operators checkpoint lineage between rounds, so the final
@@ -80,51 +83,51 @@ ITERATIVE_NOTES = {
 }
 
 
-def main() -> None:
-    import __spark_entry__ as entrymod
+def load_contract() -> dict:
+    with open(CONTRACT_PATH) as f:
+        return json.load(f)
 
-    spark = get_spark("plan_audit")
-    queries = entrymod.queries()
-    names = sorted(
-        k for k in queries if not k.startswith(("st_", "src_rest"))
-    )
+
+def dump_contract(rows: dict) -> str:
+    """One line per entry, so a diff names the entries that moved."""
+    lines = [f"  {json.dumps(n)}: {json.dumps(rows[n])}" for n in sorted(rows)]
+    return "{\n" + ",\n".join(lines) + "\n}\n"
+
+
+def render(contract: dict) -> str:
+    """PLAN_AUDIT.md as a pure function of the contract."""
     rows = []
-    for name in names:
-        a = audit(queries[name](spark, SF_DIR))
-        ex = str(a.n_exchanges) + ("*" if name in ITERATIVE_NOTES else "")
+    for name, c in sorted(contract.items()):
+        ex = str(c["n_exchanges"]) + ("*" if name in ITERATIVE_NOTES else "")
         # repeated scans only (a single scan per table is the norm);
         # each repeat of a corpus-scale table is one extra full corpus
-        # pass at 100 TB — r11 audit column
-        # '×' separator, not 'x': the count is parsed back out of this
-        # cell below, and 'x' can appear inside a \w+ table stem
-        # (r11 advice item)
-        rescans = (
-            ",".join(
-                f"{t}×{n}"
-                for t, n in sorted(a.table_scans.items())
-                if n >= 2
-            )
-            or "-"
-        )
+        # pass at 100 TB — r11 audit column. '×', not 'x': a table
+        # stem can contain 'x'.
+        rescans = [(t, n) for t, n in sorted(c["table_scans"].items()) if n >= 2]
         rows.append(
             (
                 name,
                 ex,
-                a.n_broadcast_joins,
-                a.n_shuffle_joins,
-                a.n_sorts,
-                a.n_global_sorts,
-                rescans,
-                ",".join(sorted(set(a.arrow_python_nodes))) or "-",
-                "YES" if a.has_row_python else "no",
+                c["n_broadcast_joins"],
+                c["n_shuffle_joins"],
+                c["n_sorts"],
+                c["n_global_sorts"],
+                ",".join(f"{t}×{n}" for t, n in rescans) or "-",
+                ",".join(sorted(set(c["arrow_python_nodes"]))) or "-",
+                "YES" if c["has_row_python"] else "no",
             )
         )
-
+    n_rescan3 = sum(
+        1 for c in contract.values() if any(n >= 3 for n in c["table_scans"].values())
+    )
+    n_global = [c["n_global_sorts"] for c in contract.values()]
     out = [
         "# PLAN AUDIT — physical-plan facts per driver-gate query",
         "",
-        "Generated by `python plan_audit.py` from `explain(\"formatted\")`",
-        "via `etl_mapwarper_spark.plans.audit`. Exchanges = shuffles one",
+        "Rendered by `python plan_audit.py` from `plans/contract.json`,",
+        "the plan contract that `tests/test_plans.py::test_plan_contract`",
+        "checks, built from `explain(\"formatted\")` via",
+        "`etl_mapwarper_spark.plans.audit`. Exchanges = shuffles one",
         "run pays (AQE may coalesce partitions but not remove an",
         "exchange); broadcast vs shuffle joins shows which joins avoid",
         "moving the fact; row-at-a-time Python (`BatchEvalPython`) is",
@@ -135,25 +138,15 @@ def main() -> None:
         "| query | exchanges | bcast joins | shuffle joins | sorts | global sorts | table rescans | arrow python | row python |",
         "|---|---|---|---|---|---|---|---|---|",
     ]
-    for r in rows:
-        out.append("| " + " | ".join(str(x) for x in r) + " |")
-    total_ex = sum(int(str(r[1]).rstrip("*")) for r in rows)
-    n_rescan3 = sum(
-        1
-        for r in rows
-        if any(
-            int(p.rsplit("×", 1)[1]) >= 3
-            for p in r[6].split(",")
-            if "×" in p
-        )
-    )
+    out += ["| " + " | ".join(str(x) for x in r) + " |" for r in rows]
     out += [
         "",
-        f"**{len(rows)} queries audited; {total_ex} total exchanges; "
-        f"{sum(1 for r in rows if r[8] == 'YES')} row-at-a-time Python "
-        "nodes (must stay 0); "
-        f"{sum(r[5] for r in rows)} global sorts across "
-        f"{sum(1 for r in rows if r[5])} plans (r10 audit: every one "
+        f"**{len(rows)} queries audited; "
+        f"{sum(c['n_exchanges'] for c in contract.values())} total exchanges; "
+        f"{sum(c['has_row_python'] for c in contract.values())} row-at-a-time "
+        "Python nodes (must stay 0); "
+        f"{sum(n_global)} global sorts across "
+        f"{sum(1 for n in n_global if n)} plans (r10 audit: every one "
         "is over a BOUNDED relation — aggregate outputs or lateral "
         "top-k — never the corpus); "
         f"{n_rescan3} plans re-scan a table ≥3× (r11 audit: every one "
@@ -169,12 +162,35 @@ def main() -> None:
         "construction:",
         "",
     ]
-    for name, note in sorted(ITERATIVE_NOTES.items()):
-        out.append(f"- `{name}` — {note}")
-    out.append("")
-    with open(os.path.join(os.path.dirname(__file__), "PLAN_AUDIT.md"), "w") as f:
-        f.write("\n".join(out))
-    print(f"PLAN_AUDIT.md: {len(rows)} queries, {total_ex} exchanges")
+    out += [f"- `{n}` — {note}" for n, note in sorted(ITERATIVE_NOTES.items())]
+    return "\n".join(out) + "\n"
+
+
+def build_contract() -> dict:
+    """Every auditable entry's contract row, built in name order in one
+    new session. A plan can read data that an entry built earlier in
+    the same session persisted (q78_map_type_aggs reads the contingency
+    aggregate q85_chi2_independence caches), so rows compare only
+    between builds that start from the same session state."""
+    import __spark_entry__ as entrymod
+    from etl_mapwarper_spark.plans.audit import auditable, contract_row
+    from etl_mapwarper_spark.session import get_spark
+
+    spark = get_spark("plan_audit")
+    queries = entrymod.queries()
+    return {
+        name: contract_row(queries[name](spark, SF_DIR))
+        for name in auditable(queries)
+    }
+
+
+def main() -> None:
+    contract = build_contract()
+    with open(CONTRACT_PATH, "w") as f:
+        f.write(dump_contract(contract))
+    with open(DOC_PATH, "w") as f:
+        f.write(render(contract))
+    print(f"plans/contract.json, PLAN_AUDIT.md: {len(contract)} queries")
 
 
 if __name__ == "__main__":

@@ -11,49 +11,83 @@ and no operator may fall back to row-at-a-time Python
 
 from __future__ import annotations
 
-import io
+import functools
+import json
 import os
 import re
+import subprocess
 import sys
-from contextlib import redirect_stdout
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+import plan_audit  # noqa: E402
+from etl_mapwarper_spark.plans.audit import (  # noqa: E402
+    auditable,
+    formatted_plan,
+)
 from tests.conftest import SF_DIR  # noqa: E402
 
 ALL_QUERIES = entrymod.queries()
-
-# Streaming queries execute a stream when constructed; REST-source
-# queries spin up a mock HTTP server. Both are exercised by their own
-# tests — the plan audit sticks to pure batch plans.
-AUDITED = sorted(
-    k
-    for k in ALL_QUERIES
-    if not k.startswith(("st_", "src_rest"))
-)
+AUDITED = auditable(ALL_QUERIES)
+CONTRACT = plan_audit.load_contract()
 
 
-def plan_of(spark, name: str) -> str:
-    df = ALL_QUERIES[name](spark, SF_DIR)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+@functools.cache
+def _contract_build() -> subprocess.CompletedProcess:
+    """plans/contract.json rebuilt by ``plan_audit.build_contract`` in a
+    new process, once per test session: this session has already run
+    other entries, and their persisted frames can show up in a later
+    entry's plan."""
+    return subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import json, plan_audit; "
+            "print(json.dumps(plan_audit.build_contract()))",
+        ],
+        cwd=plan_audit.ROOT,
+        capture_output=True,
+        text=True,
+    )
+
+
+def _rebuilt_row(name: str) -> dict:
+    proc = _contract_build()
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return json.loads(proc.stdout.splitlines()[-1])[name]
 
 
 @pytest.mark.parametrize("name", AUDITED)
-def test_no_row_at_a_time_python(spark, name):
-    plan = plan_of(spark, name)
-    assert not re.search(r"\bBatchEvalPython\b", plan), (
+def test_no_row_at_a_time_python(name):
+    assert not _rebuilt_row(name)["has_row_python"], (
         f"{name}: row-at-a-time Python UDF in plan — use a pandas_udf"
     )
 
 
+@pytest.mark.parametrize("name", AUDITED)
+def test_plan_contract(name):
+    """The rebuilt plan must match ``name``'s row in plans/contract.json:
+    the audit facts and the digest of the plan tree. A change that
+    moves a row reruns ``python plan_audit.py`` and says in CHANGES.md
+    which entries moved and why."""
+    assert _rebuilt_row(name) == CONTRACT.get(name), (
+        f"{name}: plan differs from plans/contract.json"
+    )
+
+
+def test_contract_covers_auditable_entries_and_renders_doc():
+    """Every auditable entry has a contract row, and PLAN_AUDIT.md is
+    the rendering of plans/contract.json — no Spark session needed."""
+    assert sorted(CONTRACT) == AUDITED
+    with open(plan_audit.DOC_PATH) as f:
+        assert f.read() == plan_audit.render(CONTRACT)
+
+
 def test_q01_filter_pushdown_and_column_pruning(spark):
-    plan = plan_of(spark, "q01_pricing_summary")
+    plan = formatted_plan(ALL_QUERIES["q01_pricing_summary"](spark, SF_DIR))
     assert "PushedFilters: [IsNotNull(l_shipdate)" in plan or re.search(
         r"PushedFilters: \[.*l_shipdate", plan
     ), "shipdate filter must reach the parquet scan"
@@ -64,14 +98,14 @@ def test_q01_filter_pushdown_and_column_pruning(spark):
 
 
 def test_q03_dim_filter_pushdown(spark):
-    plan = plan_of(spark, "q03_top_revenue_orders")
+    plan = formatted_plan(ALL_QUERIES["q03_top_revenue_orders"](spark, SF_DIR))
     assert re.search(r"EqualTo\(c_mktsegment,BUILDING\)", plan), (
         "dimension filter must be pushed into the customer scan"
     )
 
 
 def test_q05_broadcasts_all_dims(spark):
-    plan = plan_of(spark, "q05_region_revenue")
+    plan = formatted_plan(ALL_QUERIES["q05_region_revenue"](spark, SF_DIR))
     n_broadcast = len(re.findall(r"BroadcastHashJoin", plan))
     assert n_broadcast >= 4, (
         f"q05 must broadcast customer/supplier/nation/region, saw "
@@ -84,7 +118,7 @@ def test_q05_broadcasts_all_dims(spark):
 
 
 def test_dd_ngram_jaccard_prefix_filtered_join(spark):
-    plan = plan_of(spark, "dd_ngram_jaccard")
+    plan = formatted_plan(ALL_QUERIES["dd_ngram_jaccard"](spark, SF_DIR))
     # shuffle keys must be 8-byte xxhash64 values, never raw shingles
     assert "xxhash64" in plan.lower(), "shingles must be hashed pre-shuffle"
     # PPJoin shape: the candidate self-join runs over SLICED prefixes
@@ -104,7 +138,7 @@ def test_dd_ngram_jaccard_prefix_filtered_join(spark):
 
 
 def test_dd_simhash_single_shuffle(spark):
-    plan = plan_of(spark, "dd_simhash")
+    plan = formatted_plan(ALL_QUERIES["dd_simhash"](spark, SF_DIR))
     # one Exchange for the small-input repartition + one for the groupBy
     # (formatted explain repeats node names in the detail section, so
     # count the numbered detail entries, each unique per node)
@@ -119,7 +153,7 @@ def test_tx_bigram_logprob_single_corpus_shuffle(spark):
     aggregate — the score join must NOT shuffle the instance stream.
     (Past the gate the hint drops and AQE owns the join — 100 TB
     shape; this pin runs at gated SF.)"""
-    plan = plan_of(spark, "tx_bigram_logprob")
+    plan = formatted_plan(ALL_QUERIES["tx_bigram_logprob"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     assert not re.search(r"SortMergeJoin|ShuffledHashJoin", body), (
         "score join must broadcast the vocab²-bounded side at gated SF"
@@ -148,7 +182,7 @@ def test_dd_levenshtein_blocked_plan_shape(spark):
     levenshtein comparator runs inside the join/filter (no extra
     stage), and the only hash-exchange is the small-input round-robin
     repartition from load_table(parallelize=True)."""
-    plan = plan_of(spark, "dd_levenshtein_blocked")
+    plan = formatted_plan(ALL_QUERIES["dd_levenshtein_blocked"](spark, SF_DIR))
     n_joins = len(
         re.findall(r"\(\d+\) (?:BroadcastHash|ShuffledHash|SortMerge)Join", plan)
     )
@@ -160,7 +194,7 @@ def test_dd_levenshtein_blocked_plan_shape(spark):
 
 
 def test_q22_asof_uses_partial_agg_not_window(spark):
-    plan = plan_of(spark, "q22_asof_last_order")
+    plan = formatted_plan(ALL_QUERIES["q22_asof_last_order"](spark, SF_DIR))
     assert "Window" not in plan, "as-of should aggregate, not sort a window"
     # bigint-packed argmax keeps the buffer primitive → HashAggregate
     # partial+final (max(struct) would fall back to SortAggregate)
@@ -169,9 +203,9 @@ def test_q22_asof_uses_partial_agg_not_window(spark):
 
 
 def test_pandas_ops_are_arrow_batched(spark):
-    plan = plan_of(spark, "pd_zscore")
+    plan = formatted_plan(ALL_QUERIES["pd_zscore"](spark, SF_DIR))
     assert "FlatMapGroupsInPandas" in plan
-    plan = plan_of(spark, "pd_weighted_avg")
+    plan = formatted_plan(ALL_QUERIES["pd_weighted_avg"](spark, SF_DIR))
     # node name is ArrowAggregatePython on Spark 4.1+, AggregateInPandas
     # on earlier releases
     assert "AggregateInPandas" in plan or "ArrowAggregatePython" in plan
@@ -202,10 +236,7 @@ def test_bucketed_join_has_no_exchange(spark):
         read_bucketed(spark, "b_lineitem"),
         F.col("o_orderkey") == F.col("l_orderkey"),
     )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        j.explain("formatted")
-    plan = buf.getvalue()
+    plan = formatted_plan(j)
     assert re.search(r"SortMergeJoin|ShuffledHashJoin", plan)
     n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
     assert n_exchange == 0, f"bucketed join must not shuffle: {plan}"
@@ -230,10 +261,7 @@ def test_partitioned_sink_prunes_partitions(spark):
     df = read_partitioned(spark, path).filter(
         F.col("event_type") == "click"
     )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = formatted_plan(df)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "event_type" in m.group(1), plan
     # the predicate must NOT remain as a post-scan data filter
@@ -270,7 +298,7 @@ def test_plan_audit_utility(spark):
 
 
 def test_q45_histogram_single_shuffle_and_pruned_scan(spark):
-    plan = plan_of(spark, "q45_price_histogram")
+    plan = formatted_plan(ALL_QUERIES["q45_price_histogram"](spark, SF_DIR))
     read_schema = re.search(r"ReadSchema: struct<([^>]*)>", plan).group(1)
     assert read_schema == "l_extendedprice:double", (
         f"histogram must scan only the bucketed column, read {read_schema}"
@@ -282,7 +310,9 @@ def test_q45_histogram_single_shuffle_and_pruned_scan(spark):
 
 
 def test_q46_grid_join_never_shuffles(spark):
-    plan = plan_of(spark, "q46_region_priority_matrix")
+    plan = formatted_plan(
+        ALL_QUERIES["q46_region_priority_matrix"](spark, SF_DIR)
+    )
     assert "BroadcastNestedLoopJoin" in plan, (
         "dimension cross product must be a broadcast nested loop"
     )
@@ -292,7 +322,7 @@ def test_q46_grid_join_never_shuffles(spark):
 
 
 def test_q51_multi_distinct_uses_expand(spark):
-    plan = plan_of(spark, "q51_multi_distinct")
+    plan = formatted_plan(ALL_QUERIES["q51_multi_distinct"](spark, SF_DIR))
     assert "Expand" in plan, (
         "multiple count(distinct) must plan via Expand (single scan), "
         "not separate scans"
@@ -300,7 +330,7 @@ def test_q51_multi_distinct_uses_expand(spark):
 
 
 def test_ds_hash_sample_is_single_shuffle(spark):
-    plan = plan_of(spark, "ds_hash_sample")
+    plan = formatted_plan(ALL_QUERIES["ds_hash_sample"](spark, SF_DIR))
     n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
     assert n_exchange <= 1, (
         "hash-bucket sampling is a narrow predicate + one agg shuffle, "
@@ -310,7 +340,7 @@ def test_ds_hash_sample_is_single_shuffle(spark):
 
 
 def test_q48_merge_is_one_join_pass(spark):
-    plan = plan_of(spark, "q48_snapshot_merge")
+    plan = formatted_plan(ALL_QUERIES["q48_snapshot_merge"](spark, SF_DIR))
     assert re.search(r"SortMergeJoin.*FullOuter|FullOuter.*SortMergeJoin",
                      plan, re.S), "snapshot merge must be a full-outer join"
     n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
@@ -324,7 +354,7 @@ def test_q62_never_self_joins_lineitem(spark):
     # decorrelated plan must scan lineitem exactly once (orders once,
     # supplier once) and express both EXISTS conditions as one
     # per-order aggregate.
-    plan = plan_of(spark, "q62_waiting_suppliers")
+    plan = formatted_plan(ALL_QUERIES["q62_waiting_suppliers"](spark, SF_DIR))
     n_scans = len(re.findall(r"\(\d+\) Scan parquet\b", plan))
     assert n_scans == 3, (
         f"q62 must scan lineitem/orders/supplier once each, saw {n_scans}"
@@ -334,7 +364,7 @@ def test_q62_never_self_joins_lineitem(spark):
 def test_q63_correlated_min_is_one_exchange(spark):
     # the correlated min becomes a window over l_partkey: one exchange
     # for the fact; part and supplier broadcast.
-    plan = plan_of(spark, "q63_min_cost_supplier")
+    plan = formatted_plan(ALL_QUERIES["q63_min_cost_supplier"](spark, SF_DIR))
     n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
     assert n_exchange <= 2, (
         f"q63 is one fact exchange (+ distinct reuse), saw {n_exchange}"
@@ -347,7 +377,7 @@ def test_q63_correlated_min_is_one_exchange(spark):
 def test_q65_having_in_aggregates_once(spark):
     # the IN-subquery is the per-order aggregate itself — lineitem
     # scanned once, no lineitem-vs-lineitem semi join.
-    plan = plan_of(spark, "q65_big_orders")
+    plan = formatted_plan(ALL_QUERIES["q65_big_orders"](spark, SF_DIR))
     n_scans = len(re.findall(r"\(\d+\) Scan parquet\b", plan))
     assert n_scans == 3, (
         f"q65 must scan lineitem/orders/customer once each, saw {n_scans}"
@@ -357,7 +387,7 @@ def test_q65_having_in_aggregates_once(spark):
 def test_q67_scd2_single_exchange(spark):
     # change-flag window, running version window, per-version agg and
     # valid_to lead all reuse the o_custkey hash partitioning.
-    plan = plan_of(spark, "q67_scd2_intervals")
+    plan = formatted_plan(ALL_QUERIES["q67_scd2_intervals"](spark, SF_DIR))
     n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
     assert n_exchange == 1, (
         f"SCD2 build is a single shuffle on the entity key, saw {n_exchange}"
@@ -366,7 +396,7 @@ def test_q67_scd2_single_exchange(spark):
 
 
 def test_q68_cdc_diff_is_one_full_outer_join(spark):
-    plan = plan_of(spark, "q68_cdc_diff")
+    plan = formatted_plan(ALL_QUERIES["q68_cdc_diff"](spark, SF_DIR))
     assert re.search(r"FullOuter", plan), "CDC diff must be full-outer"
     n_exchange = len(re.findall(r"\(\d+\) Exchange\b", plan))
     assert n_exchange <= 2, (
@@ -418,7 +448,7 @@ def test_bm25_no_corpus_broadcast_and_takeordered_topk(spark):
     a = audit(df)
     assert a.n_broadcast_joins <= 2, "only df_ and consts may broadcast"
     assert a.n_shuffle_joins == 0
-    plan = plan_of(spark, "tx_bm25_topk")
+    plan = formatted_plan(ALL_QUERIES["tx_bm25_topk"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, "top-k must be TakeOrdered"
     # the only Sort allowed is inside the k-row rank window, and the
     # global-sort count must be zero (TakeOrdered replaces it)
@@ -428,7 +458,7 @@ def test_bm25_no_corpus_broadcast_and_takeordered_topk(spark):
 def test_q39_ntile_has_no_global_window(spark):
     """Exact ntile must come from range-bucketed row_number + offsets —
     never an unpartitioned window funneling the table to one reducer."""
-    plan = plan_of(spark, "q39_ntile_deciles")
+    plan = formatted_plan(ALL_QUERIES["q39_ntile_deciles"](spark, SF_DIR))
     assert "Exchange SinglePartition" not in plan, (
         "q39 fell back to a single-reducer global window"
     )
@@ -438,7 +468,7 @@ def test_q39_ntile_has_no_global_window(spark):
 def test_q32_salt_reaches_a_real_shuffle(spark):
     """The salting demo must exchange the fact side on (key, salt) via
     a shuffle join — a broadcast join has no shuffle to de-skew."""
-    plan = plan_of(spark, "q32_salted_skew_join")
+    plan = formatted_plan(ALL_QUERIES["q32_salted_skew_join"](spark, SF_DIR))
     assert re.search(r"ShuffledHashJoin|SortMergeJoin", plan), (
         "q32 must be a shuffle join for the salt to matter"
     )
@@ -496,7 +526,7 @@ def test_dedup_apply_single_shuffle_no_join(spark):
     a = audit(ALL_QUERIES["dd_dedup_apply"](spark, SF_DIR))
     assert a.is_join_free
     assert a.n_exchanges <= 2  # parallelize repartition + group-key shuffle
-    plan = plan_of(spark, "dd_dedup_apply")
+    plan = formatted_plan(ALL_QUERIES["dd_dedup_apply"](spark, SF_DIR))
     assert "Exchange SinglePartition" not in plan
 
 
@@ -512,7 +542,7 @@ def test_lsh_recall_joins_only_topk_outputs(spark):
 def test_containment_uses_hashed_index_join(spark):
     """Containment rides the same 8-byte hashed-shingle index join as
     Jaccard — shuffle keys are xxhash64 longs, never raw shingles."""
-    plan = plan_of(spark, "dd_containment")
+    plan = formatted_plan(ALL_QUERIES["dd_containment"](spark, SF_DIR))
     assert "xxhash64" in plan
     from etl_mapwarper_spark.plans import audit
 
@@ -524,7 +554,7 @@ def test_containment_uses_hashed_index_join(spark):
 def test_q47_rank_dist_has_no_global_window(spark):
     """percent_rank/cume_dist over a total order are arithmetic on the
     exact distributed row number — never a single-reducer window."""
-    plan = plan_of(spark, "q47_supplier_rank_dist")
+    plan = formatted_plan(ALL_QUERIES["q47_supplier_rank_dist"](spark, SF_DIR))
     assert "Exchange SinglePartition" not in plan
 
 
@@ -638,7 +668,9 @@ def test_q77_notin_compiles_to_null_aware_anti_joins(spark):
     """NOT IN must become anti joins that honor three-valued logic —
     the null-poisoned list key (CASE ... NULL) must appear as a join
     key, not be filtered away into a plain anti join."""
-    plan = plan_of(spark, "q77_notin_null_semantics")
+    plan = formatted_plan(
+        ALL_QUERIES["q77_notin_null_semantics"](spark, SF_DIR)
+    )
     assert plan.count("LeftAnti") >= 2, "both NOT IN branches anti-join"
     assert re.search(r"CASE WHEN.*THEN null.*END", plan, re.IGNORECASE), (
         "null-producing list expression must survive into the join key"
@@ -650,7 +682,7 @@ def test_pq_search_plan_is_join_free(spark):
     explode + one top-k window: no joins, nothing corpus-sized
     broadcast, no Python. (The training jobs run eagerly inside the
     operator; this pins the SEARCH plan the index serves.)"""
-    plan = plan_of(spark, "sim_pq_topk")
+    plan = formatted_plan(ALL_QUERIES["sim_pq_topk"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     assert "Join" not in body, "PQ search must not join"
     assert not re.search(r"\bBatchEvalPython\b", plan)
@@ -661,7 +693,7 @@ def test_pq_search_plan_is_join_free(spark):
 def test_pack_sequences_single_window_shuffle(spark):
     """Packing = one per-shard window; the downstream aggregate must
     reuse the window's hash partitioning (same shard key)."""
-    plan = plan_of(spark, "ds_pack_sequences")
+    plan = formatted_plan(ALL_QUERIES["ds_pack_sequences"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", body))
     assert n_exchanges <= 2, f"pack_sequences exchanges: {n_exchanges}"
@@ -671,7 +703,7 @@ def test_pack_sequences_single_window_shuffle(spark):
 def test_epoch_shuffle_is_single_aggregate(spark):
     """Epoch placement is a narrow expression; the accounting report
     is one hash aggregate — no sort, no join, no extra shuffle."""
-    plan = plan_of(spark, "ds_epoch_shuffle")
+    plan = formatted_plan(ALL_QUERIES["ds_epoch_shuffle"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     assert len(re.findall(r"\(\d+\) Exchange\b", body)) <= 1
     assert "Join" not in body
@@ -680,7 +712,7 @@ def test_epoch_shuffle_is_single_aggregate(spark):
 def test_cdc_chunks_is_shuffle_free_scan(spark):
     """CDC boundary counting is a pure per-row expression — the only
     exchange allowed is the opt-in small-input repartition."""
-    plan = plan_of(spark, "dd_cdc_chunks")
+    plan = formatted_plan(ALL_QUERIES["dd_cdc_chunks"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     assert len(re.findall(r"\(\d+\) Exchange\b", body)) <= 1
     assert "Join" not in body
@@ -695,7 +727,7 @@ def test_pagerank_salted_join(spark):
     the per-round equi-join keys on (src, _salt). At 100 TB a single
     boilerplate dup-cluster otherwise lands deg(hub) rows on ONE task
     in EVERY round."""
-    plan = plan_of(spark, "dd_pagerank_centrality")
+    plan = formatted_plan(ALL_QUERIES["dd_pagerank_centrality"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     assert "_salt" in body, "edge join must key on (src, _salt)"
     # the replication side: 8-row salt range, broadcast cross join —
@@ -715,9 +747,6 @@ def test_triangle_count_degree_oriented(spark):
     (b) pin the final plan's budget (5 exchanges / 2 joins; the
     pre-checkpoint union form re-derived the join subtree 3× for 13
     exchanges / 6 joins)."""
-    import io
-    from contextlib import redirect_stdout
-
     from pyspark.sql import functions as F
 
     from etl_mapwarper_spark.operators.dedup import oriented_edges
@@ -725,10 +754,7 @@ def test_triangle_count_degree_oriented(spark):
     und_rows = [(0, i) for i in range(1, 6)] + [(i, 0) for i in range(1, 6)]
     und_rows += [(1, 2), (2, 1)]
     und = spark.createDataFrame(und_rows, "u long, v long")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        oriented_edges(und).explain("formatted")
-    helper_plan = buf.getvalue()
+    helper_plan = formatted_plan(oriented_edges(und))
     assert re.search(r"\bdu\b", helper_plan) and re.search(
         r"\bdv\b", helper_plan
     ), "orientation must compare endpoint degrees (du/dv)"
@@ -737,7 +763,7 @@ def test_triangle_count_degree_oriented(spark):
     got = {(r.u, r.v) for r in oriented_edges(und).collect()}
     assert got == {(i, 0) for i in range(1, 6)} | {(1, 2)}
 
-    plan = plan_of(spark, "dd_triangle_count")
+    plan = formatted_plan(ALL_QUERIES["dd_triangle_count"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     n_join = len(re.findall(r"\(\d+\) (?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", body))
     assert n_join <= 2, f"wedge + closure joins only, saw {n_join}"
@@ -748,7 +774,7 @@ def test_pagerank_never_broadcasts_corpus(spark):
     """PageRank rounds are edge-proportional shuffle joins — at 100 TB
     neither ranks nor edges may be hint-broadcast (both scale with the
     graph)."""
-    plan = plan_of(spark, "dd_pagerank_centrality")
+    plan = formatted_plan(ALL_QUERIES["dd_pagerank_centrality"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     assert "BroadcastHashJoin" not in body or "SortMergeJoin" in body or (
         # at sf0.001 Catalyst may legitimately pick broadcast from real
@@ -823,7 +849,7 @@ def test_llm_pipeline_exchange_budget_and_no_row_python(spark):
     carries NO hint since r4 — at small SF stats still broadcast it,
     at adversarial overlap AQE may legitimately shuffle it), and no
     Python anywhere."""
-    plan = plan_of(spark, "ds_llm_pipeline")
+    plan = formatted_plan(ALL_QUERIES["ds_llm_pipeline"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", body))
     assert n_exchanges <= 8, f"flagship exchange budget blown: {n_exchanges}"
@@ -837,7 +863,7 @@ def test_src_bucketed_join_no_shuffle(spark):
     """Bucketed co-located join: both scans read bucketed tables and
     the SMJ runs with no Exchange anywhere below the final aggregation
     — the join's shuffle was paid once at table-write time."""
-    plan = plan_of(spark, "src_bucketed_join")
+    plan = formatted_plan(ALL_QUERIES["src_bucketed_join"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     assert "SortMergeJoin" in body
     assert len(re.findall(r"Bucketed: true", body)) == 2, (
@@ -852,7 +878,9 @@ def test_src_partitioned_pruning_partition_filter(spark):
     """Partition-layout pruning: the event_type predicate must resolve
     as a PartitionFilter (directory pruning), never a data filter, and
     the partition column must not appear in the read schema."""
-    plan = plan_of(spark, "src_partitioned_pruning")
+    plan = formatted_plan(
+        ALL_QUERIES["src_partitioned_pruning"](spark, SF_DIR)
+    )
     m = re.search(r"PartitionFilters: \[[^\]]*event_type[^\]]*\]", plan)
     assert m, "event_type must prune partitions at the scan"
     assert not re.search(r"DataFilters: \[[^\]]*event_type", plan), (
@@ -864,7 +892,7 @@ def test_tx_hashed_linear_score_zero_shuffle_inference(spark):
     """Model inference as column math: the hashed-linear scoring pass
     must be a narrow scan — no joins, no aggregation exchange beyond
     the small-input repartition, and no Python."""
-    plan = plan_of(spark, "tx_hashed_linear_score")
+    plan = formatted_plan(ALL_QUERIES["tx_hashed_linear_score"](spark, SF_DIR))
     assert "join" not in plan.lower()
     n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", plan))
     assert n_exchanges <= 1, f"scoring must not shuffle: {n_exchanges}"
@@ -875,7 +903,7 @@ def test_src_dpp_join_dynamic_pruning(spark):
     """The partitioned-fact ⋈ runtime-dim join must seed a
     DynamicPruning subquery on the fact scan's partition filters —
     directory pruning decided at runtime from the broadcast dim."""
-    plan = plan_of(spark, "src_dpp_join")
+    plan = formatted_plan(ALL_QUERIES["src_dpp_join"](spark, SF_DIR))
     assert "dynamicpruning" in plan.lower(), (
         "fact scan must carry a dynamic partition pruning filter"
     )
@@ -885,7 +913,7 @@ def test_dq_expectations_single_scan(spark):
     """The whole row-level rule set must compile into ONE
     conditional-aggregation pass — adding a rule adds a column, never
     a second scan or a join."""
-    plan = plan_of(spark, "dq_expectations")
+    plan = formatted_plan(ALL_QUERIES["dq_expectations"](spark, SF_DIR))
     assert "join" not in plan.lower()
     n_scans = len(re.findall(r"\(\d+\) Scan parquet", plan))
     assert n_scans == 1, f"rule set must fold into one scan: {n_scans}"
@@ -894,7 +922,7 @@ def test_dq_expectations_single_scan(spark):
 def test_sim_radius_search_windowless(spark):
     """Radius search must stay a broadcast-probe scan + one aggregate:
     no window, no sort, no corpus-sized shuffle join."""
-    plan = plan_of(spark, "sim_radius_search")
+    plan = formatted_plan(ALL_QUERIES["sim_radius_search"](spark, SF_DIR))
     assert "Window" not in plan
     assert not re.search(r"SortMergeJoin|ShuffledHashJoin", plan)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
@@ -903,7 +931,9 @@ def test_sim_radius_search_windowless(spark):
 def test_ds_token_budget_planner_two_aggregates(spark):
     """The planner is arithmetic over source-bounded aggregates — the
     only corpus-sized work is the per-source groupBy."""
-    plan = plan_of(spark, "ds_token_budget_planner")
+    plan = formatted_plan(
+        ALL_QUERIES["ds_token_budget_planner"](spark, SF_DIR)
+    )
     body = plan.split("===== Subqueries =====")[0]
     n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", body))
     assert n_exchanges <= 4, f"planner grew extra shuffles: {n_exchanges}"
@@ -917,7 +947,7 @@ def test_dd_bloom_incremental_probe_shape(spark):
     the maybe set. Exchange budget pins the single-consumer DAG —
     the three-way-split formulation re-evaluated the probe chain per
     branch and tripled this count."""
-    plan = plan_of(spark, "dd_bloom_incremental")
+    plan = formatted_plan(ALL_QUERIES["dd_bloom_incremental"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", body))
     assert n_exchanges <= 5, f"bloom DAG grew shuffles: {n_exchanges}"
@@ -936,7 +966,7 @@ def test_ds_global_row_ids_no_global_window(spark):
     hashpartitioning(bkt) shuffle on data the range exchange had
     already co-located), so the only Window left is the offsets
     prefix sum over the ≤ bucket-count counts table."""
-    plan = plan_of(spark, "ds_global_row_ids")
+    plan = formatted_plan(ALL_QUERIES["ds_global_row_ids"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     assert "Window" in plan
     n_windows = len(re.findall(r"\(\d+\) Window\b", body))
@@ -967,7 +997,7 @@ def test_ds_global_row_ids_no_global_window(spark):
 def test_dq_skew_report_two_exchanges(spark):
     """One corpus-sized shuffle (per-key counts) + one tiny rollup —
     the multi-key report must not scan or shuffle once per key."""
-    plan = plan_of(spark, "dq_skew_report")
+    plan = formatted_plan(ALL_QUERIES["dq_skew_report"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     n_scans = len(re.findall(r"\(\d+\) Scan parquet", body))
     assert n_scans == 1, f"multi-key report must be one scan: {n_scans}"
@@ -985,7 +1015,7 @@ def test_ds_shard_manifest_bounded_windows(spark):
     is map-side combined before its (source, cell) exchange, the cell
     prefix re-keys the cell table by source, and the final manifest
     aggregate is partial-combined before (source, shard_idx)."""
-    plan = plan_of(spark, "ds_shard_manifest")
+    plan = formatted_plan(ALL_QUERIES["ds_shard_manifest"](spark, SF_DIR))
     body = plan.split("===== Subqueries =====")[0]
     n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", body))
     assert n_exchanges == 4, f"exchange budget drifted: {n_exchanges}"
@@ -1004,7 +1034,7 @@ def test_ds_source_cap_windowgrouplimit(spark):
     rows BEFORE the shuffle) — the property that bounds the per-source
     task. A refactor that consumes over-cap ranks again (the old
     one-branch form) silently loses the pruning; this pins it."""
-    plan = plan_of(spark, "ds_source_cap")
+    plan = formatted_plan(ALL_QUERIES["ds_source_cap"](spark, SF_DIR))
     assert len(re.findall(r"\bWindowGroupLimit\b", plan)) >= 2, plan[:2000]
     # and the totals branch must NOT rank at all — exactly one Window
     assert len(re.findall(r"\(\d+\) Window\b", plan)) == 1
@@ -1498,7 +1528,7 @@ def test_bench_oracle_min_records_failures():
 # an 8-line window occurring at least twice, with whitespace collapsed
 # and blank and comment lines dropped. Lower it when duplication goes;
 # never raise it.
-_DUP_WINDOW_LINES_MAX = 455
+_DUP_WINDOW_LINES_MAX = 439
 
 
 def _duplicated_window_lines(root: str, width: int = 8) -> int:

@@ -121,10 +121,12 @@ def test_bloom_confirm_sits_above_probe(spark):
     shape by running the confirm on every batch row."""
     import re
 
-    from tests.test_plans import plan_of
+    import __spark_entry__ as entrymod
+    from etl_mapwarper_spark.plans.audit import formatted_plan
 
+    queries = entrymod.queries()
     for name in ("dd_bloom_incremental", "dd_bloom_incremental_fp"):
-        plan = plan_of(spark, name)
+        plan = formatted_plan(queries[name](spark, SF_DIR))
         tree = plan.split("\n\n")[0]
         m_confirm = re.search(r"BroadcastHashJoin Inner", tree)
         m_probe = re.search(r"BroadcastNestedLoopJoin Cross", tree)
@@ -132,220 +134,6 @@ def test_bloom_confirm_sits_above_probe(spark):
         assert m_confirm.start() < m_probe.start(), (
             f"{name}: confirm join was pushed below the Bloom probe"
         )
-
-
-def _norm_plan(df) -> str:
-    """Formatted plan with expression ids, plan ids, lambda-variable
-    counters and cache-relation dumps normalized away."""
-    import re
-
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    plan = re.sub(r"#\d+", "#N", plan)
-    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
-    plan = re.sub(r"x_\d+", "x_N", plan)
-    plan = re.sub(r"_common_expr_\d+", "_common_expr_N", plan)
-    plan = re.sub(r"InMemoryRelation.*", "IMR", plan)
-    plan = re.sub(r"InMemoryTableScan.*", "IMTS", plan)
-    return plan
-
-
-def test_sql_batched_constructions_plan_identical(spark):
-    """dd_ngram_jaccard / dd_minhash_lsh (r13) build their expression
-    trees from parsed SQL strings (the l2_norm_sql pattern) instead of
-    py4j Column algebra. The physical plans must stay identical to the
-    Column-built forms — this is a pure construction-cost change."""
-    from etl_mapwarper_spark.functions.text import (
-        hashed_word_shingles,
-        tokens,
-        word_shingles,
-    )
-    from etl_mapwarper_spark.operators import dedup as dd
-    from etl_mapwarper_spark.operators.dedup import (
-        _PP_DEN,
-        _PP_NUM,
-        JACCARD_THRESHOLD,
-        N_BANDS,
-        N_SEEDS,
-    )
-    from etl_mapwarper_spark.sources.tables import load_table
-
-    # --- dd_ngram_jaccard: replaced Column-form, rebuilt verbatim ---
-    docs = load_table(spark, SF_DIR, "documents", parallelize=True)
-    arrs = docs.select(
-        "doc_id",
-        F.array_sort(hashed_word_shingles(tokens(F.col("text")), 3)).alias(
-            "hs"
-        ),
-    ).select("doc_id", "hs", F.size("hs").cast("long").alias("n"))
-    arrs = arrs.persist()
-    pfx = arrs.select(
-        "doc_id",
-        "n",
-        F.posexplode(
-            F.slice(
-                "hs",
-                F.lit(1),
-                (
-                    F.col("n")
-                    - F.expr(f"({_PP_NUM} * n + {_PP_DEN - 1}) div {_PP_DEN}")
-                    + F.lit(1)
-                ).cast("int"),
-            )
-        ).alias("p", "h"),
-    )
-    cand = (
-        pfx.alias("a")
-        .join(
-            pfx.alias("b"),
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("a.n") * _PP_DEN >= F.col("b.n") * _PP_NUM)
-            & (F.col("b.n") * _PP_DEN >= F.col("a.n") * _PP_NUM)
-            & (
-                (
-                    F.lit(1)
-                    + F.least(
-                        F.col("a.n") - F.col("a.p"),
-                        F.col("b.n") - F.col("b.p"),
-                    )
-                )
-                * F.lit(_PP_DEN + _PP_NUM)
-                >= (F.col("a.n") + F.col("b.n")) * F.lit(_PP_NUM)
-            ),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
-    a1 = arrs.select(
-        F.col("doc_id").alias("d1"),
-        F.col("hs").alias("hs1"),
-        F.col("n").alias("n1"),
-    )
-    a2 = arrs.select(
-        F.col("doc_id").alias("d2"),
-        F.col("hs").alias("hs2"),
-        F.col("n").alias("n2"),
-    )
-    old_ng = (
-        cand.join(a1, "d1")
-        .join(a2, "d2")
-        .withColumn("c", F.size(F.array_intersect("hs1", "hs2")))
-        .withColumn(
-            "jacc",
-            F.round(F.col("c") / (F.col("n1") + F.col("n2") - F.col("c")), 4),
-        )
-        .filter(F.col("jacc") >= JACCARD_THRESHOLD)
-        .select("d1", "d2", "jacc")
-    )
-    new_ng = dd.dd_ngram_jaccard(spark, SF_DIR)
-    assert _norm_plan(old_ng) == _norm_plan(new_ng), (
-        "ngram SQL-batched construction changed the physical plan"
-    )
-    arrs.unpersist()
-
-    # --- dd_minhash_lsh: replaced Column-form signature + bands ---
-    # (including the replaced Column-form _shingles)
-    sh = load_table(spark, SF_DIR, "documents", parallelize=True).select(
-        "doc_id",
-        F.explode(word_shingles(tokens(F.col("text")), 3)).alias("shingle"),
-    )
-    per_band = N_SEEDS // N_BANDS
-    mh_cols = [
-        F.min(F.md5(F.concat(F.lit(f"{s}|"), F.col("shingle")))).alias(
-            f"mh{s}"
-        )
-        for s in range(N_SEEDS)
-    ]
-    per_doc = (
-        sh.groupBy("doc_id")
-        .agg(*mh_cols, F.collect_set("shingle").alias("shset"))
-        .persist()
-    )
-    bands = per_doc.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col(f"mh{s}")
-                                    for s in range(
-                                        b * per_band, (b + 1) * per_band
-                                    )
-                                ],
-                            )
-                        ).alias("band_key"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.band_key")
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    candidates = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.band_key") == F.col("bb.band_key"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("d1"), F.col("bb.doc_id").alias("d2")
-        )
-        .distinct()
-    )
-    ds1 = per_doc.select(
-        F.col("doc_id").alias("d1"), F.col("shset").alias("set1")
-    )
-    ds2 = per_doc.select(
-        F.col("doc_id").alias("d2"), F.col("shset").alias("set2")
-    )
-    c = F.size(F.array_intersect(F.col("set1"), F.col("set2")))
-    jacc = F.round(c / (F.size("set1") + F.size("set2") - c), 4)
-    old_mh = (
-        candidates.join(ds1, "d1")
-        .join(ds2, "d2")
-        .withColumn("jacc", jacc)
-        .filter(F.col("jacc") >= JACCARD_THRESHOLD)
-        .select("d1", "d2", "jacc")
-    )
-    new_mh = dd.dd_minhash_lsh(spark, SF_DIR)
-    assert _norm_plan(old_mh) == _norm_plan(new_mh), (
-        "minhash SQL-batched construction changed the physical plan"
-    )
-
-    # --- dd_lsh_tuning_report: replaced Column-form report glue ---
-    exact = old_ng.select("d1", "d2")
-    approx = old_mh.select(
-        F.col("d1").alias("a1"), F.col("d2").alias("a2")
-    )
-    hit = exact.join(
-        F.broadcast(approx),
-        (F.col("d1") == F.col("a1")) & (F.col("d2") == F.col("a2")),
-        "left",
-    ).agg(
-        F.count(F.lit(1)).alias("n_exact"),
-        F.count_if(F.col("a1").isNotNull()).alias("n_hit"),
-    )
-    n_approx = approx.agg(F.count(F.lit(1)).alias("n_approx"))
-    old_rep = hit.crossJoin(F.broadcast(n_approx)).select(
-        "n_exact",
-        "n_approx",
-        "n_hit",
-        F.round(F.col("n_hit") / F.col("n_exact"), 4).alias("recall"),
-        F.round(F.col("n_hit") / F.col("n_approx"), 4).alias("precision"),
-    )
-    new_rep = dd.dd_lsh_tuning_report(spark, SF_DIR)
-    assert _norm_plan(old_rep) == _norm_plan(new_rep), (
-        "report SQL-batched construction changed the physical plan"
-    )
-    per_doc.unpersist()
 
 
 def test_synthetic_media_substring_payload_byte_identical(spark):
